@@ -79,10 +79,10 @@ def test_bpe_driver_dispatch_matches_distributed(spark, tiny_docs, monkeypatch):
     """The r16 driver-side merge loop (vocab under the size guard)
     must be merge-for-merge identical to the distributed iteration —
     same argmax tie-break, same left-to-right fold, same early stop."""
-    import vfs_spark.operators.bpe as bpe_mod
+    from vfs_spark import dispatch
 
     fast = bpe_train(tiny_docs, n_merges=12)          # driver path
-    monkeypatch.setattr(bpe_mod, "BPE_DRIVER_MAX_TYPES", 0)
+    monkeypatch.setitem(dispatch.DRIVER_MAX, "bpe_types", 0)
     slow = bpe_train(tiny_docs, n_merges=12)          # distributed path
     assert fast == slow
 

@@ -232,10 +232,10 @@ def test_simhash_jvm_no_python_and_finds_dups(spark, sf_dir):
     assert (1, 3) not in got and (2, 3) not in got
 
 
-def test_connected_components_chain_and_isolates(spark):
+def test_connected_components_chain_and_isolates(spark, dispatch_path):
     """A 5-node chain (worst-case diameter), a 2-node pair, and two
     isolated nodes — every node must map to the smallest id reachable,
-    across partitions."""
+    across partitions, on the driver twin and the distributed loop."""
     nodes = spark.createDataFrame([(i,) for i in range(1, 10)], "doc_id long").repartition(4)
     edges = spark.createDataFrame(
         [(2, 3), (3, 4), (4, 5), (5, 6), (7, 8)], "src long, dst long"
@@ -488,11 +488,9 @@ def test_embedding_banded_candidate_guard(spark):
     assert all(r["cos_sim"] >= 0.9 for r in sel)
 
 
-def test_embedding_simhash_planted_near_dups(spark):
-    """Default-parameter gate on REAL near-dup geometry: 2k isotropic
-    vectors + 1% planted dups at cos ≈ 0.95. The banding must find
-    them (recall ≥ 0.95) and emit nothing below the threshold
-    (precision is structural — exact verify)."""
+def _planted_embeddings(spark):
+    """2k isotropic unit vectors + 1% planted dups at cos ≈ 0.95.
+    Returns the corpus and the planted pairs at cos ≥ 0.9."""
     import numpy as np
     import pandas as pd
 
@@ -520,10 +518,42 @@ def test_embedding_simhash_planted_near_dups(spark):
         for i, s in enumerate(src)
         if cos[i] >= 0.9
     }
+    return df, planted
+
+
+def test_embedding_simhash_planted_near_dups(spark):
+    """Default-parameter gate on REAL near-dup geometry: 2k isotropic
+    vectors + 1% planted dups at cos ≈ 0.95. The banding must find
+    them (recall ≥ 0.95) and emit nothing below the threshold
+    (precision is structural — exact verify)."""
+    df, planted = _planted_embeddings(spark)
     out = dedup_ops.embedding_simhash_pairs(df, cos_threshold=0.9).collect()
     got = {(r["vec_a"], r["vec_b"]) for r in out}
     assert len(planted & got) / len(planted) >= 0.95
     assert all(r["cos_sim"] >= 0.9 for r in out)  # verify is exact
+
+
+def test_embedding_simhash_gather_equals_join_path(spark, monkeypatch):
+    """The verify gather (vectors collected under
+    DRIVER_MAX["embed_gather_bytes"]) and the join-path verify emit
+    the same rows with bitwise-equal cos_sim on the planted corpus."""
+    from vfs_spark import dispatch
+
+    df, planted = _planted_embeddings(spark)
+
+    def run():
+        return sorted(
+            tuple(r)
+            for r in dedup_ops.embedding_simhash_pairs(
+                df, cos_threshold=0.9
+            ).collect()
+        )
+
+    gather = run()
+    monkeypatch.setitem(dispatch.DRIVER_MAX, "embed_gather_bytes", -1)
+    join = run()
+    assert gather == join
+    assert planted & {(a, b) for a, b, _ in gather}
 
 
 def test_embedding_simhash_fixture_recall(spark):
@@ -1900,10 +1930,13 @@ def test_sampled_top_blocks_rank_eligible_first(spark):
 def test_prefix_driver_dispatch_equals_distributed(spark, monkeypatch):
     """r16 optimization gate: the driver-side prefix-join twin
     (_prefix_pairs_driver, dispatched when total postings ≤
-    PREFIX_DRIVER_MAX_POSTINGS) must emit the same verified pair set
-    and the same exact values as the distributed prefix join at the
-    caller's threshold — for BOTH modes, on a fixture with boundary
-    pairs, multi-block rows, and whitespace quirks."""
+    DRIVER_MAX["prefix_postings"]) must emit the same rows with the
+    same exact values as the distributed prefix join — for BOTH modes,
+    on a fixture with boundary pairs, multi-block rows, whitespace
+    quirks and a NULL set, and on an envelope fixture whose
+    positional-filter survivor (1, 2) is far under the threshold."""
+    from vfs_spark import dispatch
+
     rows = [
         # J(1,2) = 3/10 = 0.3 exactly; containment 3/6 = 0.5
         (1, "x", ["a", "b", "c", "d", "e", "f"]),
@@ -1922,42 +1955,50 @@ def test_prefix_driver_dispatch_equals_distributed(spark, monkeypatch):
         # shared rare + disjoint bulk (sub-threshold candidate)
         (12, "x", ["rare1"] + [f"za{i}" for i in range(20)]),
         (13, "x", ["rare1"] + [f"zb{i}" for i in range(20)]),
+        # a NULL set adds no postings on either path
+        (14, "x", None),
     ]
-    sh = spark.createDataFrame(
-        rows, "doc_id long, lang string, shingles array<string>"
+    schema = "doc_id long, lang string, shingles array<string>"
+    sh = spark.createDataFrame(rows, schema)
+    envelope = spark.createDataFrame(
+        [
+            (1, "x", ["x", "p", "q"]),
+            (2, "x", ["x", "r", "s"]),
+            (3, "x", ["p", "q", "r", "s"]),
+            (4, "x", ["p", "q", "r", "s"]),
+        ],
+        schema,
     )
 
     def collect_j(df):
         return {
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
-            for r in df.where(F.col("jaccard") >= 0.3).collect()
+            for r in df.collect()
         }
 
     def collect_c(df):
         return {
             (r["doc_a"], r["doc_b"], r["inter_size"], r["min_size"])
-            for r in df.where(
-                (F.col("min_size") > 0)
-                & (5 * F.col("inter_size") >= 3 * F.col("min_size"))
-            ).collect()
+            for r in df.collect()
         }
 
-    # driver path (fixture is far under the default guard)
-    got_j = collect_j(dedup_ops.jaccard_pairs_prefix(sh, threshold=0.3))
-    got_c = collect_c(
-        dedup_ops.containment_pairs_prefix(sh, threshold=0.6)
-    )
-    # forced distributed path
-    monkeypatch.setattr(dedup_ops, "PREFIX_DRIVER_MAX_POSTINGS", -1)
-    dist_j = collect_j(dedup_ops.jaccard_pairs_prefix(sh, threshold=0.3))
-    dist_c = collect_c(
-        dedup_ops.containment_pairs_prefix(sh, threshold=0.6)
-    )
-    assert got_j == dist_j and got_j  # non-trivial equality
-    assert got_c == dist_c and got_c
-    # candidate-volume safety valve: a zero cap makes the driver path
-    # bail (return None) and the distributed join produce the result
-    monkeypatch.setattr(dedup_ops, "PREFIX_DRIVER_MAX_POSTINGS", 10**9)
-    monkeypatch.setattr(dedup_ops, "PREFIX_DRIVER_MAX_CANDIDATES", -1)
-    bail_j = collect_j(dedup_ops.jaccard_pairs_prefix(sh, threshold=0.3))
-    assert bail_j == dist_j
+    def run():
+        return [
+            collect_j(dedup_ops.jaccard_pairs_prefix(sh, threshold=0.3)),
+            collect_c(dedup_ops.containment_pairs_prefix(sh, threshold=0.6)),
+            collect_j(dedup_ops.jaccard_pairs_prefix(envelope, threshold=0.6)),
+            collect_c(
+                dedup_ops.containment_pairs_prefix(envelope, threshold=0.6)
+            ),
+        ]
+
+    got = run()  # driver path (fixtures are far under the default guard)
+    monkeypatch.setitem(dispatch.DRIVER_MAX, "prefix_postings", -1)
+    dist = run()  # forced distributed path
+    assert got == dist and all(got)  # non-trivial equality
+    assert got[2] == {(3, 4, 1.0)}
+    # candidate-volume safety valve: a negative cap makes the driver
+    # path bail (return None) and the distributed join produce the result
+    monkeypatch.setitem(dispatch.DRIVER_MAX, "prefix_postings", 10**9)
+    monkeypatch.setitem(dispatch.DRIVER_MAX, "prefix_candidates", -1)
+    assert run() == dist

@@ -1,6 +1,7 @@
 """Graph-operator properties: PageRank mass conservation and an exact
 uniform-distribution anchor (the oracle checks values; these pin the
-invariants that survive any fixture change)."""
+invariants that survive any fixture change). Each runs on both the
+driver twin and the distributed iteration (``dispatch_path``)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +10,7 @@ from vfs_spark.queries.graph import _edges, pagerank
 from vfs_spark.sources.parquet import load_table
 
 
-def test_pagerank_mass_conserved(spark, sf_dir):
+def test_pagerank_mass_conserved(spark, sf_dir, dispatch_path):
     """With dangling redistribution, total rank mass stays 1.0 after
     every power iteration (up to float noise)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -21,7 +22,7 @@ def test_pagerank_mass_conserved(spark, sf_dir):
     edges.unpersist()
 
 
-def test_pagerank_uniform_on_cycle(spark):
+def test_pagerank_uniform_on_cycle(spark, dispatch_path):
     """On a directed cycle every node has in-degree = out-degree = 1,
     so PageRank is exactly uniform at every iteration — an arithmetic
     anchor independent of the fixture."""
@@ -36,7 +37,7 @@ def test_pagerank_uniform_on_cycle(spark):
         assert v == pytest.approx(1.0 / n, abs=1e-12)
 
 
-def test_pagerank_sink_receives_more(spark):
+def test_pagerank_sink_receives_more(spark, dispatch_path):
     """A node everyone links to must out-rank a node nobody links to —
     the monotonicity PageRank exists to provide."""
     hub_edges = [("a", "hub"), ("b", "hub"), ("c", "hub"), ("hub", "a")]
@@ -44,3 +45,28 @@ def test_pagerank_sink_receives_more(spark):
     got = {r["u"]: r["r"] for r in pagerank(edges, n_iters=3).collect()}
     assert got["hub"] > got["b"]
     assert got["hub"] > got["c"]
+
+
+def test_pagerank_empty_edges(spark, dispatch_path):
+    """An empty link graph yields an empty (u, r) table on both paths."""
+    edges = spark.createDataFrame([], "src string, dst string")
+    got = pagerank(edges)
+    assert got.collect() == []
+    assert got.columns == ["u", "r"]
+
+
+def test_pagerank_paths_agree(spark, sf_dir, monkeypatch):
+    """The driver twin and the distributed iteration rank the fixture
+    link graph identically up to float summation order."""
+    from vfs_spark import dispatch
+
+    docs = load_table(spark, sf_dir, "documents")
+    edges = _edges(docs).cache()
+
+    def ranks():
+        return {r["u"]: r["r"] for r in pagerank(edges).collect()}
+
+    driver = ranks()
+    monkeypatch.setitem(dispatch.DRIVER_MAX, "pagerank_edges", -1)
+    assert driver and ranks() == pytest.approx(driver, rel=1e-9, abs=1e-15)
+    edges.unpersist()

@@ -6,7 +6,7 @@ DataFrame per example (small max_examples: each example is a job)."""
 import math
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from vfs_spark.functions.distance import array_lit, cosine_distance, euclidean
@@ -79,16 +79,21 @@ def test_simhash_deterministic_and_order_sensitive(spark, words):
     assert _simhash64(" ".join(reversed(toks))) == _simhash64(" ".join(toks))
 
 
-@settings(max_examples=6, deadline=None)
+# the dispatch_path pin is meant to hold for every generated example
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
 @given(
     edges=st.lists(
         st.tuples(st.integers(1, 15), st.integers(1, 15)), max_size=20
     )
 )
-def test_connected_components_matches_union_find(spark, edges):
-    """The distributed min-label propagation must agree with a plain
-    union-find on arbitrary small graphs (self-loops and duplicate
-    edges included)."""
+def test_connected_components_matches_union_find(spark, dispatch_path, edges):
+    """Both the driver twin and the distributed min-label propagation
+    must agree with a plain union-find on arbitrary small graphs
+    (self-loops and duplicate edges included)."""
     from vfs_spark.operators.dedup import connected_components
 
     nodes = list(range(1, 16))

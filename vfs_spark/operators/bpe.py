@@ -23,45 +23,34 @@ documented in SCALE.md is paid where it is O(vocab), not O(corpus)).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-EOW = "▁"  # end-of-word marker (SentencePiece-style block char)
+from vfs_spark.dispatch import DRIVER_MAX, collect_under
 
-# r16 optimization: word-TYPE tables at or under this row count run
-# the merge loop as pure Python on the driver (collected via a
-# limit-guarded probe — broadcast-build memory class). The merge loop
-# is inherently sequential (each round's input is the previous
-# argmax), so the distributed form pays n_merges × ~3 blocking jobs
-# of per-job floor over a |vocab|-row table; the driver loop is the
-# identical integer arithmetic with zero job floors. Above the guard
-# the distributed iteration runs unchanged (Heaps' law keeps |vocab|
-# in the 10⁴-10⁶ range even at crawl scale, so the guard covers the
-# realistic regime; the distributed path remains the safety net).
-BPE_DRIVER_MAX_TYPES = int(
-    os.environ.get("VFS_BPE_DRIVER_MAX_TYPES", str(2_000_000))
-)
+EOW = "▁"  # end-of-word marker (SentencePiece-style block char)
 
 
 def _bpe_train_driver(
     wt: DataFrame, n_merges: int, min_pair_count: int
 ) -> list[tuple[str, str, int]] | None:
     """Pure-Python BPE merge loop over a guard-sized word-type table;
-    None above the guard. Byte-for-byte the distributed algorithm:
+    None above the guard. The merge loop is inherently sequential
+    (each round's input is the previous argmax), so the distributed
+    form pays n_merges × ~3 blocking jobs of per-job floor over a
+    |vocab|-row table. Byte-for-byte the distributed algorithm:
     pair counts are exact integer sums weighted by word count, the
     argmax tie-breaks on (count DESC, left, right) — Python's
     code-point string order equals Spark's UTF8String binary order
     because UTF-8 byte order preserves code-point order — and the
     merge is the same left-to-right non-overlapping fold."""
-    probe = wt.limit(BPE_DRIVER_MAX_TYPES + 1).collect()
-    if len(probe) > BPE_DRIVER_MAX_TYPES:
+    probe = collect_under(wt, DRIVER_MAX["bpe_types"])
+    if probe is None:
         return None
     syms: list[tuple[list[str], int]] = [
-        (list(r["word"]) + [EOW], int(r["cnt"])) for r in probe
+        (list(w) + [EOW], int(c)) for w, c in zip(probe["word"], probe["cnt"])
     ]
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):

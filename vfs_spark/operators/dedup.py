@@ -15,7 +15,6 @@ self-joins). These are the sub-quadratic production paths:
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pandas as pd
 
@@ -24,51 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from vfs_spark.dispatch import DRIVER_MAX, collect_under
 from vfs_spark.functions.text import tokens, word_shingles
 
 SEED = 42
-
-# embedding_simhash_pairs verify dispatch (r16 optimization): ceiling
-# on the float64 verify-matrix bytes the gather path may collect and
-# broadcast (the memory class of a broadcast-join build side). Above
-# it the join-path verify runs — same output, payload-shuffling plan.
-# Parameterised for cluster deployments (more executor memory → raise).
-EMBED_VERIFY_GATHER_MAX_BYTES = int(
-    os.environ.get("VFS_EMBED_VERIFY_GATHER_MAX_BYTES", str(256 << 20))
-)
-
-# connected_components driver dispatch (r16 optimization): edge sets
-# at or under this count are solved with one vectorized NumPy pass on
-# the driver and re-attached via a broadcast join (≤ 32 MB of edge
-# arrays + a ≤2·|E|-row mapping at the default — broadcast-build
-# memory class). Above it the distributed propagation loop runs.
-CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("VFS_CC_DRIVER_MAX_EDGES", str(2_000_000))
-)
-
-# jaccard/containment prefix-join driver dispatch (r16 optimization):
-# corpora whose TOTAL posting count (Σ |shingle set|) is at or under
-# this bound are solved with one vectorized driver pass — the same
-# prefix-filter candidate scheme + exact verify, in NumPy/CPython —
-# instead of the ~6-exchange distributed pipeline whose fixed job
-# floor dominates at small scale. 4M postings ≈ a few hundred MB of
-# Python strings + int-code sets: the broadcast-build memory class
-# this repo already accepts for driver work. Above the bound the
-# distributed prefix join runs unchanged.
-PREFIX_DRIVER_MAX_POSTINGS = int(
-    os.environ.get("VFS_PREFIX_DRIVER_MAX_POSTINGS", str(4_000_000))
-)
-
-# Safety valve inside the driver path: if the PREFIX candidate volume
-# (Σ C(pref_df,2) for jaccard, Σ pref_df·df for containment) computed
-# from the collected postings exceeds this, bail back to the
-# distributed join, which spills gracefully where a driver loop
-# would not. A sane corpus under the postings bound never hits this;
-# a degenerate-vocabulary one (the router's job to catch upstream)
-# does.
-PREFIX_DRIVER_MAX_CANDIDATES = int(
-    os.environ.get("VFS_PREFIX_DRIVER_MAX_CANDIDATES", str(20_000_000))
-)
 
 
 def _prefix_pairs_driver(
@@ -91,15 +49,15 @@ def _prefix_pairs_driver(
     containment. Completeness needs only a block-consistent total
     order on (df, element), which the factorized codes provide; the
     tie-break differs from the distributed path's xxhash64 order, so
-    the CANDIDATE sets can differ, but verified outputs at any
-    caller threshold ≥ the relaxed bound are identical — emitted
-    pairs are exactly those whose verified similarity clears the
-    relaxed t (the distributed path's completeness envelope).
+    the CANDIDATE sets can differ, but the outputs are identical —
+    both paths emit exactly the pairs whose verified similarity
+    clears the relaxed t.
 
     Returns a small local DataFrame, or None if the candidate volume
-    exceeds PREFIX_DRIVER_MAX_CANDIDATES (caller falls back to the
-    distributed join). Input ``sh`` must already be distinct-element,
-    non-empty sets (the operators enforce that upstream).
+    exceeds DRIVER_MAX["prefix_candidates"] (caller falls back to the
+    distributed join). Input ``sh`` must already hold distinct-element
+    sets (the operators enforce that upstream); an empty or NULL set
+    adds no postings, exactly as explode() on the distributed path.
     """
     import numpy as np
     import pyarrow.compute as pc
@@ -116,7 +74,11 @@ def _prefix_pairs_driver(
     n = tbl.num_rows
     ids = tbl[id_col].combine_chunks().to_numpy()
     lists = tbl[set_col].combine_chunks()
-    sizes = pc.list_value_length(lists).to_numpy().astype(np.int64)
+    sizes = (
+        pc.fill_null(pc.list_value_length(lists), 0)
+        .to_numpy()
+        .astype(np.int64)
+    )
     flat = pc.list_flatten(lists)
     g = (
         pc.dictionary_encode(flat).indices.to_numpy().astype(np.int64)
@@ -156,7 +118,7 @@ def _prefix_pairs_driver(
         vol = float((pref_cnt * (pref_cnt - 1) // 2).sum())
     else:
         vol = float((pref_cnt.astype(np.float64) * cnt).sum())
-    if vol > PREFIX_DRIVER_MAX_CANDIDATES:
+    if vol > DRIVER_MAX["prefix_candidates"]:
         return None
 
     # per-doc element-code sets for the exact verify (original
@@ -603,6 +565,52 @@ def hamming_pairs_banded_and(
     return pairs
 
 
+def _prefix_pin(
+    sh: DataFrame,
+    threshold: float,
+    mode: str,
+    id_col: str,
+    block_col: str,
+    set_col: str,
+    out_a: str,
+    out_b: str,
+    materialize: bool,
+) -> tuple[DataFrame, DataFrame | None]:
+    """Shared head of the two prefix joins: set semantics, the pin and
+    the driver twin. Returns ``(sh, result)``; ``result`` is None when
+    the distributed join has to run over the returned ``sh``.
+
+    Duplicate elements would inflate F.size() and the size filters
+    would silently DROP qualifying pairs (r12 ADVICE #2), hence
+    array_distinct. There is NO .where(size > 0): Catalyst pushes it
+    below the projection with the shingle expression inlined, which
+    ran the O(tokens·k) build twice per row (r16). Empty and NULL sets
+    emit no postings on either path. The DISK_ONLY pin feeds the
+    prefix build and both verify sides; the caller releases it after
+    the eager checkpoint of the verified pairs. ``materialize=False``
+    skips pin and twin (lazy plan for inspection only)."""
+    sh = sh.select(
+        id_col,
+        block_col,
+        F.array_distinct(set_col).alias(set_col),
+    )
+    if not materialize:
+        return sh, None
+    from pyspark import StorageLevel
+
+    sh = sh.persist(StorageLevel.DISK_ONLY)
+    # one job materializes the pin AND returns the guard stat Σ|set|
+    n_post = sh.agg(F.sum(F.size(set_col))).first()[0]
+    if (n_post or 0) <= DRIVER_MAX["prefix_postings"]:
+        res = _prefix_pairs_driver(
+            sh, threshold, mode, id_col, block_col, set_col, out_a, out_b
+        )
+        if res is not None:
+            sh.unpersist()
+            return sh, res
+    return sh, None
+
+
 def jaccard_pairs_prefix(
     sh: DataFrame,
     threshold: float,
@@ -617,9 +625,9 @@ def jaccard_pairs_prefix(
     AllPairs / PPJoin candidate scheme, Bayardo et al. WWW'07 / Xiao
     et al. WWW'08) — same output as the blocked all-pairs jaccard
     join, sub-quadratic cost. Returns every (``out_a`` < ``out_b``)
-    pair within a block whose RAW jaccard could reach ``threshold``,
-    with the unfiltered ``jaccard`` column; callers apply their own
-    final predicate (raw vs rounded) so this stays a drop-in for the
+    pair within a block whose RAW jaccard is ≥ ``threshold`` − 0.01,
+    with its ``jaccard`` column; callers apply their own final
+    predicate (raw vs rounded) so this stays a drop-in for the
     quadratic form.
 
     Completeness (why this is exact, not approximate): order each
@@ -654,47 +662,12 @@ def jaccard_pairs_prefix(
     # relaxed pruning bound: admits raw-jaccard values that round up
     # to the caller's threshold at 6 decimals (and a safety margin)
     t = max(threshold - 0.01, 0.0)
-    # SET semantics are enforced here: duplicate elements in the
-    # input arrays would inflate F.size(), and the size-ratio filter
-    # min ≥ t·max would then prune on inflated sizes and silently
-    # DROP qualifying pairs (r12 ADVICE #2 — confirmed empirically
-    # with [a]*7+[b,c] vs [a,b,c]). array_distinct is one extra
-    # scan-stage expression; in-repo callers already pass distinct
-    # shingle arrays so their plans/outputs are unchanged.
-    # NO .where(size > 0) on the computed column (r16): Catalyst
-    # pushes such a filter below the projection WITH the whole
-    # shingle-defining expression inlined, so the O(tokens·k) build
-    # ran TWICE per row (measured 6.5 → 3.0 cpu-s on the pin job at
-    # sf0.1 — the minhash_near_dup_pairs pathology). Empty sets are
-    # harmless downstream: explode() emits no postings for them, so
-    # they cannot become candidates on either path.
-    sh = sh.select(
-        id_col,
-        block_col,
-        F.array_distinct(set_col).alias(set_col),
+    sh, res = _prefix_pin(
+        sh, threshold, "jaccard", id_col, block_col, set_col,
+        out_a, out_b, materialize,
     )
-    # pinned: feeds the prefix build AND both verify sides; released
-    # via the eager checkpoint of the verified pairs (the
-    # hamming_pairs_banded discipline). DISK_ONLY — see docstring.
-    # materialize=False skips pin and checkpoint — lazy plan for
-    # inspection only.
-    if materialize:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.DISK_ONLY)
-        # one job materializes the pin AND returns the driver-dispatch
-        # guard stat (r16): total postings = Σ |set|
-        n_post = sh.agg(
-            F.sum(F.size(set_col)).alias("p")
-        ).first()["p"]
-        if (n_post or 0) <= PREFIX_DRIVER_MAX_POSTINGS:
-            res = _prefix_pairs_driver(
-                sh, threshold, "jaccard", id_col, block_col, set_col,
-                out_a, out_b,
-            )
-            if res is not None:
-                sh.unpersist()
-                return res
+    if res is not None:
+        return res
     ex = sh.select(
         F.col(id_col),
         F.col(block_col).alias("_blk"),
@@ -768,11 +741,12 @@ def jaccard_pairs_prefix(
     sb = sh.select(
         F.col(id_col).alias(out_b), F.col(set_col).alias("_sb")
     )
+    # verified at the relaxed t: the driver twin's output envelope
     pairs = cand.join(sa, out_a).join(sb, out_b).select(
         out_a,
         out_b,
         jaccard(F.col("_sa"), F.col("_sb")).alias("jaccard"),
-    )
+    ).where(F.col("jaccard") >= t)
     if not materialize:
         return pairs
     pairs = pairs.localCheckpoint(eager=True)
@@ -794,7 +768,7 @@ def containment_pairs_prefix(
     filtering — same output as the blocked all-pairs containment
     join (|A∩B| / min(|A|,|B|) ≥ threshold), sub-quadratic cost.
     Returns every (``out_a`` < ``out_b`` by id) block-local pair
-    whose containment could reach ``threshold``, with exact integer
+    whose containment is ≥ ``threshold`` − 0.01, with exact integer
     ``inter_size`` / ``min_size`` columns; callers apply their own
     final predicate (e.g. the registry's 5·i ≥ 3·m) so cross-engine
     float rounding never enters the decision.
@@ -840,32 +814,12 @@ def containment_pairs_prefix(
     pruning arithmetic so a caller's exact integer predicate at the
     nominal threshold still sees every pair."""
     t = max(threshold - 0.01, 0.0)
-    # set semantics enforced exactly as in jaccard_pairs_prefix:
-    # duplicate elements would inflate sizes and mis-prune; no
-    # size filter on the computed column (same double-evaluation
-    # pathology — see the jaccard twin), empty sets emit no postings
-    sh = sh.select(
-        id_col,
-        block_col,
-        F.array_distinct(set_col).alias(set_col),
+    sh, res = _prefix_pin(
+        sh, threshold, "containment", id_col, block_col, set_col,
+        out_a, out_b, materialize,
     )
-    if materialize:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.DISK_ONLY)
-        # one job materializes the pin AND returns the driver-dispatch
-        # guard stat (r16): total postings = Σ |set|
-        n_post = sh.agg(
-            F.sum(F.size(set_col)).alias("p")
-        ).first()["p"]
-        if (n_post or 0) <= PREFIX_DRIVER_MAX_POSTINGS:
-            res = _prefix_pairs_driver(
-                sh, threshold, "containment", id_col, block_col,
-                set_col, out_a, out_b,
-            )
-            if res is not None:
-                sh.unpersist()
-                return res
+    if res is not None:
+        return res
     ex = sh.select(
         F.col(id_col),
         F.col(block_col).alias("_blk"),
@@ -929,6 +883,7 @@ def containment_pairs_prefix(
     sb = sh.select(
         F.col(id_col).alias(out_b), F.col(set_col).alias("_sb")
     )
+    # verified at the relaxed t: the driver twin's output envelope
     pairs = cand.join(sa, out_a).join(sb, out_b).select(
         out_a,
         out_b,
@@ -938,7 +893,7 @@ def containment_pairs_prefix(
         F.least(F.size("_sa"), F.size("_sb"))
         .cast("bigint")
         .alias("min_size"),
-    )
+    ).where(F.col("inter_size").cast("double") >= t * F.col("min_size"))
     if not materialize:
         return pairs
     pairs = pairs.localCheckpoint(eager=True)
@@ -1572,6 +1527,88 @@ def route_prefix_join(
     }
 
 
+def _pairs_auto(
+    mode: str,
+    docs: DataFrame,
+    threshold: float,
+    id_col: str,
+    block_col: str,
+    text_col: str,
+    route: dict | None,
+    max_prefix_per_doc: float | None,
+    min_total: float | None,
+    route_block_col: str | None,
+) -> DataFrame:
+    """The shared body of jaccard_pairs_auto / containment_pairs_auto:
+    shingle, route (unless ``route`` is given), then run the exact
+    prefix join or warn and run the mode's recall-gated fallback."""
+    probe_cols = [route_block_col] if (
+        route is None and route_block_col and route_block_col != block_col
+    ) else []
+    sh = docs.select(
+        id_col, block_col, *probe_cols,
+        word_shingles(text_col).alias("shingles"),
+    )
+    if route is None:
+        route = route_prefix_join(
+            sh,
+            threshold,
+            mode=mode,
+            id_col=id_col,
+            block_col=block_col,
+            max_prefix_per_doc=max_prefix_per_doc,
+            min_total=min_total,
+            route_block_col=route_block_col,
+        )
+    if route["strategy"] == "exact":
+        exact = (
+            jaccard_pairs_prefix if mode == "jaccard"
+            else containment_pairs_prefix
+        )
+        return exact(sh, threshold, id_col=id_col, block_col=block_col)
+    import warnings
+
+    hb = route.get("hot_block")
+    twin = (
+        "banded MinHash twin" if mode == "jaccard"
+        else "anchored sampler"
+    )
+    warnings.warn(
+        f"{mode}_pairs_auto: estimated prefix-candidate volume "
+        f"{route['est_prefix']:.3g} ({route['est_prefix_per_doc']:.1f}"
+        f"/doc over {route['n_docs']} docs"
+        + (
+            f"; hot block {hb['block']!r}: "
+            f"{hb['est_prefix_per_doc']:.1f}/doc over "
+            f"{hb['n_docs']} docs"
+            if hb
+            else ""
+        )
+        + ") exceeds the calibrated "
+        "single-node envelope — falling back to the recall-gated "
+        f"{twin} (exact-verified candidates, probabilistic "
+        "recall; see RECALL_r*.json)",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+    if mode == "jaccard":
+        return minhash_native_pairs(
+            docs,
+            id_col=id_col,
+            text_col=text_col,
+            jaccard_threshold=threshold,
+            n_hashes=8,
+            band_r=2,
+        )
+    return containment_pairs_anchored(
+        docs,
+        id_col=id_col,
+        text_col=text_col,
+        containment_threshold=threshold,
+        emit="counts",
+    )
+
+
 def jaccard_pairs_auto(
     docs: DataFrame,
     threshold: float,
@@ -1592,66 +1629,19 @@ def jaccard_pairs_auto(
     degenerate-vocabulary corpus that would spill the exact join to
     death (the embedding_banded_pairs BRP no-contrast discipline,
     decided BEFORE the expensive stage). Both paths emit
-    (doc_a, doc_b, jaccard); the exact path is unfiltered (callers
-    apply their threshold predicate), the banded path is pre-filtered
-    at ``threshold``, so a caller's ``jaccard >= t`` filter is
-    correct on either. ``route`` lets a caller pass a precomputed /
-    cached decision (the query layer probes once per corpus and
-    shares it across the jaccard-family slugs).
-    ``route_block_col``: skew axis forwarded to route_prefix_join
-    (r15 VERDICT #4 — pass the canonical host column to catch
-    per-host template spam); the JOIN still blocks on ``block_col``,
-    so the output pair set is unchanged."""
-    probe_cols = [route_block_col] if (
-        route is None and route_block_col and route_block_col != block_col
-    ) else []
-    sh = docs.select(
-        id_col, block_col, *probe_cols,
-        word_shingles(text_col).alias("shingles"),
-    )
-    if route is None:
-        route = route_prefix_join(
-            sh,
-            threshold,
-            mode="jaccard",
-            id_col=id_col,
-            block_col=block_col,
-            max_prefix_per_doc=max_prefix_per_doc,
-            min_total=min_total,
-            route_block_col=route_block_col,
-        )
-    if route["strategy"] == "exact":
-        return jaccard_pairs_prefix(
-            sh, threshold, id_col=id_col, block_col=block_col
-        )
-    import warnings
-
-    hb = route.get("hot_block")
-    warnings.warn(
-        "jaccard_pairs_auto: estimated prefix-candidate volume "
-        f"{route['est_prefix']:.3g} ({route['est_prefix_per_doc']:.1f}"
-        f"/doc over {route['n_docs']} docs"
-        + (
-            f"; hot block {hb['block']!r}: "
-            f"{hb['est_prefix_per_doc']:.1f}/doc over "
-            f"{hb['n_docs']} docs"
-            if hb
-            else ""
-        )
-        + ") exceeds the calibrated "
-        "single-node envelope — falling back to the recall-gated "
-        "banded MinHash twin (exact-verified candidates, "
-        "probabilistic recall; see RECALL_r*.json)",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    return minhash_native_pairs(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        jaccard_threshold=threshold,
-        n_hashes=8,
-        band_r=2,
+    (doc_a, doc_b, jaccard); the exact path is pre-filtered at the
+    relaxed ``threshold`` − 0.01 (callers apply their threshold
+    predicate), the banded path at ``threshold``, so a caller's
+    ``jaccard >= t`` filter is correct on either. ``route`` lets a
+    caller pass a precomputed / cached decision (the query layer
+    probes once per corpus and shares it across the jaccard-family
+    slugs). ``route_block_col``: skew axis forwarded to
+    route_prefix_join (r15 VERDICT #4 — pass the canonical host
+    column to catch per-host template spam); the JOIN still blocks on
+    ``block_col``, so the output pair set is unchanged."""
+    return _pairs_auto(
+        "jaccard", docs, threshold, id_col, block_col, text_col, route,
+        max_prefix_per_doc, min_total, route_block_col,
     )
 
 
@@ -1672,61 +1662,16 @@ def containment_pairs_auto(
     warn-and-fall-back to the anchored sampler
     (containment_pairs_anchored, emit='counts') on a degenerate
     corpus. Both paths emit (doc_a, doc_b, inter_size, min_size) in
-    exact integer arithmetic; the exact path is unfiltered, the
-    anchored path pre-filtered at ``threshold`` — a caller's integer
-    predicate is correct on either. NOTE the anchored path is
-    UNBLOCKED (no block_col) — the documented semantics of the
-    probabilistic twin. ``route_block_col``: skew axis forwarded to
-    route_prefix_join (r15 VERDICT #4), join blocking unchanged."""
-    probe_cols = [route_block_col] if (
-        route is None and route_block_col and route_block_col != block_col
-    ) else []
-    sh = docs.select(
-        id_col, block_col, *probe_cols,
-        word_shingles(text_col).alias("shingles"),
-    )
-    if route is None:
-        route = route_prefix_join(
-            sh,
-            threshold,
-            mode="containment",
-            id_col=id_col,
-            block_col=block_col,
-            max_prefix_per_doc=max_prefix_per_doc,
-            min_total=min_total,
-            route_block_col=route_block_col,
-        )
-    if route["strategy"] == "exact":
-        return containment_pairs_prefix(
-            sh, threshold, id_col=id_col, block_col=block_col
-        )
-    import warnings
-
-    hb = route.get("hot_block")
-    warnings.warn(
-        "containment_pairs_auto: estimated prefix-candidate volume "
-        f"{route['est_prefix']:.3g} ({route['est_prefix_per_doc']:.1f}"
-        f"/doc over {route['n_docs']} docs"
-        + (
-            f"; hot block {hb['block']!r}: "
-            f"{hb['est_prefix_per_doc']:.1f}/doc over "
-            f"{hb['n_docs']} docs"
-            if hb
-            else ""
-        )
-        + ") exceeds the calibrated "
-        "single-node envelope — falling back to the recall-gated "
-        "anchored sampler (exact-verified candidates, probabilistic "
-        "recall; see RECALL_r*.json)",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    return containment_pairs_anchored(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        containment_threshold=threshold,
-        emit="counts",
+    exact integer arithmetic; the exact path is pre-filtered at the
+    relaxed ``threshold`` − 0.01, the anchored path at ``threshold``
+    — a caller's integer predicate is correct on either. NOTE the
+    anchored path is UNBLOCKED (no block_col) — the documented
+    semantics of the probabilistic twin. ``route_block_col``: skew
+    axis forwarded to route_prefix_join (r15 VERDICT #4), join
+    blocking unchanged."""
+    return _pairs_auto(
+        "containment", docs, threshold, id_col, block_col, text_col,
+        route, max_prefix_per_doc, min_total, route_block_col,
     )
 
 
@@ -2181,7 +2126,7 @@ def connected_components(
 
     r16 optimization (guide §1.2 — fix the distributed algorithm
     first): near-dup EDGE sets are candidate-bounded and already
-    eagerly checkpointed, so when |edges| ≤ CC_DRIVER_MAX_EDGES the
+    eagerly checkpointed, so when |edges| ≤ DRIVER_MAX["cc_edges"] the
     components are solved in one vectorized NumPy pass on the driver
     (min-label propagation + full pointer-jumping per round, O(log d)
     rounds at memory bandwidth) and re-attached as a BROADCAST join
@@ -2206,16 +2151,15 @@ def connected_components(
         F.col(src_col).alias("u"), F.col(dst_col).alias("v")
     ).localCheckpoint(eager=True)
 
-    n_edges = e.count()
-    if n_edges <= CC_DRIVER_MAX_EDGES:
+    ep = collect_under(e, DRIVER_MAX["cc_edges"])
+    if ep is not None:
         import numpy as np
 
         spark = nodes.sparkSession
-        if n_edges == 0:
+        if len(ep) == 0:
             return nodes.select(
                 F.col(id_col), F.col(id_col).alias("cluster_id")
             )
-        ep = e.toPandas()
         u = ep["u"].to_numpy(dtype=np.int64, copy=False)
         v = ep["v"].to_numpy(dtype=np.int64, copy=False)
         ids = np.unique(np.concatenate([u, v]))
@@ -2492,9 +2436,9 @@ def embedding_simhash_pairs(
 
     r16 optimization (guide §2.3/§4.1 — shuffle keys, not payloads;
     ship only the columns the kernel needs): when the verify-touched
-    id set is small enough (≤ EMBED_VERIFY_GATHER_MAX_BYTES of
-    float64 matrix, default 256 MiB — same memory class as a
-    broadcast-join build side), the exact-cosine verify no longer
+    id set is small enough (≤ DRIVER_MAX["embed_gather_bytes"] of
+    float64 matrix — same memory class as a broadcast-join build
+    side), the exact-cosine verify no longer
     attaches full vectors to every candidate pair via two joins
     (which shuffled the O(candidates) pair table three times with
     dim-sized array payloads and shipped 2·dim doubles per pair
@@ -2587,16 +2531,12 @@ def embedding_simhash_pairs(
     # with a limit(max_rows + 1) guard — ONE job, no ids-distinct and
     # no count round-trips (two fewer driver barriers per call).
     pdf_v = None
-    max_rows = EMBED_VERIFY_GATHER_MAX_BYTES // max(1, dim * 8)
     if bounds[0] is not None:
-        probe = (
-            verify_src.select(F.col(id_col), F.col(vec_col))
-            .limit(max_rows + 1)
-            .toPandas()
+        pdf_v = collect_under(
+            verify_src.select(F.col(id_col), F.col(vec_col)),
+            DRIVER_MAX["embed_gather_bytes"] // max(1, dim * 8),
         )
-        if 0 < len(probe) <= max_rows:
-            pdf_v = probe
-    if pdf_v is not None:
+    if pdf_v is not None and len(pdf_v):
         # Gather path (guide §2.3/§8: decide with small rows, never
         # re-attach the payload through a shuffle join): collect the
         # verify vectors once — the collect is bounded by the guard

@@ -15,11 +15,10 @@ engines (the dedup_url URL-synthesis discipline)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vfs_spark.dispatch import DRIVER_MAX, collect_under
 from vfs_spark.queries.registry import query
 from vfs_spark.queries.text import _URL_SYNTH_SQL, _synth_url_col, _url_norm_sql
 from vfs_spark.sources.parquet import load_table
@@ -50,15 +49,6 @@ def _edges(docs: DataFrame) -> DataFrame:
     )
 
 
-# pagerank driver dispatch (r16 optimization): edge lists at or under
-# this count run the power iterations as one vectorized NumPy pass on
-# the driver (collected via a limit-guarded probe — broadcast-build
-# memory class). Above it the distributed iteration runs.
-PAGERANK_DRIVER_MAX_EDGES = int(
-    os.environ.get("VFS_PAGERANK_DRIVER_MAX_EDGES", str(2_000_000))
-)
-
-
 def _pagerank_driver(
     edges: DataFrame, n_iters: int, damping: float
 ) -> DataFrame | None:
@@ -66,8 +56,8 @@ def _pagerank_driver(
     import numpy as np
     import pandas as pd
 
-    probe = edges.limit(PAGERANK_DRIVER_MAX_EDGES + 1).toPandas()
-    if len(probe) > PAGERANK_DRIVER_MAX_EDGES:
+    probe = collect_under(edges, DRIVER_MAX["pagerank_edges"])
+    if probe is None:
         return None
     spark = edges.sparkSession
     if len(probe) == 0:
@@ -124,7 +114,7 @@ def pagerank(edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING)
 
     r16 optimization (guide §1.2, the connected_components dispatch
     applied to the rank iteration): a link graph at or under
-    PAGERANK_DRIVER_MAX_EDGES collects ONCE (limit-guarded probe — the
+    DRIVER_MAX["pagerank_edges"] collects ONCE (limit-guarded probe — the
     broadcast-build memory contract) and the power iterations run as
     vectorized NumPy on the driver: factorize nodes, np.add.at for
     the contribs, boolean mask for the dangling mass — the identical
@@ -149,7 +139,8 @@ def pagerank(edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING)
         .distinct()
         .persist()
     )
-    n_nodes = nodes.count()
+    # floored at 1: an empty graph yields empty ranks, as on the driver
+    n_nodes = max(nodes.count(), 1)
     ranks = nodes.select("u", F.lit(1.0 / n_nodes).alias("r"))
     for _ in range(n_iters):
         contribs = (
