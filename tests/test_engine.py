@@ -498,3 +498,107 @@ def test_auto_compact_floor_guard_prevents_quadratic_ingest(
     assert compacts == [100]
     rows = sorted(r.id for r in eng.vectors().collect())
     assert rows == list(range(1, 7))  # nothing lost across the guard
+
+
+def test_created_at_is_utc_instant_under_any_host_zone(engine):
+    """created_at records the insert instant, whatever the process's
+    local zone: a naive UTC datetime pickled through the row path was
+    read in the local zone (America/New_York: 14,400 s off in
+    October)."""
+    import time
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        before = datetime.now(timezone.utc).timestamp()
+        engine.insert([[1.0, 2.0, 3.0, 4.0]])
+        after = datetime.now(timezone.utc).timestamp()
+        stored = engine.vectors().select(F.unix_micros("created_at")).first()[0] / 1e6
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert before <= stored <= after
+
+
+def _jobs(spark, fn):
+    """(result of fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    group = f"budget-{os.urandom(6).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_engine_verb_job_budget(spark, tmp_path):
+    """On a warmed engine, building a search plan runs no Spark job:
+    the store schema is memoized and the query batch stays on the
+    driver. An insert is its one write job; a get is its first()."""
+    from pyspark.sql import functions as F
+
+    e = VFSEngine(spark, str(tmp_path / "store"))
+    e.init(vector_dimension=8)
+    e.auto_compact = False
+    e.insert([[float((i * 7 + j) % 5) for j in range(8)] for i in range(64)])
+    q = [float(j % 3) for j in range(8)]
+    for kind in ("exact", "approx", "ivf", "pq"):
+        e.search(q, top_k=3, search_type=kind).collect()  # fits the index
+        _, n = _jobs(spark, lambda: e.search(q, top_k=3, search_type=kind))
+        assert n == 0, (kind, n)
+    batch = [[float((i + j) % 4) for j in range(8)] for i in range(16)]
+    df, n = _jobs(spark, lambda: e.search_batch(batch, top_k=3))
+    assert n == 0
+    assert len(df.collect()) == 16 * 3
+    _, n = _jobs(spark, lambda: e.insert([[0.5] * 8] * 8))
+    assert n == 1
+    plan, n = _jobs(spark, lambda: e.vectors().where(F.col("id") == 70))
+    assert n == 0
+    want, first_jobs = _jobs(spark, plan.first)
+    got, get_jobs = _jobs(spark, lambda: e.get(70))
+    assert got == want and get_jobs == first_jobs
+
+
+def test_store_schema_memo_follows_init_and_restore(spark, tmp_path):
+    """One engine whose store switches between float and quantized
+    columns (re-init with truncation, restore of a snapshot of the
+    other layout) must read each layout correctly: the memoized
+    schema is dropped whenever the columns can change."""
+    e = VFSEngine(spark, str(tmp_path / "store"))
+    e.init(vector_dimension=4)
+    floats = [[0.5, -0.5, 1.0, 0.25], [0.75, 0.0, -1.0, 0.5]]
+    e.insert(floats, names=["f0", "f1"], tags=[["a"], []])
+    assert e.get(1)["embedding"] == floats[0]
+    e.snapshot("float_store")
+
+    e.init(vector_dimension=4, truncate_data=True, quantize_storage=True)
+    e.insert([[0.25, 0.5, -0.25, 1.0]], names=["q0"], tags=[["b"]])
+    e.snapshot("quantized_store")
+
+    def check_quantized():
+        assert e.vectors().columns == ["id", "name", "tags", "created_at", "embedding"]
+        row = e.get(1)
+        assert row["name"] == "q0" and list(row["tags"]) == ["b"]
+        for x, want in zip(row["embedding"], [0.25, 0.5, -0.25, 1.0]):
+            assert abs(x - want) <= 1.0 / 254 + 1e-6
+        assert e.vectors().count() == 1
+
+    check_quantized()
+    e.restore("float_store")
+    assert sorted(e.vectors().columns) == sorted(
+        ["id", "embedding", "name", "tags", "created_at"]
+    )
+    rows = e.vectors().orderBy("id").collect()
+    assert [r["embedding"] for r in rows] == floats
+    assert [r["name"] for r in rows] == ["f0", "f1"]
+    e.restore("quantized_store")
+    check_quantized()

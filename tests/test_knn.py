@@ -257,3 +257,56 @@ def test_engine_footer_count_cached_and_invalidated(spark, tmp_path):
     assert eng.approx_vector_count() == 3  # insert invalidated cache
     eng.delete([1])
     assert eng.approx_vector_count() == 2
+
+
+def test_knn_batch_empty_queries_every_route(spark, sf_dir, tmp_path):
+    """An empty query batch — a DataFrame with custom column names or
+    an empty list — returns an empty result with the output schema on
+    both dispatch routes and from the kernel directly."""
+    from pyspark.sql import functions as F
+    from vfs_spark.engine import VFSEngine
+    from vfs_spark.operators.knn import (
+        KNN_BATCH_ARROW_MIN_VECTORS,
+        knn_batch_arrow,
+        knn_batch_auto,
+    )
+    from vfs_spark.sources.parquet import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    empty_df = emb.where(F.lit(False)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    cols = dict(query_id_col="qid", query_vec_col="qv")
+    for queries in (empty_df, []):
+        results = [knn_batch_arrow(emb, queries, k=3, **cols)]
+        for hint in (None, KNN_BATCH_ARROW_MIN_VECTORS):
+            results.append(
+                knn_batch_auto(emb, queries, k=3, approx_vector_count=hint, **cols)
+            )
+        for df in results:
+            assert df.columns == ["qid", "vec_id", "dist"]
+            assert df.collect() == []
+
+    eng = VFSEngine(spark, str(tmp_path / "store"))
+    eng.init(vector_dimension=2)
+    eng.insert([[1.0, 2.0], [3.0, 4.0]])
+    assert eng.search_batch([]).collect() == []
+
+
+def test_knn_batch_auto_list_equals_dataframe(spark, sf_dir):
+    """A pre-collected (id, vec) list is the same batch as the query
+    DataFrame it came from, on both dispatch routes."""
+    from pyspark.sql import functions as F
+    from vfs_spark.operators.knn import KNN_BATCH_ARROW_MIN_QUERIES, knn_batch_auto
+    from vfs_spark.sources.parquet import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    for n in (KNN_BATCH_ARROW_MIN_QUERIES - 1, KNN_BATCH_ARROW_MIN_QUERIES):
+        qdf = emb.where(F.col("vec_id") < n).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+        qlist = [(r[0], [float(x) for x in r[1]]) for r in qdf.collect()]
+        want = {tuple(r) for r in knn_batch_auto(emb, qdf, k=3).collect()}
+        got = {tuple(r) for r in knn_batch_auto(emb, qlist, k=3).collect()}
+        assert got == want and len(got) == 3 * len(qlist)

@@ -19,6 +19,8 @@ import shutil
 from collections.abc import Sequence
 from datetime import datetime, timezone
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,9 +52,9 @@ class VFSEngine:
     Single-writer contract: one engine instance (or reference server)
     owns a storage_dir at a time — the reference serializes every verb
     behind one global mutex (main.rs:49), and the derived-state memos
-    here (next_id, row count, fitted indexes) assume the same: a
-    second writer appending to the same directory is visible to
-    vectors()/get() (they re-read storage) but NOT to the memoized
+    here (next_id, row count, store schema, fitted indexes) assume the
+    same: a second writer appending to the same directory is visible
+    to vectors()/get() (they re-list storage) but NOT to the memoized
     next_id(), so concurrent inserts from two instances could assign
     duplicate ids. Multi-writer ingest belongs to the streaming path
     (stream_append_vectors), which owns its store the same way."""
@@ -78,6 +80,10 @@ class VFSEngine:
         # reads per insert and quadratic total ingest cost as a
         # many-small-batches store grows (measured: tools/compact_probe).
         self._next_id_cache: int | None = None
+        # The store's at-rest schema, inferred by the first read (an
+        # inference is a Spark job); dropped by init()/restore(), the
+        # only verbs that can change a store's columns.
+        self._store_schema = None
         # auto-compact policy (r14 VERDICT #8): opt-out flag + optional
         # explicit threshold (None → AUTO_COMPACT_FILE_FACTOR ×
         # spark.sql.shuffle.partitions, the documented default)
@@ -110,6 +116,7 @@ class VFSEngine:
         self.quantize_on_write = quantize_storage
         self.mutate_metadata = mutate_metadata
         self._next_id_cache = None
+        self._store_schema = None
         self._recover_interrupted_rewrite()
         if truncate_data and os.path.isdir(self._data_dir):
             shutil.rmtree(self._data_dir)
@@ -135,6 +142,11 @@ class VFSEngine:
     @property
     def _data_dir(self) -> str:
         return os.path.join(self.storage_dir, "vectors")
+
+    def _read_store(self) -> DataFrame:
+        if self._store_schema is None:
+            self._store_schema = self.spark.read.parquet(self._data_dir).schema
+        return self.spark.read.schema(self._store_schema).parquet(self._data_dir)
 
     def _have_data(self) -> bool:
         d = self._data_dir
@@ -167,32 +179,39 @@ class VFSEngine:
                     f"dimension mismatch: got {len(v)}, want {self.vector_dimension}"
                 )
         next_id = self.next_id()
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = [
-            (
-                next_id + i,
-                [float(x) for x in v],
-                (names[i] if names else f"vec_{next_id + i}"),
-                (list(tags[i]) if tags else []),
-                now,
-            )
-            for i, v in enumerate(vectors)
-        ]
-        df = self.spark.createDataFrame(rows, schema=VFS_VECTOR_SCHEMA)
+        n = len(vectors)
+        ids = list(range(next_id, next_id + n))
+        now = datetime.now(timezone.utc)
+        # One Arrow table is far cheaper to ship than pickled rows, and
+        # created_at is a UTC instant: a naive datetime would be read in
+        # the host's local zone.
+        table = pa.table(
+            {
+                "id": pa.array(ids, pa.int64()),
+                "embedding": pa.ListArray.from_arrays(
+                    np.arange(n + 1, dtype=np.int32) * self.vector_dimension,
+                    np.asarray(vectors, dtype=np.float32).reshape(-1),
+                ),
+                "name": [names[i] if names else f"vec_{v}" for i, v in enumerate(ids)],
+                "tags": [list(tags[i]) if tags else [] for i in range(n)],
+                "created_at": pa.array([now] * n, pa.timestamp("us", "UTC")),
+            }
+        )
+        df = self.spark.createDataFrame(table, schema=VFS_VECTOR_SCHEMA)
         known_count = getattr(self, "_row_count_cache", None)
         self._flush(df, scale_factor=scale_factor)
         self._invalidate_index()  # index no longer covers the store
         # memo the derived next_id: this batch appended a dense id run,
         # so max(id)+1 is known without re-scanning the store
-        self._next_id_cache = next_id + len(rows)
+        self._next_id_cache = next_id + n
         # same memo for the row count (append of a known batch size):
         # keeps the auto-compact floor guard O(1) per insert instead
         # of an O(files) footer scan once n_files sits above the
         # threshold permanently (big-store regime)
         if known_count is not None:
-            self._row_count_cache = known_count + len(rows)
+            self._row_count_cache = known_count + n
         self._maybe_auto_compact()
-        return [r[0] for r in rows]
+        return ids
 
     def _maybe_auto_compact(self) -> bool:
         """Flush-time small-file policy (r14 VERDICT #8): when the
@@ -333,7 +352,7 @@ class VFSEngine:
         store is quantized (storage_manager.rs:202-210)."""
         if not self._have_data():
             return self.spark.createDataFrame([], schema=VFS_VECTOR_SCHEMA)
-        df = self.spark.read.parquet(self._data_dir)
+        df = self._read_store()
         if "embedding_q" in df.columns:
             scale = (
                 F.col("q_scale") if "q_scale" in df.columns else F.lit(DEFAULT_SCALE)
@@ -363,7 +382,7 @@ class VFSEngine:
             return self._next_id_cache
         if not self._have_data():
             return 1
-        row = self.spark.read.parquet(self._data_dir).agg(F.max("id")).first()
+        row = self._read_store().agg(F.max("id")).first()
         self._next_id_cache = (row[0] or 0) + 1
         return self._next_id_cache
 
@@ -454,20 +473,18 @@ class VFSEngine:
         also passes the store's footer row count (cached, metadata-
         only) so a tiny batch against a huge store still takes the
         kernel — the regime where the expr form is up to 36x worse
-        (r12 verdict #8, NOTES.md crossover table)."""
+        (r12 verdict #8, NOTES.md crossover table). The queries go in
+        as a driver-side (query_id, vec) list, so building the plan
+        runs no Spark job."""
         from vfs_spark.operators.knn import knn_batch_auto
 
         if self.vector_dimension is not None:
             for q in queries:
                 if len(q) != self.vector_dimension:
                     raise ValueError("query dimension mismatch")
-        qdf = self.spark.createDataFrame(
-            [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
-            "query_id long, query_vec array<double>",
-        )
         return knn_batch_auto(
             self.vectors(),
-            qdf,
+            [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
             k=top_k,
             metric=distance_method,
             id_col="id",
@@ -499,12 +516,12 @@ class VFSEngine:
         ids_df = self.spark.createDataFrame(
             [(int(i),) for i in vec_ids], "id long"
         )
-        df = self.spark.read.parquet(self._data_dir)
+        df = self._read_store()
         before = df.count()
         kept = df.join(F.broadcast(ids_df), "id", "left_anti")
         tmp = self._data_dir + ".rewrite"
         kept.write.mode("overwrite").parquet(tmp)
-        removed = before - self.spark.read.parquet(tmp).count()
+        removed = before - self.spark.read.schema(df.schema).parquet(tmp).count()
         old = self._data_dir + ".old"
         if os.path.isdir(old):
             shutil.rmtree(old)
@@ -536,7 +553,7 @@ class VFSEngine:
         crossed a threshold."""
         if not self._have_data():
             return 0
-        df = self.spark.read.parquet(self._data_dir)
+        df = self._read_store()
         n = df.count()
         n_files = max(1, -(-n // max(1, int(target_rows_per_file))))
         tmp = self._data_dir + ".rewrite"
@@ -587,9 +604,7 @@ class VFSEngine:
             shutil.rmtree(dest)
         os.makedirs(dest, exist_ok=True)
         if self._have_data():
-            self.spark.read.parquet(self._data_dir).write.mode(
-                "overwrite"
-            ).parquet(data_dest)
+            self._read_store().write.mode("overwrite").parquet(data_dest)
         for metric, (model, _vdf) in self._lsh_cache.items():
             model.write().overwrite().save(
                 os.path.join(dest, "index", f"lsh_{metric}")
@@ -614,6 +629,7 @@ class VFSEngine:
         if not os.path.isdir(src):
             raise FileNotFoundError(src)
         self._invalidate_index()
+        self._store_schema = None
         data_src = os.path.join(src, "data")
         legacy_parquet = [f for f in os.listdir(src) if f.endswith(".parquet")]
         if os.path.isdir(data_src):
