@@ -124,7 +124,8 @@ def test_jsonl_roundtrip_vectors(spark, sf_dir, tmp_path):
 def test_approx_search_reuses_index_until_insert(spark, tmp_path):
     """Fit-once-query-many (SURVEY Q3): repeated approx searches must
     reuse the fitted LSH model; an insert invalidates it so results
-    cover the new data."""
+    cover the new data, and so does a re-init that truncates the
+    store."""
     from vfs_spark.engine import VFSEngine
 
     e = VFSEngine(spark, str(tmp_path / "store"))
@@ -139,6 +140,8 @@ def test_approx_search_reuses_index_until_insert(spark, tmp_path):
     assert not e._lsh_cache  # invalidated
     hits = e.search([2.5, 0.0, 0.0, 0.0], top_k=1, search_type="approx").collect()
     assert hits[0]["id"] == new_ids[0]  # new vector is searchable
+    e.init(vector_dimension=4, truncate_data=True)
+    assert not e._lsh_cache
 
 
 def test_ivf_search_and_snapshot_roundtrip(spark, tmp_path):
@@ -245,39 +248,6 @@ def test_restore_legacy_snapshot_layout(spark, tmp_path):
     e.restore("legacy")
     assert e.vectors().count() == 2  # restored, store NOT destroyed
     assert e.next_id() == 3
-
-
-def test_interrupted_delete_recovery(spark, tmp_path):
-    """Crash between delete()'s two renames must be recoverable by
-    init(): a completed rewrite (_SUCCESS) is promoted; an incomplete
-    one is discarded and the .old original rolled back."""
-    import os
-    import shutil
-
-    # (a) completed rewrite, data dir gone -> promote the rewrite
-    e = VFSEngine(spark, str(tmp_path / "r1"))
-    e.init(vector_dimension=2)
-    e.insert([[1.0, 1.0], [2.0, 2.0]])
-    d = e._data_dir
-    shutil.copytree(d, d + ".rewrite")  # has _SUCCESS from the write
-    os.rename(d, d + ".old")
-    e2 = VFSEngine(spark, str(tmp_path / "r1"))
-    e2.init(vector_dimension=2)
-    assert e2.vectors().count() == 2
-    assert not os.path.isdir(d + ".old") and not os.path.isdir(d + ".rewrite")
-
-    # (b) incomplete rewrite (no _SUCCESS) -> roll back to .old
-    e3 = VFSEngine(spark, str(tmp_path / "r2"))
-    e3.init(vector_dimension=2)
-    e3.insert([[5.0, 5.0]])
-    d3 = e3._data_dir
-    shutil.copytree(d3, d3 + ".rewrite")
-    os.remove(os.path.join(d3 + ".rewrite", "_SUCCESS"))
-    os.rename(d3, d3 + ".old")
-    e4 = VFSEngine(spark, str(tmp_path / "r2"))
-    e4.init(vector_dimension=2)
-    assert e4.vectors().count() == 1
-    assert not os.path.isdir(d3 + ".old") and not os.path.isdir(d3 + ".rewrite")
 
 
 def test_quantize_metadata_mutation_roundtrip(spark, tmp_path):
@@ -457,47 +427,52 @@ def test_auto_compact_triggers_once_and_preserves_store(spark, tmp_path):
 
 
 def test_auto_compact_floor_guard_prevents_quadratic_ingest(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """r15 ADVICE: once ceil(rows/target) itself exceeds the file
     threshold, compact() cannot land under the threshold and the naive
     policy rewrites the FULL store on every subsequent insert
     (quadratic ingest). The guard skips (with a one-time warning)
     until a further threshold of small files accumulates past the
-    post-compact floor. Scaled down via auto_compact_target_rows."""
+    post-compact floor. Scaled down by patching the rows-per-file
+    target."""
     import warnings
 
+    from vfs_spark.sources import store
+
+    monkeypatch.setattr(store, "TARGET_ROWS_PER_FILE", 4)
     eng = VFSEngine(spark, str(tmp_path / "store"))
     eng.init(vector_dimension=2)
     eng.auto_compact_threshold = 2
-    eng.auto_compact_target_rows = 1  # floor == n_rows at test scale
     compacts = []
     real_compact = eng.compact
 
     def counting_compact(*a, **kw):
-        compacts.append(kw.get("target_rows_per_file"))
+        compacts.append(1)
         return real_compact(*a, **kw)
 
     eng.compact = counting_compact
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        for i in range(5):
+        eng.insert([[float(i), 0.0] for i in range(8)])  # one 8-row file
+        for i in range(4):
             eng.insert([[float(i), 1.0]])
         floor_warns = [
             x for x in w if "post-compact floor" in str(x.message)
         ]
-    # floor after 3 rows = 3 > thr 2: every trigger point from the
-    # 3rd insert on is floor-guarded — zero compacts, one warning
+    # from the 3rd insert on, files (3..5) > thr 2 but the floor
+    # ceil(rows/4) = 3 > thr as well, and files <= floor + thr: every
+    # trigger point is floor-guarded — zero compacts, one warning
     assert compacts == []
     assert len(floor_warns) == 1
-    # the documented escape: re-tune the target so the floor drops
-    # back under the threshold — the normal policy resumes (and the
-    # compact runs with the instance target, not compact()'s default)
-    eng.auto_compact_target_rows = 100
+    # the documented escape: raise the threshold to the floor — the
+    # normal policy resumes
+    eng.auto_compact_threshold = 4
     eng.insert([[9.0, 9.0]])
-    assert compacts == [100]
+    assert compacts == [1]
+    assert store.parquet_files(eng._data_dir) == 4  # ceil(13 / 4)
     rows = sorted(r.id for r in eng.vectors().collect())
-    assert rows == list(range(1, 7))  # nothing lost across the guard
+    assert rows == list(range(1, 14))  # nothing lost across the guard
 
 
 def test_created_at_is_utc_instant_under_any_host_zone(engine):
@@ -566,6 +541,30 @@ def test_engine_verb_job_budget(spark, tmp_path):
     want, first_jobs = _jobs(spark, plan.first)
     got, get_jobs = _jobs(spark, lambda: e.get(70))
     assert got == want and get_jobs == first_jobs
+
+
+def test_rewrite_job_budget(spark, tmp_path):
+    """Rewrites count rows from Parquet footers, so compact() and
+    delete() run only their rewrite, and compact() keeps the next-id
+    memo: an insert right after it is its one write job."""
+    e = VFSEngine(spark, str(tmp_path / "store"))
+    e.init(vector_dimension=4)
+    e.auto_compact = False
+    for i in range(4):
+        e.insert([[float(i), float(j), 0.0, 1.0] for j in range(4)])
+    assert e.get(1) is not None  # memoizes the store schema
+    n_files, n = _jobs(spark, e.compact)
+    assert n_files == 1 and n <= 2, n
+    _, n = _jobs(spark, lambda: e.insert([[0.5] * 4]))
+    assert n == 1, n
+    e.auto_compact = True
+    e.auto_compact_threshold = 2
+    _, n = _jobs(spark, lambda: e.insert([[0.25] * 4]))  # 3 files > 2
+    assert n <= 3, n
+    assert sum(f.endswith(".parquet") for f in os.listdir(e._data_dir)) == 1
+    removed, n = _jobs(spark, lambda: e.delete([1, 2, 99]))
+    assert removed == 2 and n <= 2, n
+    assert e.vectors().count() == 16
 
 
 def test_store_schema_memo_follows_init_and_restore(spark, tmp_path):

@@ -994,16 +994,16 @@ def test_stream_append_auto_compacts_once(spark, tmp_path, monkeypatch):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed / "b*"))
     )
+    from vfs_spark.sources import store
+
     compacts = []
-    real = ingest.maybe_compact_append_store
+    real = store.compact
 
     def counting(*a, **kw):
-        ran = real(*a, **kw)
-        if ran:
-            compacts.append(1)
-        return ran
+        compacts.append(1)
+        return real(*a, **kw)
 
-    monkeypatch.setattr(ingest, "maybe_compact_append_store", counting)
+    monkeypatch.setattr(store, "compact", counting)
     import os
 
     dest = str(tmp_path / "data")
@@ -1020,22 +1020,3 @@ def test_stream_append_auto_compacts_once(spark, tmp_path, monkeypatch):
         1 for f in os.listdir(dest) if f.endswith(".parquet")
     )
     assert n_files <= 4
-
-
-def test_maybe_compact_append_store_recovers_interrupted_swap(
-    spark, tmp_path
-):
-    """A crash between the two swap renames (store gone, .old intact)
-    must be rolled back before any policy decision — the engine.init
-    recovery semantics, applied by the streaming epilogue itself
-    because a stream has no init()."""
-    import os
-
-    dest = str(tmp_path / "data")
-    spark.range(5).write.parquet(dest)
-    os.rename(dest, dest + ".old")
-    assert not os.path.isdir(dest)
-    ran = ingest.maybe_compact_append_store(spark, dest, threshold=100)
-    assert not ran  # recovery only; 100-file threshold not crossed
-    assert spark.read.parquet(dest).count() == 5
-    assert not os.path.isdir(dest + ".old")

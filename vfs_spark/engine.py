@@ -27,22 +27,8 @@ from pyspark.sql import functions as F
 from vfs_spark.functions.quantize import DEFAULT_SCALE, dequantize, quantize
 from vfs_spark.operators.knn import exact_knn
 from vfs_spark.schema import VFS_VECTOR_SCHEMA
-
-
-# Auto-compact trigger (r14 VERDICT #8): compact when the store holds
-# more than FACTOR × spark.sql.shuffle.partitions parquet files.
-# Rationale for 64: compact_probe (r14, 12,800-file store) measured
-# 34×/50×/15× lookup/scan/search gains, i.e. per-file footer/open
-# overhead dominates serving well before 10k files; 64×32 = 2,048
-# files is where that overhead is already ~15-30% of a point lookup
-# on this node while a compact() rewrite is still cheap relative to
-# the accumulated insert cost that produced the files. Bounded-
-# mistake reasoning (the knn_batch_auto discipline): triggering too
-# EARLY costs one linear rewrite amortized over the ≥threshold
-# inserts that preceded it (≤1/2048 of a store rewrite per insert);
-# triggering too LATE re-enters the measured 34× serving-degradation
-# regime — so the cheap mistake is early.
-AUTO_COMPACT_FILE_FACTOR = 64
+from vfs_spark.sources import store
+from vfs_spark.sources.parquet import parquet_row_count
 
 
 class VFSEngine:
@@ -74,25 +60,25 @@ class VFSEngine:
         self._pq_cache: tuple | None = None  # (codebooks, encoded_df)
         # next_id stays DERIVED (max(id)+1 from storage, the reference's
         # recompute-from-disk semantics) — this is only a memo of that
-        # derivation, maintained through insert() and dropped on any
-        # other mutation (init/delete/restore). Without it every insert
+        # derivation, maintained through insert() and compact() and
+        # dropped by init/delete/restore. Without it every insert
         # re-scans max(id) across ALL store files, i.e. O(files) footer
         # reads per insert and quadratic total ingest cost as a
         # many-small-batches store grows (measured: tools/compact_probe).
         self._next_id_cache: int | None = None
+        # Footer row count, memoized the same way: it keeps the
+        # auto-compact floor guard O(1) per insert once the store sits
+        # above the file threshold for good (big-store regime).
+        self._row_count_cache: int | None = None
         # The store's at-rest schema, inferred by the first read (an
         # inference is a Spark job); dropped by init()/restore(), the
         # only verbs that can change a store's columns.
         self._store_schema = None
         # auto-compact policy (r14 VERDICT #8): opt-out flag + optional
-        # explicit threshold (None → AUTO_COMPACT_FILE_FACTOR ×
+        # explicit threshold (None → store.AUTO_COMPACT_FILE_FACTOR ×
         # spark.sql.shuffle.partitions, the documented default)
         self.auto_compact = True
         self.auto_compact_threshold: int | None = None
-        # rows-per-file target used by the auto-compact path (and the
-        # re-arm guard below); compact() called explicitly keeps its
-        # own default argument
-        self.auto_compact_target_rows: int = 1_000_000
         self._auto_compact_floor_warned = False
 
     # -- /init (tcp.rs:270-299) -------------------------------------------
@@ -115,29 +101,11 @@ class VFSEngine:
         self.vector_dimension = vector_dimension
         self.quantize_on_write = quantize_storage
         self.mutate_metadata = mutate_metadata
-        self._next_id_cache = None
-        self._store_schema = None
-        self._recover_interrupted_rewrite()
+        self._forget_store()
+        store.recover(self._data_dir)
         if truncate_data and os.path.isdir(self._data_dir):
             shutil.rmtree(self._data_dir)
         os.makedirs(self.storage_dir, exist_ok=True)
-
-    def _recover_interrupted_rewrite(self) -> None:
-        """Finish or roll back a delete() rewrite interrupted between
-        its two directory renames (see delete): a completed rewrite
-        (marked by Spark's _SUCCESS file) is promoted to the data dir;
-        an incomplete one is discarded and the saved .old restored."""
-        d = self._data_dir
-        old, tmp = d + ".old", d + ".rewrite"
-        if not os.path.isdir(d):
-            if os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-                os.rename(tmp, d)
-            elif os.path.isdir(old):
-                os.rename(old, d)
-        if os.path.isdir(d):
-            for leftover in (old, tmp):
-                if os.path.isdir(leftover):
-                    shutil.rmtree(leftover)
 
     @property
     def _data_dir(self) -> str:
@@ -149,10 +117,7 @@ class VFSEngine:
         return self.spark.read.schema(self._store_schema).parquet(self._data_dir)
 
     def _have_data(self) -> bool:
-        d = self._data_dir
-        return os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        )
+        return store.parquet_files(self._data_dir) > 0
 
     # -- /vectors POST (tcp.rs:302-355) -----------------------------------
     def insert(
@@ -198,91 +163,43 @@ class VFSEngine:
             }
         )
         df = self.spark.createDataFrame(table, schema=VFS_VECTOR_SCHEMA)
-        known_count = getattr(self, "_row_count_cache", None)
         self._flush(df, scale_factor=scale_factor)
-        self._invalidate_index()  # index no longer covers the store
-        # memo the derived next_id: this batch appended a dense id run,
-        # so max(id)+1 is known without re-scanning the store
+        self._drop_indexes()  # index no longer covers the store
+        # an appended dense id run of known size: both memos stay exact
         self._next_id_cache = next_id + n
-        # same memo for the row count (append of a known batch size):
-        # keeps the auto-compact floor guard O(1) per insert instead
-        # of an O(files) footer scan once n_files sits above the
-        # threshold permanently (big-store regime)
-        if known_count is not None:
-            self._row_count_cache = known_count + n
+        if self._row_count_cache is not None:
+            self._row_count_cache += n
         self._maybe_auto_compact()
         return ids
 
-    def _maybe_auto_compact(self) -> bool:
-        """Flush-time small-file policy (r14 VERDICT #8): when the
-        store's parquet file count crosses the threshold (default
-        AUTO_COMPACT_FILE_FACTOR × shuffle parallelism — see the
-        constant's rationale), run compact() once. Every insert lands
-        at least one new file, so a many-small-batches ingest would
-        otherwise walk straight into the measured 34×-slower-lookup
-        regime (tools/compact_probe). The check is one driver-side
-        listdir (no Spark job); after a compact the file count falls
-        to ceil(rows/target), so the policy re-arms only after
-        ~threshold further inserts. Opt out with
+    def _maybe_auto_compact(self) -> None:
+        """Flush-time small-file policy (r14 VERDICT #8; see
+        store.compact_due): run compact() once the store holds more
+        parquet files than the threshold. Opt out with
         ``engine.auto_compact = False``; override the cutoff with
-        ``engine.auto_compact_threshold``. Returns True iff a compact
-        ran. compact() is row-identical, so the just-memoized next_id
-        survives it. When the store has grown past ~thr·target rows,
-        the post-compact floor itself exceeds the threshold and the
-        naive policy degenerates to a full rewrite per insert; the
-        guard below re-tunes the trigger to floor+thr (see inline
-        comment)."""
-        if not self.auto_compact or not self._have_data():
-            return False
-        thr = self.auto_compact_threshold
-        if thr is None:
-            thr = AUTO_COMPACT_FILE_FACTOR * int(
-                self.spark.conf.get("spark.sql.shuffle.partitions")
+        ``engine.auto_compact_threshold``. Warns once while the
+        post-compact-floor guard holds compaction back."""
+        if not self.auto_compact:
+            return
+        due = store.compact_due(
+            self.spark, self._data_dir, self.auto_compact_threshold,
+            self.approx_vector_count,
+        )
+        if due is None and not self._auto_compact_floor_warned:
+            import warnings
+
+            warnings.warn(
+                "auto-compact: the post-compact floor of this store "
+                "exceeds the file threshold; compacting only after a "
+                "further threshold of small files accumulates (raise "
+                "auto_compact_threshold to retune)",
+                stacklevel=3,
             )
-        n_files = sum(
-            1
-            for f in os.listdir(self._data_dir)
-            if f.endswith(".parquet")
-        )
-        if n_files <= thr:
-            return False
-        # Re-arm guard (r15 ADVICE): once the store is big enough that
-        # even a perfect rewrite lands ceil(rows/target) > thr files,
-        # compact() can never bring the count under the threshold and
-        # EVERY subsequent insert would trigger a full-store rewrite —
-        # quadratic ingest. Skip (warn once) when the post-compact
-        # floor already exceeds the threshold; the floor check costs a
-        # footer scan and runs only after the cheap n_files test. A
-        # compact is still worthwhile while n_files sits well above
-        # the floor, so require headroom of a full threshold of NEW
-        # small files past the floor before rewriting again.
-        n_rows = self.approx_vector_count() or 0
-        floor = max(
-            1, -(-n_rows // max(1, int(self.auto_compact_target_rows)))
-        )
-        if floor > thr:
-            if n_files <= floor + thr:
-                if not self._auto_compact_floor_warned:
-                    import warnings
+            self._auto_compact_floor_warned = True
+        if due:
+            self.compact()
 
-                    warnings.warn(
-                        "auto-compact: post-compact floor "
-                        f"ceil({n_rows}/{self.auto_compact_target_rows})="
-                        f"{floor} exceeds threshold {thr}; compacting "
-                        "only after a further threshold of small files "
-                        "accumulates (raise auto_compact_target_rows or "
-                        "auto_compact_threshold to retune)",
-                        stacklevel=2,
-                    )
-                    self._auto_compact_floor_warned = True
-                return False
-        memo = self._next_id_cache
-        self.compact(target_rows_per_file=self.auto_compact_target_rows)
-        self._next_id_cache = memo  # layout-only rewrite: max(id) unchanged
-        self._row_count_cache = n_rows  # row-identical rewrite
-        return True
-
-    def _invalidate_index(self) -> None:
+    def _drop_indexes(self) -> None:
         for _, vdf in self._lsh_cache.values():
             vdf.unpersist()
         self._lsh_cache.clear()
@@ -292,22 +209,22 @@ class VFSEngine:
         if self._pq_cache is not None:
             self._pq_cache[1].unpersist()
             self._pq_cache = None
-        self._row_count_cache = None  # store changed — refresh footers
-        self._next_id_cache = None  # re-derive from storage on next ask
-        # (insert() re-memoizes right after calling this — the one
-        # mutation whose resulting max(id) is known without a scan)
+
+    def _forget_store(self) -> None:
+        """Drop everything derived from the store: init() and restore()
+        may change its ids, rows and columns."""
+        self._drop_indexes()
+        self._next_id_cache = None
+        self._row_count_cache = None
+        self._store_schema = None
 
     def approx_vector_count(self) -> int | None:
         """Store size from Parquet footers (metadata-only — no data
         pages), cached until the store mutates. Feeds
         knn_batch_auto's N-axis dispatch (r12 verdict #8)."""
-        cached = getattr(self, "_row_count_cache", None)
-        if cached is None:
-            from vfs_spark.sources.parquet import parquet_row_count
-
-            cached = parquet_row_count(self._data_dir)
-            self._row_count_cache = cached
-        return cached
+        if self._row_count_cache is None:
+            self._row_count_cache = parquet_row_count(self._data_dir)
+        return self._row_count_cache
 
     def _flush(self, df: DataFrame, scale_factor: float | None = None) -> None:
         """Memtable flush analogue (storage_manager.rs:139-162):
@@ -502,79 +419,53 @@ class VFSEngine:
         """Delete by id — the CRUD verb the reference's append-only log
         cannot express (storage_manager.rs:120-141). Copy-on-write:
         rewrite the store minus the tombstoned ids (broadcast anti
-        join — only the id set shuffles), then swap the directory in
-        two renames. The swap is NOT atomic — a crash between the
-        renames leaves no data dir — but it is always recoverable:
-        the fully-written rewrite (marked _SUCCESS) and the .old
-        original both survive, and init() promotes/rolls back via
-        _recover_interrupted_rewrite. At 100 TB with an id-range-
-        partitioned store, only partitions containing deleted ids
-        rewrite. Returns the number of rows removed; invalidates
+        join — only the id set shuffles) and swap it in with
+        store.swap, whose interrupted swaps init() recovers. The
+        removed count comes from Parquet footers. At 100 TB with an
+        id-range-partitioned store, only partitions containing deleted
+        ids rewrite. Returns the number of rows removed; invalidates
         fitted indexes (they cover rows that no longer exist)."""
         if not self._have_data():
             return 0
         ids_df = self.spark.createDataFrame(
             [(int(i),) for i in vec_ids], "id long"
         )
-        df = self._read_store()
-        before = df.count()
-        kept = df.join(F.broadcast(ids_df), "id", "left_anti")
-        tmp = self._data_dir + ".rewrite"
-        kept.write.mode("overwrite").parquet(tmp)
-        removed = before - self.spark.read.schema(df.schema).parquet(tmp).count()
-        old = self._data_dir + ".old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(self._data_dir, old)
-        os.rename(tmp, self._data_dir)
-        shutil.rmtree(old)
-        self._invalidate_index()
-        return removed
+        before = self.approx_vector_count() or 0
+        store.swap(
+            self._read_store().join(F.broadcast(ids_df), "id", "left_anti"),
+            self._data_dir,
+        )
+        self._drop_indexes()
+        self._next_id_cache = None  # the max id may be gone
+        self._row_count_cache = parquet_row_count(self._data_dir) or 0
+        return before - self._row_count_cache
 
     # -- compact (⊕ extension: append-only stores fragment) ---------------
-    def compact(self, target_rows_per_file: int = 1_000_000) -> int:
-        """Rewrite the store into ceil(rows / target) id-sorted files —
-        the OPTIMIZE verb every append-only layout eventually needs:
-        each insert() lands its own parquet file(s), so a serving
-        store fed by many small batches accumulates footer/open
-        overhead per query and tiny row groups that defeat scan
-        vectorization and min/max pruning. Copy-on-write with the
-        same two-rename swap + crash recovery contract as delete()
-        (init() promotes/rolls back half-finished rewrites via
-        _recover_interrupted_rewrite). Rows, schema, and quantized
-        columns pass through untouched — compaction is layout-only,
-        asserted row-identical in tests. Sorting by id restores the
-        per-file id min/max tightness that makes point_lookup_id's
-        footer pruning effective after interleaved inserts. Returns
-        the resulting file count; invalidates fitted indexes (their
-        row lineage is unchanged, but cached vdf partitioning is
-        layout-bound). At 100 TB the same verb runs per id-range
-        partition, compacting only partitions whose small-file count
-        crossed a threshold."""
+    def compact(self, target_rows_per_file: int | None = None) -> int:
+        """Rewrite the store into ceil(rows / target) id-sorted files
+        (target None → store.TARGET_ROWS_PER_FILE) — the OPTIMIZE verb
+        every append-only layout eventually needs: each insert() lands
+        its own parquet file(s), so a serving store fed by many small
+        batches accumulates footer/open overhead per query and tiny
+        row groups that defeat scan vectorization and min/max pruning.
+        Copy-on-write through store.compact, with delete()'s swap and
+        recovery. Rows, schema, and quantized columns pass through
+        untouched — compaction is layout-only, asserted row-identical
+        in tests, so the next-id and row-count memos survive it.
+        Sorting by id restores the per-file id min/max tightness that
+        makes point_lookup_id's footer pruning effective after
+        interleaved inserts. Returns the resulting file count; drops
+        fitted indexes (their row lineage is unchanged, but cached vdf
+        partitioning is layout-bound). At 100 TB the same verb runs
+        per id-range partition, compacting only partitions whose
+        small-file count crossed a threshold."""
         if not self._have_data():
             return 0
-        df = self._read_store()
-        n = df.count()
-        n_files = max(1, -(-n // max(1, int(target_rows_per_file))))
-        tmp = self._data_dir + ".rewrite"
-        (
-            df.repartitionByRange(n_files, "id")
-            .sortWithinPartitions("id")
-            .write.mode("overwrite")
-            .parquet(tmp)
+        n_files = store.compact(
+            self._read_store(), self._data_dir, "id", target_rows_per_file
         )
-        old = self._data_dir + ".old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(self._data_dir, old)
-        os.rename(tmp, self._data_dir)
-        shutil.rmtree(old)
-        self._invalidate_index()
-        return sum(
-            1
-            for f in os.listdir(self._data_dir)
-            if f.endswith(".parquet")
-        )
+        self._drop_indexes()
+        return n_files
 
     # -- /snapshot + /restore (storage_manager.rs:367-427) ----------------
     _SNAPSHOT_NAME = re.compile(r"[A-Za-z0-9_.-]+")
@@ -628,19 +519,18 @@ class VFSEngine:
         src = self._snapshot_dir(name)
         if not os.path.isdir(src):
             raise FileNotFoundError(src)
-        self._invalidate_index()
-        self._store_schema = None
+        self._forget_store()
         data_src = os.path.join(src, "data")
-        legacy_parquet = [f for f in os.listdir(src) if f.endswith(".parquet")]
         if os.path.isdir(data_src):
-            df = self.spark.read.parquet(data_src)
-            df.write.mode("overwrite").parquet(self._data_dir)
-        elif legacy_parquet:
+            store.swap(self.spark.read.parquet(data_src), self._data_dir)
+        elif store.parquet_files(src):
             # legacy layout (pre-data/-subdir snapshots): parquet files
             # sit at the snapshot ROOT. Restore them — wiping the live
             # store here would destroy data while restoring nothing.
-            df = self.spark.read.parquet(os.path.join(src, "*.parquet"))
-            df.write.mode("overwrite").parquet(self._data_dir)
+            store.swap(
+                self.spark.read.parquet(os.path.join(src, "*.parquet")),
+                self._data_dir,
+            )
         elif os.path.isdir(self._data_dir):
             # snapshot of an empty store: restoring it empties the store
             shutil.rmtree(self._data_dir)
