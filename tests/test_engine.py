@@ -72,14 +72,14 @@ def test_snapshot_persists_lsh_index(spark, tmp_path):
     e.init(vector_dimension=4)
     e.insert([[float(i), 0.0, 0.0, 0.0] for i in range(30)])
     before = e.search([3.0, 0.0, 0.0, 0.0], top_k=3, search_type="approx").collect()
-    assert "euclidean" in e._lsh_cache  # fitted during search
+    assert "approx:euclidean" in e._models  # fitted during search
     e.snapshot("s_idx")
 
     # wipe state: new engine instance over the same storage dir
     e2 = VFSEngine(spark, str(tmp_path / "store"))
     e2.init(vector_dimension=4)
     e2.restore("s_idx")
-    assert "euclidean" in e2._lsh_cache  # model reloaded, not refit
+    assert "approx:euclidean" in e2._models  # model reloaded, not refit
     after = e2.search([3.0, 0.0, 0.0, 0.0], top_k=3, search_type="approx").collect()
     assert [tuple(r) for r in before] == [tuple(r) for r in after]
 
@@ -123,9 +123,9 @@ def test_jsonl_roundtrip_vectors(spark, sf_dir, tmp_path):
 
 def test_approx_search_reuses_index_until_insert(spark, tmp_path):
     """Fit-once-query-many (SURVEY Q3): repeated approx searches must
-    reuse the fitted LSH model; an insert invalidates it so results
-    cover the new data, and so does a re-init that truncates the
-    store."""
+    reuse the fitted LSH model. An insert keeps the model and only
+    re-encodes the store, so results cover the new data; a re-init
+    that truncates the store drops the model."""
     from vfs_spark.engine import VFSEngine
 
     e = VFSEngine(spark, str(tmp_path / "store"))
@@ -133,15 +133,15 @@ def test_approx_search_reuses_index_until_insert(spark, tmp_path):
     e.insert([[float(i), 0.0, 0.0, 0.0] for i in range(30)])
     r1 = e.search([3.0, 0.0, 0.0, 0.0], top_k=3, search_type="approx")
     r1.collect()
-    model_a = e._lsh_cache["euclidean"][0]
+    model_a = e._models["approx:euclidean"][0]
     e.search([5.0, 0.0, 0.0, 0.0], top_k=3, search_type="approx").collect()
-    assert e._lsh_cache["euclidean"][0] is model_a  # reused, not refit
+    assert e._models["approx:euclidean"][0] is model_a  # reused, not refit
     new_ids = e.insert([[2.5, 0.0, 0.0, 0.0]])
-    assert not e._lsh_cache  # invalidated
     hits = e.search([2.5, 0.0, 0.0, 0.0], top_k=1, search_type="approx").collect()
+    assert e._models["approx:euclidean"][0] is model_a  # kept across insert
     assert hits[0]["id"] == new_ids[0]  # new vector is searchable
     e.init(vector_dimension=4, truncate_data=True)
-    assert not e._lsh_cache
+    assert not e._models and not e._frames
 
 
 def test_ivf_search_and_snapshot_roundtrip(spark, tmp_path):
@@ -152,16 +152,15 @@ def test_ivf_search_and_snapshot_roundtrip(spark, tmp_path):
     e.init(vector_dimension=4)
     e.insert([[float(i % 7), float(i % 3), 0.0, 0.0] for i in range(40)])
     before = e.search([2.0, 1.0, 0.0, 0.0], top_k=3, search_type="ivf").collect()
-    assert e._ivf_cache is not None
-    km_a = e._ivf_cache[0]
+    km_a = e._models["ivf:euclidean"][0]
     e.search([5.0, 2.0, 0.0, 0.0], top_k=3, search_type="ivf").collect()
-    assert e._ivf_cache[0] is km_a  # reused, not refit
+    assert e._models["ivf:euclidean"][0] is km_a  # reused, not refit
     e.snapshot("ivf_snap")
 
     e2 = VFSEngine(spark, str(tmp_path / "store"))
     e2.init(vector_dimension=4)
     e2.restore("ivf_snap")
-    assert e2._ivf_cache is not None  # model reloaded, not refit
+    assert "ivf:euclidean" in e2._models  # model reloaded, not refit
     after = e2.search([2.0, 1.0, 0.0, 0.0], top_k=3, search_type="ivf").collect()
     assert [tuple(r) for r in before] == [tuple(r) for r in after]
 
@@ -178,35 +177,43 @@ def test_pq_search_and_snapshot_roundtrip(spark, tmp_path):
     q = [float((3 * 7 + j) % 5) for j in range(8)]  # vector id 4 (i=3)
     before = e.search(q, top_k=3, search_type="pq").collect()
     assert before[0]["dist"] == 0.0  # exact self-match after rerank
-    books_a = e._pq_cache[0]
+    books_a = e._models["pq:euclidean"][0]
     e.search(q, top_k=3, search_type="pq").collect()
-    assert e._pq_cache[0] is books_a  # reused, not refit
+    assert e._models["pq:euclidean"][0] is books_a  # reused, not refit
     e.snapshot("pq_snap")
 
     e2 = VFSEngine(spark, str(tmp_path / "store"))
     e2.init(vector_dimension=8)
     e2.restore("pq_snap")
-    assert e2._pq_cache is not None  # codebooks reloaded, not refit
-    assert e2._pq_cache[0] == books_a
+    assert e2._models["pq:euclidean"][0] == books_a  # reloaded, not refit
     after = e2.search(q, top_k=3, search_type="pq").collect()
     assert [tuple(r) for r in before] == [tuple(r) for r in after]
 
-    e2.insert([[0.0] * 8])
-    assert e2._pq_cache is None  # invalidated: index no longer covers store
+    books_b = e2._models["pq:euclidean"][0]
+    new_id = e2.insert([[0.5] * 8])[0]
+    hits = e2.search([0.5] * 8, top_k=1, search_type="pq").collect()
+    assert e2._models["pq:euclidean"][0] is books_b  # kept across insert
+    assert hits[0]["id"] == new_id and hits[0]["dist"] == 0.0
 
 
 def test_delete_copy_on_write(spark, tmp_path):
     """delete() removes exactly the tombstoned ids via an atomic
-    store rewrite, keeps everything else readable, invalidates fitted
-    indexes, and reports the removed count."""
+    store rewrite, keeps everything else readable, re-encodes the
+    fitted indexes so no search returns a deleted id, and reports the
+    removed count. Deleting nothing keeps the encoded index."""
     e = VFSEngine(spark, str(tmp_path / "store"))
     e.init(vector_dimension=4)
     ids = e.insert([[float(i), 0.0, 0.0, 0.0] for i in range(20)])
     e.search([1.0, 0.0, 0.0, 0.0], top_k=3, search_type="ivf").collect()
-    assert e._ivf_cache is not None
+    frame = e._frames["ivf:euclidean"]
+    assert e.delete([]) == 0
+    assert e._frames["ivf:euclidean"] is frame
     removed = e.delete([ids[0], ids[5], ids[7], 9999])
     assert removed == 3  # 9999 never existed
-    assert e._ivf_cache is None  # index no longer covers the store
+    gone = {ids[0], ids[5], ids[7]}
+    for q in ([0.0] * 4, [5.0, 0.0, 0.0, 0.0], [7.0, 0.0, 0.0, 0.0]):
+        hits = e.search(q, top_k=5, search_type="ivf").collect()
+        assert hits and not gone & {r["id"] for r in hits}
     left = {r["id"] for r in e.vectors().select("id").collect()}
     assert left == set(ids) - {ids[0], ids[5], ids[7]}
     assert e.get(ids[5]) is None
@@ -562,6 +569,8 @@ def test_rewrite_job_budget(spark, tmp_path):
     _, n = _jobs(spark, lambda: e.insert([[0.25] * 4]))  # 3 files > 2
     assert n <= 3, n
     assert sum(f.endswith(".parquet") for f in os.listdir(e._data_dir)) == 1
+    removed, n = _jobs(spark, lambda: e.delete([]))
+    assert removed == 0 and n == 0, n
     removed, n = _jobs(spark, lambda: e.delete([1, 2, 99]))
     assert removed == 2 and n <= 2, n
     assert e.vectors().count() == 16
@@ -601,3 +610,180 @@ def test_store_schema_memo_follows_init_and_restore(spark, tmp_path):
     assert [r["name"] for r in rows] == ["f0", "f1"]
     e.restore("quantized_store")
     check_quantized()
+
+
+# -- ANN index lifetime: models outlive writes, frames do not ------------
+ANN_KINDS = ("approx", "ivf", "pq")
+_FIT_FNS = {
+    "approx": "build_lsh_index",
+    "ivf": "build_ivf_index",
+    "pq": "fit_pq_codebooks",
+}
+
+
+def _rows(n, seed):
+    """n dim-8 vectors on a 0.25 grid (exact in float32, so a stored
+    vector queried by itself is at distance 0.0)."""
+    import numpy as np
+
+    return (np.random.default_rng(seed).integers(-8, 9, size=(n, 8)) / 4).tolist()
+
+
+def _count_fits(monkeypatch):
+    """A list that records the kind of every ANN model fit from here on."""
+    from vfs_spark.operators import ann
+
+    fits = []
+    for kind, name in _FIT_FNS.items():
+
+        def counting(*a, _real=getattr(ann, name), _kind=kind, **kw):
+            fits.append(_kind)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(ann, name, counting)
+    return fits
+
+
+def _ann_engine(spark, tmp_path, n_rows):
+    e = VFSEngine(spark, str(tmp_path / "store"))
+    e.init(vector_dimension=8)
+    e.auto_compact = False
+    e.insert(_rows(n_rows, seed=0))
+    return e
+
+
+def _hits(e, kind, q, k=3):
+    return [tuple(r) for r in e.search(q, top_k=k, search_type=kind).collect()]
+
+
+@pytest.mark.parametrize("kind", ANN_KINDS)
+def test_insert_keeps_fitted_ann_model(spark, tmp_path, monkeypatch, kind):
+    """An insert drops only the encoded frame: the next search encodes
+    the store against the kept model, fits nothing, and finds the
+    inserted vector."""
+    e = _ann_engine(spark, tmp_path, 32)
+    _hits(e, kind, _rows(1, seed=9)[0])  # fits the model
+    fits = _count_fits(monkeypatch)
+    new = _rows(1, seed=1)[0]
+    new_id = e.insert([new])[0]
+    assert _hits(e, kind, new, k=1) == [(new_id, 0.0)]
+    assert fits == []
+
+
+def test_ann_model_refits_once_past_growth_bound(spark, tmp_path, monkeypatch):
+    """A kept model serves until the store holds more than REFIT_GROWTH
+    times the rows it was fitted on; crossing that bound refits each
+    kind exactly once, recording the grown row count."""
+    from vfs_spark.engine import REFIT_GROWTH
+
+    e = _ann_engine(spark, tmp_path, 24)
+    q = _rows(1, seed=9)[0]
+    for kind in ANN_KINDS:
+        _hits(e, kind, q)
+    fits = _count_fits(monkeypatch)
+    e.insert(_rows(24 * (REFIT_GROWTH - 1), seed=1))  # exactly at the bound
+    for kind in ANN_KINDS:
+        _hits(e, kind, q)
+    assert fits == []
+    e.insert(_rows(1, seed=2))  # one row past it
+    for _ in range(2):
+        for kind in ANN_KINDS:
+            _hits(e, kind, q)
+        e.insert(_rows(1, seed=3))
+    assert sorted(fits) == sorted(ANN_KINDS)
+    for kind in ANN_KINDS:
+        assert e._models[f"{kind}:euclidean"][1] == 24 * REFIT_GROWTH + 1
+
+
+def test_compact_keeps_fitted_ann_models(spark, tmp_path, monkeypatch):
+    """compact() is layout-only: each kind's next search encodes the
+    compacted store against the kept model, fits nothing, and returns
+    the hits it returned before."""
+    e = _ann_engine(spark, tmp_path, 16)
+    e.insert(_rows(16, seed=1))
+    e.insert(_rows(16, seed=2))
+    q = _rows(1, seed=9)[0]
+    before = {kind: _hits(e, kind, q, k=5) for kind in ANN_KINDS}
+    fits = _count_fits(monkeypatch)
+    assert e.compact() == 1
+    assert not e._frames
+    assert {kind: _hits(e, kind, q, k=5) for kind in ANN_KINDS} == before
+    assert fits == []
+
+
+def test_snapshot_after_insert_carries_models(spark, tmp_path, monkeypatch):
+    """A snapshot taken right after an insert (frames dropped, models
+    kept) saves every model with its fitted row count. The restored
+    engine holds equal models and its first search of each kind fits
+    nothing and returns the original engine's hits."""
+    import numpy as np
+
+    e = _ann_engine(spark, tmp_path, 32)
+    q = _rows(1, seed=9)[0]
+    for kind in ANN_KINDS:
+        _hits(e, kind, q)
+    e.insert(_rows(1, seed=1))
+    assert not e._frames
+    e.snapshot("after_insert")
+    fits = _count_fits(monkeypatch)
+    want = {kind: _hits(e, kind, q) for kind in ANN_KINDS}
+
+    e2 = VFSEngine(spark, e.storage_dir)
+    e2.init(vector_dimension=8)
+    e2.restore("after_insert")
+    assert e2._models.keys() == e._models.keys()
+    for key, (model, rows) in e._models.items():
+        got, got_rows = e2._models[key]
+        assert got_rows == rows == 32
+        if key.startswith("pq:"):
+            assert got == model
+        elif key.startswith("ivf:"):
+            assert np.array_equal(got.clusterCenters(), model.clusterCenters())
+        else:
+            assert list(got._java_obj.randMatrix().toArray()) == list(
+                model._java_obj.randMatrix().toArray()
+            )
+    assert {kind: _hits(e2, kind, q) for kind in ANN_KINDS} == want
+    assert fits == []
+
+
+def test_search_rejects_metrics_the_index_does_not_implement(
+    spark, tmp_path, monkeypatch
+):
+    """Every search type rejects a metric it does not implement before
+    fitting anything: approx takes euclidean|cosine, ivf and pq take
+    euclidean, exact takes the exact-kNN metrics."""
+    e = _ann_engine(spark, tmp_path, 16)
+    q = _rows(1, seed=9)[0]
+    fits = _count_fits(monkeypatch)
+    for kind, metric, message in (
+        ("exact", "manhattan", "unknown metric"),
+        ("approx", "manhattan", r"use euclidean\|cosine$"),
+        ("ivf", "cosine", "use euclidean$"),
+        ("pq", "cosine", "use euclidean$"),
+    ):
+        with pytest.raises(ValueError, match=message):
+            e.search(q, top_k=3, search_type=kind, distance_method=metric)
+    assert fits == [] and not e._models
+    stored = e.get(5)["embedding"]
+    hits = e.search(stored, top_k=1, search_type="approx", distance_method="cosine")
+    assert [r["id"] for r in hits.collect()] == [5]
+    assert fits == ["approx"]
+
+
+def test_search_after_insert_job_budget(spark, tmp_path):
+    """After an insert, an approximate search encodes the store against
+    the kept model instead of refitting it: on a warmed 64-row store
+    it launches at most three jobs more than the cached search of its
+    kind (a refit ran 5 / 17-20 / 9 against 1 / 1 / 2 on local[4])."""
+    e = VFSEngine(spark, str(tmp_path / "store"))
+    e.init(vector_dimension=8)
+    e.auto_compact = False
+    e.insert([[float((i * 7 + j) % 5) for j in range(8)] for i in range(64)])
+    q = [float(j % 3) for j in range(8)]
+    for kind in ANN_KINDS:
+        e.search(q, top_k=3, search_type=kind).collect()  # fits the index
+        _, cached = _jobs(spark, lambda: e.search(q, 3, kind).collect())
+        e.insert([[0.5] * 8])
+        _, after = _jobs(spark, lambda: e.search(q, 3, kind).collect())
+        assert after <= cached + 3, (kind, cached, after)

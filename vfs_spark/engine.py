@@ -13,6 +13,7 @@ of immutable Parquet.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -25,10 +26,44 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vfs_spark.functions.quantize import DEFAULT_SCALE, dequantize, quantize
+from vfs_spark.operators import ann
 from vfs_spark.operators.knn import exact_knn
 from vfs_spark.schema import VFS_VECTOR_SCHEMA
 from vfs_spark.sources import store
 from vfs_spark.sources.parquet import parquet_row_count
+
+# A kept ANN model is refit once the store holds more than this many
+# times the rows it was fitted on: about one fit per doubling.
+REFIT_GROWTH = 2
+
+# The distance metrics each approximate search type implements.
+ANN_METRICS = {
+    "approx": ("euclidean", "cosine"),
+    "ivf": ("euclidean",),
+    "pq": ("euclidean",),
+}
+
+# Per ANN kind: fit the model over the store, and encode the store
+# against a fitted model (LSH feature vectors, IVF cluster ids, PQ
+# codes). The LSH fit reads only the dimension; the KMeans centroids
+# and PQ codebooks are trained once and then take many rows, as FAISS
+# trains once and adds many vectors.
+_FIT = {
+    "approx": lambda vecs, metric: ann.build_lsh_index(
+        vecs, vec_col="embedding", metric=metric
+    )[0],
+    "ivf": lambda vecs, metric: ann.build_ivf_index(vecs, vec_col="embedding")[0],
+    "pq": lambda vecs, metric: ann.fit_pq_codebooks(vecs, vec_col="embedding"),
+}
+_ENCODE = {
+    "approx": lambda model, vecs, metric: ann._to_vector_df(
+        vecs, "embedding", normalize=(metric == "cosine")
+    ),
+    "ivf": lambda model, vecs, metric: ann.assign_ivf(model, vecs, "embedding"),
+    "pq": lambda model, vecs, metric: ann.encode_pq_arrow(
+        vecs, model, vec_col="embedding", id_col="id"
+    ),
+}
 
 
 class VFSEngine:
@@ -51,13 +86,17 @@ class VFSEngine:
         self.vector_dimension: int | None = None
         self.quantize_on_write = False
         self.mutate_metadata = True
-        # fitted ANN indexes (LSH keyed by distance metric; one IVF),
-        # invalidated on insert/restore. Fit-once-query-many is the
-        # whole point of the Spark design (SURVEY Q3) — rebuilding per
+        # ANN indexes, keyed "<kind>:<metric>", in two parts with two
+        # lifetimes. The trained model (LSH projections, IVF centroids,
+        # PQ codebooks) with the store row count it was fitted on
+        # outlives insert/compact/delete until the store outgrows it
+        # REFIT_GROWTH-fold; init/restore replace it. The store encoded
+        # against it is a cached frame that every write drops and the
+        # next search re-encodes. Fit-once-query-many is the whole
+        # point of the Spark design (SURVEY Q3) — rebuilding per
         # search call would be the reference's anti-pattern.
-        self._lsh_cache: dict[str, tuple] = {}
-        self._ivf_cache: tuple | None = None
-        self._pq_cache: tuple | None = None  # (codebooks, encoded_df)
+        self._models: dict[str, tuple[object, int]] = {}
+        self._frames: dict[str, DataFrame] = {}
         # next_id stays DERIVED (max(id)+1 from storage, the reference's
         # recompute-from-disk semantics) — this is only a memo of that
         # derivation, maintained through insert() and compact() and
@@ -164,7 +203,7 @@ class VFSEngine:
         )
         df = self.spark.createDataFrame(table, schema=VFS_VECTOR_SCHEMA)
         self._flush(df, scale_factor=scale_factor)
-        self._drop_indexes()  # index no longer covers the store
+        self._drop_frames()  # encoded frames no longer cover the store
         # an appended dense id run of known size: both memos stay exact
         self._next_id_cache = next_id + n
         if self._row_count_cache is not None:
@@ -199,21 +238,16 @@ class VFSEngine:
         if due:
             self.compact()
 
-    def _drop_indexes(self) -> None:
-        for _, vdf in self._lsh_cache.values():
-            vdf.unpersist()
-        self._lsh_cache.clear()
-        if self._ivf_cache is not None:
-            self._ivf_cache[1].unpersist()
-            self._ivf_cache = None
-        if self._pq_cache is not None:
-            self._pq_cache[1].unpersist()
-            self._pq_cache = None
+    def _drop_frames(self) -> None:
+        for frame in self._frames.values():
+            frame.unpersist()
+        self._frames.clear()
 
     def _forget_store(self) -> None:
         """Drop everything derived from the store: init() and restore()
         may change its ids, rows and columns."""
-        self._drop_indexes()
+        self._drop_frames()
+        self._models.clear()
         self._next_id_cache = None
         self._row_count_cache = None
         self._store_schema = None
@@ -318,7 +352,10 @@ class VFSEngine:
         distance_method: str = "euclidean",
     ) -> DataFrame:
         """k = top_k per the documented semantics (SURVEY Q1 — the
-        reference actually misroutes top_k into batch size)."""
+        reference actually misroutes top_k into batch size). An
+        approximate search takes only the metrics its index implements
+        (ANN_METRICS) and raises ValueError for any other before
+        fitting anything."""
         if self.vector_dimension is not None and len(query) != self.vector_dimension:
             raise ValueError("query dimension mismatch")
         vecs = self.vectors()
@@ -327,52 +364,44 @@ class VFSEngine:
                 vecs, query, k=top_k, metric=distance_method, id_col="id",
                 vec_col="embedding",
             )
-        if search_type == "ivf":
-            from vfs_spark.operators.ann import build_ivf_index, ivf_search
-
-            cached = self._ivf_cache
-            if cached is None:
-                km, assigned = build_ivf_index(vecs, vec_col="embedding")
-                assigned = assigned.cache()
-                assigned.count()
-                self._ivf_cache = cached = (km, assigned)
-            km, assigned = cached
-            return ivf_search(km, assigned, query, k=top_k, id_col="id",
-                              vec_col="embedding")
-        if search_type == "pq":
-            from vfs_spark.operators.ann import (
-                encode_pq_arrow,
-                fit_pq_codebooks,
-                pq_search_rerank,
+        # any other type is approximate, the reference's default
+        kind = search_type if search_type in ("ivf", "pq") else "approx"
+        if distance_method not in ANN_METRICS[kind]:
+            raise ValueError(
+                f"search_type {search_type!r} does not implement distance "
+                f"{distance_method!r}: use {'|'.join(ANN_METRICS[kind])}"
             )
-
-            cached = self._pq_cache
-            if cached is None:
-                books = fit_pq_codebooks(vecs, vec_col="embedding")
-                enc = encode_pq_arrow(
-                    vecs, books, vec_col="embedding", id_col="id"
-                ).cache()
-                enc.count()
-                self._pq_cache = cached = (books, enc)
-            books, enc = cached
-            return pq_search_rerank(
-                enc, vecs, books, query, k=top_k, id_col="id",
+        model, frame = self._ann_index(kind, distance_method, vecs)
+        if kind == "ivf":
+            return ann.ivf_search(
+                model, frame, query, k=top_k, id_col="id", vec_col="embedding"
+            )
+        if kind == "pq":
+            return ann.pq_search_rerank(
+                frame, vecs, model, query, k=top_k, id_col="id",
                 vec_col="embedding",
             )
-        from vfs_spark.operators.ann import approx_knn, build_lsh_index
-
-        cached = self._lsh_cache.get(distance_method)
-        if cached is None:
-            model, vdf = build_lsh_index(
-                vecs, vec_col="embedding", metric=distance_method
-            )
-            vdf = vdf.cache()
-            vdf.count()
-            self._lsh_cache[distance_method] = cached = (model, vdf)
-        model, vdf = cached
-        return approx_knn(
-            model, vdf, query, k=top_k, id_col="id", metric=distance_method
+        return ann.approx_knn(
+            model, frame, query, k=top_k, id_col="id", metric=distance_method
         )
+
+    def _ann_index(self, kind: str, metric: str, vecs: DataFrame):
+        """(model, encoded store frame) for one ANN kind. The kept
+        model serves until the store holds more than REFIT_GROWTH times
+        its fitted rows; a store write only costs re-encoding the store
+        against it, which runs once and is cached for later searches."""
+        key = f"{kind}:{metric}"
+        if key in self._frames:
+            return self._models[key][0], self._frames[key]
+        rows = self.approx_vector_count() or 0
+        model, fitted_rows = self._models.get(key, (None, 0))
+        if model is None or rows > REFIT_GROWTH * fitted_rows:
+            model = _FIT[kind](vecs, metric)
+            self._models[key] = (model, rows)
+        frame = _ENCODE[kind](model, vecs, metric).cache()
+        frame.count()
+        self._frames[key] = frame
+        return model, frame
 
     # -- batch /search (⊕ extension: the reference serves one query
     # per HTTP request; this is the many-queries form) ---------------
@@ -423,19 +452,20 @@ class VFSEngine:
         store.swap, whose interrupted swaps init() recovers. The
         removed count comes from Parquet footers. At 100 TB with an
         id-range-partitioned store, only partitions containing deleted
-        ids rewrite. Returns the number of rows removed; invalidates
-        fitted indexes (they cover rows that no longer exist)."""
-        if not self._have_data():
+        ids rewrite. Returns the number of rows removed; drops the
+        encoded index frames (they cover rows that no longer exist) and
+        keeps the fitted models. An empty id list changes nothing and
+        runs no job."""
+        ids = [(int(i),) for i in vec_ids]
+        if not ids or not self._have_data():
             return 0
-        ids_df = self.spark.createDataFrame(
-            [(int(i),) for i in vec_ids], "id long"
-        )
+        ids_df = self.spark.createDataFrame(ids, "id long")
         before = self.approx_vector_count() or 0
         store.swap(
             self._read_store().join(F.broadcast(ids_df), "id", "left_anti"),
             self._data_dir,
         )
-        self._drop_indexes()
+        self._drop_frames()
         self._next_id_cache = None  # the max id may be gone
         self._row_count_cache = parquet_row_count(self._data_dir) or 0
         return before - self._row_count_cache
@@ -455,8 +485,9 @@ class VFSEngine:
         Sorting by id restores the per-file id min/max tightness that
         makes point_lookup_id's footer pruning effective after
         interleaved inserts. Returns the resulting file count; drops
-        fitted indexes (their row lineage is unchanged, but cached vdf
-        partitioning is layout-bound). At 100 TB the same verb runs
+        the encoded index frames (their rows are unchanged, but a cached
+        frame's partitioning is layout-bound) and keeps the fitted
+        models. At 100 TB the same verb runs
         per id-range partition, compacting only partitions whose
         small-file count crossed a threshold."""
         if not self._have_data():
@@ -464,7 +495,7 @@ class VFSEngine:
         n_files = store.compact(
             self._read_store(), self._data_dir, "id", target_rows_per_file
         )
-        self._drop_indexes()
+        self._drop_frames()
         return n_files
 
     # -- /snapshot + /restore (storage_manager.rs:367-427) ----------------
@@ -481,14 +512,17 @@ class VFSEngine:
         return os.path.join(self.storage_dir, "snapshots", name)
 
     def snapshot(self, name: str = "snapshot") -> str:
-        """Durable copy of the store AND any fitted ANN index models.
+        """Durable copy of the store AND every kept ANN index model,
+        including models whose encoded frame a write has dropped.
 
         The data copy is a Spark read→write (not a driver-local
         copytree): on a cluster, storage_dir is a distributed
         filesystem path and the copy parallelizes across executors;
-        the driver never streams the bytes. Index models persist via
-        MLlib's own writer — the index-at-rest analogue of the
-        reference's manager-state snapshot (storage_manager.rs:367-399)."""
+        the driver never streams the bytes. LSH and IVF models persist
+        via MLlib's own writer, PQ codebooks as JSON, and the row count
+        each was fitted on in ``fitted_rows.json`` — the index-at-rest
+        analogue of the reference's manager-state snapshot
+        (storage_manager.rs:367-399)."""
         dest = self._snapshot_dir(name)
         data_dest = os.path.join(dest, "data")
         if os.path.isdir(dest):
@@ -496,26 +530,28 @@ class VFSEngine:
         os.makedirs(dest, exist_ok=True)
         if self._have_data():
             self._read_store().write.mode("overwrite").parquet(data_dest)
-        for metric, (model, _vdf) in self._lsh_cache.items():
-            model.write().overwrite().save(
-                os.path.join(dest, "index", f"lsh_{metric}")
-            )
-        if self._ivf_cache is not None:
-            self._ivf_cache[0].write().overwrite().save(
-                os.path.join(dest, "index", "ivf_kmeans")
-            )
-        if self._pq_cache is not None:
-            import json
-
-            os.makedirs(os.path.join(dest, "index"), exist_ok=True)
-            with open(os.path.join(dest, "index", "pq_codebooks.json"), "w") as f:
-                json.dump(self._pq_cache[0], f)
+        if not self._models:
+            return dest
+        index_dir = os.path.join(dest, "index")
+        os.makedirs(index_dir, exist_ok=True)
+        for key, (model, _rows) in self._models.items():
+            path = os.path.join(index_dir, _snapshot_entry(key))
+            if key.startswith("pq:"):
+                with open(path, "w") as f:
+                    json.dump(model, f)
+            else:
+                model.write().overwrite().save(path)
+        with open(os.path.join(index_dir, "fitted_rows.json"), "w") as f:
+            json.dump({key: rows for key, (_, rows) in self._models.items()}, f)
         return dest
 
     def restore(self, name: str = "snapshot") -> None:
-        """Restore data and re-attach persisted index models — the
-        cached index survives a restart (storage_manager.rs:402-427),
-        so the first post-restore approx search does NOT refit."""
+        """Restore the data and load the snapshot's index models — the
+        fitted index survives a restart (storage_manager.rs:402-427).
+        Only the models load here; the first search of each kind
+        encodes the restored store against its model and does NOT
+        refit. Models from a snapshot without ``fitted_rows.json``
+        count as fitted on the restored store."""
         src = self._snapshot_dir(name)
         if not os.path.isdir(src):
             raise FileNotFoundError(src)
@@ -535,42 +571,38 @@ class VFSEngine:
             # snapshot of an empty store: restoring it empties the store
             shutil.rmtree(self._data_dir)
         index_dir = os.path.join(src, "index")
-        if os.path.isdir(index_dir):
-            from pyspark.ml.feature import BucketedRandomProjectionLSHModel
+        if not os.path.isdir(index_dir):
+            return
+        from pyspark.ml.clustering import KMeansModel
+        from pyspark.ml.feature import BucketedRandomProjectionLSHModel
 
-            from vfs_spark.operators.ann import _to_vector_df
+        fitted: dict[str, int] = {}
+        rows_path = os.path.join(index_dir, "fitted_rows.json")
+        if os.path.isfile(rows_path):
+            with open(rows_path) as f:
+                fitted = json.load(f)
+        rows = self.approx_vector_count() or 0
+        for kind, metrics in ANN_METRICS.items():
+            for metric in metrics:
+                key = f"{kind}:{metric}"
+                path = os.path.join(index_dir, _snapshot_entry(key))
+                if not os.path.exists(path):
+                    continue
+                if kind == "pq":
+                    with open(path) as f:
+                        model = json.load(f)
+                elif kind == "ivf":
+                    model = KMeansModel.load(path)
+                else:
+                    model = BucketedRandomProjectionLSHModel.load(path)
+                self._models[key] = (model, fitted.get(key, rows))
 
-            for entry in sorted(os.listdir(index_dir)):
-                if entry.startswith("lsh_"):
-                    metric = entry[len("lsh_"):]
-                    model = BucketedRandomProjectionLSHModel.load(
-                        os.path.join(index_dir, entry)
-                    )
-                    vdf = _to_vector_df(
-                        self.vectors(), "embedding", normalize=(metric == "cosine")
-                    ).cache()
-                    vdf.count()
-                    self._lsh_cache[metric] = (model, vdf)
-                elif entry == "pq_codebooks.json":
-                    import json
 
-                    from vfs_spark.operators.ann import encode_pq_arrow
-
-                    with open(os.path.join(index_dir, entry)) as f:
-                        books = json.load(f)
-                    enc = encode_pq_arrow(
-                        self.vectors(), books, vec_col="embedding", id_col="id"
-                    ).cache()
-                    enc.count()
-                    self._pq_cache = (books, enc)
-                elif entry == "ivf_kmeans":
-                    from pyspark.ml.clustering import KMeansModel
-
-                    km = KMeansModel.load(os.path.join(index_dir, entry))
-                    assigned = (
-                        km.transform(_to_vector_df(self.vectors(), "embedding"))
-                        .withColumnRenamed("prediction", "cluster_id")
-                        .cache()
-                    )
-                    assigned.count()
-                    self._ivf_cache = (km, assigned)
+def _snapshot_entry(key: str) -> str:
+    """Where a kept model lives under a snapshot's index/ directory."""
+    kind, _, metric = key.partition(":")
+    return {
+        "approx": f"lsh_{metric}",
+        "ivf": "ivf_kmeans",
+        "pq": "pq_codebooks.json",
+    }[kind]

@@ -314,8 +314,16 @@ def build_ivf_index(
             fit_df = vdf.sample(fraction=frac, seed=seed).limit(fit_sample_rows)
     km = KMeans(k=n_clusters, seed=seed, featuresCol="features")
     model = km.fit(fit_df)
-    assigned = model.transform(vdf).withColumnRenamed("prediction", "cluster_id")
-    return model, assigned
+    return model, assign_ivf(model, df, vec_col)
+
+
+def assign_ivf(km_model, df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """The IVF encode: df + features + the cluster_id of each row's
+    nearest centroid under a fitted coarse quantizer. One transform,
+    no fit — rows added after the fit are assigned the same way."""
+    return km_model.transform(_to_vector_df(df, vec_col)).withColumnRenamed(
+        "prediction", "cluster_id"
+    )
 
 
 def auto_nprobe(

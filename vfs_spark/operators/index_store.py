@@ -135,10 +135,7 @@ def load_or_fit_ivf(
     model_path = os.path.join(art, "model")
     if _meta_matches(os.path.join(art, "meta.json"), meta):
         km = KMeansModel.load(model_path)
-        assigned = km.transform(
-            ann_ops._to_vector_df(df, vec_col)
-        ).withColumnRenamed("prediction", "cluster_id")
-        return km, assigned
+        return km, ann_ops.assign_ivf(km, df, vec_col)
     km, assigned = ann_ops.build_ivf_index(df, vec_col=vec_col, n_clusters=n_clusters)
 
     def _persist():

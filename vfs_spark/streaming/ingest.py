@@ -210,13 +210,9 @@ def stream_append_ivf(
     store.recover_children(dest_dir)
 
     def _flush(batch_df: DataFrame, batch_id: int) -> None:
-        from vfs_spark.operators.ann import _to_vector_df
+        from vfs_spark.operators.ann import assign_ivf
 
-        assigned = (
-            km_model.transform(_to_vector_df(batch_df, vec_col))
-            .withColumnRenamed("prediction", "cluster_id")
-            .drop("features")
-        )
+        assigned = assign_ivf(km_model, batch_df, vec_col).drop("features")
         assigned.write.mode("append").partitionBy("cluster_id").parquet(dest_dir)
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_ivf_store(
