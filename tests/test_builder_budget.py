@@ -1,0 +1,115 @@
+"""Registry builders return plans: calling ``QUERIES[slug](spark,
+sf_dir)`` runs no Spark job. The exceptions are listed in
+``BUILDER_JOBS`` with the most jobs their builder may run: guarded
+dispatches that read their statistic before choosing a path
+(``collect_under``, the prefix-join Σ|set| probe), driver twins that
+collect their input, index and model fits, the query-vector point
+lookup, the ranged dense-id pass and writes. A streaming slug's
+micro-batch jobs run on the stream's own thread under the stream's job
+group, so they are not counted here; its staging writes are."""
+
+import os
+
+from vfs_spark.queries import QUERIES
+from vfs_spark.sources.parquet import load_all
+
+# slug -> most Spark jobs its builder may run, as measured at sf0.001
+# on the test session with a fresh ANN index directory and a warm
+# schema memo. Lower an entry when a builder gets cheaper; a slug that
+# reaches 0 leaves the table.
+BUILDER_JOBS: dict[str, int] = {
+    # guarded dispatches and driver twins: the statistic or the bounded
+    # collect that picks the path (collect_under, prefix-join Σ|set|
+    # probe, route pre-flight, candidate histogram, serving batch)
+    "graph_pagerank_urls": 4,
+    "bpe_train_merges": 3,
+    "dedup_ngram_jaccard": 5,
+    "dedup_containment": 8,
+    "dedup_containment_anchored": 6,
+    "dedup_clusters": 17,
+    # varies between builds of one session: 33-36 jobs measured
+    "dedup_clusters_banded": 38,
+    "dedup_clusters_semantic": 13,
+    "dedup_embedding_banded": 19,
+    "dedup_embedding_simhash": 10,
+    "dedup_image_phash": 7,
+    "dedup_simhash": 7,
+    "dedup_simhash_jvm": 7,
+    "dedup_simhash_udf": 7,
+    "dedup_minhash": 8,
+    "dedup_incremental_minhash": 21,
+    "decontaminate_bloom": 3,
+    "text_heavy_hitters": 3,
+    "pipeline_curation_ranked": 22,
+    "pipeline_multimodal_curation": 9,
+    "pipeline_semantic_corpus": 13,
+    "knn_batch_arrow": 2,
+    "knn_batch_auto": 2,
+    "ann_pq_batch": 2,
+    "ann_ivfpq_batch": 2,
+    # index and model fits (LSH, IVF with recall-calibrated nprobe, PQ,
+    # PCA, KMeans cells, classifiers and n-gram models)
+    "ann_ivf": 49,
+    "ann_ivf_batch": 11,
+    "ann_ivf_partitioned": 17,
+    "ann_ivfpq": 33,
+    "ann_pq": 14,
+    "approx_knn": 9,
+    "approx_knn_multiprobe": 11,
+    "similarity_join": 6,
+    "similarity_join_multiprobe": 6,
+    "dedup_minhash_mllib": 2,
+    "dedup_semdedup": 6,
+    "embedding_pca_project": 4,
+    "sample_dsir": 18,
+    "sample_dsir_fitsample": 18,
+    "text_perplexity_buckets": 13,
+    "text_quality_classifier": 21,
+    # the query vector's point lookup (core._query_vec)
+    "dist_cosine": 2,
+    "dist_euclidean": 2,
+    "exact_knn": 2,
+    "exact_knn_filtered": 2,
+    "exact_knn_quantized": 2,
+    "filter_dim_check": 2,
+    "range_search_radius": 2,
+    "result_hydrate": 2,
+    "topk_truncate": 2,
+    # per-partition row counts of the ranged dense-id pass
+    "insert_assign_ids": 5,
+    "sample_shuffle_order": 5,
+    "text_pack_blocks": 5,
+    # writes: the shard export, and the streaming slugs' staging and
+    # landed-store reads on the builder's thread
+    "export_training_shards": 18,
+    "stream_cdc_upsert": 3,
+    "stream_curation_full": 5,
+    "stream_curation_ranked": 18,
+    "stream_ingest_corpus": 5,
+}
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"builder-{os.urandom(6).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_builder_job_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """Every builder runs 0 jobs, or at most its ``BUILDER_JOBS``
+    entry; every allowlisted slug is still a registered slug."""
+    assert set(BUILDER_JOBS) <= set(QUERIES)
+    monkeypatch.setenv("VFS_SPARK_INDEX_DIR", str(tmp_path / "ann_index"))
+    load_all(spark, sf_dir)  # warms the schema memo for every table
+    got = {}
+    for slug, build in sorted(QUERIES.items()):
+        got[slug] = _jobs(spark, lambda: build(spark, sf_dir))
+        spark.catalog.clearCache()
+    over = {s: n for s, n in got.items() if n > BUILDER_JOBS.get(s, 0)}
+    assert not over, f"builder jobs over budget: {over}"

@@ -6,7 +6,7 @@ driver twin and the distributed iteration (``dispatch_path``)."""
 import pytest
 from pyspark.sql import functions as F
 
-from vfs_spark.queries.graph import _edges, pagerank
+from vfs_spark.queries.graph import _edges, pagerank, pagerank_counted
 from vfs_spark.sources.parquet import load_table
 
 
@@ -53,6 +53,15 @@ def test_pagerank_empty_edges(spark, dispatch_path):
     got = pagerank(edges)
     assert got.collect() == []
     assert got.columns == ["u", "r"]
+
+
+def test_pagerank_counted_node_count(spark, sf_dir, dispatch_path):
+    """The node count ``pagerank_counted`` returns without a job equals
+    the ranks' row count, on the fixture graph and on an empty one."""
+    docs = load_table(spark, sf_dir, "documents")
+    for edges in (_edges(docs), spark.createDataFrame([], "src string, dst string")):
+        ranks, n = pagerank_counted(edges)
+        assert n == ranks.count()
 
 
 def test_pagerank_paths_agree(spark, sf_dir, monkeypatch):

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from vfs_spark.functions.distance import array_lit, euclidean, l2_norm
 from vfs_spark.operators.knn import collect_serving_batch
+from vfs_spark.sources.parquet import read_parquet
 
 DEFAULT_BUCKET_LENGTH = 2.0
 # plays the role of HNSW ef/M recall knobs. tools/lsh_sweep.py on the
@@ -575,7 +576,7 @@ def ivf_search_partitioned(
     q = np.asarray(list(query), dtype=float)
     centers = _centers_np(km_model)
     nearest = np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe].tolist()
-    cand = spark.read.parquet(path).where(F.col("cluster_id").isin(nearest))
+    cand = read_parquet(spark, path).where(F.col("cluster_id").isin(nearest))
     dist = F.round(euclidean(vec_col, array_lit(q)), 6).alias("dist")
     return (
         cand.select(F.col(id_col), dist)

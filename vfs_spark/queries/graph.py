@@ -21,22 +21,24 @@ from pyspark.sql import functions as F
 from vfs_spark.dispatch import DRIVER_MAX, collect_under
 from vfs_spark.queries.registry import query
 from vfs_spark.queries.text import _URL_SYNTH_SQL, _synth_url_col, _url_norm_sql
-from vfs_spark.sources.parquet import load_table
+from vfs_spark.sources.parquet import load_table, parquet_row_count, table_path
 
 DAMPING = 0.85
 N_ITERS = 3
 
 
-def _edges(docs: DataFrame) -> DataFrame:
+def _edges(docs: DataFrame, n_docs: int | None = None) -> DataFrame:
     """Deterministic page-level link graph: doc d links its canonical
     page to the canonical page of doc (d*17 + 13) mod n_docs (doc_ids
-    are dense 0..n-1 in the fixture). DISTINCT + self-loop removal."""
+    are dense 0..n-1 in the fixture). DISTINCT + self-loop removal.
+    ``n_docs`` is the row count of ``docs`` when the caller has it
+    without a job (Parquet footers); otherwise it is counted."""
     from vfs_spark.functions.text import normalize_url
 
     base = docs.select(
         "doc_id", normalize_url(_synth_url_col()).alias("u")
     )
-    n = base.count()  # parquet-footer count, not a scan
+    n = n_docs if n_docs is not None else base.count()
     a = base.alias("a")
     b = base.select(
         F.col("doc_id").alias("_pid"), F.col("u").alias("dst")
@@ -51,8 +53,9 @@ def _edges(docs: DataFrame) -> DataFrame:
 
 def _pagerank_driver(
     edges: DataFrame, n_iters: int, damping: float
-) -> DataFrame | None:
-    """NumPy pagerank for guard-sized graphs; None above the guard."""
+) -> tuple[DataFrame, int] | None:
+    """NumPy pagerank for guard-sized graphs, with its node count;
+    None above the guard."""
     import numpy as np
     import pandas as pd
 
@@ -61,7 +64,7 @@ def _pagerank_driver(
         return None
     spark = edges.sparkSession
     if len(probe) == 0:
-        return spark.createDataFrame([], schema="u string, r double")
+        return spark.createDataFrame([], schema="u string, r double"), 0
     codes, uniques = pd.factorize(
         pd.concat([probe["src"], probe["dst"]], ignore_index=True)
     )
@@ -77,10 +80,11 @@ def _pagerank_driver(
         np.add.at(contrib, di, r[si] / safe_deg[si])
         m = r[dangling].sum()
         r = (1.0 - damping) / n + damping * (contrib + m / n)
-    return spark.createDataFrame(
+    ranks = spark.createDataFrame(
         pd.DataFrame({"u": np.asarray(uniques), "r": r}),
         schema="u string, r double",
     )
+    return ranks, n
 
 
 def pagerank(edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING) -> DataFrame:
@@ -125,9 +129,19 @@ def pagerank(edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING)
     aggregation — exactly as it already differs between Spark and the
     DuckDB oracle — and the slugs' hash gate (ROUND(r,6) /
     micro-units) is the declared equality contract both paths meet.
-    Above the guard the distributed loop below runs unchanged (at
-    crawl scale the edge table is the corpus — that path is the 100 TB
-    story; the driver path is the serving/fixture regime)."""
+    Above the guard the distributed loop (``pagerank_counted``) runs
+    unchanged (at crawl scale the edge table is the corpus — that path
+    is the 100 TB story; the driver path is the serving/fixture
+    regime)."""
+    return pagerank_counted(edges, n_iters, damping)[0]
+
+
+def pagerank_counted(
+    edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING
+) -> tuple[DataFrame, int]:
+    """``pagerank`` and its row count, the graph's node count. Both
+    paths already hold it (the driver twin's node list, the distributed
+    path's node count), so a caller that needs it runs no extra job."""
     cheap = _pagerank_driver(edges, n_iters, damping)
     if cheap is not None:
         return cheap
@@ -139,8 +153,9 @@ def pagerank(edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING)
         .distinct()
         .persist()
     )
+    n = nodes.count()
     # floored at 1: an empty graph yields empty ranks, as on the driver
-    n_nodes = max(nodes.count(), 1)
+    n_nodes = max(n, 1)
     ranks = nodes.select("u", F.lit(1.0 / n_nodes).alias("r"))
     for _ in range(n_iters):
         contribs = (
@@ -174,7 +189,7 @@ def pagerank(edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING)
     # accumulate cache entries until a session clearCache)
     for pinned in (edges, deg, nodes):
         pinned.unpersist()
-    return ranks
+    return ranks, n
 
 
 def _pr_edges_sql(base_cte: str = "base") -> str:
@@ -248,7 +263,8 @@ def q_graph_pagerank_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the same three iterations as CTEs, so the two
     engines walk identical arithmetic."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    ranks = pagerank(_edges(docs))
+    n_docs = parquet_row_count(table_path(sf_dir, "documents"))
+    ranks = pagerank(_edges(docs, n_docs))
     return ranks.select("u", F.round("r", 6).alias("rank"))
 
 
@@ -447,7 +463,8 @@ def q_pipeline_curation_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
-    ranks = relative_rank_u6(docs_all)
+    n_docs = parquet_row_count(table_path(sf_dir, "documents"))
+    ranks = relative_rank_u6(docs_all, n_docs)
     d2 = (
         d1.join(contaminated, "doc_id", "left_anti")
         .join(ranks, "u", "left")
@@ -464,16 +481,16 @@ def q_pipeline_curation_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked_mixture_manifest(d2)
 
 
-def relative_rank_u6(docs_all: DataFrame) -> DataFrame:
+def relative_rank_u6(
+    docs_all: DataFrame, n_docs: int | None = None
+) -> DataFrame:
     """(u, rank_u6) over the synthesized page link graph, in RELATIVE
     integer micro-units (r × n_pages × 1e6 — scale-free: an average
     page reads ~1e6 at any graph size; see _RANK_FLOOR_U6). The ONE
     place the ranked-curation twins (batch pipeline_curation_ranked
     and the streaming manifest view) get their rank table, so the two
-    can never drift. The |nodes| count rides the eagerly-materialized
-    PageRank frontier — one cheap job."""
-    pr = pagerank(_edges(docs_all))
-    n_nodes = pr.count()
+    can never drift. ``n_docs`` as in ``_edges``."""
+    pr, n_nodes = pagerank_counted(_edges(docs_all, n_docs))
     return pr.select(
         "u",
         F.round(F.col("r") * F.lit(float(n_nodes)) * 1000000.0, 0)

@@ -25,6 +25,23 @@ from vfs_spark.queries.registry import query
 from vfs_spark.sources.parquet import load_table
 
 
+def _query_batch(
+    spark: SparkSession, sf_dir: str, as_double: bool = False
+) -> DataFrame:
+    """The batch slugs' query side: embeddings ``vec_id < 5`` as
+    (query_id, query_vec). Read without fan-out, so the predicate
+    reaches the scan; over a fan-out read it would sit above a
+    repartition of the whole table."""
+    vec = F.col("embedding")
+    if as_double:
+        vec = vec.cast("array<double>")
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") < 5)
+        .select(F.col("vec_id").alias("query_id"), vec.alias("query_vec"))
+    )
+
+
 @query(
     "knn_batch_bruteforce",
     oracle="""
@@ -49,9 +66,7 @@ def q_knn_batch_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query. At 100 TB the broadcast side stays small (queries) so
     the big table never shuffles; only k rows per query survive."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    queries_df = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _query_batch(spark, sf_dir)
     joined = emb.crossJoin(F.broadcast(queries_df))
     dist = F.round(euclidean("embedding", F.col("query_vec")), 6).alias("dist")
     w = Window.partitionBy("query_id").orderBy(
@@ -337,9 +352,7 @@ def q_knn_batch_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vfs_spark.operators.knn import knn_batch_arrow
 
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    queries_df = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _query_batch(spark, sf_dir)
     return knn_batch_arrow(emb, queries_df, k=3)
 
 
@@ -373,9 +386,7 @@ def q_knn_batch_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vfs_spark.operators.knn import knn_batch_auto
 
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    queries_df = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _query_batch(spark, sf_dir)
     return knn_batch_auto(emb, queries_df, k=3)
 
 
@@ -597,10 +608,7 @@ def q_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     km, assigned, nprobe = index_store.load_or_fit_ivf_autoprobe(
         spark, emb, sf_dir, n_clusters=16, recall_target=0.9
     )
-    queries_df = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("query_vec"),
-    )
+    queries_df = _query_batch(spark, sf_dir, as_double=True)
     return ann_ops.ivf_search_batch(km, assigned, queries_df, k=5, nprobe=nprobe)
 
 
@@ -723,10 +731,7 @@ def q_ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the bytes, once."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
     km, books, assigned_enc, nprobe = _ivfpq_index(spark, sf_dir)
-    queries_df = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("query_vec"),
-    )
+    queries_df = _query_batch(spark, sf_dir, as_double=True)
     return ann_ops.ivfpq_search_batch(
         km, assigned_enc, emb, books, queries_df,
         k=10, nprobe=nprobe, shortlist=200,
@@ -743,10 +748,7 @@ def q_ann_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_batch/ivf_search_batch make for their families."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
     books, enc = _pq_index(spark, sf_dir)
-    queries_df = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("query_vec"),
-    )
+    queries_df = _query_batch(spark, sf_dir, as_double=True)
     return ann_ops.pq_search_rerank_batch(
         enc, emb, books, queries_df, k=5, shortlist=100
     )
@@ -769,6 +771,12 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_ops.pq_search_rerank(
         enc, emb, books, _query_vec(spark, sf_dir), k=10, shortlist=100
     )
+
+
+# The synthetic media population: docs with doc_id below this carry a
+# synthesized WAV or image payload (the audio and image slugs, and the
+# image stage of pipeline_multimodal_curation).
+SYNTH_MEDIA_DOCS = 64
 
 
 def _synth_wav_media(spark: SparkSession, sf_dir: str):
@@ -804,7 +812,7 @@ def _synth_wav_media(spark: SparkSession, sf_dir: str):
         return pd.Series(out)
 
     docs = load_table(spark, sf_dir, "documents", fan_out=True).where(
-        F.col("doc_id") < 64
+        F.col("doc_id") < SYNTH_MEDIA_DOCS
     )
     return multimodal.as_media(docs, "doc_id", _wav(F.col("doc_id")))
 
@@ -876,7 +884,7 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _synth_bmp_media(spark: SparkSession, sf_dir: str):
     """Deterministic FAKE image ingest for the image-dedup slug: each
-    doc (doc_id < 64) becomes a 32×32 image. Images come in 8
+    doc (doc_id < SYNTH_MEDIA_DOCS) becomes a 32×32 image. Images come in 8
     GROUPS of 8 (group = doc_id div 8): one seeded base pattern per
     group plus per-id low-amplitude noise — so within-group images are
     perceptual near-dups and cross-group images are unrelated.
@@ -920,7 +928,7 @@ def _synth_bmp_media(spark: SparkSession, sf_dir: str):
         return pd.Series(out)
 
     docs = load_table(spark, sf_dir, "documents", fan_out=True).where(
-        F.col("doc_id") < 64
+        F.col("doc_id") < SYNTH_MEDIA_DOCS
     )
     return multimodal.as_media(docs, "doc_id", _bmp(F.col("doc_id")))
 

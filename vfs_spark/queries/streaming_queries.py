@@ -31,7 +31,7 @@ from vfs_spark.queries.text import (
     _SHINGLES5,
     _TOKS,
 )
-from vfs_spark.sources.parquet import load_table
+from vfs_spark.sources.parquet import load_table, parquet_row_count, table_path
 
 
 def _fresh_dir() -> str:
@@ -245,7 +245,8 @@ def q_stream_curation_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         eval_docs=docs.where(F.col("doc_id") < 10),
     )
     q.awaitTermination()
-    return curation_manifest_ranked(spark, dest, docs)
+    n_docs = parquet_row_count(table_path(sf_dir, "documents"))
+    return curation_manifest_ranked(spark, dest, docs, n_docs)
 
 
 @query(

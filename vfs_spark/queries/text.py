@@ -3871,7 +3871,8 @@ def _bm25_doc_scored(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
     corpus = docs.where(F.col("doc_id") >= 8)
     qt = (
-        docs.where(F.col("doc_id") < 8)
+        load_table(spark, sf_dir, "documents")  # no fan-out: prunable
+        .where(F.col("doc_id") < 8)
         .select(
             F.col("doc_id").alias("query_id"),
             F.explode(F.array_distinct(F.slice(tokens("text"), 1, 5))).alias(
@@ -4202,7 +4203,8 @@ def q_pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("slice(t, i*48 + 1, 64)").alias("ct"),
     )
     qt = (
-        docs.where(F.col("doc_id") < 8)
+        load_table(spark, sf_dir, "documents")  # no fan-out: prunable
+        .where(F.col("doc_id") < 8)
         .select(
             F.col("doc_id").alias("query_id"),
             F.explode(F.array_distinct(F.slice(tokens("text"), 1, 5))).alias(
@@ -4746,8 +4748,10 @@ def q_pipeline_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", "r_lex")
     )
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    qe = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    qe = (
+        load_table(spark, sf_dir, "embeddings")  # no fan-out: prunable
+        .where(F.col("vec_id") < 8)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     )
     ce = emb.where(F.col("vec_id") >= 8).select(
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("ev")
@@ -4838,7 +4842,7 @@ def q_pipeline_multimodal_curation(
       doc killed by a text gate takes its near-dup copies down with
       it (the batch keep-min semantics: refetches of dropped content
       stay dropped).
-    - docs without media (doc_id ≥ 64 in the planted fixture) pass
+    - docs without media (doc_id ≥ SYNTH_MEDIA_DOCS) pass
       the image stage vacuously (image_dup = false).
 
     100 TB shape: images collapse to 8-byte phashes in the scan
@@ -4856,7 +4860,7 @@ def q_pipeline_multimodal_curation(
         connected_components,
         hamming_pairs_banded_and,
     )
-    from vfs_spark.queries.similarity import _synth_bmp_media
+    from vfs_spark.queries.similarity import SYNTH_MEDIA_DOCS, _synth_bmp_media
 
     docs = load_table(spark, sf_dir, "documents", fan_out=True).where(
         F.col("doc_id") >= 10
@@ -4906,7 +4910,7 @@ def q_pipeline_multimodal_curation(
     # media-population ids — reading them from the pruned parquet scan
     # avoids re-running the image synth + decode UDFs just to list ids.
     cc = connected_components(
-        docs.where(F.col("doc_id") < 64).select("doc_id"),
+        docs.where(F.col("doc_id") < SYNTH_MEDIA_DOCS).select("doc_id"),
         pairs.select(
             F.col("media_a").alias("src"), F.col("media_b").alias("dst")
         ),

@@ -15,7 +15,10 @@ memtable + id→offset B-tree, ``storage_manager.rs:139-217``,
 
 from __future__ import annotations
 
+import fnmatch
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +64,92 @@ def parquet_row_count(path: str) -> int | None:
         return None
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# Reader confs that change what schema inference returns for the same
+# files; each is part of the schema memo key.
+_INFERENCE_CONFS = (
+    NANOS_AS_LONG,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_MEMO_SIZE = 128
+_schema_memo: OrderedDict = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _file_signature(path: str, glob: str | None) -> tuple | None:
+    """Sorted ``(name, size, mtime_ns)`` of every file under ``path``
+    (only names matching ``glob`` when given), or None when the path is
+    not on a locally visible filesystem or changes while it is listed.
+    Any rewrite of the table changes a name, a size or an mtime."""
+    if not os.path.exists(path):
+        return None
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                if glob is None or fnmatch.fnmatchcase(f, glob):
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    except OSError:  # a file vanished mid-listing
+        return None
+    return tuple(sorted(sig))
+
+
+def parquet_schema(
+    spark: SparkSession, path: str, glob: str | None = None
+) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    process. Inference is a Spark job (a footer read on the executors);
+    the memo makes every later read of unchanged files job-free. Keyed
+    by the path, the glob, the ``(name, size, mtime_ns)`` of its files
+    and the reader confs that change inference, so a rewritten table is
+    never read with a stale schema. Paths that are not locally visible
+    are inferred on every call. Raises what inference raises (e.g. an
+    empty directory) and memoizes nothing then."""
+    if glob is not None and not any(c in glob for c in "*?[{\\"):
+        named = os.path.join(path, glob)
+        if os.path.isfile(named):
+            # a glob naming one file: infer from that file, which shares
+            # the memo entry of a direct read of the same table
+            path, glob = named, None
+    sig = _file_signature(path, glob)
+    reader = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
+    if sig is None:
+        return reader.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        glob,
+        sig,
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    with _schema_memo_lock:
+        if key in _schema_memo:
+            _schema_memo.move_to_end(key)
+            return _schema_memo[key]
+    schema = reader.parquet(path).schema
+    with _schema_memo_lock:
+        _schema_memo[key] = schema
+        while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+            _schema_memo.popitem(last=False)
+    return schema
+
+
+def read_parquet(
+    spark: SparkSession, path: str, glob: str | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with the memoized schema declared,
+    so building the plan runs no Spark job once the files were seen."""
+    reader = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
+    return reader.schema(parquet_schema(spark, path, glob)).parquet(path)
+
+
 def _table_bytes(path: str) -> int:
     if os.path.isdir(path):
         return sum(
@@ -98,24 +187,36 @@ def load_table(
 
 
 def _load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # The events fixture's on-disk ts encoding has changed across
-        # driver versions; normalize every variant to tz-aware TIMESTAMP
-        # so downstream unix_micros()/window() call sites see one type:
-        #   - TIMESTAMP(NANOS): Spark's reader rejects it, so read the
-        #     raw int64 nanos (legacy conf) and truncate to micros with
-        #     integer division (ns values ~1.7e18 exceed double's 2^53
-        #     exact range; float division would drift by a microsecond).
-        #   - timestamp[us] (no tz) -> TIMESTAMP_NTZ: cast to TIMESTAMP.
-        #     Session tz is UTC, so wall-clock values are unchanged.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    # Every fixture read runs with NANOS_AS_LONG on, not only events
+    # (normalize_event_ts needs it): the conf is part of the schema
+    # memo key, so one setting for all tables keeps an entry valid
+    # across the first events read. Tables without TIMESTAMP(NANOS)
+    # columns infer the same schema either way.
+    spark.conf.set(NANOS_AS_LONG, "true")
+    df = read_parquet(spark, table_path(sf_dir, name))
+    return normalize_event_ts(df) if name == "events" else df
+
+
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize the events ``ts`` column to tz-aware TIMESTAMP, for the
+    batch loader and the file stream alike. The fixture's on-disk ts
+    encoding has changed across driver versions, so downstream
+    unix_micros()/window() call sites need one type:
+
+    - TIMESTAMP(NANOS): Spark's reader rejects it, so it is read as the
+      raw int64 nanos (``NANOS_AS_LONG``) and truncated to micros with
+      integer division (ns values ~1.7e18 exceed double's 2^53 exact
+      range; float division would drift by a microsecond).
+    - timestamp[us] (no tz) -> TIMESTAMP_NTZ: cast to TIMESTAMP. Session
+      tz is UTC, so wall-clock values are unchanged.
+
+    Reads ``df.schema`` only, so it runs no Spark job."""
+    ts = df.schema["ts"].dataType
+    if isinstance(ts, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

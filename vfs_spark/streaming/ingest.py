@@ -16,16 +16,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vfs_spark.sources import store
+from vfs_spark.sources.parquet import (
+    NANOS_AS_LONG,
+    normalize_event_ts,
+    parquet_schema,
+)
 
 
 def read_event_stream(
     spark: SparkSession, src_dir: str, glob: str = "events.parquet"
 ) -> DataFrame:
     """File-source stream over the fixture events table. readStream
-    needs an explicit schema, so sniff the batch reader's schema for
-    the actual on-disk ts encoding (int64 nanos vs timestamp[us] vs
-    tz-aware) and apply the same normalization as the batch loader —
-    one code path decides, both engines agree.
+    needs an explicit schema, so take the batch reader's (memoized)
+    schema for the actual on-disk ts encoding (int64 nanos vs
+    timestamp[us] vs tz-aware) and apply the batch loader's own
+    normalization (``normalize_event_ts``) — one code path decides,
+    both engines agree.
 
     The ts-normalization decision is FROZEN at stream definition: if
     the source dir is empty at startup we fall back to EVENTS_SCHEMA
@@ -35,13 +41,9 @@ def read_event_stream(
     schema with no ``ts div 1000`` normalization. Producers that emit
     the nanos encoding must write at least one file before the stream
     starts (or the caller re-creates the stream once data exists)."""
-    from pyspark.sql import types as T
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NANOS_AS_LONG, "true")
     try:
-        batch_schema = (
-            spark.read.option("pathGlobFilter", glob).parquet(src_dir).schema
-        )
+        batch_schema = parquet_schema(spark, src_dir, glob)
     except Exception:  # noqa: BLE001 — no files yet is the normal
         # stream-startup case (producer hasn't written the first
         # micro-batch); fall back to the canonical schema so the
@@ -49,17 +51,11 @@ def read_event_stream(
         from vfs_spark.schema import EVENTS_SCHEMA
 
         batch_schema = EVENTS_SCHEMA
-    df = (
+    return normalize_event_ts(
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", glob)
         .parquet(src_dir)
     )
-    ts_type = batch_schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def windowed_counts(
@@ -355,7 +351,7 @@ def read_document_stream(
     from the batch reader, like read_event_stream; falls back to the
     canonical schema when no files exist yet)."""
     try:
-        schema = spark.read.option("pathGlobFilter", glob).parquet(src_dir).schema
+        schema = parquet_schema(spark, src_dir, glob)
     except Exception:  # noqa: BLE001 — empty ingest dir at startup
         from vfs_spark.schema import DOCUMENTS_SCHEMA
 
@@ -1168,7 +1164,10 @@ def curation_manifest(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 def curation_manifest_ranked(
-    spark: SparkSession, store_dir: str, docs_all: DataFrame
+    spark: SparkSession,
+    store_dir: str,
+    docs_all: DataFrame,
+    n_docs: int | None = None,
 ) -> DataFrame:
     """The rank-weighted mixture view over a store built by
     stream_curation_ingest — pipeline_curation_ranked's final stage
@@ -1181,7 +1180,8 @@ def curation_manifest_ranked(
     ranked_mixture_manifest), so the streaming twin cannot drift from
     the batch pipeline's arithmetic. Same honest decomposition as
     curation_manifest: per-document stages stream, corpus-global
-    stages are views."""
+    stages are views. ``n_docs`` is the row count of ``docs_all`` when
+    the caller has it without a job (see queries/graph._edges)."""
     from vfs_spark.queries.graph import (
         _RANK_FLOOR_U6,
         ranked_mixture_manifest,
@@ -1191,7 +1191,7 @@ def curation_manifest_ranked(
     d2 = spark.read.parquet(store_dir).select(
         "doc_id", "source", F.col("n_tokens").alias("n"), "h", "u"
     )
-    ranks = relative_rank_u6(docs_all)
+    ranks = relative_rank_u6(docs_all, n_docs)
     d2r = d2.join(ranks, "u", "left").select(
         "doc_id",
         "source",
