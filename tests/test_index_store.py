@@ -2,7 +2,8 @@
 query-surface analogue of the reference persisting its index map in
 the manager snapshot (storage_manager.rs:367-427) — a fresh
 application must LOAD a previously-fitted LSH/IVF/PQ artifact, not
-refit, and a changed dataset fingerprint must refit."""
+refit, a second call in one application reuses the loaded model, and a
+changed dataset fingerprint must refit."""
 
 import pytest
 
@@ -27,14 +28,28 @@ def _no_fit(monkeypatch, name):
     monkeypatch.setattr(ann_ops, name, boom)
 
 
+def _count_fits(monkeypatch, name):
+    """A list that records every call of ann.<name> from here on."""
+    fits = []
+    real = getattr(ann_ops, name)
+
+    def counting(*a, **k):
+        fits.append(name)
+        return real(*a, **k)
+
+    monkeypatch.setattr(ann_ops, name, counting)
+    return fits
+
+
 def test_lsh_loads_without_refit(spark, store_root, monkeypatch):
     emb = load_table(spark, SF, "embeddings")
     q = [0.0] * 64
-    model1, vdf1 = index_store.load_or_fit_lsh(spark, emb, SF)
+    model1, vdf1 = index_store.load_or_fit(spark, emb, SF, "approx")
     before = ann_ops.approx_knn(model1, vdf1, q, k=5).collect()
 
+    index_store._memo.clear()  # a fresh application: only the store holds it
     _no_fit(monkeypatch, "build_lsh_index")  # second call must hit the store
-    model2, vdf2 = index_store.load_or_fit_lsh(spark, emb, SF)
+    model2, vdf2 = index_store.load_or_fit(spark, emb, SF, "approx")
     after = ann_ops.approx_knn(model2, vdf2, q, k=5).collect()
     assert [tuple(r) for r in before] == [tuple(r) for r in after]
 
@@ -42,22 +57,37 @@ def test_lsh_loads_without_refit(spark, store_root, monkeypatch):
 def test_ivf_loads_without_refit(spark, store_root, monkeypatch):
     emb = load_table(spark, SF, "embeddings")
     q = [0.0] * 64
-    km1, a1 = index_store.load_or_fit_ivf(spark, emb, SF, n_clusters=4)
+    km1, a1 = index_store.load_or_fit(spark, emb, SF, "ivf", n_clusters=4)
     before = ann_ops.ivf_search(km1, a1, q, k=5, nprobe=2).collect()
 
+    index_store._memo.clear()
     _no_fit(monkeypatch, "build_ivf_index")
-    km2, a2 = index_store.load_or_fit_ivf(spark, emb, SF, n_clusters=4)
+    km2, a2 = index_store.load_or_fit(spark, emb, SF, "ivf", n_clusters=4)
     after = ann_ops.ivf_search(km2, a2, q, k=5, nprobe=2).collect()
     assert [tuple(r) for r in before] == [tuple(r) for r in after]
 
 
 def test_pq_loads_without_refit(spark, store_root, monkeypatch):
     emb = load_table(spark, SF, "embeddings")
-    books1 = index_store.load_or_fit_pq(spark, emb, SF, m=8, k=8)
+    books1, _ = index_store.load_or_fit(spark, emb, SF, "pq", m=8, k=8)
 
+    index_store._memo.clear()
     _no_fit(monkeypatch, "fit_pq_codebooks")
-    books2 = index_store.load_or_fit_pq(spark, emb, SF, m=8, k=8)
+    books2, _ = index_store.load_or_fit(spark, emb, SF, "pq", m=8, k=8)
     assert books1 == books2  # identical codebooks, byte-for-byte
+
+
+def test_warm_call_served_from_memo(spark, store_root, monkeypatch):
+    """Within one application a second call reuses the loaded model:
+    no fit and no read of the store, which may even be gone."""
+    import shutil
+
+    emb = load_table(spark, SF, "embeddings")
+    km1, _ = index_store.load_or_fit(spark, emb, SF, "ivf", n_clusters=4)
+    shutil.rmtree(store_root)
+    _no_fit(monkeypatch, "build_ivf_index")
+    km2, _ = index_store.load_or_fit(spark, emb, SF, "ivf", n_clusters=4)
+    assert km2 is km1
 
 
 def test_ivf_store_written_once_and_search_matches(spark, store_root, monkeypatch):
@@ -67,8 +97,8 @@ def test_ivf_store_written_once_and_search_matches(spark, store_root, monkeypatc
     answer for the same model/nprobe."""
     emb = load_table(spark, SF, "embeddings")
     q = [0.0] * 64
-    km, store = index_store.load_or_fit_ivf_store(spark, emb, SF, n_clusters=4)
-    _, assigned = index_store.load_or_fit_ivf(spark, emb, SF, n_clusters=4)
+    km, store = index_store.ivf_store(spark, emb, SF, n_clusters=4)
+    _, assigned = index_store.load_or_fit(spark, emb, SF, "ivf", n_clusters=4)
     want = [
         tuple(r)
         for r in ann_ops.ivf_search(km, assigned, q, k=5, nprobe=2).collect()
@@ -82,18 +112,36 @@ def test_ivf_store_written_once_and_search_matches(spark, store_root, monkeypatc
     assert got == want
 
     _no_fit(monkeypatch, "write_ivf_partitioned")
-    km2, store2 = index_store.load_or_fit_ivf_store(spark, emb, SF, n_clusters=4)
+    km2, store2 = index_store.ivf_store(spark, emb, SF, n_clusters=4)
     assert store2 == store
 
 
-def test_stale_fingerprint_refits(spark, store_root):
-    emb = load_table(spark, SF, "embeddings")
-    index_store.load_or_fit_pq(spark, emb, SF, m=8, k=8)
-    # same store key (same sf tag / params) but a different row count:
-    # the fingerprint must miss and the fit must rerun on the new data
-    subset = emb.limit(50)
-    books = index_store.load_or_fit_pq(spark, subset, SF, m=8, k=8)
-    assert len(books) == 8  # refit on the subset succeeded
+def test_stale_fingerprint_refits(spark, store_root, tmp_path, monkeypatch):
+    """The fingerprint is the embeddings table's footer row count plus
+    the fit params: rewriting the table with fewer rows misses both
+    the in-process memo and the stored artifact, and the fit reruns."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / "sf_copy"
+    sf.mkdir()
+    table = sf / "embeddings.parquet"
+    shutil.copyfile(f"{SF}/embeddings.parquet", table)
+    fits = _count_fits(monkeypatch, "fit_pq_codebooks")
+    emb = load_table(spark, str(sf), "embeddings")
+    index_store.load_or_fit(spark, emb, str(sf), "pq", m=8, k=8)
+    index_store.load_or_fit(spark, emb, str(sf), "pq", m=8, k=8)
+    assert len(fits) == 1  # the unchanged table is served, not refit
+
+    pq.write_table(pq.read_table(table).slice(0, 50), table)
+    emb = load_table(spark, str(sf), "embeddings")
+    books, _ = index_store.load_or_fit(spark, emb, str(sf), "pq", m=8, k=8)
+    assert len(fits) == 2  # the stale artifact was not served
+    assert len(books) == 8
+    index_store._memo.clear()
+    index_store.load_or_fit(spark, emb, str(sf), "pq", m=8, k=8)
+    assert len(fits) == 2  # the refit was stored under the new fingerprint
 
 
 def test_unwritable_store_degrades_to_plain_fit(spark, tmp_path, monkeypatch):
@@ -111,13 +159,13 @@ def test_unwritable_store_degrades_to_plain_fit(spark, tmp_path, monkeypatch):
     emb = load_table(spark, SF, "embeddings")
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        books = index_store.load_or_fit_pq(spark, emb, SF, m=8, k=8)
+        books, _ = index_store.load_or_fit(spark, emb, SF, "pq", m=8, k=8)
     assert len(books) == 8  # fit returned despite persist failure
     assert any("persist skipped" in str(w.message) for w in caught)
 
 
 def test_param_change_uses_distinct_artifact(spark, store_root):
     emb = load_table(spark, SF, "embeddings")
-    b16 = index_store.load_or_fit_pq(spark, emb, SF, m=16, k=8)
-    b8 = index_store.load_or_fit_pq(spark, emb, SF, m=8, k=8)
+    b16, _ = index_store.load_or_fit(spark, emb, SF, "pq", m=16, k=8)
+    b8, _ = index_store.load_or_fit(spark, emb, SF, "pq", m=8, k=8)
     assert len(b16) == 16 and len(b8) == 8

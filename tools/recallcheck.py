@@ -327,7 +327,7 @@ def main() -> None:
     from vfs_spark.operators import index_store
 
     t = time.time()
-    km16, asg16, np90 = index_store.load_or_fit_ivf_autoprobe(
+    km16, asg16, np90 = index_store.ivf_nprobe(
         spark, emb, ann_sf, n_clusters=16, recall_target=0.9)
     asg16 = asg16.cache(); asg16.count()
     rec = [A.recall_at_k(
@@ -340,10 +340,11 @@ def main() -> None:
         role="registered", gate=0.85)
 
     t = time.time()
-    _, _, np95 = index_store.load_or_fit_ivf_autoprobe(
+    _, _, np95 = index_store.ivf_nprobe(
         spark, emb, ann_sf, n_clusters=16, recall_target=0.95)
-    books64 = index_store.load_or_fit_pq(spark, emb, ann_sf, m=16, k=64)
-    enc64 = A.encode_pq_arrow(emb, books64).cache(); enc64.count()
+    books64, enc64 = index_store.load_or_fit(
+        spark, emb, ann_sf, "pq", m=16, k=64)
+    enc64 = enc64.cache(); enc64.count()
     ae64 = asg16.select("vec_id", "cluster_id").join(enc64, "vec_id").cache()
     ae64.count()
     rec = [A.recall_at_k(
@@ -519,7 +520,7 @@ def main() -> None:
         cached = {}
         emb_sf = spark.read.parquet(f"{ann_sf}/embeddings.parquet")
         for target in (0.9, 0.95):
-            _, _, np_sf = index_store.load_or_fit_ivf_autoprobe(
+            _, _, np_sf = index_store.ivf_nprobe(
                 spark, emb_sf, ann_sf, recall_target=target, k=10
             )
             cached[target] = np_sf

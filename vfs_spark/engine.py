@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vfs_spark.functions.quantize import DEFAULT_SCALE, dequantize, quantize
-from vfs_spark.operators import ann
+from vfs_spark.operators import ann, index_store
 from vfs_spark.operators.knn import exact_knn
 from vfs_spark.schema import VFS_VECTOR_SCHEMA
 from vfs_spark.sources import store
@@ -41,28 +41,6 @@ ANN_METRICS = {
     "approx": ("euclidean", "cosine"),
     "ivf": ("euclidean",),
     "pq": ("euclidean",),
-}
-
-# Per ANN kind: fit the model over the store, and encode the store
-# against a fitted model (LSH feature vectors, IVF cluster ids, PQ
-# codes). The LSH fit reads only the dimension; the KMeans centroids
-# and PQ codebooks are trained once and then take many rows, as FAISS
-# trains once and adds many vectors.
-_FIT = {
-    "approx": lambda vecs, metric: ann.build_lsh_index(
-        vecs, vec_col="embedding", metric=metric
-    )[0],
-    "ivf": lambda vecs, metric: ann.build_ivf_index(vecs, vec_col="embedding")[0],
-    "pq": lambda vecs, metric: ann.fit_pq_codebooks(vecs, vec_col="embedding"),
-}
-_ENCODE = {
-    "approx": lambda model, vecs, metric: ann._to_vector_df(
-        vecs, "embedding", normalize=(metric == "cosine")
-    ),
-    "ivf": lambda model, vecs, metric: ann.assign_ivf(model, vecs, "embedding"),
-    "pq": lambda model, vecs, metric: ann.encode_pq_arrow(
-        vecs, model, vec_col="embedding", id_col="id"
-    ),
 }
 
 
@@ -386,7 +364,8 @@ class VFSEngine:
         )
 
     def _ann_index(self, kind: str, metric: str, vecs: DataFrame):
-        """(model, encoded store frame) for one ANN kind. The kept
+        """(model, encoded store frame) for one ANN kind, fitted and
+        encoded by the index store's codec. The kept
         model serves until the store holds more than REFIT_GROWTH times
         its fitted rows; a store write only costs re-encoding the store
         against it, which runs once and is cached for later searches."""
@@ -396,9 +375,9 @@ class VFSEngine:
         rows = self.approx_vector_count() or 0
         model, fitted_rows = self._models.get(key, (None, 0))
         if model is None or rows > REFIT_GROWTH * fitted_rows:
-            model = _FIT[kind](vecs, metric)
+            model = index_store.fit(kind, vecs, metric)
             self._models[key] = (model, rows)
-        frame = _ENCODE[kind](model, vecs, metric).cache()
+        frame = index_store.encode(kind, model, vecs, metric, id_col="id").cache()
         frame.count()
         self._frames[key] = frame
         return model, frame
@@ -518,8 +497,8 @@ class VFSEngine:
         The data copy is a Spark read→write (not a driver-local
         copytree): on a cluster, storage_dir is a distributed
         filesystem path and the copy parallelizes across executors;
-        the driver never streams the bytes. LSH and IVF models persist
-        via MLlib's own writer, PQ codebooks as JSON, and the row count
+        the driver never streams the bytes. Each model is written by the
+        index store's codec (operators/index_store.save), and the row count
         each was fitted on in ``fitted_rows.json`` — the index-at-rest
         analogue of the reference's manager-state snapshot
         (storage_manager.rs:367-399)."""
@@ -536,11 +515,7 @@ class VFSEngine:
         os.makedirs(index_dir, exist_ok=True)
         for key, (model, _rows) in self._models.items():
             path = os.path.join(index_dir, _snapshot_entry(key))
-            if key.startswith("pq:"):
-                with open(path, "w") as f:
-                    json.dump(model, f)
-            else:
-                model.write().overwrite().save(path)
+            index_store.save(key.partition(":")[0], model, path)
         with open(os.path.join(index_dir, "fitted_rows.json"), "w") as f:
             json.dump({key: rows for key, (_, rows) in self._models.items()}, f)
         return dest
@@ -573,9 +548,6 @@ class VFSEngine:
         index_dir = os.path.join(src, "index")
         if not os.path.isdir(index_dir):
             return
-        from pyspark.ml.clustering import KMeansModel
-        from pyspark.ml.feature import BucketedRandomProjectionLSHModel
-
         fitted: dict[str, int] = {}
         rows_path = os.path.join(index_dir, "fitted_rows.json")
         if os.path.isfile(rows_path):
@@ -588,14 +560,9 @@ class VFSEngine:
                 path = os.path.join(index_dir, _snapshot_entry(key))
                 if not os.path.exists(path):
                     continue
-                if kind == "pq":
-                    with open(path) as f:
-                        model = json.load(f)
-                elif kind == "ivf":
-                    model = KMeansModel.load(path)
-                else:
-                    model = BucketedRandomProjectionLSHModel.load(path)
-                self._models[key] = (model, fitted.get(key, rows))
+                self._models[key] = (
+                    index_store.load(kind, path), fitted.get(key, rows)
+                )
 
 
 def _snapshot_entry(key: str) -> str:

@@ -67,8 +67,9 @@ def build_lsh_index(
 ):
     """Fit the LSH index over the full collection — the batch analogue
     of HNSW construction (ann.rs:432-509), done ONCE, not per query.
-    Returns (model, indexed_df); persist with model.write().save(path)
-    (≈ snapshot_state #15)."""
+    Returns (model, indexed_df). Models are saved, loaded and kept
+    across applications by operators/index_store.py (≈ snapshot_state
+    #15)."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
 
     vdf = _to_vector_df(df, vec_col, normalize=(metric == "cosine"))
@@ -159,8 +160,11 @@ def approx_knn_multiprobe(
     hashed = model.transform(indexed_df)
     spark = indexed_df.sparkSession
     q_row = spark.createDataFrame([(Vectors.dense(q),)], ["features"])
+    # collect, not first(): one job over every slice of the one-row
+    # frame, where first() scans slices in growing rounds until it
+    # reaches the row (2-3 jobs)
     q_hashes = [
-        float(v[0]) for v in model.transform(q_row).first()["hashes"]
+        float(v[0]) for v in model.transform(q_row).collect()[0]["hashes"]
     ]
     if not q_hashes:
         raise ValueError(

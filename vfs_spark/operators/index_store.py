@@ -1,25 +1,41 @@
-"""Persistent ANN index store — fit-once across APPLICATIONS.
+"""Persistent ANN model store — the one codec for every fitted ANN model.
 
-The reference's snapshot persists its manager state including the
-index map (storage_manager.rs:367-427) so a restarted server serves
-approximate queries without rebuilding. ``VFSEngine.snapshot/restore``
-mirrors that verb-for-verb; this module is the same idea for the
-registered query surface: LSH / IVF / PQ fits over a fixture dataset
-are written once (MLlib model writers + a JSON codebook sidecar) under
-a per-dataset directory and loaded by every later application, so a
-restart costs a model load, not a KMeans refit over the collection.
+Each ANN kind has one fit, one encode and one at-rest format: ``approx``
+(LSH projections per metric; encode attaches the ``features`` vector,
+L2-normalized for cosine; MLlib writer), ``ivf`` (KMeans centroids;
+encode adds ``cluster_id``; MLlib writer) and ``pq`` (codebooks as
+nested float lists; encode gives ``codes``; JSON). The fit functions
+are looked up in ``operators/ann.py`` at call time.
 
-Staleness guard: a ``meta.json`` fingerprint (row count + fit params)
-is written next to each artifact and validated on load; a changed
-dataset or changed fit parameters misses the cache and refits. At
-100 TB the fingerprint check is a Parquet-footer count, not a scan —
-orders of magnitude cheaper than the bounded-sample fit it guards.
+``VFSEngine`` keeps its models through ``fit``/``encode``/``save``/
+``load`` and snapshots them in its own layout, as the reference
+persists its index map in the manager snapshot
+(storage_manager.rs:367-427). The registered query surface goes
+through ``load_or_fit``: a model fitted over a fixture dataset is
+written once under a per-dataset directory and loaded by every later
+application, so a restart costs a model load, not a refit.
+
+Fingerprint: the row count of the dataset's ``embeddings`` table, read
+from Parquet footers (no data pages, no Spark job), plus the fit
+parameters, recorded in a ``meta.json`` next to each artifact. A
+changed table or changed parameters misses and refits. Only where no
+footer is readable does the fingerprint count the frame.
+
+Memo: ``load_or_fit`` keeps each model it loads or fits in process,
+one entry per artifact directory, for the life of the SparkSession
+that made it; a call whose fingerprint differs replaces the entry. A
+warm call runs no Spark job for its model. The IVF model's derived
+artifacts — the recall-calibrated nprobe sidecar and the
+cluster-partitioned store — are kept under the same fingerprint and
+validated without reading a row.
 
 Layout (root = $VFS_SPARK_INDEX_DIR, default <repo>/spark-warehouse/
 ann_index — gitignored):
 
     <root>/<dataset-tag>/lsh_<metric>/{model/, meta.json}
-    <root>/<dataset-tag>/ivf_<n>/{model/, meta.json}
+    <root>/<dataset-tag>/ivf_<n>/{model/, meta.json,
+                                  nprobe_r<target>_k<k>.json,
+                                  store/, store_meta.json}
     <root>/<dataset-tag>/pq_<m>x<k>/{codebooks.json, meta.json}
 """
 
@@ -30,13 +46,86 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from vfs_spark.operators import ann as ann_ops
+from vfs_spark.operators import ann
+from vfs_spark.sources.parquet import parquet_row_count, table_path
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+# The fit parameters load_or_fit records for each kind when the caller
+# gives none: the defaults of the ann fit functions.
+_DEFAULTS = {
+    "approx": {
+        "bucket_length": ann.DEFAULT_BUCKET_LENGTH,
+        "num_hash_tables": ann.DEFAULT_NUM_HASH_TABLES,
+    },
+    "ivf": {"n_clusters": 16},
+    "pq": {"m": 16, "k": 16},
+}
 
+# artifact directory -> (application id, fingerprint, model)
+_memo: dict[str, tuple[str, dict, object]] = {}
+
+
+# -- the codec ---------------------------------------------------------
+def fit(
+    kind: str,
+    vecs: DataFrame,
+    metric: str = "euclidean",
+    vec_col: str = "embedding",
+    **params,
+):
+    """Fit one ANN model of ``kind`` over ``vecs``."""
+    if kind == "approx":
+        return ann.build_lsh_index(vecs, vec_col=vec_col, metric=metric, **params)[0]
+    if kind == "ivf":
+        return ann.build_ivf_index(vecs, vec_col=vec_col, **params)[0]
+    return ann.fit_pq_codebooks(vecs, vec_col=vec_col, **params)
+
+
+def encode(
+    kind: str,
+    model,
+    vecs: DataFrame,
+    metric: str = "euclidean",
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """``vecs`` encoded against a fitted model, as a plan: LSH feature
+    vectors, IVF cluster ids, PQ (id, codes). Rows added after the fit
+    encode the same way — FAISS trains once and adds many vectors."""
+    if kind == "approx":
+        return ann._to_vector_df(vecs, vec_col, normalize=(metric == "cosine"))
+    if kind == "ivf":
+        return ann.assign_ivf(model, vecs, vec_col)
+    return ann.encode_pq_arrow(vecs, model, vec_col=vec_col, id_col=id_col)
+
+
+def save(kind: str, model, path: str) -> None:
+    """Write a model at ``path``: a directory from MLlib's writer for
+    LSH and IVF, a JSON file for PQ codebooks."""
+    if kind == "pq":
+        _write_json(path, model)
+    else:
+        model.write().overwrite().save(path)
+
+
+def load(kind: str, path: str):
+    """Read back a model ``save`` wrote."""
+    if kind == "pq":
+        with open(path) as fh:
+            return json.load(fh)
+    if kind == "ivf":
+        from pyspark.ml.clustering import KMeansModel
+
+        return KMeansModel.load(path)
+    from pyspark.ml.feature import BucketedRandomProjectionLSHModel
+
+    return BucketedRandomProjectionLSHModel.load(path)
+
+
+# -- the registry store ------------------------------------------------
 def _root() -> str:
     return os.environ.get(
         "VFS_SPARK_INDEX_DIR",
@@ -44,24 +133,19 @@ def _root() -> str:
     )
 
 
-def _artifact_dir(sf_dir: str, kind: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    return os.path.join(_root(), tag, kind)
-
-
-def _meta_matches(path: str, expect: dict) -> bool:
+def _read_json(path: str):
     try:
         with open(path) as fh:
-            return json.load(fh) == expect
+            return json.load(fh)
     except (OSError, ValueError):
-        return False
+        return None
 
 
-def _write_meta(path: str, meta: dict) -> None:
+def _write_json(path: str, obj) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump(meta, fh)
+        json.dump(obj, fh)
     os.replace(tmp, path)  # atomic publish: readers never see a partial file
 
 
@@ -78,75 +162,69 @@ def _try_persist(fn) -> None:
         warnings.warn(f"index store persist skipped: {e}", stacklevel=3)
 
 
-def load_or_fit_lsh(
+def _model(
     spark: SparkSession,
     df: DataFrame,
     sf_dir: str,
-    vec_col: str = "embedding",
+    kind: str,
+    metric: str,
+    vec_col: str,
+    params: dict,
+):
+    """(model, artifact dir, fingerprint): memo, then store, then fit."""
+    params = {**_DEFAULTS[kind], **params}
+    if kind == "approx":
+        name = f"lsh_{metric}"
+    elif kind == "ivf":
+        name = f"ivf_{params['n_clusters']}"
+    else:
+        name = f"pq_{params['m']}x{params['k']}"
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
+    art = os.path.join(_root(), tag, name)
+    rows = parquet_row_count(table_path(sf_dir, "embeddings"))
+    meta = {"rows": df.count() if rows is None else rows, **params}
+    if kind == "approx":
+        meta["metric"] = metric
+    app = spark.sparkContext.applicationId
+    hit = _memo.get(art)
+    if hit is not None and hit[:2] == (app, meta):
+        return hit[2], art, meta
+    meta_path = os.path.join(art, "meta.json")
+    model_path = os.path.join(art, "codebooks.json" if kind == "pq" else "model")
+    try:
+        model = load(kind, model_path) if _read_json(meta_path) == meta else None
+    except Exception:  # noqa: BLE001 — a torn artifact refits
+        model = None
+    if model is None:
+        model = fit(kind, df, metric, vec_col, **params)
+
+        def _persist():
+            save(kind, model, model_path)
+            _write_json(meta_path, meta)
+
+        _try_persist(_persist)
+    _memo[art] = (app, meta, model)
+    return model, art, meta
+
+
+def load_or_fit(
+    spark: SparkSession,
+    df: DataFrame,
+    sf_dir: str,
+    kind: str,
     metric: str = "euclidean",
-    bucket_length: float = ann_ops.DEFAULT_BUCKET_LENGTH,
-    num_hash_tables: int = ann_ops.DEFAULT_NUM_HASH_TABLES,
-):
-    """(model, indexed_df), loading the fitted LSH model from the store
-    when its fingerprint matches, else fitting and saving it."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSHModel
-
-    art = _artifact_dir(sf_dir, f"lsh_{metric}")
-    meta = {
-        "rows": df.count(),
-        "metric": metric,
-        "bucket_length": bucket_length,
-        "num_hash_tables": num_hash_tables,
-    }
-    model_path = os.path.join(art, "model")
-    if _meta_matches(os.path.join(art, "meta.json"), meta):
-        model = BucketedRandomProjectionLSHModel.load(model_path)
-        vdf = ann_ops._to_vector_df(df, vec_col, normalize=(metric == "cosine"))
-        return model, vdf
-    model, vdf = ann_ops.build_lsh_index(
-        df,
-        vec_col=vec_col,
-        bucket_length=bucket_length,
-        num_hash_tables=num_hash_tables,
-        metric=metric,
-    )
-
-    def _persist():
-        model.write().overwrite().save(model_path)
-        _write_meta(os.path.join(art, "meta.json"), meta)
-
-    _try_persist(_persist)
-    return model, vdf
-
-
-def load_or_fit_ivf(
-    spark: SparkSession,
-    df: DataFrame,
-    sf_dir: str,
     vec_col: str = "embedding",
-    n_clusters: int = 16,
+    **params,
 ):
-    """(kmeans_model, df + cluster_id), loading the coarse quantizer
-    from the store when its fingerprint matches, else fitting+saving."""
-    from pyspark.ml.clustering import KMeansModel
-
-    art = _artifact_dir(sf_dir, f"ivf_{n_clusters}")
-    meta = {"rows": df.count(), "n_clusters": n_clusters}
-    model_path = os.path.join(art, "model")
-    if _meta_matches(os.path.join(art, "meta.json"), meta):
-        km = KMeansModel.load(model_path)
-        return km, ann_ops.assign_ivf(km, df, vec_col)
-    km, assigned = ann_ops.build_ivf_index(df, vec_col=vec_col, n_clusters=n_clusters)
-
-    def _persist():
-        km.write().overwrite().save(model_path)
-        _write_meta(os.path.join(art, "meta.json"), meta)
-
-    _try_persist(_persist)
-    return km, assigned
+    """(model, df encoded against it) for one ANN kind over the dataset
+    at ``sf_dir``: the memoized model when its fingerprint matches, else
+    the stored artifact, else a fresh fit that is then stored. Fit
+    parameters the caller leaves out take the ann defaults."""
+    model, _, _ = _model(spark, df, sf_dir, kind, metric, vec_col, params)
+    return model, encode(kind, model, df, metric, vec_col)
 
 
-def load_or_fit_ivf_autoprobe(
+def ivf_nprobe(
     spark: SparkSession,
     df: DataFrame,
     sf_dir: str,
@@ -155,125 +233,61 @@ def load_or_fit_ivf_autoprobe(
     recall_target: float = 0.9,
     k: int = 10,
 ):
-    """(kmeans_model, assigned_df, nprobe): the IVF quantizer plus the
-    measured-at-fit-time nprobe operating point (ann_ops.auto_nprobe —
+    """(kmeans_model, assigned_df, nprobe): the IVF model plus the
     smallest nprobe whose routing recall on seeded validation queries
-    meets ``recall_target``). The chosen value is cached in a sidecar
-    next to the model, so the one-scan measurement job runs once per
-    dataset fingerprint, not once per query — the serving default is
-    recall-calibrated, never a hand-tuned constant (VERDICT r8 #2)."""
-    km, assigned = load_or_fit_ivf(
-        spark, df, sf_dir, vec_col=vec_col, n_clusters=n_clusters
+    meets ``recall_target`` (ann.auto_nprobe). The value is measured
+    once per fingerprint and kept in a sidecar next to the model, so
+    the serving default is recall-calibrated, never a hand-tuned
+    constant. The (target, k) pair names the sidecar: ann_ivf (0.9)
+    and the IVFPQ index (0.95) share one model, and one shared sidecar
+    would make each re-measure after the other."""
+    km, art, meta = _model(
+        spark, df, sf_dir, "ivf", "euclidean", vec_col, {"n_clusters": n_clusters}
     )
-    art = _artifact_dir(sf_dir, f"ivf_{n_clusters}")
-    meta = {
-        "rows": df.count(),
-        "n_clusters": n_clusters,
-        "recall_target": recall_target,
-        "k": k,
-    }
-    # the (target, k) pair is part of the ARTIFACT NAME, not just the
-    # meta: ann_ivf (0.9) and the IVFPQ index (0.95) share one model
-    # dir, and a single shared sidecar would thrash — each caller
-    # invalidating the other's meta and re-paying the measurement job
-    # on every alternation (code-review r9 finding)
-    tag = f"nprobe_r{recall_target}_k{k}"
-    np_path = os.path.join(art, f"{tag}.json")
-    if _meta_matches(os.path.join(art, f"{tag}_meta.json"), meta):
-        try:
-            with open(np_path) as fh:
-                return km, assigned, int(json.load(fh)["nprobe"])
-        except (OSError, ValueError, KeyError):
-            pass  # torn artifact: fall through to re-measure
-    nprobe = ann_ops.auto_nprobe(
+    assigned = encode("ivf", km, df, vec_col=vec_col)
+    meta = {**meta, "recall_target": recall_target, "k": k}
+    path = os.path.join(art, f"nprobe_r{recall_target}_k{k}.json")
+    side = _read_json(path) or {}
+    if side.get("meta") == meta:
+        return km, assigned, int(side["nprobe"])
+    nprobe = ann.auto_nprobe(
         km,
         assigned,
         recall_target=recall_target,
         k=k,
         vec_col=vec_col,
-        # rows was just counted for the meta — the N-axis hint that
-        # routes the calibration's truth scan through the Arrow
-        # kernel on ladder-scale stores (byte-identical top-k)
+        # the fingerprint's row count is the N-axis hint that routes the
+        # calibration's truth scan through the Arrow kernel on
+        # ladder-scale stores (byte-identical top-k)
         approx_vector_count=meta["rows"],
     )
-
-    def _persist():
-        os.makedirs(art, exist_ok=True)
-        tmp = np_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"nprobe": nprobe}, fh)
-        os.replace(tmp, np_path)
-        _write_meta(os.path.join(art, f"{tag}_meta.json"), meta)
-
-    _try_persist(_persist)
+    _try_persist(lambda: _write_json(path, {"meta": meta, "nprobe": nprobe}))
     return km, assigned, nprobe
 
 
-def load_or_fit_ivf_store(
+def ivf_store(
     spark: SparkSession,
     df: DataFrame,
     sf_dir: str,
     vec_col: str = "embedding",
     n_clusters: int = 16,
-    preloaded: tuple | None = None,
 ):
     """(kmeans_model, partitioned_store_path): the IVF index AT REST —
-    one Hive partition per cluster — written once per dataset
-    fingerprint and reused by every later application. Queries
-    against the returned path get physical partition pruning
-    (ivf_search_partitioned); this is the layout `stream_append_ivf`
-    maintains incrementally and `compact_ivf_store` folds.
-
-    ``preloaded``: a (km_model, assigned_df) pair the caller already
-    holds (e.g. from load_or_fit_ivf_autoprobe) — skips the second
-    load/fit path so one query never runs the IVF machinery twice."""
-    if preloaded is not None:
-        km, assigned = preloaded
-    else:
-        km, assigned = load_or_fit_ivf(
-            spark, df, sf_dir, vec_col=vec_col, n_clusters=n_clusters
-        )
-    art = _artifact_dir(sf_dir, f"ivf_{n_clusters}")
+    one Hive partition per cluster — written once per fingerprint and
+    reused by every later application. Queries against the returned
+    path get physical partition pruning (ivf_search_partitioned); this
+    is the layout `stream_append_ivf` maintains incrementally and
+    `compact_ivf_store` folds."""
+    km, art, meta = _model(
+        spark, df, sf_dir, "ivf", "euclidean", vec_col, {"n_clusters": n_clusters}
+    )
     store = os.path.join(art, "store")
     meta_path = os.path.join(art, "store_meta.json")
-    meta = {"rows": df.count(), "n_clusters": n_clusters}
-    if not _meta_matches(meta_path, meta):
+    if _read_json(meta_path) != meta:
         # unlike the model artifacts, the partitioned store IS the
         # queryable result here — a failed write must raise, not warn
-        ann_ops.write_ivf_partitioned(assigned, store, vec_col=vec_col)
-        _write_meta(meta_path, meta)
+        ann.write_ivf_partitioned(
+            encode("ivf", km, df, vec_col=vec_col), store, vec_col=vec_col
+        )
+        _write_json(meta_path, meta)
     return km, store
-
-
-def load_or_fit_pq(
-    spark: SparkSession,
-    df: DataFrame,
-    sf_dir: str,
-    vec_col: str = "embedding",
-    m: int = 16,
-    k: int = 16,
-):
-    """PQ codebooks (plain nested lists — JSON at rest, same format
-    VFSEngine.snapshot writes), loaded from the store when the
-    fingerprint matches, else fitted and saved."""
-    art = _artifact_dir(sf_dir, f"pq_{m}x{k}")
-    meta = {"rows": df.count(), "m": m, "k": k}
-    books_path = os.path.join(art, "codebooks.json")
-    if _meta_matches(os.path.join(art, "meta.json"), meta):
-        try:
-            with open(books_path) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            pass  # torn artifact: fall through to refit
-    books = ann_ops.fit_pq_codebooks(df, vec_col=vec_col, m=m, k=k)
-
-    def _persist():
-        os.makedirs(art, exist_ok=True)
-        tmp = books_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(books, fh)
-        os.replace(tmp, books_path)
-        _write_meta(os.path.join(art, "meta.json"), meta)
-
-    _try_persist(_persist)
-    return books

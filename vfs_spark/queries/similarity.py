@@ -91,7 +91,7 @@ def q_approx_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query-surface analogue of the reference persisting its index
     map in the manager snapshot (storage_manager.rs:367-427)."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    model, vdf = index_store.load_or_fit_lsh(spark, emb, sf_dir)
+    model, vdf = index_store.load_or_fit(spark, emb, sf_dir, "approx")
     return ann_ops.approx_knn(model, vdf, _query_vec(spark, sf_dir), k=5)
 
 
@@ -103,7 +103,7 @@ def q_approx_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     time (no refit), recall rises monotonically with it
     (tests/test_ann.py::test_lsh_multiprobe_recall_monotone)."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    model, vdf = index_store.load_or_fit_lsh(spark, emb, sf_dir)
+    model, vdf = index_store.load_or_fit(spark, emb, sf_dir, "approx")
     return ann_ops.approx_knn_multiprobe(
         model, vdf, _query_vec(spark, sf_dir), k=5, probe_width=2
     )
@@ -120,7 +120,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     caches the chosen value next to the model, so a restarted
     application loads both instead of refitting or re-measuring."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    km, assigned, nprobe = index_store.load_or_fit_ivf_autoprobe(
+    km, assigned, nprobe = index_store.ivf_nprobe(
         spark, emb, sf_dir, n_clusters=16, recall_target=0.9
     )
     return ann_ops.ivf_search(
@@ -138,12 +138,10 @@ def q_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming maintenance path (stream_append_ivf +
     compact_ivf_store) keeps current at 100 TB."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    km, assigned, nprobe = index_store.load_or_fit_ivf_autoprobe(
+    _, _, nprobe = index_store.ivf_nprobe(
         spark, emb, sf_dir, n_clusters=16, recall_target=0.9
     )
-    km, store = index_store.load_or_fit_ivf_store(
-        spark, emb, sf_dir, n_clusters=16, preloaded=(km, assigned)
-    )
+    km, store = index_store.ivf_store(spark, emb, sf_dir, n_clusters=16)
     return ann_ops.ivf_search_partitioned(
         spark, km, store, _query_vec(spark, sf_dir), k=5, nprobe=nprobe
     )
@@ -228,9 +226,10 @@ def q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bulk ANN: approxSimilarityJoin of a query subset against the
     collection — the join form of /search (one LSH bucket join instead
     of per-query scans; the 100 TB batch re-ranking path). Pairs
-    within euclidean distance 3.0, exact distance attached."""
+    within euclidean distance 3.0, exact distance attached. The LSH
+    model is approx_knn's, from the index store."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    model, vdf = ann_ops.build_lsh_index(emb)
+    model, vdf = index_store.load_or_fit(spark, emb, sf_dir, "approx")
     vdf = vdf.cache()
     vdf.count()  # materialize: both join sides read it in one job
     queries_df = vdf.where(F.col("vec_id") < 5).select(
@@ -253,7 +252,7 @@ def q_similarity_join_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch re-ranking path when single-probe similarity_join
     misses cross-bucket neighbors."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    model, vdf = index_store.load_or_fit_lsh(spark, emb, sf_dir)
+    model, vdf = index_store.load_or_fit(spark, emb, sf_dir, "approx")
     queries_df = vdf.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("features")
     )
@@ -605,7 +604,7 @@ def q_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells. The many-queries form of ann_ivf (recall vs exact gated in
     tests/test_ann.py), at the same auto-nprobe operating point."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-    km, assigned, nprobe = index_store.load_or_fit_ivf_autoprobe(
+    km, assigned, nprobe = index_store.ivf_nprobe(
         spark, emb, sf_dir, n_clusters=16, recall_target=0.9
     )
     queries_df = _query_batch(spark, sf_dir, as_double=True)
@@ -657,8 +656,8 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PQ_INDEX_CACHE:
         emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-        books = index_store.load_or_fit_pq(spark, emb, sf_dir)
-        enc = ann_ops.encode_pq_arrow(emb, books).cache()
+        books, enc = index_store.load_or_fit(spark, emb, sf_dir, "pq")
+        enc = enc.cache()
         enc.count()
         _PQ_INDEX_CACHE[key] = (books, enc)
     return _PQ_INDEX_CACHE[key]
@@ -684,13 +683,14 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
         # ADC stage must waste less of the routing budget — measured
         # 0.95 end-to-end at (nprobe auto→13, shortlist 200) vs 0.875
         # with k=16 codebooks at the same routing point
-        books = index_store.load_or_fit_pq(spark, emb, sf_dir, m=16, k=64)
         # enc stays UNcached: its only consumer is the assigned_enc
         # join below, which is itself cached — a second pinned copy of
         # the codes table would sit in executor memory for the whole
         # application (code-review r9 finding)
-        enc = ann_ops.encode_pq_arrow(emb, books)
-        km, assigned, nprobe = index_store.load_or_fit_ivf_autoprobe(
+        books, enc = index_store.load_or_fit(
+            spark, emb, sf_dir, "pq", m=16, k=64
+        )
+        km, assigned, nprobe = index_store.ivf_nprobe(
             spark, emb, sf_dir, n_clusters=16, recall_target=0.95
         )
         assigned_enc = (
