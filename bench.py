@@ -377,8 +377,10 @@ def main() -> None:
                 # number would time only the post-cache stages —
                 # a different protocol from every other slug. Clearing
                 # only affects persist/cache entries; localCheckpoints
-                # and the fit-once index stores (deliberate
-                # fit-once/query-many serving caches) are untouched.
+                # (among them the PQ/IVFPQ serving tables in
+                # queries/similarity.py) and the index store's model
+                # memo are untouched, so warm runs neither refit a
+                # model nor rebuild a serving table.
                 from pyspark.sql import SparkSession
 
                 ss = SparkSession.getActiveSession()

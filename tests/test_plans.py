@@ -122,14 +122,19 @@ def test_rollup_single_scan(spark, sf_dir):
 
 def test_simhash_band_join_no_cartesian(spark, sf_dir):
     """The registered slug eagerly checkpoints its verified pairs (the
-    cache-release discipline), so its visible plan is a ckpt stub —
-    inspect the LAZY plan via materialize=False to assert the banded
-    self-join is an equi hash/merge join, never a cartesian."""
-    from vfs_spark.operators.dedup import simhash_near_dup_pairs
+    pin-release discipline), so its visible plan is a ckpt stub —
+    inspect the private LAZY plan to assert the banded self-join is an
+    equi hash/merge join, never a cartesian."""
+    from vfs_spark.operators.dedup import (
+        _band_pairs,
+        _hamming_bands,
+        simhash_fingerprints,
+    )
     from vfs_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    df = simhash_near_dup_pairs(docs, max_hamming=3, materialize=False)
+    bands = _hamming_bands(simhash_fingerprints(docs), "doc_id", "simhash", 3)
+    df = _band_pairs(bands, "doc_id", 3, "doc_a", "doc_b")
     plan = ex.formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
@@ -139,16 +144,20 @@ def test_jaccard_prefix_join_no_cartesian(spark, sf_dir):
     """The exact prefix-filtered similarity join (round 12) must plan
     its candidate generation as an equi join on (block, element) —
     never a cartesian/nested-loop pair explosion — and its final
-    predicate must verify with the exact jaccard."""
+    predicate must verify with the exact jaccard. The public op pins
+    and checkpoints, so this inspects its private lazy plan over the
+    distinct-element sets it pins."""
     from vfs_spark.functions.text import word_shingles
-    from vfs_spark.operators.dedup import jaccard_pairs_prefix
+    from vfs_spark.operators.dedup import _jaccard_prefix_plan
     from vfs_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     sh = docs.select(
-        "doc_id", "lang", word_shingles("text").alias("shingles")
+        "doc_id", "lang", F.array_distinct(word_shingles("text")).alias("shingles")
     )
-    df = jaccard_pairs_prefix(sh, threshold=0.3, materialize=False)
+    df = _jaccard_prefix_plan(
+        sh, 0.3, "doc_id", "lang", "shingles", "doc_a", "doc_b"
+    )
     plan = ex.formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -8,12 +8,19 @@ sits in the memory class of a broadcast-join build side (at most a few
 hundred MB on the driver). Bounds are size-based, not tuned to a host.
 Tests pick a path by monkeypatching ``DRIVER_MAX``; ``-1`` forces the
 distributed path (the ``dispatch_path`` fixture in tests/conftest.py).
+
+``pinned`` is the one lifetime for an operator's internal pins: the
+frames an operator reads more than once while it runs.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 DRIVER_MAX = {
@@ -35,3 +42,23 @@ def collect_under(df: DataFrame, bound: int) -> pd.DataFrame | None:
     collect, so the driver never holds more than ``bound + 1`` rows."""
     pdf = df.limit(bound + 1).toPandas()
     return None if len(pdf) > bound else pdf
+
+
+@contextmanager
+def pinned(
+    *frames: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> Iterator[None]:
+    """Persist ``frames`` at ``level`` (``DataFrame.persist``'s default)
+    for the block and unpersist them on exit, also when the block
+    raises. A frame whose plan is already cached is used as it is and
+    stays cached: its pin belongs to whoever made it. Whatever the
+    block returns must not read a pinned frame lazily; operators
+    return an eager checkpoint or a driver-built frame."""
+    owned = [df for df in frames if df.storageLevel == StorageLevel.NONE]
+    try:
+        for df in owned:
+            df.persist(level)
+        yield
+    finally:
+        for df in owned:
+            df.unpersist()

@@ -15,15 +15,18 @@ self-joins). These are the sub-quadratic production paths:
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
+from operator import and_
 
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from vfs_spark.dispatch import DRIVER_MAX, collect_under
+from vfs_spark.dispatch import DRIVER_MAX, collect_under, pinned
 from vfs_spark.functions.text import tokens, word_shingles
 
 SEED = 42
@@ -279,7 +282,7 @@ def minhash_near_dup_pairs(
     # localCheckpoint: the featurized table is scanned as BOTH sides
     # of the LSH self-join (and once more by fit) — without
     # materializing, shingling + hashing re-run three times. An eager
-    # checkpoint (not .cache()) makes the cost deterministic: cache
+    # checkpoint (not a cache) makes the cost deterministic: cache
     # reuse across separately-built plans is a canonicalization
     # lottery (measured 1.1-5.4 s swings for this op between bench
     # runs), a checkpoint is always materialized exactly once here.
@@ -364,7 +367,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     impl: str = "udf",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash_a, simhash_b) ≤ max_hamming.
 
@@ -380,11 +382,7 @@ def simhash_near_dup_pairs(
     }[impl]
     fp = fingerprints(docs, id_col, text_col)
     return hamming_pairs_banded(
-        fp,
-        id_col=id_col,
-        hash_col="simhash",
-        max_hamming=max_hamming,
-        materialize=materialize,
+        fp, id_col=id_col, hash_col="simhash", max_hamming=max_hamming
     )
 
 
@@ -395,7 +393,6 @@ def hamming_pairs_banded(
     max_hamming: int = 3,
     out_a: str = "doc_a",
     out_b: str = "doc_b",
-    materialize: bool = True,
 ) -> DataFrame:
     """All pairs with hamming(hash_a, hash_b) ≤ max_hamming over ANY
     64-bit fingerprint column — the banded engine behind text SimHash
@@ -408,10 +405,31 @@ def hamming_pairs_banded(
 
     100 TB shape: only (band_no, band_val, id, hash) rows shuffle —
     8-byte keys regardless of payload size (the whole point for
-    images: pixels never move)."""
+    images: pixels never move).
+
+    The band rows are pinned while the verified pairs (small: true
+    near-dups) are eagerly checkpointed, then released; the lazy plan
+    is ``_band_pairs(_hamming_bands(...))``."""
+    bands = _hamming_bands(fp, id_col, hash_col, max_hamming)
+    # pin: both sides of the self-join read `bands`. The unpinned lazy
+    # plan reuses the exchange (dedup_simhash_jvm at sf0.01, 4 vCPUs:
+    # 4 jobs instead of 8) but its median wall rose from 2.4-2.9 s to
+    # 3.9-4.3 s, because its uncheckpointed pairs feed two actions.
+    with pinned(bands):
+        bands.count()
+        return _band_pairs(
+            bands, id_col, max_hamming, out_a, out_b
+        ).localCheckpoint(eager=True)
+
+
+def _hamming_bands(
+    fp: DataFrame, id_col: str, hash_col: str, max_hamming: int
+) -> DataFrame:
+    """(id, _h, band_no, band_val): one row per fingerprint and band,
+    max_hamming+1 equal bands."""
     n_bands = max_hamming + 1
     band_width = 64 // n_bands
-    bands = fp.select(
+    return fp.select(
         F.col(id_col),
         F.col(hash_col).alias("_h"),
         F.explode(
@@ -428,27 +446,23 @@ def hamming_pairs_banded(
             )
         ).alias("band"),
     ).select(id_col, "_h", "band.band_no", "band.band_val")
-    # cache: both sides of the self-join read `bands`; without it the
-    # upstream fingerprint pass runs twice over the corpus. Released
-    # before returning — the verified-pairs result (small: true
-    # near-dups) is eagerly checkpointed so its lineage no longer
-    # references `bands`, and repeated calls (cluster loops, ladders)
-    # don't accumulate executor storage (code-review r11 finding).
-    # materialize=False skips the pin AND the checkpoint, returning
-    # the pure lazy plan — for plan inspection (tests/test_plans.py),
-    # never for execution (the fingerprint pass would run twice).
-    if materialize:
-        bands = bands.cache()
-        bands.count()  # materialize before the self-join (see minhash note)
-    a = bands.alias("a")
-    b = bands.alias("b")
+
+
+def _band_pairs(
+    bands: DataFrame, id_col: str, max_hamming: int, out_a: str, out_b: str
+) -> DataFrame:
+    """The lazy banded self-join: equi-join ``bands`` with itself on
+    every column but (id, _h), keep one id order per pair, and verify
+    hamming(_h_a, _h_b) ≤ max_hamming exactly on the candidates."""
+    a, b = bands.alias("a"), bands.alias("b")
+    keys = [c for c in bands.columns if c not in (id_col, "_h")]
+    cond = reduce(
+        and_,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        a.join(b, cond)
         .select(
             F.col(f"a.{id_col}").alias(out_a),
             F.col(f"b.{id_col}").alias(out_b),
@@ -458,16 +472,11 @@ def hamming_pairs_banded(
         .distinct()
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    pairs = (
+    return (
         cand.withColumn("hamming", hamming.cast("int"))
         .where(F.col("hamming") <= max_hamming)
         .select(out_a, out_b, "hamming")
     )
-    if not materialize:
-        return pairs
-    pairs = pairs.localCheckpoint(eager=True)
-    bands.unpersist()
-    return pairs
 
 
 def hamming_pairs_banded_and(
@@ -477,7 +486,6 @@ def hamming_pairs_banded_and(
     max_hamming: int = 3,
     out_a: str = "doc_a",
     out_b: str = "doc_b",
-    materialize: bool = True,
 ) -> DataFrame:
     """AND-composed banding (round 11, VERDICT r10 #9): the same
     complete hamming-pairs contract as hamming_pairs_banded, with the
@@ -497,7 +505,8 @@ def hamming_pairs_banded_and(
     while the guarantee and the exact bit_count verify are unchanged.
     Use when the fingerprint space is low-entropy relative to n
     (images at corpus scale); the single-band form remains cheaper
-    when buckets stay small."""
+    when buckets stay small. Pinned and checkpointed like
+    hamming_pairs_banded."""
     n_bands = max_hamming + 2
     base, rem = divmod(64, n_bands)
     widths = [base + 1 if i < rem else base for i in range(n_bands)]
@@ -527,45 +536,14 @@ def hamming_pairs_banded_and(
             )
         ).alias("bp"),
     ).select(id_col, "_h", "bp.pair_no", "bp.v1", "bp.v2")
-    # same cache rationale (and same release/materialize discipline)
-    # as hamming_pairs_banded: both join sides read `bands`; without
-    # the pin the fingerprint pass runs twice. Released via the eager
-    # checkpoint of the verified-pairs result below.
-    if materialize:
-        bands = bands.cache()
+    with pinned(bands):
         bands.count()
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.pair_no") == F.col("b.pair_no"))
-            & (F.col("a.v1") == F.col("b.v1"))
-            & (F.col("a.v2") == F.col("b.v2"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias(out_a),
-            F.col(f"b.{id_col}").alias(out_b),
-            F.col("a._h").alias("sh_a"),
-            F.col("b._h").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    pairs = (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select(out_a, out_b, "hamming")
-    )
-    if not materialize:
-        return pairs
-    pairs = pairs.localCheckpoint(eager=True)
-    bands.unpersist()
-    return pairs
+        return _band_pairs(
+            bands, id_col, max_hamming, out_a, out_b
+        ).localCheckpoint(eager=True)
 
 
-def _prefix_pin(
+def _prefix_join(
     sh: DataFrame,
     threshold: float,
     mode: str,
@@ -574,11 +552,11 @@ def _prefix_pin(
     set_col: str,
     out_a: str,
     out_b: str,
-    materialize: bool,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Shared head of the two prefix joins: set semantics, the pin and
-    the driver twin. Returns ``(sh, result)``; ``result`` is None when
-    the distributed join has to run over the returned ``sh``.
+) -> DataFrame:
+    """The two prefix joins' shared body: set semantics, the pin, the
+    driver twin, and otherwise the distributed plan
+    (``_jaccard_prefix_plan`` / ``_containment_prefix_plan``)
+    eagerly checkpointed.
 
     Duplicate elements would inflate F.size() and the size filters
     would silently DROP qualifying pairs (r12 ADVICE #2), hence
@@ -586,29 +564,29 @@ def _prefix_pin(
     below the projection with the shingle expression inlined, which
     ran the O(tokens·k) build twice per row (r16). Empty and NULL sets
     emit no postings on either path. The DISK_ONLY pin feeds the
-    prefix build and both verify sides; the caller releases it after
-    the eager checkpoint of the verified pairs. ``materialize=False``
-    skips pin and twin (lazy plan for inspection only)."""
+    guard statistic, the twin's collect or the prefix build and both
+    verify sides; it is released when the result no longer reads it."""
     sh = sh.select(
         id_col,
         block_col,
         F.array_distinct(set_col).alias(set_col),
     )
-    if not materialize:
-        return sh, None
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.DISK_ONLY)
-    # one job materializes the pin AND returns the guard stat Σ|set|
-    n_post = sh.agg(F.sum(F.size(set_col))).first()[0]
-    if (n_post or 0) <= DRIVER_MAX["prefix_postings"]:
-        res = _prefix_pairs_driver(
-            sh, threshold, mode, id_col, block_col, set_col, out_a, out_b
-        )
-        if res is not None:
-            sh.unpersist()
-            return sh, res
-    return sh, None
+    with pinned(sh, level=StorageLevel.DISK_ONLY):
+        # one job materializes the pin AND returns the guard stat Σ|set|
+        n_post = sh.agg(F.sum(F.size(set_col))).first()[0]
+        if (n_post or 0) <= DRIVER_MAX["prefix_postings"]:
+            res = _prefix_pairs_driver(
+                sh, threshold, mode, id_col, block_col, set_col, out_a, out_b
+            )
+            if res is not None:
+                return res
+        plan = {
+            "jaccard": _jaccard_prefix_plan,
+            "containment": _containment_prefix_plan,
+        }[mode]
+        return plan(
+            sh, threshold, id_col, block_col, set_col, out_a, out_b
+        ).localCheckpoint(eager=True)
 
 
 def jaccard_pairs_prefix(
@@ -619,7 +597,6 @@ def jaccard_pairs_prefix(
     set_col: str = "shingles",
     out_a: str = "doc_a",
     out_b: str = "doc_b",
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT set-similarity self-join via prefix filtering (the
     AllPairs / PPJoin candidate scheme, Bayardo et al. WWW'07 / Xiao
@@ -659,15 +636,25 @@ def jaccard_pairs_prefix(
     lang-blocked O(n²) comparison (12.5M pairs at sf0.1 → 326k
     candidate postings measured) while remaining oracle-identical,
     unlike MinHash banding whose recall is probabilistic."""
+    return _prefix_join(
+        sh, threshold, "jaccard", id_col, block_col, set_col, out_a, out_b
+    )
+
+
+def _jaccard_prefix_plan(
+    sh: DataFrame,
+    threshold: float,
+    id_col: str,
+    block_col: str,
+    set_col: str,
+    out_a: str,
+    out_b: str,
+) -> DataFrame:
+    """The distributed jaccard prefix join over distinct-element sets,
+    as a lazy plan (see jaccard_pairs_prefix)."""
     # relaxed pruning bound: admits raw-jaccard values that round up
     # to the caller's threshold at 6 decimals (and a safety margin)
     t = max(threshold - 0.01, 0.0)
-    sh, res = _prefix_pin(
-        sh, threshold, "jaccard", id_col, block_col, set_col,
-        out_a, out_b, materialize,
-    )
-    if res is not None:
-        return res
     ex = sh.select(
         F.col(id_col),
         F.col(block_col).alias("_blk"),
@@ -742,16 +729,11 @@ def jaccard_pairs_prefix(
         F.col(id_col).alias(out_b), F.col(set_col).alias("_sb")
     )
     # verified at the relaxed t: the driver twin's output envelope
-    pairs = cand.join(sa, out_a).join(sb, out_b).select(
+    return cand.join(sa, out_a).join(sb, out_b).select(
         out_a,
         out_b,
         jaccard(F.col("_sa"), F.col("_sb")).alias("jaccard"),
     ).where(F.col("jaccard") >= t)
-    if not materialize:
-        return pairs
-    pairs = pairs.localCheckpoint(eager=True)
-    sh.unpersist()
-    return pairs
 
 
 def containment_pairs_prefix(
@@ -762,7 +744,6 @@ def containment_pairs_prefix(
     set_col: str = "shingles",
     out_a: str = "doc_a",
     out_b: str = "doc_b",
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT max-containment self-join via ASYMMETRIC prefix
     filtering — same output as the blocked all-pairs containment
@@ -813,13 +794,23 @@ def containment_pairs_prefix(
     probabilistic path. Thresholds are relaxed by 0.01 before any
     pruning arithmetic so a caller's exact integer predicate at the
     nominal threshold still sees every pair."""
-    t = max(threshold - 0.01, 0.0)
-    sh, res = _prefix_pin(
-        sh, threshold, "containment", id_col, block_col, set_col,
-        out_a, out_b, materialize,
+    return _prefix_join(
+        sh, threshold, "containment", id_col, block_col, set_col, out_a, out_b
     )
-    if res is not None:
-        return res
+
+
+def _containment_prefix_plan(
+    sh: DataFrame,
+    threshold: float,
+    id_col: str,
+    block_col: str,
+    set_col: str,
+    out_a: str,
+    out_b: str,
+) -> DataFrame:
+    """The distributed containment prefix join over distinct-element
+    sets, as a lazy plan (see containment_pairs_prefix)."""
+    t = max(threshold - 0.01, 0.0)
     ex = sh.select(
         F.col(id_col),
         F.col(block_col).alias("_blk"),
@@ -884,7 +875,7 @@ def containment_pairs_prefix(
         F.col(id_col).alias(out_b), F.col(set_col).alias("_sb")
     )
     # verified at the relaxed t: the driver twin's output envelope
-    pairs = cand.join(sa, out_a).join(sb, out_b).select(
+    return cand.join(sa, out_a).join(sb, out_b).select(
         out_a,
         out_b,
         F.size(F.array_intersect("_sa", "_sb"))
@@ -894,11 +885,6 @@ def containment_pairs_prefix(
         .cast("bigint")
         .alias("min_size"),
     ).where(F.col("inter_size").cast("double") >= t * F.col("min_size"))
-    if not materialize:
-        return pairs
-    pairs = pairs.localCheckpoint(eager=True)
-    sh.unpersist()
-    return pairs
 
 
 def prefix_candidate_stats(
@@ -1070,279 +1056,265 @@ def prefix_candidate_stats(
         *([rblk] if rblk else []),
         F.array_distinct(set_col).alias(set_col),
     ).where(F.size(set_col) > 0)
-    if exact:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.DISK_ONLY)
-    ex = sh.select(
-        F.col(id_col),
-        F.col(block_col).alias("_blk"),
-        F.col(rblk or block_col).alias("_rblk"),
-        F.size(set_col).alias("_n"),
-        F.explode(
-            F.transform(F.col(set_col), lambda g: F.xxhash64(g))
-        ).alias("_g"),
-    )
-    dfreq = ex.groupBy("_blk", "_g").agg(F.count("*").alias("_df"))
-    if mode == "jaccard":
-        est_all = F.sum(F.col("_df") * (F.col("_df") - 1) / 2)
-    else:
-        est_all = F.sum(F.col("_df") * (F.col("_df") - 1))
-    row = dfreq.agg(
-        F.sum("_df").alias("postings"),
-        F.count("*").alias("distinct_keys"),
-        est_all.cast("double").alias("est_upper"),
-    ).first()
-    # All returned magnitudes are in FULL-CORPUS units (r13 ADVICE
-    # #2): in sampled mode n_docs/postings are rescaled by 1/p and
-    # est_candidates_upper by 1/p², so a caller comparing fields
-    # (est vs n_docs², est per doc) never mixes scales. The raw
-    # sampled counts ride along under *_sampled names. distinct_keys
-    # does NOT rescale linearly (heavy keys survive sampling, rare
-    # keys vanish), so sampled mode reports only
-    # distinct_keys_sampled — omitting the full-unit field beats
-    # shipping a silently-wrong one.
-    n_docs_raw = sh.count()
-    if sample_fraction is not None and sample_fraction < 1.0:
-        p = sample_fraction
-        out = {
-            "n_docs": int(round(n_docs_raw / p)),
-            "postings": int(round((row["postings"] or 0) / p)),
-            "n_docs_sampled": n_docs_raw,
-            "postings_sampled": row["postings"],
-            "distinct_keys_sampled": row["distinct_keys"],
-            "est_candidates_upper": float(row["est_upper"] or 0.0)
-            / (p * p),
-            "sampled": sample_fraction,
-        }
-        # tier 1.5: the TWO-SAMPLE prefix-aware estimate (the ROUTING
-        # statistic — see docstring): pair counting on the p-sample A
-        # (= `ex`), prefix membership ranked by df̂ from the
-        # independent q-sample B (different hash salt). Ranking by
-        # A's own in-sample df is the measured-20×-low bias the r14
-        # router_probe exposed.
-        q = min(1.0, df_sample_factor * p)
-        sh_b = sh_base
-        if q < 1.0:
-            cutq = int(q * 1_000_000)
-            sh_b = sh_b.where(
-                F.abs(F.xxhash64(F.col(id_col), F.lit(seed + 1)))
-                % 1_000_000
-                < cutq
-            )
-        ex_b = (
-            sh_b.select(
-                block_col, F.array_distinct(set_col).alias(set_col)
-            )
-            .where(F.size(set_col) > 0)
-            .select(
-                F.col(block_col).alias("_blk"),
-                F.explode(
-                    F.transform(F.col(set_col), lambda g: F.xxhash64(g))
-                ).alias("_g"),
-            )
+    with pinned(*([sh] if exact else []), level=StorageLevel.DISK_ONLY):
+        ex = sh.select(
+            F.col(id_col),
+            F.col(block_col).alias("_blk"),
+            F.col(rblk or block_col).alias("_rblk"),
+            F.size(set_col).alias("_n"),
+            F.explode(
+                F.transform(F.col(set_col), lambda g: F.xxhash64(g))
+            ).alias("_g"),
         )
-        dfreq_b = ex_b.groupBy("_blk", "_g").agg(
-            (F.count("*") / F.lit(q)).alias("_dfh")
-        )
-        w = Window.partitionBy(id_col).orderBy("_dfh", "_g")
+        dfreq = ex.groupBy("_blk", "_g").agg(F.count("*").alias("_df"))
+        if mode == "jaccard":
+            est_all = F.sum(F.col("_df") * (F.col("_df") - 1) / 2)
+        else:
+            est_all = F.sum(F.col("_df") * (F.col("_df") - 1))
+        row = dfreq.agg(
+            F.sum("_df").alias("postings"),
+            F.count("*").alias("distinct_keys"),
+            est_all.cast("double").alias("est_upper"),
+        ).first()
+        # All returned magnitudes are in FULL-CORPUS units (r13 ADVICE
+        # #2): in sampled mode n_docs/postings are rescaled by 1/p and
+        # est_candidates_upper by 1/p², so a caller comparing fields
+        # (est vs n_docs², est per doc) never mixes scales. The raw
+        # sampled counts ride along under *_sampled names. distinct_keys
+        # does NOT rescale linearly (heavy keys survive sampling, rare
+        # keys vanish), so sampled mode reports only
+        # distinct_keys_sampled — omitting the full-unit field beats
+        # shipping a silently-wrong one.
+        n_docs_raw = sh.count()
+        if sample_fraction is not None and sample_fraction < 1.0:
+            p = sample_fraction
+            out = {
+                "n_docs": int(round(n_docs_raw / p)),
+                "postings": int(round((row["postings"] or 0) / p)),
+                "n_docs_sampled": n_docs_raw,
+                "postings_sampled": row["postings"],
+                "distinct_keys_sampled": row["distinct_keys"],
+                "est_candidates_upper": float(row["est_upper"] or 0.0)
+                / (p * p),
+                "sampled": sample_fraction,
+            }
+            # tier 1.5: the TWO-SAMPLE prefix-aware estimate (the ROUTING
+            # statistic — see docstring): pair counting on the p-sample A
+            # (= `ex`), prefix membership ranked by df̂ from the
+            # independent q-sample B (different hash salt). Ranking by
+            # A's own in-sample df is the measured-20×-low bias the r14
+            # router_probe exposed.
+            q = min(1.0, df_sample_factor * p)
+            sh_b = sh_base
+            if q < 1.0:
+                cutq = int(q * 1_000_000)
+                sh_b = sh_b.where(
+                    F.abs(F.xxhash64(F.col(id_col), F.lit(seed + 1)))
+                    % 1_000_000
+                    < cutq
+                )
+            ex_b = (
+                sh_b.select(
+                    block_col, F.array_distinct(set_col).alias(set_col)
+                )
+                .where(F.size(set_col) > 0)
+                .select(
+                    F.col(block_col).alias("_blk"),
+                    F.explode(
+                        F.transform(F.col(set_col), lambda g: F.xxhash64(g))
+                    ).alias("_g"),
+                )
+            )
+            dfreq_b = ex_b.groupBy("_blk", "_g").agg(
+                (F.count("*") / F.lit(q)).alias("_dfh")
+            )
+            w = Window.partitionBy(id_col).orderBy("_dfh", "_g")
+            plen = (
+                F.col("_n")
+                - F.floor(F.lit(t) * F.col("_n")).cast("int")
+                + F.lit(1)
+            )
+            # absent-from-B keys carry df̂=0: for RANKING that parks them
+            # at the bottom of the order (where the full pipeline parks
+            # the df=1 tail; ties break on _g either way), and for the
+            # containment WEIGHT it keeps E[df̂−1 | one A posting] = D−1
+            # exact — coalescing to df̂=1 instead gave every PRESENT
+            # singleton key (cnt_B=1 → df̂=1/q) a spurious (1/q − 1)
+            # weight, an additive ~(1−q)/q·E[present] ≈ 0.9-per-posting
+            # bias that the r14 probe measured swamping the containment
+            # signal (per_doc ~11.8 IDENTICAL on saturated and Heaps'-law
+            # corpora at every rung — pure rare-tail artifact, zero
+            # routing information). Negative per-key terms are kept (the
+            # unbiasedness needs them); only the aggregate is floored.
+            # Per-key terms grouped at (join block, key, ROUTING block)
+            # granularity: re-summing over _rblk recovers the exact
+            # per-(blk, g) counts for the GLOBAL estimate (byte-identical
+            # to the undecomposed form), while grouping by _rblk yields
+            # the skew detail along the routing axis (r14 VERDICT #5 /
+            # r15 VERDICT #4 — see docstring for the per-mode attribution
+            # semantics). pref_key is pinned for the two consumers; it is
+            # bounded by the p-sample's prefix postings (~50k target docs),
+            # not the corpus.
+            pref_key = (
+                ex.join(dfreq_b, ["_blk", "_g"], "left")
+                .withColumn("_dfh", F.coalesce("_dfh", F.lit(0.0)))
+                .withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") <= plen)
+                .groupBy("_blk", "_g", "_rblk")
+                .agg(F.count("*").alias("_p"), F.first("_dfh").alias("_dfh"))
+            )
+            if mode == "jaccard":
+                pest = F.sum(F.col("_p") * (F.col("_p") - 1) / 2) / F.lit(
+                    p * p
+                )
+            else:
+                pest = F.sum(
+                    F.col("_p") * (F.col("_dfh") - 1)
+                ) / F.lit(p)
+            with pinned(pref_key, level=StorageLevel.MEMORY_AND_DISK):
+                tot = (
+                    pref_key.groupBy("_blk", "_g")
+                    .agg(F.sum("_p").alias("_p"), F.first("_dfh").alias("_dfh"))
+                    .agg(pest.cast("double").alias("e"))
+                    .first()
+                )
+                blk_est = (
+                    pref_key.groupBy("_rblk")
+                    .agg(pest.cast("double").alias("_e"))
+                    .join(
+                        sh.groupBy(rblk or block_col)
+                        .agg(F.count("*").alias("_nb"))
+                        .withColumnRenamed(rblk or block_col, "_rblk"),
+                        "_rblk",
+                    )
+                )
+                # full-corpus units: _e is already rescaled (1/p² pairs or
+                # 1/p postings); block size rescales 1/p → per-doc = _e·p/_nb.
+                # Adequately-sampled blocks rank FIRST (r15 ADVICE): an
+                # under-sampled block's rescaled per-doc value is 1/p-inflated
+                # noise and must not crowd an eligible hot block out of the
+                # bounded report the router scans.
+                top = (
+                    blk_est.select(
+                        "_rblk",
+                        "_e",
+                        "_nb",
+                        (F.col("_e") * F.lit(p) / F.col("_nb")).alias("_pd"),
+                    )
+                    .orderBy(
+                        F.desc(
+                            F.col("_nb")
+                            >= F.lit(PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS)
+                        ),
+                        F.desc("_pd"),
+                    )
+                    .limit(PREFIX_STATS_MAX_BLOCKS)
+                    .collect()
+                )
+            out["est_candidates_prefix"] = max(float(tot["e"] or 0.0), 0.0)
+            out["df_sample_fraction"] = q
+            out["route_block_col"] = rblk or block_col
+            out["blocks"] = [
+                {
+                    "block": r["_rblk"],
+                    "n_docs": int(round(r["_nb"] / p)),
+                    "n_docs_sampled": int(r["_nb"]),
+                    "est_candidates_prefix": max(float(r["_e"] or 0.0), 0.0),
+                    "est_prefix_per_doc": max(float(r["_pd"] or 0.0), 0.0),
+                }
+                for r in top
+            ]
+            return out
+        else:
+            out = {
+                "n_docs": n_docs_raw,
+                "postings": row["postings"],
+                "distinct_keys": row["distinct_keys"],
+                "est_candidates_upper": float(row["est_upper"] or 0.0),
+                "sampled": sample_fraction,
+            }
+        if not exact:
+            return out
+        w = Window.partitionBy(id_col).orderBy("_df", "_g")
         plen = (
             F.col("_n")
             - F.floor(F.lit(t) * F.col("_n")).cast("int")
             + F.lit(1)
         )
-        # absent-from-B keys carry df̂=0: for RANKING that parks them
-        # at the bottom of the order (where the full pipeline parks
-        # the df=1 tail; ties break on _g either way), and for the
-        # containment WEIGHT it keeps E[df̂−1 | one A posting] = D−1
-        # exact — coalescing to df̂=1 instead gave every PRESENT
-        # singleton key (cnt_B=1 → df̂=1/q) a spurious (1/q − 1)
-        # weight, an additive ~(1−q)/q·E[present] ≈ 0.9-per-posting
-        # bias that the r14 probe measured swamping the containment
-        # signal (per_doc ~11.8 IDENTICAL on saturated and Heaps'-law
-        # corpora at every rung — pure rare-tail artifact, zero
-        # routing information). Negative per-key terms are kept (the
-        # unbiasedness needs them); only the aggregate is floored.
-        # Per-key terms grouped at (join block, key, ROUTING block)
-        # granularity: re-summing over _rblk recovers the exact
-        # per-(blk, g) counts for the GLOBAL estimate (byte-identical
-        # to the undecomposed form), while grouping by _rblk yields
-        # the skew detail along the routing axis (r14 VERDICT #5 /
-        # r15 VERDICT #4 — see docstring for the per-mode attribution
-        # semantics). pref_key is persisted for the two consumers; it
-        # is bounded by the p-sample's prefix postings (~50k target
-        # docs), not the corpus.
-        from pyspark import StorageLevel
-
+        # exact tier gets the same per-block decomposition as the sampled
+        # tier (skew-awareness), at the same (join block, key, routing
+        # block) granularity: global fields come from the per-key re-sum
+        # (byte-identical to the undecomposed estimate), skew detail from
+        # the _rblk grouping. pref_key (one row per prefix key × routing
+        # block) is pinned for the two consumers — DISK_ONLY, the
+        # exact-tier discipline (this is the calibration tier, never the
+        # router).
         pref_key = (
-            ex.join(dfreq_b, ["_blk", "_g"], "left")
-            .withColumn("_dfh", F.coalesce("_dfh", F.lit(0.0)))
+            ex.join(dfreq.select("_blk", "_g", "_df"), ["_blk", "_g"])
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= plen)
             .groupBy("_blk", "_g", "_rblk")
-            .agg(F.count("*").alias("_p"), F.first("_dfh").alias("_dfh"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .agg(F.count("*").alias("_p"), F.first("_df").alias("_df"))
         )
         if mode == "jaccard":
-            pest = F.sum(F.col("_p") * (F.col("_p") - 1) / 2) / F.lit(
-                p * p
-            )
+            est = F.sum(F.col("_p") * (F.col("_p") - 1) / 2)
         else:
-            pest = F.sum(
-                F.col("_p") * (F.col("_dfh") - 1)
-            ) / F.lit(p)
-        tot = (
-            pref_key.groupBy("_blk", "_g")
-            .agg(F.sum("_p").alias("_p"), F.first("_dfh").alias("_dfh"))
-            .agg(pest.cast("double").alias("e"))
-            .first()
-        )
-        blk_est = (
-            pref_key.groupBy("_rblk")
-            .agg(pest.cast("double").alias("_e"))
-            .join(
-                sh.groupBy(rblk or block_col)
-                .agg(F.count("*").alias("_nb"))
-                .withColumnRenamed(rblk or block_col, "_rblk"),
-                "_rblk",
+            est = F.sum(F.col("_p") * (F.col("_df") - 1))
+        with pinned(pref_key, level=StorageLevel.DISK_ONLY):
+            prow = (
+                pref_key.groupBy("_blk", "_g")
+                .agg(F.sum("_p").alias("_p"), F.first("_df").alias("_df"))
+                .agg(
+                    F.sum("_p").alias("prefix_postings"),
+                    F.count("*").alias("distinct_prefix_keys"),
+                    est.cast("double").alias("est_prefix"),
+                )
+                .first()
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # full-corpus units: _e is already rescaled (1/p² pairs or
-        # 1/p postings); block size rescales 1/p → per-doc = _e·p/_nb.
-        # Adequately-sampled blocks rank FIRST (r15 ADVICE): an
-        # under-sampled block's rescaled per-doc value is 1/p-inflated
-        # noise and must not crowd an eligible hot block out of the
-        # bounded report the router scans.
-        top = (
-            blk_est.select(
-                "_rblk",
-                "_e",
-                "_nb",
-                (F.col("_e") * F.lit(p) / F.col("_nb")).alias("_pd"),
+            blk = (
+                pref_key.groupBy("_rblk")
+                .agg(est.cast("double").alias("_e"))
+                .join(
+                    sh.groupBy(rblk or block_col)
+                    .agg(F.count("*").alias("_nb"))
+                    .withColumnRenamed(rblk or block_col, "_rblk"),
+                    "_rblk",
+                )
             )
-            .orderBy(
-                F.desc(
-                    F.col("_nb")
-                    >= F.lit(PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS)
-                ),
-                F.desc("_pd"),
+            top = (
+                blk.select(
+                    "_rblk", "_e", "_nb",
+                    (F.col("_e") / F.col("_nb")).alias("_pd"),
+                )
+                .orderBy(
+                    F.desc(
+                        F.col("_nb")
+                        >= F.lit(PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS)
+                    ),
+                    F.desc("_pd"),
+                )
+                .limit(PREFIX_STATS_MAX_BLOCKS)
+                .collect()
             )
-            .limit(PREFIX_STATS_MAX_BLOCKS)
-            .collect()
-        )
-        blk_est.unpersist()
-        pref_key.unpersist()
-        out["est_candidates_prefix"] = max(float(tot["e"] or 0.0), 0.0)
-        out["df_sample_fraction"] = q
-        out["route_block_col"] = rblk or block_col
-        out["blocks"] = [
+        out.update(
             {
-                "block": r["_rblk"],
-                "n_docs": int(round(r["_nb"] / p)),
-                "n_docs_sampled": int(r["_nb"]),
-                "est_candidates_prefix": max(float(r["_e"] or 0.0), 0.0),
-                "est_prefix_per_doc": max(float(r["_pd"] or 0.0), 0.0),
+                "prefix_postings": prow["prefix_postings"],
+                "distinct_prefix_keys": prow["distinct_prefix_keys"],
+                "est_candidates_prefix": float(prow["est_prefix"] or 0.0),
+                "route_block_col": rblk or block_col,
+                "blocks": [
+                    {
+                        "block": r["_rblk"],
+                        "n_docs": int(r["_nb"]),
+                        "n_docs_sampled": int(r["_nb"]),
+                        "est_candidates_prefix": float(r["_e"] or 0.0),
+                        "est_prefix_per_doc": float(r["_pd"] or 0.0),
+                    }
+                    for r in top
+                ],
             }
-            for r in top
-        ]
+        )
         return out
-    else:
-        out = {
-            "n_docs": n_docs_raw,
-            "postings": row["postings"],
-            "distinct_keys": row["distinct_keys"],
-            "est_candidates_upper": float(row["est_upper"] or 0.0),
-            "sampled": sample_fraction,
-        }
-    if not exact:
-        return out
-    w = Window.partitionBy(id_col).orderBy("_df", "_g")
-    plen = (
-        F.col("_n")
-        - F.floor(F.lit(t) * F.col("_n")).cast("int")
-        + F.lit(1)
-    )
-    # exact tier gets the same per-block decomposition as the sampled
-    # tier (skew-awareness), at the same (join block, key, routing
-    # block) granularity: global fields come from the per-key re-sum
-    # (byte-identical to the undecomposed estimate), skew detail from
-    # the _rblk grouping. pref_key (one row per prefix key × routing
-    # block) is persisted for the two consumers — DISK_ONLY, the
-    # exact-tier discipline (this is the calibration tier, never the
-    # router).
-    from pyspark import StorageLevel
-
-    pref_key = (
-        ex.join(dfreq.select("_blk", "_g", "_df"), ["_blk", "_g"])
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= plen)
-        .groupBy("_blk", "_g", "_rblk")
-        .agg(F.count("*").alias("_p"), F.first("_df").alias("_df"))
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    if mode == "jaccard":
-        est = F.sum(F.col("_p") * (F.col("_p") - 1) / 2)
-    else:
-        est = F.sum(F.col("_p") * (F.col("_df") - 1))
-    prow = (
-        pref_key.groupBy("_blk", "_g")
-        .agg(F.sum("_p").alias("_p"), F.first("_df").alias("_df"))
-        .agg(
-            F.sum("_p").alias("prefix_postings"),
-            F.count("*").alias("distinct_prefix_keys"),
-            est.cast("double").alias("est_prefix"),
-        )
-        .first()
-    )
-    blk = (
-        pref_key.groupBy("_rblk")
-        .agg(est.cast("double").alias("_e"))
-        .join(
-            sh.groupBy(rblk or block_col)
-            .agg(F.count("*").alias("_nb"))
-            .withColumnRenamed(rblk or block_col, "_rblk"),
-            "_rblk",
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    top = (
-        blk.select(
-            "_rblk", "_e", "_nb",
-            (F.col("_e") / F.col("_nb")).alias("_pd"),
-        )
-        .orderBy(
-            F.desc(
-                F.col("_nb")
-                >= F.lit(PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS)
-            ),
-            F.desc("_pd"),
-        )
-        .limit(PREFIX_STATS_MAX_BLOCKS)
-        .collect()
-    )
-    blk.unpersist()
-    pref_key.unpersist()
-    sh.unpersist()
-    out.update(
-        {
-            "prefix_postings": prow["prefix_postings"],
-            "distinct_prefix_keys": prow["distinct_prefix_keys"],
-            "est_candidates_prefix": float(prow["est_prefix"] or 0.0),
-            "route_block_col": rblk or block_col,
-            "blocks": [
-                {
-                    "block": r["_rblk"],
-                    "n_docs": int(r["_nb"]),
-                    "n_docs_sampled": int(r["_nb"]),
-                    "est_candidates_prefix": float(r["_e"] or 0.0),
-                    "est_prefix_per_doc": float(r["_pd"] or 0.0),
-                }
-                for r in top
-            ],
-        }
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1746,13 +1718,8 @@ def minhash_incremental_pairs(
     crawl corpora).
 
     Returns (new_id, hist_id, jaccard >= threshold)."""
-    # persisted (r16): the skew branch references the history
-    # signatures three times (hot_keys agg, cold, hot) and the batch
-    # side twice — each reference replayed the tokenize + shingle +
-    # MIN-aggregate pipeline without the pin. Narrow (id, idx, sig)
-    # rows, released after the candidate checkpoint below.
-    sn = _minhash_sigs(new_docs, id_col, text_col, n_hashes).persist()
-    sh = _minhash_sigs(hist_docs, id_col, text_col, n_hashes).persist()
+    sn = _minhash_sigs(new_docs, id_col, text_col, n_hashes)
+    sh = _minhash_sigs(hist_docs, id_col, text_col, n_hashes)
 
     def _cross(a_sig, b_sig, extra=None):
         a, b = a_sig.alias("a"), b_sig.alias("b")
@@ -1798,12 +1765,14 @@ def minhash_incremental_pairs(
         pairs = _cross(sn_cold, sh_cold).unionByName(
             _cross(sn_hot, sh_hot, F.col("a._salt") == F.col("b._salt"))
         )
-    cand = (
-        pairs.distinct()
-        .localCheckpoint(eager=True)  # candidates only — never the corpus
-    )
-    sn.unpersist()
-    sh.unpersist()
+    # pinned (r16): the skew branch references the history signatures
+    # three times (hot_keys agg, cold, hot) and the batch side twice —
+    # each reference replayed the tokenize + shingle + MIN-aggregate
+    # pipeline without the pin. Narrow (id, idx, sig) rows, released
+    # once the candidates are checkpointed.
+    with pinned(sn, sh):
+        # candidates only — never the corpus
+        cand = pairs.distinct().localCheckpoint(eager=True)
     new_ids = cand.select(F.col("new_id").alias(id_col)).distinct()
     hist_ids = cand.select(F.col("hist_id").alias(id_col)).distinct()
     sa = (
@@ -1923,12 +1892,6 @@ def minhash_native_pairs(
     sig = sig_wide.select(
         F.col(id_col), F.explode(F.array(*structs)).alias("b")
     ).select(id_col, "b.band_no", "b.k1", "b.k2")
-    # persisted (r16): the band self-join references sig on BOTH sides
-    # and the skew branch three more times (hot_keys agg, cold, hot) —
-    # each reference replayed the tokenize + shingle + n_hashes MIN
-    # aggregate without the pin. Narrow rows (id + band key), released
-    # after the candidate checkpoint below.
-    sig = sig.persist()
     key = ["band_no", "k1", "k2"]
 
     def _key_eq(a: str, b: str):
@@ -1973,11 +1936,14 @@ def minhash_native_pairs(
             F.col(f"b.{id_col}").alias("doc_b"),
         )
         pairs = _band_pairs(cold).unionByName(hot_pairs)
-    cand = (
-        pairs.distinct()
-        .localCheckpoint(eager=True)  # candidates only — never the corpus
-    )
-    sig.unpersist()
+    # pinned (r16): the band self-join references sig on BOTH sides
+    # and the skew branch three more times (hot_keys agg, cold, hot) —
+    # each reference replayed the tokenize + shingle + n_hashes MIN
+    # aggregate without the pin. Narrow rows (id + band key), released
+    # once the candidates are checkpointed.
+    with pinned(sig):
+        # candidates only — never the corpus
+        cand = pairs.distinct().localCheckpoint(eager=True)
     ids = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias(id_col)
     ).distinct()

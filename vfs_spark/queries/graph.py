@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vfs_spark.dispatch import DRIVER_MAX, collect_under
+from vfs_spark.dispatch import DRIVER_MAX, collect_under, pinned
 from vfs_spark.queries.registry import query
 from vfs_spark.queries.text import _URL_SYNTH_SQL, _synth_url_col, _url_norm_sql
 from vfs_spark.sources.parquet import load_table, parquet_row_count, table_path
@@ -110,7 +110,7 @@ def pagerank(edges: DataFrame, n_iters: int = N_ITERS, damping: float = DAMPING)
     graph at ~3 s/iteration per 100k nodes). Fixture-sized oracles
     never see the difference; iterative operators are the one place
     the engine deliberately trades build-time laziness for a
-    truncated lineage. Inputs (edges, deg, nodes) persist too — each
+    truncated lineage. Inputs (edges, deg, nodes) are pinned too — each
     is referenced once per iteration.
 
     Returns (u, rank) with rank UNROUNDED; callers round once at the
@@ -145,51 +145,46 @@ def pagerank_counted(
     cheap = _pagerank_driver(edges, n_iters, damping)
     if cheap is not None:
         return cheap
-    edges = edges.persist()
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
+    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     nodes = (
         edges.select(F.col("src").alias("u"))
         .union(edges.select(F.col("dst").alias("u")))
         .distinct()
-        .persist()
     )
-    n = nodes.count()
-    # floored at 1: an empty graph yields empty ranks, as on the driver
-    n_nodes = max(n, 1)
-    ranks = nodes.select("u", F.lit(1.0 / n_nodes).alias("r"))
-    for _ in range(n_iters):
-        contribs = (
-            edges.join(ranks, edges["src"] == ranks["u"])
-            .join(deg, "src")
-            .select(F.col("dst"), (F.col("r") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("c"))
-        )
-        dang = (
-            ranks.join(deg, ranks["u"] == deg["src"], "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("m"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes["u"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "u",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + damping
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("m") / n_nodes)
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
     # the final frontier is eagerly materialized with truncated
-    # lineage, so the input pins are no longer needed — release them
-    # (persisting the CALLER's edges object is a side effect that must
-    # not outlive the call; repeated invocations would otherwise
-    # accumulate cache entries until a session clearCache)
-    for pinned in (edges, deg, nodes):
-        pinned.unpersist()
-    return ranks, n
+    # lineage, so the input pins end with the loop; a caller's own
+    # cached edges stay cached
+    with pinned(edges, deg, nodes):
+        n = nodes.count()
+        # floored at 1: an empty graph yields empty ranks, as on the driver
+        n_nodes = max(n, 1)
+        ranks = nodes.select("u", F.lit(1.0 / n_nodes).alias("r"))
+        for _ in range(n_iters):
+            contribs = (
+                edges.join(ranks, edges["src"] == ranks["u"])
+                .join(deg, "src")
+                .select(F.col("dst"), (F.col("r") / F.col("outdeg")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("c"))
+            )
+            dang = (
+                ranks.join(deg, ranks["u"] == deg["src"], "left_anti")
+                .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("m"))
+            )
+            ranks = (
+                nodes.join(contribs, nodes["u"] == contribs["dst"], "left")
+                .crossJoin(F.broadcast(dang))
+                .select(
+                    "u",
+                    (
+                        F.lit((1.0 - damping) / n_nodes)
+                        + damping
+                        * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("m") / n_nodes)
+                    ).alias("r"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        return ranks, n
 
 
 def _pr_edges_sql(base_cte: str = "base") -> str:
@@ -506,14 +501,12 @@ def ranked_mixture_manifest(d2: DataFrame) -> DataFrame:
     standard half-corpus cutoff arithmetic (_temperature_cutoffs'
     exact double expression with the rank-scaled w6). Shared by the
     batch pipeline and the streaming manifest view. The input feeds
-    the totals AND the final selection, so it is persisted here —
-    same rationale as pipeline_curation_full's d2 pin. The pin is
-    RELEASED before returning (pagerank's eager-frontier idiom): the
-    final manifest is eagerly localCheckpointed, truncating its
-    lineage off d2, so repeated invocations (batch + streaming twins
-    per session; ladder/probe loops) don't accumulate executor
-    storage until a session clearCache (code-review r11 finding)."""
-    d2 = d2.persist()
+    the totals AND the final selection, so it is pinned here — same
+    rationale as pipeline_curation_full's d2 pin. The pin ends with
+    the call (pagerank's eager-frontier idiom): the final manifest is
+    eagerly localCheckpointed, truncating its lineage off d2, so
+    repeated invocations (batch + streaming twins per session;
+    ladder/probe loops) don't accumulate executor storage."""
     tot = d2.groupBy("source").agg(
         F.sum("n").cast("bigint").alias("src_tokens"),
         F.sum("rank_u6").cast("bigint").alias("rank_mass_u6"),
@@ -551,16 +544,15 @@ def ranked_mixture_manifest(d2: DataFrame) -> DataFrame:
             ).cast("bigint"),
         ).alias("cutoff"),
     )
-    manifest = (
-        d2.join(F.broadcast(cut), "source")
-        .where(F.col("h") < F.col("cutoff"))
-        .select(
-            "doc_id", "source", F.col("n").alias("n_tokens"), "rank_u6"
+    with pinned(d2):
+        return (
+            d2.join(F.broadcast(cut), "source")
+            .where(F.col("h") < F.col("cutoff"))
+            .select(
+                "doc_id", "source", F.col("n").alias("n_tokens"), "rank_u6"
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    d2.unpersist()
-    return manifest
 
 
 # exported for the streaming twin (queries/streaming_queries.py) so

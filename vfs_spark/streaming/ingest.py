@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vfs_spark.dispatch import pinned
 from vfs_spark.sources import store
 from vfs_spark.sources.parquet import (
     NANOS_AS_LONG,
@@ -1108,25 +1109,24 @@ def stream_curation_ingest(
         # (tombstone write, store write, and two DAG branches inside
         # the contamination join) — unpinned, the whole batch scan +
         # Gopher HOFs re-run per action (the q_pipeline_curation_full
-        # d2.persist() lesson, applied to the streaming twin)
-        d1p = d1.persist()
-        out = d1p
-        if ev is not None:
-            contaminated = (
-                d1p.select(
-                    "doc_id", F.explode(word_shingles("text", 5)).alias("g")
+        # d2 pin lesson, applied to the streaming twin)
+        with pinned(d1):
+            out = d1
+            if ev is not None:
+                contaminated = (
+                    d1.select(
+                        "doc_id", F.explode(word_shingles("text", 5)).alias("g")
+                    )
+                    .join(F.broadcast(ev), "g")
+                    .select("doc_id")
+                    .distinct()
                 )
-                .join(F.broadcast(ev), "g")
-                .select("doc_id")
-                .distinct()
-            )
-            dropped = d1p.join(contaminated, "doc_id", "left_semi")
-            dropped.select("fp").write.mode("append").parquet(tomb_dir)
-            out = d1p.join(contaminated, "doc_id", "left_anti")
-        out.select("doc_id", "source", "n_tokens", "h", "fp", "u").write.mode(
-            "append"
-        ).parquet(dest_dir)
-        d1p.unpersist()
+                dropped = d1.join(contaminated, "doc_id", "left_semi")
+                dropped.select("fp").write.mode("append").parquet(tomb_dir)
+                out = d1.join(contaminated, "doc_id", "left_anti")
+            out.select("doc_id", "source", "n_tokens", "h", "fp", "u").write.mode(
+                "append"
+            ).parquet(dest_dir)
         # record the batch's URLs LAST: a crash before this line
         # replays into the fp anti-join (no duplicates), while an
         # earlier append would anti-join the batch against itself
