@@ -49,11 +49,11 @@ BUILDER_JOBS: dict[str, int] = {
     "ann_ivfpq_batch": 2,
     # index and model fits (LSH, IVF with recall-calibrated nprobe, PQ,
     # PCA, KMeans cells, classifiers and n-gram models)
-    "ann_ivf": 43,
+    "ann_ivf": 40,
     "ann_ivf_batch": 2,
     "ann_ivf_partitioned": 5,
-    "ann_ivfpq": 19,
-    "ann_pq": 9,
+    "ann_ivfpq": 16,
+    "ann_pq": 6,
     "approx_knn": 6,
     "approx_knn_multiprobe": 3,
     "dedup_minhash_mllib": 2,

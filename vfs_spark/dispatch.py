@@ -10,7 +10,8 @@ Tests pick a path by monkeypatching ``DRIVER_MAX``; ``-1`` forces the
 distributed path (the ``dispatch_path`` fixture in tests/conftest.py).
 
 ``pinned`` is the one lifetime for an operator's internal pins: the
-frames an operator reads more than once while it runs.
+frames an operator reads more than once while it runs. ``release``
+frees an eager local checkpoint that outlives one operator call.
 """
 
 from __future__ import annotations
@@ -33,6 +34,9 @@ DRIVER_MAX = {
     "prefix_candidates": 20_000_000,
     # float64 verify-matrix bytes (dedup.embedding_simhash_pairs)
     "embed_gather_bytes": 256 << 20,
+    # inserted Arrow bytes an engine index frame queues for its next
+    # fold (engine.VFSEngine); above it the next search re-encodes
+    "engine_pending_bytes": 256 << 20,
 }
 
 
@@ -62,3 +66,11 @@ def pinned(
     finally:
         for df in owned:
             df.unpersist()
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks of ``df``, an eager ``localCheckpoint``.
+    ``DataFrame.unpersist`` does not: the checkpointed RDD sits under
+    the frame's LogicalRDD, outside the CacheManager. A plan that still
+    reads ``df`` fails once it is released."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -25,6 +25,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vfs_spark.dispatch import DRIVER_MAX, release
 from vfs_spark.functions.quantize import DEFAULT_SCALE, dequantize, quantize
 from vfs_spark.operators import ann, index_store
 from vfs_spark.operators.knn import exact_knn
@@ -69,12 +70,17 @@ class VFSEngine:
         # PQ codebooks) with the store row count it was fitted on
         # outlives insert/compact/delete until the store outgrows it
         # REFIT_GROWTH-fold; init/restore replace it. The store encoded
-        # against it is a cached frame that every write drops and the
-        # next search re-encodes. Fit-once-query-many is the whole
-        # point of the Spark design (SURVEY Q3) — rebuilding per
+        # against it is an eager local checkpoint, which reads no store
+        # file, so compact() keeps it. insert() keeps it too and queues
+        # the inserted Arrow rows in _pending; the next search of that
+        # kind encodes only those rows and folds them in with one new
+        # checkpoint. delete/init/restore, a refit and an insert into a
+        # quantized-at-rest store drop it. Fit-once-query-many is the
+        # whole point of the Spark design (SURVEY Q3) — rebuilding per
         # search call would be the reference's anti-pattern.
         self._models: dict[str, tuple[object, int]] = {}
         self._frames: dict[str, DataFrame] = {}
+        self._pending: dict[str, list[pa.Table]] = {}
         # next_id stays DERIVED (max(id)+1 from storage, the reference's
         # recompute-from-disk semantics) — this is only a memo of that
         # derivation, maintained through insert() and compact() and
@@ -152,7 +158,12 @@ class VFSEngine:
         vector.rs:94-108): when the store quantizes at rest, this batch
         is quantized with the given scale and NO clamp; the scale is
         stored per-row (q_scale) so reads dequantize transparently.
-        Ignored (like the reference) when the store is float-at-rest."""
+        Ignored (like the reference) when the store is float-at-rest.
+
+        Encoded ANN frames stay: each queues this batch for its next
+        search to fold in. A frame whose model the store now outgrows
+        (REFIT_GROWTH) is dropped, as is every frame of a quantized-at-
+        rest store, whose read-back values the driver does not hold."""
         if self.vector_dimension is None:
             raise RuntimeError("engine not initialized (POST /init first)")
         for v in vectors:
@@ -181,11 +192,11 @@ class VFSEngine:
         )
         df = self.spark.createDataFrame(table, schema=VFS_VECTOR_SCHEMA)
         self._flush(df, scale_factor=scale_factor)
-        self._drop_frames()  # encoded frames no longer cover the store
         # an appended dense id run of known size: both memos stay exact
         self._next_id_cache = next_id + n
         if self._row_count_cache is not None:
             self._row_count_cache += n
+        self._queue_inserted(table)
         self._maybe_auto_compact()
         return ids
 
@@ -216,10 +227,33 @@ class VFSEngine:
         if due:
             self.compact()
 
+    def _queue_inserted(self, table: pa.Table) -> None:
+        """Queue an inserted batch for every kept encoded frame, or drop
+        the frame where a fold cannot or should not serve (see insert).
+        A queue past DRIVER_MAX["engine_pending_bytes"] drops its frame
+        too: the next search re-encodes the store instead."""
+        if not self._frames:
+            return
+        if self.quantize_on_write:
+            self._drop_frames()
+            return
+        rows = self.approx_vector_count() or 0
+        for key in list(self._frames):
+            queue = self._pending.setdefault(key, [])
+            queue.append(table)
+            if (
+                rows > REFIT_GROWTH * self._models[key][1]
+                or sum(t.nbytes for t in queue) > DRIVER_MAX["engine_pending_bytes"]
+            ):
+                self._drop_frame(key)
+
+    def _drop_frame(self, key: str) -> None:
+        release(self._frames.pop(key))
+        self._pending.pop(key, None)
+
     def _drop_frames(self) -> None:
-        for frame in self._frames.values():
-            frame.unpersist()
-        self._frames.clear()
+        for key in list(self._frames):
+            self._drop_frame(key)
 
     def _forget_store(self) -> None:
         """Drop everything derived from the store: init() and restore()
@@ -365,22 +399,55 @@ class VFSEngine:
 
     def _ann_index(self, kind: str, metric: str, vecs: DataFrame):
         """(model, encoded store frame) for one ANN kind, fitted and
-        encoded by the index store's codec. The kept
-        model serves until the store holds more than REFIT_GROWTH times
-        its fitted rows; a store write only costs re-encoding the store
-        against it, which runs once and is cached for later searches."""
+        encoded by the index store's codec. The kept model serves until
+        the store holds more than REFIT_GROWTH times its fitted rows.
+        The frame is encoded once into a local checkpoint; later
+        searches fold the rows inserted since into it (_fold) instead
+        of re-encoding the store. A plan a search returned reads the
+        frame, so collect it before the next search of its kind."""
         key = f"{kind}:{metric}"
         if key in self._frames:
+            if key in self._pending:
+                self._fold(kind, metric)
             return self._models[key][0], self._frames[key]
-        rows = self.approx_vector_count() or 0
+        rows = self.approx_vector_count()
         model, fitted_rows = self._models.get(key, (None, 0))
-        if model is None or rows > REFIT_GROWTH * fitted_rows:
-            model = index_store.fit(kind, vecs, metric)
-            self._models[key] = (model, rows)
-        frame = index_store.encode(kind, model, vecs, metric, id_col="id").cache()
-        frame.count()
-        self._frames[key] = frame
-        return model, frame
+        if model is None or (rows or 0) > REFIT_GROWTH * fitted_rows:
+            model = index_store.fit(kind, vecs, metric, n_rows=rows)
+            self._models[key] = (model, rows or 0)
+        frame = index_store.encode(kind, model, vecs, metric, id_col="id")
+        self._frames[key] = frame.localCheckpoint(eager=True)
+        return model, self._frames[key]
+
+    def _fold(self, kind: str, metric: str) -> None:
+        """Fold the queued inserts into one kind's encoded frame: encode
+        only those rows against the kept model, union them onto the
+        frame at its partition count, checkpoint once and release the
+        old checkpoint. LSH features and IVF cluster ids come from the
+        codec over the inserted Arrow rows, in the JVM; PQ codes come
+        from ann.pq_codes on the driver, the kernel encode_pq_arrow
+        runs, so every folded row equals its full-store encoding."""
+        key = f"{kind}:{metric}"
+        model = self._models[key][0]
+        table = pa.concat_tables(self._pending[key])
+        if kind == "pq":
+            X = np.asarray(table["embedding"].to_pylist(), dtype=np.float64)
+            codes = pa.array(list(ann.pq_codes(X, model)), pa.list_(pa.int32()))
+            new = self.spark.createDataFrame(
+                pa.table({"id": table["id"], "codes": codes}),
+                schema="id long, codes array<int>",
+            )
+        else:
+            rows = self.spark.createDataFrame(table, schema=VFS_VECTOR_SCHEMA)
+            new = index_store.encode(kind, model, rows, metric, id_col="id")
+        old = self._frames[key]
+        self._frames[key] = (
+            old.unionByName(new)
+            .coalesce(old.rdd.getNumPartitions())
+            .localCheckpoint(eager=True)
+        )
+        del self._pending[key]
+        release(old)
 
     # -- batch /search (⊕ extension: the reference serves one query
     # per HTTP request; this is the many-queries form) ---------------
@@ -432,9 +499,9 @@ class VFSEngine:
         removed count comes from Parquet footers. At 100 TB with an
         id-range-partitioned store, only partitions containing deleted
         ids rewrite. Returns the number of rows removed; drops the
-        encoded index frames (they cover rows that no longer exist) and
-        keeps the fitted models. An empty id list changes nothing and
-        runs no job."""
+        encoded index frames and their queued inserts (they cover rows
+        that no longer exist) and keeps the fitted models. An empty id
+        list changes nothing and runs no job."""
         ids = [(int(i),) for i in vec_ids]
         if not ids or not self._have_data():
             return 0
@@ -463,18 +530,17 @@ class VFSEngine:
         in tests, so the next-id and row-count memos survive it.
         Sorting by id restores the per-file id min/max tightness that
         makes point_lookup_id's footer pruning effective after
-        interleaved inserts. Returns the resulting file count; drops
-        the encoded index frames (their rows are unchanged, but a cached
-        frame's partitioning is layout-bound) and keeps the fitted
-        models. At 100 TB the same verb runs
-        per id-range partition, compacting only partitions whose
+        interleaved inserts. Returns the resulting file count. The
+        fitted models, the encoded index frames and their queued
+        inserts all stay: the rows are unchanged and a frame is a local
+        checkpoint, which reads no store file. At 100 TB the same verb
+        runs per id-range partition, compacting only partitions whose
         small-file count crossed a threshold."""
         if not self._have_data():
             return 0
         n_files = store.compact(
             self._read_store(), self._data_dir, "id", target_rows_per_file
         )
-        self._drop_frames()
         return n_files
 
     # -- /snapshot + /restore (storage_manager.rs:367-427) ----------------

@@ -295,6 +295,7 @@ def build_ivf_index(
     n_clusters: int = 16,
     seed: int = SEED,
     fit_sample_rows: int | None = 200_000,
+    n_rows: int | None = None,
 ):
     """Coarse-quantize the collection with KMeans; returns
     (kmeans_model, df + cluster_id). At scale, write the result
@@ -307,13 +308,14 @@ def build_ivf_index(
     construction stays a constant-cost step while the ASSIGN pass
     (one transform over the full collection) scales with the cluster.
     Collections at or under the cap fit on every row — unchanged
-    behavior at test scale."""
+    behavior at test scale. ``n_rows``, when the caller knows the row
+    count (a Parquet footer sum), saves the count job."""
     from pyspark.ml.clustering import KMeans
 
     vdf = _to_vector_df(df, vec_col)
     fit_df = vdf
     if fit_sample_rows is not None:
-        n = df.count()
+        n = df.count() if n_rows is None else n_rows
         if n > fit_sample_rows:
             frac = min(1.0, 1.2 * fit_sample_rows / n)
             fit_df = vdf.sample(fraction=frac, seed=seed).limit(fit_sample_rows)
@@ -601,6 +603,7 @@ def fit_pq_codebooks(
     sample_rows: int = 100_000,
     iters: int = 20,
     seed: int = SEED,
+    n_rows: int | None = None,
 ):
     """Train m product-quantizer codebooks (k centroids each) over the
     d/m-dim subvector blocks — the compression stage FAISS calls
@@ -620,11 +623,12 @@ def fit_pq_codebooks(
     Bernoulli sample across all partitions (not a first-partitions
     take, which would train biased codebooks on a store clustered by
     label/time/ingest order); at or under the cap every row is used.
-    Returns a list of m (k × d/m) float lists."""
+    ``n_rows`` is the row count when the caller knows it, as in
+    build_ivf_index. Returns a list of m (k × d/m) float lists."""
     import numpy as np
 
     sample = df.select(F.col(vec_col).cast("array<double>").alias("v"))
-    n = df.count()
+    n = df.count() if n_rows is None else n_rows
     if n > sample_rows:
         frac = min(1.0, 1.2 * sample_rows / n)
         sample = sample.sample(fraction=frac, seed=seed)
@@ -1144,6 +1148,25 @@ def ivfpq_search_batch(
     )
 
 
+def pq_codes(X, codebooks):
+    """The (rows × m) int32 PQ codes of the float64 rows ``X``: per
+    block, a (rows × k) squared-distance matrix by BLAS broadcasting
+    and its argmin. The one NumPy encode kernel, run per Arrow batch by
+    encode_pq_arrow and on the driver by the engine's insert fold, so
+    both give identical codes."""
+    import numpy as np
+
+    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    codes = np.empty((len(X), len(books)), dtype=np.int32)
+    if len(X):
+        sub = books[0].shape[1]
+        for j, C in enumerate(books):
+            Xj = X[:, j * sub : (j + 1) * sub]
+            d2 = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            codes[:, j] = d2.argmin(axis=1)
+    return codes
+
+
 def encode_pq_arrow(
     df: DataFrame, codebooks, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
@@ -1158,19 +1181,12 @@ def encode_pq_arrow(
     import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
     C = [np.asarray(b, dtype=np.float64) for b in codebooks]
 
     def kernel(batches):
         for pdf in batches:
             X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            if len(X):
-                for j in range(m):
-                    Xj = X[:, j * sub : (j + 1) * sub]
-                    d2 = ((Xj[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-                    codes[:, j] = d2.argmin(axis=1)
+            codes = pq_codes(X, C)
             yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
 
     return df.select(id_col, vec_col).mapInPandas(

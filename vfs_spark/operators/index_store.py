@@ -74,14 +74,17 @@ def fit(
     vecs: DataFrame,
     metric: str = "euclidean",
     vec_col: str = "embedding",
+    n_rows: int | None = None,
     **params,
 ):
-    """Fit one ANN model of ``kind`` over ``vecs``."""
+    """Fit one ANN model of ``kind`` over ``vecs``. ``n_rows`` is the
+    row count of ``vecs`` when the caller knows it; the IVF and PQ fits
+    then skip the count that sizes their sample."""
     if kind == "approx":
         return ann.build_lsh_index(vecs, vec_col=vec_col, metric=metric, **params)[0]
     if kind == "ivf":
-        return ann.build_ivf_index(vecs, vec_col=vec_col, **params)[0]
-    return ann.fit_pq_codebooks(vecs, vec_col=vec_col, **params)
+        return ann.build_ivf_index(vecs, vec_col=vec_col, n_rows=n_rows, **params)[0]
+    return ann.fit_pq_codebooks(vecs, vec_col=vec_col, n_rows=n_rows, **params)
 
 
 def encode(
@@ -196,7 +199,7 @@ def _model(
     except Exception:  # noqa: BLE001 — a torn artifact refits
         model = None
     if model is None:
-        model = fit(kind, df, metric, vec_col, **params)
+        model = fit(kind, df, metric, vec_col, meta["rows"], **params)
 
         def _persist():
             save(kind, model, model_path)
