@@ -100,8 +100,6 @@ BUILDER_PINS: dict[str, int] = {
     "pipeline_curation_full": 1,
     "pipeline_multimodal_curation": 1,
     "text_quality_classifier": 1,
-    "sample_dsir": 2,
-    "sample_dsir_fitsample": 2,
     "text_trigram_logprob": 3,
 }
 

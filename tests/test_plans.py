@@ -478,22 +478,26 @@ def _tree_nodes(plan):
     return nodes
 
 
-def test_bm25_postings_restricted_before_aggregate(spark, sf_dir):
-    """text_bm25_retrieval's scale claim: the corpus token explode is
-    cut to query terms by a BROADCAST semi-join BEFORE the postings
+@pytest.mark.parametrize(
+    "slug", ["text_bm25_retrieval", "pipeline_rag_retrieval", "retrieval_eval_mrr"]
+)
+def test_bm25_postings_restricted_before_aggregate(spark, sf_dir, slug):
+    """The scale claim of each _bm25_scored caller (doc, chunk and
+    phrase terms): postings are cut to query terms in the scan stage
+    (array_intersect against the broadcast term set) and joined to
+    the query table by a BROADCAST hash join BEFORE the score
     aggregate's exchange — so the shuffle carries matching postings
-    only, never the full token stream. Anchor: SOME exchange-fed
-    HashAggregate (the postings agg) must have a BroadcastHashJoin
+    only, never the full term stream. Anchor: SOME exchange-fed
+    HashAggregate (the score agg) must have a BroadcastHashJoin
     inside its exchange's subtree; and no SortMergeJoin anywhere (at
     fixture scale every join side is broadcastable — a SMJ would mean
     a corpus-sized side is being shuffled)."""
     import vfs_spark.queries  # noqa: F401
     from vfs_spark.queries.registry import QUERIES
 
-    plan = ex.formatted_plan(QUERIES["text_bm25_retrieval"](spark, sf_dir))
+    plan = ex.formatted_plan(QUERIES[slug](spark, sf_dir))
     assert "SortMergeJoin" not in plan
     nodes = _tree_nodes(plan)
-    # deepest exchange-fed HashAggregate = the postings (doc, term) agg
     candidates = [
         i
         for i, (d, n) in enumerate(nodes[:-1])
@@ -510,9 +514,9 @@ def test_bm25_postings_restricted_before_aggregate(spark, sf_dir):
             out.append(name)
         return out
 
-    # the postings aggregate is the exchange-fed agg whose subtree
-    # holds the term broadcast join (the query-side distinct agg has
-    # no join under it — don't anchor to tree depth, anchor to content)
+    # the score aggregate is the exchange-fed agg whose subtree holds
+    # the term broadcast join (the query-side distinct agg has no join
+    # under it — don't anchor to tree depth, anchor to content)
     assert any(
         any(n.startswith("BroadcastHashJoin") for n in subtree_of(i))
         for i in candidates

@@ -72,5 +72,8 @@ def release(df: DataFrame) -> None:
     """Free the blocks of ``df``, an eager ``localCheckpoint``.
     ``DataFrame.unpersist`` does not: the checkpointed RDD sits under
     the frame's LogicalRDD, outside the CacheManager. A plan that still
-    reads ``df`` fails once it is released."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    reads ``df`` fails once it is released. The blocks are dropped
+    through the SparkContext: ``RDD.unpersist`` would also warn, on
+    every call, that a local checkpoint's lineage is truncated."""
+    rdd = df._jdf.queryExecution().logical().rdd()
+    rdd.context().unpersistRDD(rdd.id(), False)

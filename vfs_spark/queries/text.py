@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vfs_spark.dispatch import pinned
 from vfs_spark.functions.text import (
     fingerprint,
     jaccard,
@@ -3436,20 +3437,17 @@ def q_text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a RAG stack (reference serves only vector search,
     /root/reference/vfs/src/vfs/tcp.rs; BM25 is the ⊕ lexical twin).
     Queries are the first 5 tokens of docs 0-7; the corpus is every
-    other document. No inverted index is materialized: the postings
-    list is an explode + group-by restricted IN-SCAN-STAGE to query
-    terms via a broadcast semi-join, so only matching postings ever
-    shuffle — at 100 TB the shuffle is |query terms| x docs-containing,
-    not the corpus. df and the corpus stats are tiny aggregates that
-    broadcast back; per-(query,doc) scores are one map-side-combined
-    SUM; top-10 per query is a rank window Catalyst executes as
-    WindowGroupLimit (partial per-mapper prune). Float discipline:
-    the BM25 idf is LN of one exact-integer rational
-    ((2(N-df)+1)/(2df+1)) and the tf normalizer's constants are
-    scaled integral (22*tf / (10*tf + 3 + 9*dl/avgdl)), so each term
-    contributes one ln + two divisions rounded ONCE to integer
-    micro-units — the per-term-round discipline that keeps the
-    cross-engine sum exact (NOTES.md float policy)."""
+    other document. No inverted index is materialized: _bm25_scored
+    matches each document's tokens against the broadcast query-term
+    set in the scan stage (array_intersect) and explodes only the
+    matched (term, tf) pairs, so only matching postings ever shuffle —
+    at 100 TB the shuffle is |query terms| x docs-containing, not the
+    corpus. df and the corpus stats are tiny aggregates that broadcast
+    back; per-(query,doc) scores are one map-side-combined SUM; top-10
+    per query is a rank window Catalyst executes as WindowGroupLimit
+    (partial per-mapper prune). Each term's score rounds ONCE to
+    integer micro-units, which keeps the cross-engine sum exact
+    (NOTES.md float policy)."""
     from pyspark.sql.window import Window
 
     scored = _bm25_doc_scored(spark, sf_dir)
@@ -3538,18 +3536,20 @@ def q_retrieval_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary, exactly why passage-retrieval stacks index phrases.
     hit_rank 0 is the miss sentinel; rr is exact integer micro-units.
 
-    Shape: same discipline as text_bm25_retrieval with shingles as
-    terms — the postings explode (word_shingles, already DISTINCT per
-    doc, so tf ≡ 1) is restricted in the scan stage by a broadcast
-    semi-join on the |queries|·3 phrase set; df/stats broadcast back;
-    one map-side-combined score SUM; rank window; |queries|-row eval
+    Shape: text_bm25_retrieval's scorer (_bm25_scored) with shingles
+    as terms — each doc's distinct 5-word shingles meet the broadcast
+    |queries|·3 phrase set by array_intersect in the scan stage, so
+    only matching postings shuffle; df/stats broadcast back; one
+    map-side-combined score SUM; rank window; |queries|-row eval
     join. Eval cost = serving cost + nothing."""
     qt, ranked = _phrase_bm25_ranked(spark, sf_dir)
     hits = ranked.where(
         (F.col("rnk") <= 10) & (F.col("doc_id") == F.col("query_id"))
     ).select("query_id", "rnk")
     queries = qt.select("query_id").distinct()
-    return queries.join(hits, "query_id", "left").select(
+    # hits holds at most one row per query: broadcast it, as AQE would
+    # once it saw the shuffle sizes
+    return queries.join(F.broadcast(hits), "query_id", "left").select(
         "query_id",
         F.coalesce(F.col("rnk"), F.lit(0)).cast("int").alias("hit_rank"),
         F.coalesce(
@@ -3563,8 +3563,9 @@ def q_retrieval_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phrase_bm25_ranked(spark, sf_dir):
     """Shared phrase-BM25 serving pipeline for the retrieval evals
     (MRR and nDCG): known-item queries = the first three 5-token
-    shingles of docs 10..17, corpus = doc_id >= 8, scored with
-    _bm25_term_u6 and ranked per query. Returns (qt, ranked) where qt
+    shingles of docs 10..17, corpus = doc_id >= 8, scored by
+    _bm25_scored with the distinct 5-word shingles as terms (so every
+    tf is 1) and ranked per query. Returns (qt, ranked) where qt
     is the (query_id, term) phrase table and ranked carries
     (query_id, doc_id, score_u6, rnk). One definition so the two
     eval metrics can never drift on the serving side."""
@@ -3592,54 +3593,7 @@ def _phrase_bm25_ranked(spark, sf_dir):
         )
         .distinct()
     )
-    sh = word_shingles("text", 5)
-    # r16 single-pass serving (guide §1.2/§2.4): the old shape ran TWO
-    # full corpus shingle passes — explode(all shingles) + broadcast
-    # semi-join for postings, then a second scan for dl stats — plus a
-    # per-branch job/codegen floor that dominates at fixture scale
-    # (41 Exchanges in the before-plan, plans/r16). Since word_shingles
-    # is already DISTINCT per doc and tf ≡ 1, postings membership is
-    # array_intersect(sh, phrases) against the ONE-row collect_set of
-    # the ≤|queries|·3 phrase table — no shingle-row Generate, no hash
-    # join, no groupBy — and dl rides the same projection. The narrow
-    # per-doc table (doc_id, dl, matched⊆phrases) is persisted and
-    # feeds BOTH postings and stats: one corpus scan total. At 100 TB
-    # the persist is O(n_docs) int rows (vs re-scanning O(corpus
-    # bytes) for the dl pass); size(sh)/intersect(sh,·) share the
-    # shingle subexpression under codegen CSE (verified in the plan:
-    # one project, no duplicate split).
-    phr = qt.agg(F.collect_set("term").alias("_terms"))
-    per_doc = (
-        corpus.crossJoin(F.broadcast(phr))
-        .select(
-            "doc_id",
-            F.size(sh).alias("dl"),
-            F.array_intersect(sh, F.col("_terms")).alias("_m"),
-        )
-        .persist()
-    )
-    postings = per_doc.select(
-        "doc_id",
-        F.explode("_m").alias("term"),
-        F.lit(1).cast("bigint").alias("tf"),
-        F.col("dl").cast("bigint").alias("dl"),
-    )
-    dfs = postings.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("df")
-    )
-    stats = per_doc.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    term_u6 = _bm25_term_u6("n_docs")
-    scored = (
-        postings.join(F.broadcast(qt), "term")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", term_u6.alias("term_u6"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("term_u6").cast("bigint").alias("score_u6"))
-    )
+    scored = _bm25_scored(corpus, ["doc_id"], word_shingles("text", 5), qt)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_u6").desc(), F.col("doc_id").asc()
     )
@@ -3843,34 +3797,10 @@ def q_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_term_u6(n_col: str):
-    """The ONE place the BM25 scoring discipline lives (k1=1.2, b=0.75
-    in scaled-integer form; idf = LN of an exact-integer rational;
-    rounded ONCE per term to integer micro-units) — shared by the
-    doc-level scorer and the chunk-level RAG scorer so the constants
-    and rounding can never drift apart. ``n_col`` is the collection
-    count column (n_docs / n_chunks)."""
-    return F.round(
-        (
-            F.lit(1000000.0)
-            * F.log(
-                1
-                + (2 * (F.col(n_col) - F.col("df")) + 1).cast("double")
-                / (2 * F.col("df") + 1).cast("double")
-            )
-            * (22 * F.col("tf"))
-        )
-        / (10 * F.col("tf") + 3 + (9 * F.col("dl")) / F.col("avgdl")),
-        0,
-    ).cast("bigint")
-
-
-def _bm25_doc_scored(spark, sf_dir):
-    """Doc-level BM25 scores (query_id, doc_id, score_u6) — the body
-    shared by text_bm25_retrieval (top-10) and the hybrid fusion."""
-    docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    corpus = docs.where(F.col("doc_id") >= 8)
-    qt = (
+def _bm25_queries(spark, sf_dir):
+    """(query_id, term): the distinct first five tokens of docs 0-7,
+    the query set of the doc- and chunk-level BM25 slugs."""
+    return (
         load_table(spark, sf_dir, "documents")  # no fan-out: prunable
         .where(F.col("doc_id") < 8)
         .select(
@@ -3881,56 +3811,81 @@ def _bm25_doc_scored(spark, sf_dir):
         )
         .distinct()
     )
-    # r16 single-pass serving (same restructure as _phrase_bm25_ranked,
-    # guide §1.2/§2.4): the old shape ran the corpus tokenize twice
-    # (token explode + broadcast semi-join for postings, second scan
-    # for dl stats). Here tf is a REAL count, so membership comes from
-    # array_intersect (one hash probe per token) and tf is recounted
-    # only for the matched terms of matching docs — O(|matched|·dl)
-    # interpreted work on the match-bearing rows, zero on the rest.
-    # The narrow per-doc (doc_id, dl, (term, tf) pairs) table is
-    # persisted and feeds postings AND stats: one corpus scan, no
-    # token-row Generate/join/groupBy.
-    toks = tokens("text")
-    phr = qt.agg(F.collect_set("term").alias("_terms"))
-    pairs = F.transform(
-        F.array_intersect(toks, F.col("_terms")),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.size(F.filter(toks, lambda x: x == t))
-            .cast("bigint")
-            .alias("tf"),
-        ),
+
+
+def _bm25_doc_scored(spark, sf_dir):
+    """Doc-level BM25 scores (query_id, doc_id, score_u6) over the
+    corpus doc_id >= 8: text_bm25_retrieval's top-10 and the hybrid
+    fusion's lexical side."""
+    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    return _bm25_scored(
+        docs.where(F.col("doc_id") >= 8),
+        ["doc_id"],
+        tokens("text"),
+        _bm25_queries(spark, sf_dir),
     )
-    per_doc = (
-        corpus.crossJoin(F.broadcast(phr))
-        .select("doc_id", F.size(toks).alias("dl"), pairs.alias("_p"))
+
+
+def _bm25_scored(units, keys, terms, qt):
+    """BM25 (k1=1.2, b=0.75) of every unit of ``units`` against the
+    (query_id, term) table ``qt``: rows (query_id, *keys, score_u6)
+    for each unit that holds a query term. ``keys`` identify a unit
+    (a document, a chunk); ``terms`` is the Column of its term array.
+
+    One pass over the units: ``terms`` is projected once into a
+    column, matched against the one-row broadcast set of query terms
+    with array_intersect (one hash probe per term; each match once),
+    and tf is counted for the matched terms only. The narrow per-unit
+    (keys, dl, (term, tf) pairs) table is the one pin, lazy and read
+    by the returned plan (so it is the caller's BUILDER_PINS entry);
+    it feeds both the postings and the collection stats, so the
+    corpus is read and tokenized once and no term-row Generate, join
+    or groupBy runs over the whole corpus. df = count(*) over
+    postings, since a unit holds a matched term once. Scoring is
+    integer-exact: idf = LN of the rational (2(N-df)+1)/(2df+1), the
+    tf normalizer's constants are scaled integral (22*tf / (10*tf + 3
+    + 9*dl/avgdl)), and each term rounds ONCE to micro-units before
+    the per-(query, unit) SUM."""
+    phr = qt.agg(F.collect_set("term").alias("_terms"))
+    per_unit = (
+        units.select(*keys, terms.alias("_t"))
+        .crossJoin(F.broadcast(phr))
+        .select(
+            *keys,
+            F.size("_t").cast("bigint").alias("dl"),
+            F.transform(
+                F.array_intersect("_t", "_terms"),
+                lambda t: F.struct(
+                    t.alias("term"),
+                    F.size(F.filter("_t", lambda x: x == t))
+                    .cast("bigint")
+                    .alias("tf"),
+                ),
+            ).alias("_p"),
+        )
         .persist()
     )
-    pcol = F.explode("_p").alias("_pt")
-    postings = per_doc.select("doc_id", "dl", pcol).select(
-        "doc_id",
-        F.col("_pt.term").alias("term"),
-        F.col("_pt.tf").alias("tf"),
-        F.col("dl").cast("bigint").alias("dl"),
-    )
-    dfs = postings.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("df")
-    )
-    stats = per_doc.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
+    postings = per_unit.select(*keys, "dl", F.inline("_p"))
+    dfs = postings.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
+    stats = per_unit.agg(
+        F.count("*").cast("bigint").alias("n"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
     )
-    term_u6 = _bm25_term_u6("n_docs")
-    scored = (
+    n, df, tf = F.col("n"), F.col("df"), F.col("tf")
+    term_u6 = F.round(
+        F.lit(1000000.0)
+        * F.log(1 + (2 * (n - df) + 1).cast("double") / (2 * df + 1).cast("double"))
+        * (22 * tf)
+        / (10 * tf + 3 + (9 * F.col("dl")) / F.col("avgdl")),
+        0,
+    ).cast("bigint")
+    return (
         postings.join(F.broadcast(qt), "term")
         .join(F.broadcast(dfs), "term")
         .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", term_u6.alias("term_u6"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("term_u6").cast("bigint").alias("score_u6"))
+        .groupBy("query_id", *keys)
+        .agg(F.sum(term_u6).cast("bigint").alias("score_u6"))
     )
-    return scored
 
 
 @query(
@@ -4044,7 +3999,6 @@ def _dsir_select(spark, sf_dir, fit_pred):
         )
         .groupBy("doc_id", "lang", "b")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .persist()
     )
     fit_bg = bg_counts.where(fit_pred) if fit_pred is not None else bg_counts
     model = fit_bg.groupBy("b").agg(
@@ -4082,9 +4036,6 @@ def _dsir_select(spark, sf_dir, fit_pred):
             .alias("lr_u6"),
         )
     )
-    # scored is consumed by the ranker's sampling + checkpoint jobs
-    # and the n_docs count — persist the n_docs-row result so those
-    # jobs never re-derive the model fit.
     scored = (
         bg_counts.join(F.broadcast(lr), "b")
         .groupBy("doc_id")
@@ -4094,14 +4045,17 @@ def _dsir_select(spark, sf_dir, fit_pred):
                 "score_u6"
             ),
         )
-        .persist()
     )
-    ranked = assign_dense_ids_ranged(
-        scored.withColumn("neg", -F.col("score_u6")),
-        ["neg", "doc_id"],
-        id_name="rank",
-    ).drop("neg")
-    n = scored.agg(F.count("*").cast("bigint").alias("n_docs"))
+    # the ranker's sampling and checkpoint jobs read scored, and scored
+    # reads bg_counts twice (model fit and scoring): pin both until the
+    # ranker's eager checkpoint, which everything returned reads.
+    with pinned(bg_counts, scored):
+        ranked = assign_dense_ids_ranged(
+            scored.withColumn("neg", -F.col("score_u6")),
+            ["neg", "doc_id"],
+            id_name="rank",
+        ).drop("neg")
+    n = ranked.agg(F.count("*").cast("bigint").alias("n_docs"))
     return ranked.crossJoin(F.broadcast(n)).select(
         "doc_id",
         "n_bigrams",
@@ -4176,13 +4130,13 @@ def q_pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5 chunks per query WITH provenance (doc_id, chunk_id,
     token_start) — what a retrieval-augmented consumer actually
     ingests: spans it can cite, not whole documents. The chunk
-    explode and the token explode both run inside the scan stage
-    (rows multiply ~1.33x token-count before the broadcast semi-join
-    on query terms cuts them to matching postings), so the shuffle is
-    again |query terms| x matching-chunks — chunk TEXT is never
-    materialized at all here, only (ids, offsets, counts). Same
-    integer micro-unit BM25 float discipline as the doc-level op;
-    rank ties break on (doc_id, chunk_id)."""
+    explode runs inside the scan stage and each chunk is one unit of
+    _bm25_scored (the doc-level scorer, keyed by (doc_id, chunk_id,
+    token_start)): its tokens meet the broadcast query-term set by
+    array_intersect, so the shuffle is again |query terms| x
+    matching-chunks — chunk TEXT is never materialized at all here,
+    only (ids, offsets, counts). Rank ties break on (doc_id,
+    chunk_id)."""
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
@@ -4202,79 +4156,11 @@ def q_pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("i") * 48).cast("int").alias("token_start"),
         F.expr("slice(t, i*48 + 1, 64)").alias("ct"),
     )
-    qt = (
-        load_table(spark, sf_dir, "documents")  # no fan-out: prunable
-        .where(F.col("doc_id") < 8)
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.explode(F.array_distinct(F.slice(tokens("text"), 1, 5))).alias(
-                "term"
-            ),
-        )
-        .distinct()
-    )
-    # r16 single-pass scoring (the _bm25_doc_scored restructure at
-    # chunk granularity, guide §1.2/§2.4): the old shape re-ran the
-    # tokenize + chunk explode once per consumer (postings, the dfs
-    # broadcast build, and the stats scan). Membership via
-    # array_intersect against the one-row broadcast term set, tf
-    # recounted only for matched terms of matching chunks; the narrow
-    # per-chunk (ids, offsets, dl, (term, tf) pairs) table is
-    # persisted and feeds postings AND stats — chunk text still never
-    # leaves the scan stage.
-    phr = qt.agg(F.collect_set("term").alias("_terms"))
-    pairs = F.transform(
-        F.array_intersect(F.col("ct"), F.col("_terms")),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.size(F.filter(F.col("ct"), lambda x: x == t))
-            .cast("bigint")
-            .alias("tf"),
-        ),
-    )
-    per_chunk = (
-        chunks.crossJoin(F.broadcast(phr))
-        .select(
-            "doc_id",
-            "chunk_id",
-            "token_start",
-            F.size("ct").alias("dl"),
-            pairs.alias("_p"),
-        )
-        .persist()
-    )
-    postings = per_chunk.select(
-        "doc_id",
-        "chunk_id",
-        "token_start",
-        "dl",
-        F.explode("_p").alias("_pt"),
-    ).select(
-        "doc_id",
-        "chunk_id",
-        "token_start",
-        F.col("_pt.term").alias("term"),
-        F.col("_pt.tf").alias("tf"),
-        F.col("dl").cast("bigint").alias("dl"),
-    )
-    dfs = postings.groupBy("term").agg(
-        F.count("*").cast("bigint").alias("df")
-    )
-    stats = per_chunk.agg(
-        F.count("*").cast("bigint").alias("n_chunks"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    term_u6 = _bm25_term_u6("n_chunks")
-    scored = (
-        postings.join(F.broadcast(qt), "term")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id", "doc_id", "chunk_id", "token_start",
-            term_u6.alias("term_u6"),
-        )
-        .groupBy("query_id", "doc_id", "chunk_id", "token_start")
-        .agg(F.sum("term_u6").cast("bigint").alias("score_u6"))
+    scored = _bm25_scored(
+        chunks,
+        ["doc_id", "chunk_id", "token_start"],
+        F.col("ct"),
+        _bm25_queries(spark, sf_dir),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_u6").desc(), F.col("doc_id").asc(), F.col("chunk_id").asc()
