@@ -83,7 +83,7 @@ def test_similarity_join_finds_true_pairs(spark, sf_dir):
     true_pairs = {
         (r.query_id, r.vec_id)
         for r in emb.crossJoin(F.broadcast(q))
-        .select("query_id", "vec_id", euclidean("embedding", F.col("qv")).alias("d"))
+        .select("query_id", "vec_id", euclidean("embedding", "qv").alias("d"))
         .where((F.col("d") <= 3.0) & (F.col("query_id") != F.col("vec_id")))
         .collect()
     }

@@ -49,13 +49,13 @@ BUILDER_JOBS: dict[str, int] = {
     "ann_ivfpq_batch": 2,
     # index and model fits (LSH, IVF with recall-calibrated nprobe, PQ,
     # PCA, KMeans cells, classifiers and n-gram models)
-    "ann_ivf": 40,
+    "ann_ivf": 39,
     "ann_ivf_batch": 2,
     "ann_ivf_partitioned": 5,
-    "ann_ivfpq": 16,
-    "ann_pq": 6,
-    "approx_knn": 6,
-    "approx_knn_multiprobe": 3,
+    "ann_ivfpq": 15,
+    "ann_pq": 5,
+    "approx_knn": 5,
+    "approx_knn_multiprobe": 2,
     "dedup_minhash_mllib": 2,
     "dedup_semdedup": 6,
     "embedding_pca_project": 4,
@@ -64,15 +64,15 @@ BUILDER_JOBS: dict[str, int] = {
     "text_perplexity_buckets": 13,
     "text_quality_classifier": 21,
     # the query vector's point lookup (core._query_vec)
-    "dist_cosine": 2,
-    "dist_euclidean": 2,
-    "exact_knn": 2,
-    "exact_knn_filtered": 2,
-    "exact_knn_quantized": 2,
-    "filter_dim_check": 2,
-    "range_search_radius": 2,
-    "result_hydrate": 2,
-    "topk_truncate": 2,
+    "dist_cosine": 1,
+    "dist_euclidean": 1,
+    "exact_knn": 1,
+    "exact_knn_filtered": 1,
+    "exact_knn_quantized": 1,
+    "filter_dim_check": 1,
+    "range_search_radius": 1,
+    "result_hydrate": 1,
+    "topk_truncate": 1,
     # per-partition row counts of the ranged dense-id pass
     "insert_assign_ids": 5,
     "sample_shuffle_order": 5,
@@ -145,10 +145,10 @@ def test_builder_job_budget(spark, sf_dir, tmp_path, monkeypatch):
 # vector's point lookup, the multiprobe query hash and the
 # serving-batch collect.
 WARM_BUILDER_JOBS: dict[str, int] = {
-    "approx_knn": 2,
-    "approx_knn_multiprobe": 4,
-    "ann_ivf": 2,
-    "ann_ivf_partitioned": 2,
+    "approx_knn": 1,
+    "approx_knn_multiprobe": 3,
+    "ann_ivf": 1,
+    "ann_ivf_partitioned": 1,
     "ann_ivf_batch": 2,
     "similarity_join_multiprobe": 0,
 }

@@ -388,7 +388,7 @@ def test_embedding_banded_recall_and_precision(spark):
     )
     a, b = emb.alias("a"), emb.alias("b")
     sim = F.round(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
+        dot("a.embedding", "b.embedding")
         / (F.col("a.nrm") * F.col("b.nrm")),
         6,
     )
@@ -651,7 +651,7 @@ def test_semdedup_recall_and_precision(spark):
     )
     a, b = emb.alias("a"), emb.alias("b")
     sim = F.round(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
+        dot("a.embedding", "b.embedding")
         / (F.col("a.nrm") * F.col("b.nrm")),
         6,
     )
@@ -706,7 +706,7 @@ def test_semdedup_auto_k_fixture_is_exact(spark):
     )
     a, b = emb.alias("a"), emb.alias("b")
     sim = F.round(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
+        dot("a.embedding", "b.embedding")
         / (F.col("a.nrm") * F.col("b.nrm")),
         6,
     )

@@ -525,7 +525,8 @@ def _jobs(spark, fn):
 def test_engine_verb_job_budget(spark, tmp_path):
     """On a warmed engine, building a search plan runs no Spark job:
     the store schema is memoized and the query batch stays on the
-    driver. An insert is its one write job; a get is its first()."""
+    driver. An insert is its one write job; a get is one job, also for
+    an id past the first partition and for a missing id."""
     from pyspark.sql import functions as F
 
     e = VFSEngine(spark, str(tmp_path / "store"))
@@ -547,7 +548,9 @@ def test_engine_verb_job_budget(spark, tmp_path):
     assert n == 0
     want, first_jobs = _jobs(spark, plan.first)
     got, get_jobs = _jobs(spark, lambda: e.get(70))
-    assert got == want and get_jobs == first_jobs
+    assert got == want and get_jobs == 1 <= first_jobs, (get_jobs, first_jobs)
+    missing, get_jobs = _jobs(spark, lambda: e.get(999))
+    assert missing is None and get_jobs == 1, get_jobs
 
 
 def test_rewrite_job_budget(spark, tmp_path):

@@ -9,7 +9,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from vfs_spark.functions.distance import array_lit, cosine_distance, euclidean
+from vfs_spark.functions.distance import cosine_distance, euclidean
 from vfs_spark.functions.quantize import dequantize, quantize
 
 finite = st.floats(
@@ -43,10 +43,10 @@ def test_quantize_roundtrip_bound(spark, v):
 @given(v=vec)
 def test_euclidean_identity_and_symmetry(spark, v):
     df = spark.createDataFrame([(v,)], "embedding: array<float>")
-    q = array_lit([float(x) for x in v])
+    q = [float(x) for x in v]
     self_d = df.select(euclidean("embedding", q).alias("d")).first()["d"]
     assert self_d is not None and abs(self_d) < 1e-4  # d(x,x) = 0 (f32 noise)
-    zero = array_lit([0.0] * len(v))
+    zero = [0.0] * len(v)
     d1 = df.select(euclidean("embedding", zero).alias("d")).first()["d"]
     norm = math.sqrt(sum(float(F) ** 2 for F in [float(x) for x in v]))
     # f32 storage rounds each element; tolerance scales with magnitude
@@ -57,7 +57,7 @@ def test_euclidean_identity_and_symmetry(spark, v):
 @given(v=st.lists(finite, min_size=2, max_size=8))
 def test_cosine_bounds_and_zero_guard(spark, v):
     df = spark.createDataFrame([(v,)], "embedding: array<float>")
-    q = array_lit([1.0] * len(v))
+    q = [1.0] * len(v)
     d = df.select(cosine_distance("embedding", q).alias("d")).first()["d"]
     if any(float(x) != 0.0 for x in v):
         assert -1e-9 <= d <= 2 + 1e-9

@@ -247,7 +247,7 @@ def main() -> None:
     truth_pairs = {
         (r["query_id"], r["vec_id"])
         for r in emb.crossJoin(F.broadcast(q_df))
-        .where(_eucl("embedding", F.col("query_vec")) <= thr)
+        .where(_eucl("embedding", "query_vec") <= thr)
         .select("query_id", "vec_id").collect()
     }
     model_j, vdf_j = A.build_lsh_index(emb, num_hash_tables=5,
@@ -424,7 +424,7 @@ def main() -> None:
     e = spark.read.parquet(f"{dedup_sf}/embeddings.parquet").select(
         "vec_id", "embedding", l2_norm("embedding").alias("nrm"))
     a, b = e.alias("a"), e.alias("b")
-    sim = (dot(F.col("a.embedding"), F.col("b.embedding"))
+    sim = (dot("a.embedding", "b.embedding")
            / (F.col("a.nrm") * F.col("b.nrm")))
     pair_truth = {(r["va"], r["vb"]) for r in
                   a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))

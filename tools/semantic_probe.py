@@ -94,8 +94,8 @@ def main() -> None:
             F.col("a.vec_id").alias("va"),
             (F.col("b.src") + n).alias("vb"),
             (
-                dot(F.col("a.embedding"), F.col("e2"))
-                / (l2_norm(F.col("a.embedding")) * l2_norm(F.col("e2")))
+                dot("a.embedding", "e2")
+                / (l2_norm("a.embedding") * l2_norm("e2"))
             ).alias("cs"),
         )
         .where(F.col("cs") >= THRESH)

@@ -30,7 +30,7 @@ def main() -> None:
     n_vec = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     n_doc = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
     from vfs_spark.session import get_spark
-    from vfs_spark.functions.distance import array_lit, euclidean
+    from vfs_spark.functions.distance import euclidean
     from vfs_spark.operators import dedup
     from vfs_spark.operators.knn import exact_knn, knn_batch, knn_batch_arrow
 
@@ -95,7 +95,7 @@ def main() -> None:
             )
         timed(
             "filter_agg_scan",
-            lambda: emb.where(euclidean("embedding", array_lit(q)) < 2.0)
+            lambda: emb.where(euclidean("embedding", q) < 2.0)
             .agg(F.count("*"))
             .collect(),
         )

@@ -352,8 +352,11 @@ class VFSEngine:
     # -- /vectors/<id> GET (tcp.rs:242-268) -------------------------------
     def get(self, vec_id: int):
         """Point lookup; Parquet min/max pruning plays the B-tree's
-        role (storage_manager.rs:235-296)."""
-        return self.vectors().where(F.col("id") == vec_id).first()
+        role (storage_manager.rs:235-296). Collected, not first():
+        first() takes incrementally and runs a second job whenever the
+        row is not in the first partition, and always for a missing id."""
+        rows = self.vectors().where(F.col("id") == vec_id).collect()
+        return rows[0] if rows else None
 
     # -- /search (tcp.rs:358-434) -----------------------------------------
     def search(

@@ -22,10 +22,16 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vfs_spark.functions.distance import array_lit, euclidean, l2_norm
+from vfs_spark.functions.distance import (
+    euclidean,
+    l2_norm,
+    sq_l2_sql,
+    sql_array,
+    sql_ident,
+)
 from vfs_spark.operators.knn import collect_serving_batch
 from vfs_spark.sources.parquet import read_parquet
 
@@ -50,7 +56,7 @@ def _to_vector_df(
     arr = F.col(vec_col).cast("array<double>")
     if not normalize:
         return df.withColumn("features", array_to_vector(arr))
-    out = df.withColumn("_nrm", l2_norm(F.col(vec_col)))
+    out = df.withColumn("_nrm", l2_norm(vec_col))
     scaled = F.when(
         F.col("_nrm") != 0.0,
         F.transform(arr, lambda x: x / F.col("_nrm")),
@@ -180,14 +186,12 @@ def approx_knn_multiprobe(
         )
         within = cond if within is None else (within | cond)
 
+    # cosine ranks in the normalized index space: its operand is the
+    # `features` vector, projected under a name for the distance
+    if metric == "cosine":
+        hashed = hashed.withColumn("_fv", vector_to_array("features"))
     dist = F.round(
-        euclidean(
-            F.col(vec_col).cast("array<double>")
-            if metric != "cosine"
-            else vector_to_array(F.col("features")),
-            array_lit([float(x) for x in q]),
-        ),
-        6,
+        euclidean("_fv" if metric == "cosine" else vec_col, q), 6
     ).alias("dist")
     return (
         hashed.where(within)
@@ -276,10 +280,14 @@ def approx_knn_join_multiprobe(
         .join(d, ["t", "b"])
         .select(query_id_col, id_col, "_qf", "features")
         .dropDuplicates([query_id_col, id_col])
+        .select(
+            query_id_col,
+            id_col,
+            vector_to_array("features").alias("_fa"),
+            vector_to_array("_qf").alias("_qa"),
+        )
     )
-    dist = F.round(
-        euclidean(vector_to_array("features"), vector_to_array("_qf")), 6
-    ).alias("dist")
+    dist = F.round(euclidean("_fa", "_qa"), 6).alias("dist")
     return cand.select(F.col(query_id_col), F.col(id_col), dist).where(
         F.col("dist") <= threshold
     )
@@ -473,7 +481,7 @@ def ivf_search(
     centers = _centers_np(km_model)
     nearest = np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe].tolist()
     cand = assigned_df.where(F.col("cluster_id").isin(nearest))
-    dist = F.round(euclidean(vec_col, array_lit(q)), 6).alias("dist")
+    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
     return (
         cand.select(F.col(id_col), dist)
         .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
@@ -529,7 +537,7 @@ def ivf_search_batch(
     scored = cand.join(F.broadcast(route_df), "cluster_id").select(
         query_id_col,
         id_col,
-        F.round(euclidean(vec_col, F.col(query_vec_col)), 6).alias("dist"),
+        F.round(euclidean(vec_col, query_vec_col), 6).alias("dist"),
     )
     from pyspark.sql.window import Window
 
@@ -583,7 +591,7 @@ def ivf_search_partitioned(
     centers = _centers_np(km_model)
     nearest = np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe].tolist()
     cand = read_parquet(spark, path).where(F.col("cluster_id").isin(nearest))
-    dist = F.round(euclidean(vec_col, array_lit(q)), 6).alias("dist")
+    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
     return (
         cand.select(F.col(id_col), dist)
         .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
@@ -658,9 +666,12 @@ def fit_pq_codebooks(
     return books
 
 
-def _block_sq_dist(block: Column, centroid_lit: Column) -> Column:
-    sq = F.zip_with(block, centroid_lit, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x)
+def _adc(table: str) -> str:
+    """SQL for the squared ADC distance of the `codes` column against
+    `table`, an m×k lookup table (an array<array<double>> literal or
+    column): m table lookups and a left-to-right sum."""
+    look = f"zip_with(codes, {table}, (c, r) -> element_at(r, CAST(c AS INT) + 1))"
+    return f"aggregate({look}, 0D, (acc, x) -> acc + x)"
 
 
 def encode_pq(
@@ -671,20 +682,15 @@ def encode_pq(
     over the k centroid distances via array_position(dists, min).
     Output: (id, codes ARRAY<INT>) — m small ints per vector, the
     compressed store (8 bytes vs 256 for a dim-64 float32 row)."""
-    m = len(codebooks)
-    k = len(codebooks[0])
     sub = len(codebooks[0][0])
-    arr = F.col(vec_col).cast("array<double>")
+    arr = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
     codes = []
-    for j in range(m):
-        block = F.slice(arr, j * sub + 1, sub)
-        dists = F.array(
-            *[_block_sq_dist(block, array_lit(c)) for c in codebooks[j]]
-        )
-        codes.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    return df.select(F.col(id_col), F.array(*codes).alias("codes"))
+    for j, book in enumerate(codebooks):
+        block = f"slice({arr}, {j * sub + 1}, {sub})"
+        dists = f"array({', '.join(sq_l2_sql(block, sql_array(c)) for c in book)})"
+        codes.append(f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)")
+    codes_sql = f"array({', '.join(codes)})"
+    return df.select(F.col(id_col), F.expr(codes_sql).alias("codes"))
 
 
 def pq_search(
@@ -711,18 +717,10 @@ def pq_search(
         qj = q[j * sub : (j + 1) * sub]
         C = np.asarray(codebooks[j], dtype=np.float64)
         table.append([float(((qj - c) ** 2).sum()) for c in C])
-    tbl = F.array(*[array_lit(row) for row in table])
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            tbl,
-            lambda c, row: F.element_at(row, c.cast("int") + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    tbl = "array(" + ", ".join(sql_array(row) for row in table) + ")"
+    adc = F.expr(f"sqrt({_adc(tbl)})")
     return (
-        encoded_df.select(F.col(id_col), F.round(F.sqrt(adc), 6).alias("dist"))
+        encoded_df.select(F.col(id_col), F.round(adc, 6).alias("dist"))
         .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
         .limit(k)
     )
@@ -749,7 +747,7 @@ def pq_search_rerank(
     cand = pq_search(encoded_df, codebooks, query, k=shortlist, id_col=id_col)
     q = np.asarray(list(query), dtype=np.float64)
     exact = full_df.join(F.broadcast(cand.select(id_col)), id_col)
-    dist = F.round(euclidean(vec_col, array_lit(q)), 6).alias("dist")
+    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
     return (
         exact.select(F.col(id_col), dist)
         .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
@@ -796,17 +794,9 @@ def pq_search_batch(
     tbl_df = spark.createDataFrame(
         tbl_rows, f"{query_id_col} long, tbl array<array<double>>"
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("tbl"),
-            lambda c, row: F.element_at(row, c.cast("int") + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    adc = F.expr(f"sqrt({_adc('tbl')})")
     scored = encoded_df.crossJoin(F.broadcast(tbl_df)).select(
-        query_id_col, id_col, F.round(F.sqrt(adc), 6).alias("dist")
+        query_id_col, id_col, F.round(adc, 6).alias("dist")
     )
     from pyspark.sql.window import Window
 
@@ -960,7 +950,7 @@ def pq_search_rerank_batch(
         .select(
             query_id_col,
             id_col,
-            F.round(euclidean(vec_col, F.col("_qv")), 6).alias("dist"),
+            F.round(euclidean(vec_col, "_qv"), 6).alias("dist"),
         )
     )
     from pyspark.sql.window import Window
@@ -1019,7 +1009,7 @@ def ivfpq_search(
     else:
         short = pq_search(cand, codebooks, query, k=shortlist, id_col=id_col)
     exact = full_df.join(F.broadcast(short.select(id_col)), id_col)
-    dist = F.round(euclidean(vec_col, array_lit(q)), 6).alias("dist")
+    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
     return (
         exact.select(F.col(id_col), dist)
         .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
@@ -1138,7 +1128,7 @@ def ivfpq_search_batch(
         .select(
             query_id_col,
             id_col,
-            F.round(euclidean(vec_col, F.col("_qv")), 6).alias("dist"),
+            F.round(euclidean(vec_col, "_qv"), 6).alias("dist"),
         )
     )
     return (

@@ -2345,12 +2345,8 @@ def embedding_banded_pairs(
     pairs = model.approxSimilarityJoin(vdf, vdf, radius, distCol="_dist")
     a_id = F.col(f"datasetA.{id_col}")
     b_id = F.col(f"datasetB.{id_col}")
-    sim = dot(
-        F.col(f"datasetA.{vec_col}"), F.col(f"datasetB.{vec_col}")
-    ) / (
-        l2_norm(F.col(f"datasetA.{vec_col}"))
-        * l2_norm(F.col(f"datasetB.{vec_col}"))
-    )
+    a_vec, b_vec = f"datasetA.{vec_col}", f"datasetB.{vec_col}"
+    sim = dot(a_vec, b_vec) / (l2_norm(a_vec) * l2_norm(b_vec))
     # Threshold on the unrounded similarity; round only the emitted value.
     return (
         pairs.where(a_id < b_id)  # each unordered pair once, no self-pairs

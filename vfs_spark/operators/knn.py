@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from vfs_spark.functions.distance import array_lit, cosine_distance, euclidean
+from vfs_spark.functions.distance import Operand, cosine_distance, euclidean
 
 DEFAULT_K = 5  # reference default result_limit (rank.rs:129)
 
@@ -79,7 +79,7 @@ def collect_serving_batch(
     return qrows
 
 
-def distance_col(metric: str, vec_col: Column | str, query: Column) -> Column:
+def distance_col(metric: str, vec_col: str, query: Operand) -> Column:
     try:
         fn = _METRICS[metric]
     except KeyError:
@@ -89,7 +89,7 @@ def distance_col(metric: str, vec_col: Column | str, query: Column) -> Column:
 
 def exact_knn(
     vectors: DataFrame,
-    query: Sequence[float] | Column,
+    query: Sequence[float],
     k: int = DEFAULT_K,
     metric: str = "euclidean",
     id_col: str = "vec_id",
@@ -99,13 +99,12 @@ def exact_knn(
     """Top-k nearest neighbors of one query vector (rank.rs:119-186 +
     truncate rank.rs:170-178). Returns (id, dist) rows ordered by
     (dist asc, id asc)."""
-    q = query if isinstance(query, Column) else array_lit(query)
     # `+ 0.0` maps IEEE -0.0 (round of a tiny negative) to +0.0 so the
     # value hash matches the oracle; nulls (zero-norm cosine, dim
     # mismatch) rank LAST, consistent with knn_batch_arrow's NaN.
-    dist = (F.round(distance_col(metric, vec_col, q), round_digits) + F.lit(0.0)).alias(
-        "dist"
-    )
+    dist = (
+        F.round(distance_col(metric, vec_col, query), round_digits) + F.lit(0.0)
+    ).alias("dist")
     return (
         vectors.select(F.col(id_col), dist)
         .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
@@ -135,7 +134,7 @@ def knn_batch(
     pre-filtering with an ANN index (operators/ann.py)."""
     joined = vectors.crossJoin(F.broadcast(queries))
     dist = (
-        F.round(distance_col(metric, vec_col, F.col(query_vec_col)), round_digits)
+        F.round(distance_col(metric, vec_col, query_vec_col), round_digits)
         + F.lit(0.0)
     ).alias("dist")
     ranked = joined.select(F.col(query_id_col), F.col(id_col), dist).withColumn(

@@ -9,13 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from vfs_spark.functions.distance import (
-    array_lit,
-    cosine_distance,
-    dot,
-    euclidean,
-    l2_norm,
-)
+from vfs_spark.functions.distance import cosine_distance, euclidean
 from vfs_spark.functions.quantize import dequantize, quantize
 from vfs_spark.operators.knn import exact_knn, hydrate
 from vfs_spark.queries.registry import query
@@ -66,13 +60,15 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _query_vec(spark: SparkSession, sf_dir: str, vid: int = 0) -> list[float]:
     """Driver-side point lookup of one query vector (≤1 row; the
     analogue of the reference receiving a query over HTTP)."""
-    row = (
+    # collect, not first(): first() takes incrementally and runs a
+    # second job whenever the row is not in the first partition
+    rows = (
         _emb(spark, sf_dir)
         .where(F.col("vec_id") == vid)
         .select("embedding")
-        .first()
+        .collect()
     )
-    return list(row[0])
+    return list(rows[0][0])
 
 
 # ---------------------------------------------------------------------------
@@ -129,7 +125,7 @@ FROM embeddings e
 def q_dist_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#7 euclidean distance (rank.rs:271-287) evaluated for every
     stored vector against query 0 — pure column expression."""
-    q = array_lit(_query_vec(spark, sf_dir))
+    q = _query_vec(spark, sf_dir)
     return _emb(spark, sf_dir).select(
         "vec_id", F.round(euclidean("embedding", q), 6).alias("dist")
     )
@@ -145,7 +141,7 @@ FROM embeddings e
 )
 def q_dist_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#8 cosine distance 1 − dot/(‖a‖·‖b‖) (rank.rs:290-300)."""
-    q = array_lit(_query_vec(spark, sf_dir))
+    q = _query_vec(spark, sf_dir)
     return _emb(spark, sf_dir).select(
         "vec_id",
         (F.round(cosine_distance("embedding", q), 6) + F.lit(0.0)).alias("dist"),
@@ -364,17 +360,12 @@ def q_exact_knn_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     4× fewer bytes (ARRAY<TINYINT> vs ARRAY<FLOAT>) at ~1/254 recall-
     neutral noise per element; the dequantize math fuses into the same
     codegen stage as the distance."""
-    from vfs_spark.functions.distance import array_lit, euclidean
-    from vfs_spark.functions.quantize import dequantize, quantize
-
     emb = _emb(spark, sf_dir)
     stored_q = emb.select("vec_id", quantize("embedding").alias("qv"))
-    dq = dequantize("qv")
-    q = array_lit(_query_vec(spark, sf_dir))
+    dq = stored_q.select("vec_id", dequantize("qv").alias("dq"))
+    q = _query_vec(spark, sf_dir)
     return (
-        stored_q.select(
-            "vec_id", F.round(euclidean(dq, q), 6).alias("dist")
-        )
+        dq.select("vec_id", F.round(euclidean("dq", q), 6).alias("dist"))
         .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
         .limit(5)
     )
@@ -462,7 +453,7 @@ def q_exact_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout the filter becomes partition pruning."""
     emb = _emb(spark, sf_dir).where(F.col("label") == 1)
     q = _query_vec(spark, sf_dir)
-    dist = F.round(euclidean("embedding", array_lit(q)), 6).alias("dist")
+    dist = F.round(euclidean("embedding", q), 6).alias("dist")
     return (
         emb.select("vec_id", "label", dist)
         .orderBy(F.col("dist").asc_nulls_last(), F.col("vec_id").asc())
@@ -493,7 +484,7 @@ def q_range_search_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     composable with the same LSH/IVF pruning as approx_knn because
     radius ≤ bucket geometry bounds which cells can contain matches.
     Plan-asserted filter-only in tests/test_plans.py."""
-    q = array_lit(_query_vec(spark, sf_dir))
+    q = _query_vec(spark, sf_dir)
     d = F.round(euclidean("embedding", q), 6)
     return (
         _emb(spark, sf_dir)

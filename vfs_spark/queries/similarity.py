@@ -68,7 +68,7 @@ def q_knn_batch_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
     queries_df = _query_batch(spark, sf_dir)
     joined = emb.crossJoin(F.broadcast(queries_df))
-    dist = F.round(euclidean("embedding", F.col("query_vec")), 6).alias("dist")
+    dist = F.round(euclidean("embedding", "query_vec"), 6).alias("dist")
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc_nulls_last(), F.col("vec_id").asc()
     )
@@ -465,9 +465,7 @@ def q_embedding_truncate_renorm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
     v = F.slice(F.col("embedding").cast("array<double>"), 1, 32)
-    out = emb.select("vec_id", v.alias("v")).withColumn(
-        "_n", l2_norm(F.col("v"))
-    )
+    out = emb.select("vec_id", v.alias("v")).withColumn("_n", l2_norm("v"))
     u = F.when(F.col("_n") == 0.0, F.col("v")).otherwise(
         F.transform(F.col("v"), lambda x: x / F.col("_n"))
     )

@@ -398,7 +398,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = emb.alias("a")
     b = emb.alias("b")
     sim = F.round(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
+        dot("a.embedding", "b.embedding")
         / (F.col("a.nrm") * F.col("b.nrm")),
         6,
     )

@@ -54,6 +54,13 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", str(64 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # PySpark's call-site capture wraps every Column and DataFrame
+        # method in a Python stack walk plus getActiveSession, conf.get
+        # and origin set/clear gateway round trips (one F.col costs 13
+        # py4j commands), which made plan building slower than the
+        # jobs it feeds. Off, an error keeps its class and message and
+        # loses only the Python call-site line of its query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("VFS_DRIVER_MEMORY", "16g"))
     )
     for k, v in (extra_conf or {}).items():
