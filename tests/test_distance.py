@@ -187,6 +187,9 @@ def test_sql_builders_bit_identical_to_column_builders(spark, name):
     # the edge cases are exercised, not vacuous
     flat = [r[f"c{i}"] for r in rows for i in range(len(cols))]
     assert None in flat and any(v is not None and v != 0 for v in flat)
+    # a query operand is rendered at most twice (cosine: dot and norm)
+    sql = str(new("f", [271828.0, 1.0, 2.0]))
+    assert 1 <= sql.count("271828.0D") <= 2, sql
 
 
 def test_l2_norm_and_array_lit_bit_identical(spark):

@@ -9,7 +9,7 @@ import pytest
 
 from vfs_spark.operators import ann as ann_ops
 from vfs_spark.operators import index_store
-from vfs_spark.sources.parquet import load_table
+from vfs_spark.sources.parquet import load_table, read_parquet
 
 SF = "/root/testdata/sf0.001"
 
@@ -105,8 +105,8 @@ def test_ivf_store_written_once_and_search_matches(spark, store_root, monkeypatc
     ]
     got = [
         tuple(r)
-        for r in ann_ops.ivf_search_partitioned(
-            spark, km, store, q, k=5, nprobe=2
+        for r in ann_ops.ivf_search(
+            km, read_parquet(spark, store), q, k=5, nprobe=2
         ).collect()
     ]
     assert got == want
@@ -169,3 +169,63 @@ def test_param_change_uses_distinct_artifact(spark, store_root):
     b16, _ = index_store.load_or_fit(spark, emb, SF, "pq", m=16, k=8)
     b8, _ = index_store.load_or_fit(spark, emb, SF, "pq", m=8, k=8)
     assert len(b16) == 16 and len(b8) == 8
+
+
+def _drop_registry_tables():
+    """Forget the registry's serving tables and models, as a fresh
+    application would, releasing the tables' checkpoints."""
+    from vfs_spark import dispatch
+    from vfs_spark.queries import similarity
+
+    for cache in (similarity._PQ_INDEX_CACHE, similarity._IVFPQ_INDEX_CACHE):
+        for _, table in cache.values():
+            dispatch.release(table)
+        cache.clear()
+    index_store._memo.clear()
+
+
+@pytest.mark.parametrize("slug", ["ann_pq", "ann_ivfpq"])
+def test_registry_pq_tables_follow_a_rewrite(spark, store_root, tmp_path, slug):
+    """The registry's PQ and IVFPQ serving tables are encoded against
+    the index store's models: after ``embeddings`` is rewritten in the
+    same session with a different row count, a warm call returns the
+    rows a cold cache returns, and the replaced checkpoint is released
+    rather than kept beside the new one."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vfs_spark.queries import QUERIES
+
+    sf = tmp_path / "sf_copy"
+    sf.mkdir()
+    table = sf / "embeddings.parquet"
+    shutil.copyfile(f"{SF}/embeddings.parquet", table)
+
+    def rows():
+        return sorted(tuple(r) for r in QUERIES[slug](spark, str(sf)).collect())
+
+    def checkpoints():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    _drop_registry_tables()
+    first = rows()
+    held = checkpoints()
+    # append copies of the query vector (vec_id 0) under new ids: the
+    # rewritten table's nearest neighbours are rows a stale table lacks
+    whole = pq.read_table(table)
+    query = whole.filter(pa.compute.equal(whole["vec_id"], 0))
+    copies = [
+        query.set_column(0, "vec_id", pa.array([10_000 + i], pa.int64()))
+        for i in range(3)
+    ]
+    pq.write_table(pa.concat_tables([whole, *copies]), table)
+
+    warm = rows()
+    assert checkpoints() == held
+    _drop_registry_tables()
+    cold = rows()
+    assert warm == cold
+    assert {10_000, 10_001, 10_002} <= {r[0] for r in warm} - {r[0] for r in first}
+    _drop_registry_tables()

@@ -22,35 +22,44 @@ def _queries(emb, n):
     )
 
 
-def test_knn_batch_arrow_cap_raises(spark):
+@pytest.fixture
+def cap5(monkeypatch):
+    monkeypatch.setattr(knn_ops, "MAX_SERVING_BATCH", 5)
+
+
+def test_knn_batch_arrow_cap_raises(spark, cap5):
     emb = load_table(spark, SF, "embeddings")
     big = _queries(emb, 8)
-    with pytest.raises(ValueError, match="serving batch exceeds max_queries=5"):
-        knn_ops.knn_batch_arrow(emb, big, k=3, max_queries=5)
+    with pytest.raises(ValueError, match="serving batch exceeds MAX_SERVING_BATCH=5"):
+        knn_ops.knn_batch_arrow(emb, big, k=3)
 
 
-def test_ivf_and_pq_batch_cap_raises(spark):
+def test_ivf_and_pq_batch_cap_raises(spark, cap5):
     emb = load_table(spark, SF, "embeddings")
     big = _queries(emb, 8)
     km, assigned = ann_ops.build_ivf_index(emb, n_clusters=4)
-    with pytest.raises(ValueError, match="max_queries=5"):
-        ann_ops.ivf_search_batch(km, assigned, big, k=3, max_queries=5)
+    with pytest.raises(ValueError, match="MAX_SERVING_BATCH=5"):
+        ann_ops.ivf_search_batch(km, assigned, big, k=3)
     books = ann_ops.fit_pq_codebooks(emb, m=8, k=8)
     enc = ann_ops.encode_pq_arrow(emb, books)
-    with pytest.raises(ValueError, match="max_queries=5"):
-        ann_ops.pq_search_batch(enc, books, big, k=3, max_queries=5)
-    with pytest.raises(ValueError, match="max_queries=5"):
-        ann_ops.pq_search_batch_arrow(enc, books, big, k=3, max_queries=5)
+    with pytest.raises(ValueError, match="MAX_SERVING_BATCH=5"):
+        ann_ops.pq_search_batch_arrow(enc, books, big, k=3)
+    assigned_enc = assigned.select("vec_id", "cluster_id").join(enc, "vec_id")
+    with pytest.raises(ValueError, match="MAX_SERVING_BATCH=5"):
+        ann_ops.ivfpq_search_batch(km, assigned_enc, emb, books, big, k=3)
+    # a pre-collected batch is held to the same cap
+    with pytest.raises(ValueError, match="MAX_SERVING_BATCH=5"):
+        knn_ops.knn_batch_auto(emb, [(i, [0.0] * 64) for i in range(8)], k=3)
 
 
-def test_oversized_batch_completes_via_join_form(spark):
+def test_oversized_batch_completes_via_join_form(spark, cap5):
     """The documented overflow path: the SAME oversized query set that
     the serving kernel rejects runs to completion on the broadcast-
     join form (knn_batch), with identical top-k semantics."""
     emb = load_table(spark, SF, "embeddings")
     big = _queries(emb, 8)
     with pytest.raises(ValueError):
-        knn_ops.knn_batch_arrow(emb, big, k=3, max_queries=5)
+        knn_ops.knn_batch_arrow(emb, big, k=3)
     out = knn_ops.knn_batch(emb, big, k=3)
     assert out.groupBy("query_id").count().count() == 8  # all 8 served
 

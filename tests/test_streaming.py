@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vfs_spark.queries.relational import q_event_window_counts
+from vfs_spark.sources.parquet import read_parquet
 from vfs_spark.streaming import ingest
 
 
@@ -128,7 +129,7 @@ def test_stream_append_ivf_queryable(spark, sf_dir, tmp_path):
     q.awaitTermination()
 
     qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    got = ann_ops.ivf_search_partitioned(spark, km, dest, qvec, k=5, nprobe=3)
+    got = ann_ops.ivf_search(km, read_parquet(spark, dest), qvec, k=5, nprobe=3)
     want = ann_ops.ivf_search(km, assigned, qvec, k=5, nprobe=3)
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
 
@@ -278,8 +279,8 @@ def test_compact_ivf_store_preserves_results(spark, sf_dir, tmp_path):
     qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
     before = [
         tuple(r)
-        for r in ann_ops.ivf_search_partitioned(
-            spark, km, dest, qvec, k=5, nprobe=4
+        for r in ann_ops.ivf_search(
+            km, read_parquet(spark, dest), qvec, k=5, nprobe=4
         ).collect()
     ]
     parts = [d for d in os.listdir(dest) if d.startswith("cluster_id=")]
@@ -298,8 +299,8 @@ def test_compact_ivf_store_preserves_results(spark, sf_dir, tmp_path):
         assert len(files) == 1, d
     after = [
         tuple(r)
-        for r in ann_ops.ivf_search_partitioned(
-            spark, km, dest, qvec, k=5, nprobe=4
+        for r in ann_ops.ivf_search(
+            km, read_parquet(spark, dest), qvec, k=5, nprobe=4
         ).collect()
     ]
     assert before == after

@@ -46,6 +46,7 @@ def main() -> None:
     from vfs_spark.session import get_spark
     from vfs_spark.operators import ann as ann_ops
     from vfs_spark.operators.knn import exact_knn
+    from vfs_spark.sources.parquet import read_parquet
 
     spark = get_spark("vfs-crossover")
     spark.sparkContext.setLogLevel("ERROR")
@@ -83,8 +84,8 @@ def main() -> None:
             ann_ops.write_ivf_partitioned(assigned, f"{tmp}/ivf_{n}")
             ivf_build = time.time() - t0
             ivf_q = _best(
-                lambda: ann_ops.ivf_search_partitioned(
-                    spark, km, f"{tmp}/ivf_{n}", q, k=10, nprobe=4
+                lambda: ann_ops.ivf_search(
+                    km, read_parquet(spark, f"{tmp}/ivf_{n}"), q, k=10, nprobe=4
                 ).collect()
             )
             vdf.unpersist()

@@ -63,7 +63,7 @@ def main() -> None:
     import vfs_spark.queries  # noqa: F401  (registers slugs)
     from vfs_spark.functions.distance import dot, l2_norm
     from vfs_spark.operators import ann as A
-    from vfs_spark.sources.parquet import load_table
+    from vfs_spark.sources.parquet import load_table, read_parquet
     from vfs_spark.operators import dedup as D
     from vfs_spark.operators.knn import exact_knn
     from vfs_spark.queries.registry import QUERIES
@@ -616,8 +616,8 @@ def main() -> None:
                 rec = float((ranks_arr < np_n).mean())
                 serve_wall = min(
                     _walled(
-                        lambda: A.ivf_search_partitioned(
-                            spark, km, ppath, q0, k=10, nprobe=np_n
+                        lambda: A.ivf_search(
+                            km, read_parquet(spark, ppath), q0, k=10, nprobe=np_n
                         ).collect()
                     )
                     for _ in range(3)

@@ -79,10 +79,16 @@ def _dot(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, {_SUM})"
 
 
+def _norm(a: str) -> str:
+    """SQL for ‖a‖: one fold over the single operand."""
+    return f"sqrt(aggregate({a}, 0D, (acc, v) -> acc + v * v))"
+
+
 def _cos_sim(a: Operand, b: Operand) -> str:
+    # each operand is rendered twice (dot, norm); NULLIF keeps the
+    # zero-norm case NULL with the denominator written once
     a, b = _dbl(a), _dbl(b)
-    denom = f"(sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
-    return f"CASE WHEN {denom} != 0D THEN {_dot(a, b)} / {denom} END"
+    return f"{_dot(a, b)} / NULLIF({_norm(a)} * {_norm(b)}, 0D)"
 
 
 def array_lit(values: Iterable[float]) -> Column:
@@ -95,8 +101,7 @@ def dot(a: Operand, b: Operand) -> Column:
 
 
 def l2_norm(a: Operand) -> Column:
-    a = _dbl(a)
-    return F.expr(f"sqrt({_dot(a, a)})")
+    return F.expr(_norm(_dbl(a)))
 
 
 def euclidean(a: Operand, b: Operand) -> Column:

@@ -16,13 +16,20 @@ scales out), and the model is persisted and reused across queries:
   cluster-pruned brute force: the classic IVF layout; at 100 TB the
   vectors live Hive-partitioned by cluster id so a query scans only
   nprobe/k of the data (partition pruning does the index's job).
+- ``pq_search`` / ``pq_search_rerank`` / ``ivfpq_search`` and their
+  batch forms — product-quantized ADC shortlists, exact rerank.
+
+Every search here ends in operators/knn.py's shared top-k; the IVF
+forms route through one centroid router (``_route``), and the PQ forms
+share one ADC table builder (``_pq_luts``) and one rerank stage per
+form (``_rerank``, ``_rerank_batch``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vfs_spark.functions.distance import (
@@ -32,8 +39,15 @@ from vfs_spark.functions.distance import (
     sql_array,
     sql_ident,
 )
-from vfs_spark.operators.knn import collect_serving_batch
-from vfs_spark.sources.parquet import read_parquet
+from vfs_spark.operators.knn import (
+    DIST_DIGITS,
+    collect_serving_batch,
+    query_matrix,
+    rank_per_query,
+    serve_topk,
+    serving_schema,
+    topk_truncate,
+)
 
 DEFAULT_BUCKET_LENGTH = 2.0
 # plays the role of HNSW ef/M recall knobs. tools/lsh_sweep.py on the
@@ -111,7 +125,9 @@ def approx_knn(
         if n > 0:
             q = q / n
     res = model.approxNearestNeighbors(indexed_df, Vectors.dense(q), k, distCol="dist")
-    return res.select(F.col(id_col), F.round(F.col("dist"), 6).alias("dist"))
+    return res.select(
+        F.col(id_col), F.round(F.col("dist"), DIST_DIGITS).alias("dist")
+    )
 
 
 def approx_knn_multiprobe(
@@ -191,14 +207,10 @@ def approx_knn_multiprobe(
     if metric == "cosine":
         hashed = hashed.withColumn("_fv", vector_to_array("features"))
     dist = F.round(
-        euclidean("_fv" if metric == "cosine" else vec_col, q), 6
+        euclidean("_fv" if metric == "cosine" else vec_col, q), DIST_DIGITS
     ).alias("dist")
-    return (
-        hashed.where(within)
-        .select(F.col(id_col), dist)
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cand = hashed.where(within).select(F.col(id_col), dist)
+    return topk_truncate(cand, k, id_col=id_col)
 
 
 def approx_knn_join(
@@ -287,7 +299,7 @@ def approx_knn_join_multiprobe(
             vector_to_array("_qf").alias("_qa"),
         )
     )
-    dist = F.round(euclidean("_fa", "_qa"), 6).alias("dist")
+    dist = F.round(euclidean("_fa", "_qa"), DIST_DIGITS).alias("dist")
     return cand.select(F.col(query_id_col), F.col(id_col), dist).where(
         F.col("dist") <= threshold
     )
@@ -444,7 +456,6 @@ def auto_nprobe(
     return n_clusters
 
 
-
 def _centers_np(km_model):
     """Cluster centers as one float64 matrix, memoized on the model:
     serving paths re-read the centers on EVERY query, and the py4j
@@ -462,6 +473,29 @@ def _centers_np(km_model):
             pass
     return c
 
+
+def _route(km_model, Q, nprobe: int):
+    """The one centroid router: the (q × nprobe) cluster ids nearest
+    each query row of ``Q`` — a driver-side argsort over ≤n_clusters
+    squared distances per query. One query at a time, so memory stays
+    n_clusters × d, not |Q| × n_clusters × d."""
+    import numpy as np
+
+    centers = _centers_np(km_model)
+    return np.stack(
+        [
+            np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe]
+            for q in np.asarray(Q, dtype=np.float64)
+        ]
+    )
+
+
+def _in_cells(df: DataFrame, cells) -> DataFrame:
+    """``df`` restricted to the routed clusters ``cells`` — on the
+    cluster-partitioned store, partition pruning."""
+    return df.where(F.col("cluster_id").isin([int(c) for c in cells]))
+
+
 def ivf_search(
     km_model,
     assigned_df: DataFrame,
@@ -473,20 +507,14 @@ def ivf_search(
 ) -> DataFrame:
     """Search only the nprobe clusters whose centroids are nearest the
     query (driver-side argsort over ≤n_clusters centroids), then exact
-    top-k within them. Scans nprobe/n_clusters of the data — with
-    cluster-partitioned storage this is partition pruning."""
-    import numpy as np
-
-    q = np.asarray(list(query), dtype=float)
-    centers = _centers_np(km_model)
-    nearest = np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe].tolist()
-    cand = assigned_df.where(F.col("cluster_id").isin(nearest))
-    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
-    return (
-        cand.select(F.col(id_col), dist)
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    top-k within them. Scans nprobe/n_clusters of the data. Over the
+    cluster-partitioned store (``read_parquet(spark, path)`` of a
+    write_ivf_partitioned directory) the cluster_id IN (...) filter is
+    partition pruning: only nprobe directories are opened."""
+    q = [float(x) for x in query]
+    cand = _in_cells(assigned_df, _route(km_model, [q], nprobe)[0])
+    dist = F.round(euclidean(vec_col, q), DIST_DIGITS).alias("dist")
+    return topk_truncate(cand.select(F.col(id_col), dist), k, id_col=id_col)
 
 
 def ivf_search_batch(
@@ -499,7 +527,6 @@ def ivf_search_batch(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    max_queries: int | None = None,
 ) -> DataFrame:
     """Batch IVF: route EVERY query to its nprobe nearest clusters in
     one driver-side pass over the (tiny) centroid table, then ONE scan
@@ -517,38 +544,30 @@ def ivf_search_batch(
     import numpy as np
 
     spark = assigned_df.sparkSession
-    qrows = collect_serving_batch(queries, query_id_col, query_vec_col, max_queries)
+    qrows = collect_serving_batch(queries, query_id_col, query_vec_col)
     if not qrows:
         # schema must match the non-empty path (query_id included)
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, dist double"
-        )
-    centers = _centers_np(km_model)
-    routing = []
-    for r in qrows:
-        q = np.asarray(r[1], dtype=float)
-        for c in np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe]:
-            routing.append((int(r[0]), int(c), [float(x) for x in r[1]]))
+        return spark.createDataFrame([], serving_schema(query_id_col, id_col))
+    qids, Q = query_matrix(qrows)
+    routed = _route(km_model, Q, nprobe)
+    routing = [
+        (int(qid), int(c), [float(x) for x in r[1]])
+        for qid, r, cells in zip(qids, qrows, routed)
+        for c in cells
+    ]
     route_df = spark.createDataFrame(
         routing, f"{query_id_col} long, cluster_id int, {query_vec_col} array<double>"
     )
-    needed = sorted({c for _, c, _ in routing})
-    cand = assigned_df.where(F.col("cluster_id").isin(needed))
-    scored = cand.join(F.broadcast(route_df), "cluster_id").select(
-        query_id_col,
-        id_col,
-        F.round(euclidean(vec_col, query_vec_col), 6).alias("dist"),
+    scored = (
+        _in_cells(assigned_df, np.unique(routed))
+        .join(F.broadcast(route_df), "cluster_id")
+        .select(
+            query_id_col,
+            id_col,
+            F.round(euclidean(vec_col, query_vec_col), DIST_DIGITS).alias("dist"),
+        )
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
-    )
+    return rank_per_query(scored, k, query_id_col, id_col)
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame, id_col: str = "vec_id") -> float:
@@ -570,33 +589,6 @@ def write_ivf_partitioned(
     assigned_df.select(id_col, vec_col, "cluster_id").write.mode(
         "overwrite"
     ).partitionBy("cluster_id").parquet(path)
-
-
-def ivf_search_partitioned(
-    spark: SparkSession,
-    km_model,
-    path: str,
-    query,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query the partitioned IVF store: centroid argsort on the driver
-    (≤n_clusters rows), then a scan whose cluster_id IN (...) filter
-    prunes to nprobe partition directories before any file is opened."""
-    import numpy as np
-
-    q = np.asarray(list(query), dtype=float)
-    centers = _centers_np(km_model)
-    nearest = np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe].tolist()
-    cand = read_parquet(spark, path).where(F.col("cluster_id").isin(nearest))
-    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
-    return (
-        cand.select(F.col(id_col), dist)
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -666,14 +658,6 @@ def fit_pq_codebooks(
     return books
 
 
-def _adc(table: str) -> str:
-    """SQL for the squared ADC distance of the `codes` column against
-    `table`, an m×k lookup table (an array<array<double>> literal or
-    column): m table lookups and a left-to-right sum."""
-    look = f"zip_with(codes, {table}, (c, r) -> element_at(r, CAST(c AS INT) + 1))"
-    return f"aggregate({look}, 0D, (acc, x) -> acc + x)"
-
-
 def encode_pq(
     df: DataFrame, codebooks, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
@@ -693,6 +677,22 @@ def encode_pq(
     return df.select(F.col(id_col), F.expr(codes_sql).alias("codes"))
 
 
+def _pq_luts(codebooks, Q):
+    """The ADC tables of the query rows ``Q``: lut[q, j, c] =
+    ‖q_block_j − centroid_jc‖², |Q|·m·k floats as one NumPy array
+    (constant-sized for a serving batch)."""
+    import numpy as np
+
+    books = np.asarray(codebooks, dtype=np.float64)  # (m, kcent, sub)
+    m, kcent, sub = books.shape
+    Q = np.asarray(Q, dtype=np.float64)
+    lut = np.empty((len(Q), m, kcent), dtype=np.float64)
+    for j in range(m):
+        diff = Q[:, None, j * sub : (j + 1) * sub] - books[j][None, :, :]
+        lut[:, j, :] = (diff * diff).sum(axis=2)
+    return lut
+
+
 def pq_search(
     encoded_df: DataFrame,
     codebooks,
@@ -707,23 +707,56 @@ def pq_search(
     rows, aggregate) — no decode, no float vectors read. The scan side
     touches only the 8-byte code column; TakeOrderedAndProject keeps
     per-partition top-k before the single tiny shuffle."""
-    import numpy as np
-
-    q = np.asarray(list(query), dtype=np.float64)
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    table = []
-    for j in range(m):
-        qj = q[j * sub : (j + 1) * sub]
-        C = np.asarray(codebooks[j], dtype=np.float64)
-        table.append([float(((qj - c) ** 2).sum()) for c in C])
+    table = _pq_luts(codebooks, [list(query)])[0].tolist()
     tbl = "array(" + ", ".join(sql_array(row) for row in table) + ")"
-    adc = F.expr(f"sqrt({_adc(tbl)})")
-    return (
-        encoded_df.select(F.col(id_col), F.round(adc, 6).alias("dist"))
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
+    look = f"zip_with(codes, {tbl}, (c, r) -> element_at(r, CAST(c AS INT) + 1))"
+    adc = F.expr(f"sqrt(aggregate({look}, 0D, (acc, x) -> acc + x))")
+    return topk_truncate(
+        encoded_df.select(F.col(id_col), F.round(adc, DIST_DIGITS).alias("dist")),
+        k,
+        id_col=id_col,
     )
+
+
+def _rerank(
+    full_df: DataFrame, short: DataFrame, query, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The single-query rerank stage: only the shortlist's rows hydrate
+    their float vectors (broadcast semi join — the shortlist is the
+    only full-vector read) and are re-scored exactly."""
+    exact = full_df.join(F.broadcast(short.select(id_col)), id_col)
+    dist = F.round(euclidean(vec_col, query), DIST_DIGITS).alias("dist")
+    return topk_truncate(exact.select(F.col(id_col), dist), k, id_col=id_col)
+
+
+def _rerank_batch(
+    full_df: DataFrame,
+    pairs: DataFrame,
+    queries_df: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """The batch rerank stage: only the shortlisted (query, candidate)
+    ``pairs`` hydrate float vectors (broadcast of |Q|·shortlist id
+    pairs — the big table never shuffles) and are re-scored exactly
+    against their own query."""
+    qv = queries_df.select(
+        query_id_col, F.col(query_vec_col).cast("array<double>").alias("_qv")
+    )
+    exact = (
+        full_df.select(id_col, vec_col)
+        .join(F.broadcast(pairs.select(query_id_col, id_col)), id_col)
+        .join(F.broadcast(qv), query_id_col)
+        .select(
+            query_id_col,
+            id_col,
+            F.round(euclidean(vec_col, "_qv"), DIST_DIGITS).alias("dist"),
+        )
+    )
+    return rank_per_query(exact, k, query_id_col, id_col)
 
 
 def pq_search_rerank(
@@ -738,175 +771,58 @@ def pq_search_rerank(
 ) -> DataFrame:
     """PQ-ADC shortlist → exact rerank: ADC ranks a `shortlist` of
     candidates from codes alone, then ONLY those rows' float vectors
-    are fetched (broadcast semi join — the k·shortlist hydration is
-    the only full-vector read) and re-scored exactly. The standard
-    two-stage serving shape: at 100 TB the 97% cheaper code scan does
-    the winnowing and the expensive column is read for ~100 rows."""
+    are read and re-scored exactly. The standard two-stage serving
+    shape: at 100 TB the 97% cheaper code scan does the winnowing and
+    the expensive column is read for ~100 rows."""
+    q = [float(x) for x in query]
+    cand = pq_search(encoded_df, codebooks, q, k=shortlist, id_col=id_col)
+    return _rerank(full_df, cand, q, k, id_col, vec_col)
+
+
+def _adc_dist(lut, codes_col):
+    """(q × b) rounded ADC distances of one Arrow batch's codes: m
+    vectorized gathers from the ADC tables + a matrix sum."""
     import numpy as np
 
-    cand = pq_search(encoded_df, codebooks, query, k=shortlist, id_col=id_col)
-    q = np.asarray(list(query), dtype=np.float64)
-    exact = full_df.join(F.broadcast(cand.select(id_col)), id_col)
-    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
-    return (
-        exact.select(F.col(id_col), dist)
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def pq_search_batch(
-    encoded_df: DataFrame,
-    codebooks,
-    queries_df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    max_queries: int | None = None,
-) -> DataFrame:
-    """Batch ADC: the many-queries form of pq_search (ivf_search_batch's
-    move applied to PQ). One driver pass builds each query's m×k
-    lookup table (|Q|·m·k floats — constant for a serving batch),
-    ships ALL tables as one broadcast, and every code row is scored
-    against every query with m lookups + a sum — the collection is
-    scanned ONCE for the whole batch, reading only the code column.
-    Per-query top-k via rank window (only scored pairs shuffle)."""
-    import numpy as np
-
-    spark = encoded_df.sparkSession
-    qrows = collect_serving_batch(queries_df, query_id_col, query_vec_col, max_queries)
-    if not qrows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, dist double"
-        )
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    tbl_rows = []
-    for r in qrows:
-        q = np.asarray(r[1], dtype=np.float64)
-        table = []
-        for j in range(m):
-            qj = q[j * sub : (j + 1) * sub]
-            C = np.asarray(codebooks[j], dtype=np.float64)
-            table.append([float(((qj - c) ** 2).sum()) for c in C])
-        tbl_rows.append((int(r[0]), table))
-    tbl_df = spark.createDataFrame(
-        tbl_rows, f"{query_id_col} long, tbl array<array<double>>"
-    )
-    adc = F.expr(f"sqrt({_adc('tbl')})")
-    scored = encoded_df.crossJoin(F.broadcast(tbl_df)).select(
-        query_id_col, id_col, F.round(adc, 6).alias("dist")
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
-    )
-
-
-def _pq_luts(codebooks, qrows):
-    """(query_ids, lut) where lut[q, j, c] = ‖q_block_j − centroid_jc‖²
-    — the |Q|·m·k ADC tables as one NumPy array (constant-sized for a
-    serving batch)."""
-    import numpy as np
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    kcent = len(codebooks[0])
-    books = np.asarray(codebooks, dtype=np.float64)  # (m, kcent, sub)
-    qids = np.asarray([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    lut = np.empty((len(qids), m, kcent), dtype=np.float64)
-    for j in range(m):
-        diff = Q[:, None, j * sub : (j + 1) * sub] - books[j][None, :, :]
-        lut[:, j, :] = (diff * diff).sum(axis=2)
-    return qids, lut
+    codes = np.stack(codes_col.to_numpy()).astype(np.int64)
+    D = np.zeros((lut.shape[0], len(codes)), dtype=np.float64)
+    for j in range(lut.shape[1]):
+        D += lut[:, j, :][:, codes[:, j]]
+    return np.sqrt(D).round(DIST_DIGITS)
 
 
 def pq_search_batch_arrow(
     encoded_df: DataFrame,
     codebooks,
-    queries_df: DataFrame,
+    queries_df: DataFrame | list,
     k: int = 10,
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    max_queries: int | None = None,
 ) -> DataFrame:
-    """Arrow/NumPy batch ADC — the SCALE twin of pq_search_batch with
-    the identical per-query output contract (asserted in tests). The
-    Catalyst form scores every (row, query) pair with interpreted
-    higher-order-function lookups — O(n·|Q|·m) interpreted ops, the
-    same tax encode_pq paid before its Arrow twin. Here the |Q| ADC
-    tables ship to each worker once and each Arrow batch is scored as
-    m vectorized gathers + a matrix sum; only per-batch top-k rows
-    (rounded-dist + id tiebreak, matching the Catalyst ordering)
-    leave the kernel, so the shuffle stays k·|Q|·batches rows. Same
-    two-stage shape, NumPy speed: measured 3.4 s vs 94.8 s for the
-    expr scorer at 2M codes × 100 queries (warm, idle host)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = encoded_df.sparkSession
-    qrows = collect_serving_batch(queries_df, query_id_col, query_vec_col, max_queries)
-    out_schema = f"{query_id_col} long, {id_col} long, dist double"
+    """Batch ADC — the many-queries form of pq_search with the same
+    per-query output (asserted in tests). The |Q| ADC tables ship to
+    each worker once and each Arrow batch is scored as m vectorized
+    gathers + a matrix sum in serve_topk; only per-batch top-k rows
+    leave the kernel, so the collection is scanned ONCE for the whole
+    batch, reading only the code column, and the shuffle stays
+    k·|Q|·batches rows. Scoring every (row, query) pair with
+    interpreted Catalyst lookups instead measured 94.8 s against 3.4 s
+    for this kernel at 2M codes × 100 queries (warm, idle host)."""
+    qrows = collect_serving_batch(queries_df, query_id_col, query_vec_col)
     if not qrows:
-        return spark.createDataFrame([], out_schema)
-    qids, lut = _pq_luts(codebooks, qrows)
-    m = len(codebooks)
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf[id_col].to_numpy()
-            D = np.zeros((len(qids), len(ids)), dtype=np.float64)
-            for j in range(m):
-                D += lut[:, j, :][:, codes[:, j]]
-            dist = np.sqrt(D).round(6)
-            take = min(k, len(ids))
-            qcol, icol, dcol = [], [], []
-            for qi in range(len(qids)):
-                # argpartition (O(b)) + lexsort of only the boundary
-                # tie group — not a full O(b log b) sort per (query,
-                # batch); same move as knn_batch_arrow, same exact
-                # (dist, id) tiebreak contract (asserted byte-identical
-                # to the expr scorer in tests). At 10M codes × 100
-                # queries the full-sort form measured 30 s.
-                col = dist[qi]
-                part_idx = np.argpartition(col, take - 1)[:take]
-                kth = col[part_idx].max()
-                cand = np.flatnonzero(col <= kth)
-                order = np.lexsort((ids[cand], col[cand]))[:take]
-                sel = cand[order]
-                qcol.append(np.full(take, qids[qi]))
-                icol.append(ids[sel])
-                dcol.append(col[sel])
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.concatenate(qcol),
-                    id_col: np.concatenate(icol),
-                    "dist": np.concatenate(dcol),
-                }
-            )
-
-    part = encoded_df.select(id_col, "codes").mapInPandas(kernel, out_schema)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        part.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
+        return encoded_df.sparkSession.createDataFrame(
+            [], serving_schema(query_id_col, id_col)
+        )
+    qids, Q = query_matrix(qrows)
+    lut = _pq_luts(codebooks, Q)
+    return serve_topk(
+        encoded_df.select(id_col, "codes"),
+        lambda pdf: (_adc_dist(lut, pdf["codes"]), None),
+        qids,
+        k,
+        query_id_col,
+        id_col,
     )
 
 
@@ -921,17 +837,12 @@ def pq_search_rerank_batch(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    adc: str = "arrow",
 ) -> DataFrame:
-    """Batch two-stage serving: ADC shortlists `shortlist` candidates
-    per query from codes alone, then ONLY those (query, candidate)
-    pairs hydrate float vectors (broadcast of |Q|·shortlist id pairs —
-    the big table never shuffles) and re-score exactly. The batch twin
-    of pq_search_rerank with the same output contract per query.
-    ``adc='arrow'`` (default) uses the vectorized NumPy ADC kernel;
-    ``'expr'`` keeps the pure-Catalyst scorer for comparison."""
-    batch_fn = pq_search_batch_arrow if adc == "arrow" else pq_search_batch
-    cand = batch_fn(
+    """Batch two-stage serving: the ADC kernel shortlists `shortlist`
+    candidates per query from codes alone, then only those (query,
+    candidate) pairs are reranked exactly. The batch twin of
+    pq_search_rerank with the same output per query."""
+    cand = pq_search_batch_arrow(
         encoded_df,
         codebooks,
         queries_df,
@@ -940,28 +851,8 @@ def pq_search_rerank_batch(
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
     )
-    qv = queries_df.select(
-        query_id_col, F.col(query_vec_col).cast("array<double>").alias("_qv")
-    )
-    exact = (
-        full_df.select(id_col, vec_col)
-        .join(F.broadcast(cand.select(query_id_col, id_col)), id_col)
-        .join(F.broadcast(qv), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(euclidean(vec_col, "_qv"), 6).alias("dist"),
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
+    return _rerank_batch(
+        full_df, cand, queries_df, k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 
@@ -976,45 +867,23 @@ def ivfpq_search(
     shortlist: int = 100,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    adc: str = "arrow",
 ) -> DataFrame:
     """IVF+PQ hybrid (the FAISS IVFPQ layout): the coarse quantizer
     prunes to nprobe clusters — with the Hive-partitioned store that
     is PARTITION pruning, nprobe/n_clusters of the files — and within
-    the probed cells only the 16-byte CODE column is ADC-scored;
-    float vectors are read for the `shortlist` rerank rows alone.
-    Compounding reductions at 100 TB: read nprobe/k of the partitions
-    × 1/16 of the bytes, then hydrate ~100 rows. Input
-    `assigned_encoded_df` carries (id, cluster_id, codes) — built by
-    build_ivf_index + encode_pq_arrow, both constant-cost fits.
-
-    ``adc='arrow'`` (default) scores the probed cells with the
-    vectorized NumPy ADC kernel (pq_search_batch_arrow on a one-row
-    query batch) — the same escape from the interpreted-HOF tax the
-    batch path already took; ``'expr'`` keeps the pure-Catalyst
-    scorer (byte-identical output, asserted in tests)."""
-    import numpy as np
-
-    q = np.asarray(list(query), dtype=np.float64)
-    centers = _centers_np(km_model)
-    nearest = np.argsort(((centers - q) ** 2).sum(axis=1))[:nprobe].tolist()
-    cand = assigned_encoded_df.where(F.col("cluster_id").isin(nearest))
-    if adc == "arrow":
-        # pre-collected one-row serving batch: no createDataFrame →
-        # collect round trip just to get the vector back (r16)
-        short = pq_search_batch_arrow(
-            cand, codebooks, [(0, [float(x) for x in q])],
-            k=shortlist, id_col=id_col,
-        ).drop("query_id")
-    else:
-        short = pq_search(cand, codebooks, query, k=shortlist, id_col=id_col)
-    exact = full_df.join(F.broadcast(short.select(id_col)), id_col)
-    dist = F.round(euclidean(vec_col, q), 6).alias("dist")
-    return (
-        exact.select(F.col(id_col), dist)
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    the probed cells only the 16-byte CODE column is ADC-scored, by
+    the batch ADC kernel on a one-row query batch; float vectors are
+    read for the `shortlist` rerank rows alone. Compounding reductions
+    at 100 TB: read nprobe/k of the partitions × 1/16 of the bytes,
+    then hydrate ~100 rows. Input `assigned_encoded_df` carries (id,
+    cluster_id, codes) — built by build_ivf_index + encode_pq_arrow,
+    both constant-cost fits."""
+    q = [float(x) for x in query]
+    cand = _in_cells(assigned_encoded_df, _route(km_model, [q], nprobe)[0])
+    # pre-collected one-row serving batch: no createDataFrame →
+    # collect round trip just to get the vector back (r16)
+    short = pq_search_batch_arrow(cand, codebooks, [(0, q)], k=shortlist, id_col=id_col)
+    return _rerank(full_df, short, q, k, id_col, vec_col)
 
 
 def ivfpq_search_batch(
@@ -1030,11 +899,10 @@ def ivfpq_search_batch(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    max_queries: int | None = None,
 ) -> DataFrame:
     """Batch IVFPQ serving — the many-queries form of ivfpq_search,
-    composing ivf_search_batch's driver-side routing with the Arrow
-    ADC kernel (pq_search_batch_arrow) plus exact rerank.
+    composing ivf_search_batch's driver-side routing with the batch
+    ADC kernel plus exact rerank.
 
     One driver pass routes every query to its nprobe nearest
     centroids (≤ n_clusters rows — constant); ONE scan covers the
@@ -1047,94 +915,34 @@ def ivfpq_search_batch(
     shortlists (≤ shortlist·|Q| rows per partition) leave the kernel;
     float vectors hydrate for the |Q|·shortlist rerank pairs alone."""
     import numpy as np
-    import pandas as pd
 
-    spark = assigned_encoded_df.sparkSession
-    qrows = collect_serving_batch(queries_df, query_id_col, query_vec_col, max_queries)
-    out_schema = f"{query_id_col} long, {id_col} long, dist double"
+    qrows = collect_serving_batch(queries_df, query_id_col, query_vec_col)
     if not qrows:
-        return spark.createDataFrame([], out_schema)
-    centers = _centers_np(km_model)
-    qids, lut = _pq_luts(codebooks, qrows)
-    m = len(codebooks)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    cell_d = ((centers[None, :, :] - Q[:, None, :]) ** 2).sum(axis=2)  # (q, C)
-    routed = np.argsort(cell_d, axis=1)[:, :nprobe]  # (q, nprobe)
-    allow = np.zeros((len(qids), len(centers)), dtype=bool)
-    for qi in range(len(qids)):
-        allow[qi, routed[qi]] = True
-    needed = sorted(int(c) for c in set(routed.ravel().tolist()))
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cluster_id"].to_numpy().astype(np.int64)
-            D = np.zeros((len(qids), len(ids)), dtype=np.float64)
-            for j in range(m):
-                D += lut[:, j, :][:, codes[:, j]]
-            dist = np.sqrt(D).round(6)
-            dist[~allow[:, cells]] = np.inf  # routing mask per query
-            take = min(shortlist, len(ids))
-            qcol, icol, dcol = [], [], []
-            for qi in range(len(qids)):
-                # argpartition + boundary-tie re-rank (the
-                # knn_batch_arrow / pq_search_batch_arrow move);
-                # masked-out rows are +inf, so when fewer than `take`
-                # candidates are finite the tie group collapses to the
-                # finite rows only — same output as the full sort.
-                col = dist[qi]
-                part_idx = np.argpartition(col, take - 1)[:take]
-                kth = col[part_idx].max()
-                cand = (
-                    np.flatnonzero(col <= kth)
-                    if np.isfinite(kth)
-                    else np.flatnonzero(np.isfinite(col))
-                )
-                order = np.lexsort((ids[cand], col[cand]))[:take]
-                sel = cand[order]
-                qcol.append(np.full(len(sel), qids[qi]))
-                icol.append(ids[sel])
-                dcol.append(col[sel])
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.concatenate(qcol),
-                    id_col: np.concatenate(icol),
-                    "dist": np.concatenate(dcol),
-                }
-            )
-
-    cand = assigned_encoded_df.where(F.col("cluster_id").isin(needed))
-    part = cand.select(id_col, "cluster_id", "codes").mapInPandas(kernel, out_schema)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    short = (
-        part.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= shortlist)
-        .drop("rnk", "dist")
-    )
-    qv = queries_df.select(
-        query_id_col, F.col(query_vec_col).cast("array<double>").alias("_qv")
-    )
-    exact = (
-        full_df.select(id_col, vec_col)
-        .join(F.broadcast(short), id_col)
-        .join(F.broadcast(qv), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(euclidean(vec_col, "_qv"), 6).alias("dist"),
+        return assigned_encoded_df.sparkSession.createDataFrame(
+            [], serving_schema(query_id_col, id_col)
         )
+    qids, Q = query_matrix(qrows)
+    lut = _pq_luts(codebooks, Q)
+    routed = _route(km_model, Q, nprobe)  # (q, nprobe)
+    allow = np.zeros((len(qids), len(_centers_np(km_model))), dtype=bool)
+    np.put_along_axis(allow, routed, True, axis=1)
+
+    def score(pdf):
+        cells = pdf["cluster_id"].to_numpy().astype(np.int64)
+        return _adc_dist(lut, pdf["codes"]), allow[:, cells]
+
+    short = serve_topk(
+        _in_cells(assigned_encoded_df, np.unique(routed)).select(
+            id_col, "cluster_id", "codes"
+        ),
+        score,
+        qids,
+        shortlist,
+        query_id_col,
+        id_col,
     )
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .drop("rnk")
+    return _rerank_batch(
+        full_df, short, queries_df, k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 

@@ -277,8 +277,8 @@ def ivf_store(
 ):
     """(kmeans_model, partitioned_store_path): the IVF index AT REST —
     one Hive partition per cluster — written once per fingerprint and
-    reused by every later application. Queries against the returned
-    path get physical partition pruning (ivf_search_partitioned); this
+    reused by every later application. ``ivf_search`` over
+    ``read_parquet(spark, path)`` gets physical partition pruning; this
     is the layout `stream_append_ivf` maintains incrementally and
     `compact_ivf_store` folds."""
     km, art, meta = _model(

@@ -1,4 +1,5 @@
-"""Exact k-NN, top-k truncation, and result hydration.
+"""Exact k-NN, the top-k every search operator shares, and result
+hydration.
 
 Reference: ``exact_search`` (rank.rs:119-186) loops batched scans,
 computes a distance per vector, sorts, truncates to k with a
@@ -13,9 +14,16 @@ reference's sort-whole-buffer-per-batch, and it scales out (each of
 1000 executors keeps only k candidates; the shuffle moves k·partitions
 rows, not N).
 
+The exact, IVF, PQ and IVFPQ operators (here and in operators/ann.py)
+end in one of three shared pieces: ``topk_truncate`` for one query,
+``rank_per_query`` (a row_number window per query id) for a batch, and
+``serve_topk`` — the NumPy kernel that keeps a local top-k per Arrow
+batch before ``rank_per_query`` merges them — for the batch kernels.
+
 Determinism: ties broken by id ascending (SURVEY Q8 — the reference's
-tie order is arrival order). Distances are rounded BEFORE ordering so
-the Spark plan and the DuckDB oracle pick identical boundary rows.
+tie order is arrival order). Distances are rounded to DIST_DIGITS
+BEFORE ordering so the Spark plan and the DuckDB oracle pick identical
+boundary rows.
 """
 
 from __future__ import annotations
@@ -30,6 +38,11 @@ from vfs_spark.functions.distance import Operand, cosine_distance, euclidean
 
 DEFAULT_K = 5  # reference default result_limit (rank.rs:129)
 
+# Every distance a search operator returns is rounded to this many
+# decimals BEFORE ordering, so the Spark plans, the NumPy kernels and
+# the DuckDB oracles pick identical boundary rows.
+DIST_DIGITS = 6
+
 # Ceiling on driver-side query-batch materialization in the serving
 # kernels (knn_batch_arrow, ivf/pq batch search). 10k × dim-1024 float64
 # ≈ 80 MB — comfortably broadcastable; anything bigger belongs on the
@@ -40,10 +53,7 @@ _METRICS = {"euclidean": euclidean, "cosine": cosine_distance}
 
 
 def collect_serving_batch(
-    queries: DataFrame,
-    query_id_col: str,
-    query_vec_col: str,
-    max_queries: int | None = None,
+    queries: DataFrame | list, query_id_col: str, query_vec_col: str
 ) -> list:
     """Materialize a SERVING batch of query vectors on the driver.
 
@@ -52,39 +62,149 @@ def collect_serving_batch(
     the contract every call site documents. This guard ENFORCES it:
     `limit(cap+1)` means an oversized DataFrame is never materialized
     (the old failure mode was a silent driver OOM), and the error
-    names the join-form twin (`knn_batch` / `ivf_search` per query /
-    `pq_search_batch`'s broadcast-join shape) as the overflow path for
-    bulk workloads."""
-    cap = MAX_SERVING_BATCH if max_queries is None else int(max_queries)
-    if isinstance(queries, list):
-        # pre-collected (id, vec) pairs — serving paths that already
-        # hold the query on the driver skip a createDataFrame/collect
-        # round trip (r16); the cap contract is enforced identically
-        if len(queries) > cap:
-            raise ValueError(
-                f"serving batch exceeds max_queries={cap}: batch ANN "
-                "kernels broadcast the full query set to every "
-                "executor — use the join-form twin for bulk workloads."
-            )
-        return queries
-    qrows = queries.select(query_id_col, query_vec_col).limit(cap + 1).collect()
-    if len(qrows) > cap:
+    names the join-form operators as the overflow path for bulk
+    workloads. ``queries`` may also be pre-collected (id, vec) pairs —
+    serving paths that already hold the query on the driver skip a
+    createDataFrame/collect round trip — and the cap holds the same."""
+    cap = MAX_SERVING_BATCH
+    rows = (
+        queries
+        if isinstance(queries, list)
+        else queries.select(query_id_col, query_vec_col).limit(cap + 1).collect()
+    )
+    if len(rows) > cap:
         raise ValueError(
-            f"serving batch exceeds max_queries={cap}: batch ANN kernels "
-            "broadcast the full query set to every executor, so they are "
-            "for serving-sized batches only. For bulk query workloads use "
-            "the join-form twin (knn_batch / approx_knn_join / "
-            "similarity_join), which scales out instead of collecting."
+            f"serving batch exceeds MAX_SERVING_BATCH={cap}: batch ANN "
+            "kernels broadcast the full query set to every executor, so "
+            "they are for serving-sized batches only. For bulk query "
+            "workloads use the join-form operators (knn_batch / "
+            "approx_knn_join / similarity_join), which scale out instead "
+            "of collecting."
         )
-    return qrows
+    return rows
+
+
+def query_matrix(qrows: list):
+    """(query ids as int64, queries as one (q × d) float64 matrix) of a
+    collected serving batch."""
+    import numpy as np
+
+    qids = np.asarray([int(r[0]) for r in qrows], dtype=np.int64)
+    return qids, np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
+
+
+def serving_schema(query_id_col: str, id_col: str) -> str:
+    """The output schema of every batch search: (query id, id, dist)."""
+    return f"{query_id_col} long, {id_col} long, dist double"
 
 
 def distance_col(metric: str, vec_col: str, query: Operand) -> Column:
+    """The ``dist`` column of an exact search, rounded to DIST_DIGITS.
+    `+ 0.0` maps IEEE -0.0 (round of a tiny negative) to +0.0 so the
+    value hash matches the oracle; NULL (zero-norm cosine, dim
+    mismatch) ranks LAST in every tail, as knn_batch_arrow's NaN does."""
     try:
         fn = _METRICS[metric]
     except KeyError:
         raise ValueError(f"unknown metric {metric!r}; pick from {sorted(_METRICS)}")
-    return fn(vec_col, query)
+    return (F.round(fn(vec_col, query), DIST_DIGITS) + F.lit(0.0)).alias("dist")
+
+
+def topk_truncate(
+    scored: DataFrame, k: int = DEFAULT_K, dist_col: str = "dist", id_col: str = "vec_id"
+) -> DataFrame:
+    """Sort by distance asc, keep k (rank.rs:170-178): the tail of the
+    single-query searches, which Catalyst runs as TakeOrderedAndProject
+    (a per-partition bounded heap + one merge)."""
+    return scored.orderBy(
+        F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()
+    ).limit(k)
+
+
+def rank_per_query(
+    scored: DataFrame,
+    k: int,
+    query_id_col: str = "query_id",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """The tail of every batch search: per query, the k rows first in
+    (dist asc nulls last, id asc) order — a row_number window
+    partitioned by query id, so only scored rows shuffle."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
+    )
+    return (
+        scored.withColumn("_rank", F.row_number().over(w))
+        .where(F.col("_rank") <= k)
+        .drop("_rank")
+    )
+
+
+def _topk(dist, ids, k: int, allow=None):
+    """(query index, row index) pairs of each query's k smallest
+    (dist, id) rows in one batch; ``dist`` is (q × b). argpartition is
+    O(b) but picks arbitrarily among rows tied at the k-th distance, so
+    the whole boundary tie group is re-ranked by (dist, id) — NaN sorts
+    last, and when NaNs must fill the k every row competes. ``allow``
+    (q × b bool) keeps a query's masked-out rows from competing at all:
+    a query with fewer allowed rows than k returns just those."""
+    import numpy as np
+
+    q_idx, rows = [], []
+    for qi, col in enumerate(dist):
+        pos = None if allow is None else np.flatnonzero(allow[qi])
+        c = col if pos is None else col[pos]
+        m = min(k, len(c))
+        if m == 0:
+            continue
+        kth = c[np.argpartition(c, m - 1)[:m]].max()
+        cand = np.arange(len(c)) if np.isnan(kth) else np.flatnonzero(c <= kth)
+        if pos is not None:
+            cand = pos[cand]
+        rows.append(cand[np.lexsort((ids[cand], col[cand]))[:m]])
+        q_idx.append(np.full(m, qi))
+    return q_idx, rows
+
+
+def serve_topk(
+    frame: DataFrame,
+    score,
+    qids,
+    k: int,
+    query_id_col: str = "query_id",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """The one batch serving kernel (knn_batch_arrow, the PQ and IVFPQ
+    batch searches): a local top-k per partition, then one merge
+    (REPOSE's distributed top-k). Per Arrow batch of ``frame``,
+    ``score(pdf)`` gives the (q × b) rounded distance matrix of the
+    batch against the queries ``qids`` and an optional (q × b) allow
+    mask; only each query's k best rows leave the kernel, so the
+    shuffle carries k·|Q|·batches rows, and rank_per_query merges
+    them."""
+    import numpy as np
+    import pandas as pd
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            dist, allow = score(pdf)
+            ids = pdf[id_col].to_numpy()
+            q_idx, rows = _topk(dist, ids, k, allow)
+            if not rows:
+                continue
+            q_idx, rows = np.concatenate(q_idx), np.concatenate(rows)
+            yield pd.DataFrame(
+                {
+                    query_id_col: qids[q_idx],
+                    id_col: ids[rows],
+                    "dist": dist[q_idx, rows],
+                }
+            )
+
+    partial = frame.mapInPandas(kernel, serving_schema(query_id_col, id_col))
+    return rank_per_query(partial, k, query_id_col, id_col)
 
 
 def exact_knn(
@@ -94,21 +214,14 @@ def exact_knn(
     metric: str = "euclidean",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Top-k nearest neighbors of one query vector (rank.rs:119-186 +
     truncate rank.rs:170-178). Returns (id, dist) rows ordered by
     (dist asc, id asc)."""
-    # `+ 0.0` maps IEEE -0.0 (round of a tiny negative) to +0.0 so the
-    # value hash matches the oracle; nulls (zero-norm cosine, dim
-    # mismatch) rank LAST, consistent with knn_batch_arrow's NaN.
-    dist = (
-        F.round(distance_col(metric, vec_col, query), round_digits) + F.lit(0.0)
-    ).alias("dist")
-    return (
-        vectors.select(F.col(id_col), dist)
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
+    return topk_truncate(
+        vectors.select(F.col(id_col), distance_col(metric, vec_col, query)),
+        k,
+        id_col=id_col,
     )
 
 
@@ -121,7 +234,6 @@ def knn_batch(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Top-k per query for a whole DataFrame of query vectors — the
     many-queries form the reference serves one HTTP request at a time.
@@ -133,29 +245,12 @@ def knn_batch(
     N·Q/|partitions| distance rows, and at scale you bound that by
     pre-filtering with an ANN index (operators/ann.py)."""
     joined = vectors.crossJoin(F.broadcast(queries))
-    dist = (
-        F.round(distance_col(metric, vec_col, query_vec_col), round_digits)
-        + F.lit(0.0)
-    ).alias("dist")
-    ranked = joined.select(F.col(query_id_col), F.col(id_col), dist).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy(query_id_col).orderBy(
-                F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-            )
-        ),
+    scored = joined.select(
+        F.col(query_id_col),
+        F.col(id_col),
+        distance_col(metric, vec_col, query_vec_col),
     )
-    return ranked.where(F.col("rank") <= k).drop("rank")
-
-
-def topk_truncate(
-    scored: DataFrame, k: int = DEFAULT_K, dist_col: str = "dist", id_col: str = "vec_id"
-) -> DataFrame:
-    """Sort by distance asc, keep k (rank.rs:170-178) — exposed as its
-    own operator for parity with the reference's inline truncation."""
-    return scored.orderBy(
-        F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()
-    ).limit(k)
+    return rank_per_query(scored, k, query_id_col, id_col)
 
 
 def hydrate(results: DataFrame, vectors: DataFrame, id_col: str = "vec_id") -> DataFrame:
@@ -175,88 +270,49 @@ def knn_batch_arrow(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    round_digits: int = 6,
-    max_queries: int | None = None,
 ) -> DataFrame:
-    """Batch exact k-NN, the 100×-scale path (euclidean): one BLAS
-    matmul per Arrow batch + per-partition top-k BEFORE any shuffle.
+    """Batch exact k-NN, the 100×-scale path: one BLAS matmul per Arrow
+    batch + per-partition top-k BEFORE any shuffle (serve_topk).
 
     Why it exists: the expression form (`knn_batch`) pays two scale
     taxes — zip_with/aggregate distances are interpreted (higher-order
     functions sit outside whole-stage codegen, ~1µs·N·Q), and the
     rank window shuffles ALL N·Q distance rows into only Q partitions.
-    Here each input partition emits just k rows per query (argpartition
-    on a (batch × Q) distance matrix from the gram-trick matmul), so
-    the shuffle carries k·Q·partitions rows and the flops run in BLAS.
+    Here each input partition emits just k rows per query (top-k of a
+    (batch × Q) distance matrix from the gram-trick matmul), so the
+    shuffle carries k·Q·partitions rows and the flops run in BLAS.
     Measured at 2M×64 vectors × 100 queries: 276s → single-digit
     seconds. Results are identical to `knn_batch` (same rounding, same
     id tiebreak). ``queries`` is a DataFrame or a pre-collected list of
     (id, vec) pairs (see collect_serving_batch); an empty batch returns
     an empty result with the output schema."""
     import numpy as np
-    import pandas as pd
 
-    out_schema = f"{query_id_col} long, {id_col} long, dist double"
-    qrows = collect_serving_batch(queries, query_id_col, query_vec_col, max_queries)
+    qrows = collect_serving_batch(queries, query_id_col, query_vec_col)
     if not qrows:
-        return vectors.sparkSession.createDataFrame([], out_schema)
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])  # (q, d)
+        return vectors.sparkSession.createDataFrame(
+            [], serving_schema(query_id_col, id_col)
+        )
+    qids, Q = query_matrix(qrows)  # (q, d)
     q_sq = (Q * Q).sum(axis=1)  # (q,)
     q_nrm = np.sqrt(q_sq)  # (q,)
 
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (b, d)
-            ids = pdf[id_col].to_numpy()
-            if metric == "cosine":
-                # 1 - dot/(|x||q|); zero-norm rows -> NaN -> sort last
-                x_nrm = np.sqrt((X * X).sum(axis=1))  # (b,)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    dist = 1.0 - (X @ Q.T) / (x_nrm[:, None] * q_nrm[None, :])
-            else:
-                dist = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ Q.T) + q_sq[None, :]
-                np.maximum(dist, 0.0, out=dist)
-                np.sqrt(dist, out=dist)
-            dist = np.round(dist, round_digits) + 0.0  # (b, q); +0.0 kills -0.0
-            m = min(k, len(ids))
-            # Deterministic (dist, id) tiebreak: argpartition alone picks
-            # arbitrarily among rows tied at the k-th distance, which can
-            # drop a tied row with a smaller id. Re-rank the boundary tie
-            # group per query column so output matches knn_batch exactly.
-            out_ids = np.empty((len(qids), m), dtype=ids.dtype)
-            out_dist = np.empty((len(qids), m), dtype=np.float64)
-            for j in range(len(qids)):
-                col = dist[:, j]
-                part = np.argpartition(col, m - 1)[:m]  # O(b), arbitrary ties
-                kth = col[part].max()  # NaN only if partition had to take NaNs
-                cand = (
-                    np.arange(len(ids))
-                    if np.isnan(kth)
-                    else np.flatnonzero(col <= kth)  # all boundary ties included
-                )
-                order = np.lexsort((ids[cand], col[cand]))[:m]  # NaN sorts last
-                sel = cand[order]
-                out_ids[j] = ids[sel]
-                out_dist[j] = col[sel]
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(qids, m),
-                    id_col: out_ids.ravel(),
-                    "dist": out_dist.ravel(),
-                }
-            )
+    def score(pdf):
+        X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (b, d)
+        if metric == "cosine":
+            # 1 - dot/(|x||q|); zero-norm rows -> NaN -> sort last
+            x_nrm = np.sqrt((X * X).sum(axis=1))  # (b,)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                dist = 1.0 - (X @ Q.T) / (x_nrm[:, None] * q_nrm[None, :])
+        else:
+            dist = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ Q.T) + q_sq[None, :]
+            np.maximum(dist, 0.0, out=dist)
+            np.sqrt(dist, out=dist)
+        # (q, b); +0.0 kills -0.0
+        return (np.round(dist, DIST_DIGITS) + 0.0).T, None
 
-    partial = vectors.select(id_col, vec_col).mapInPandas(kernel, schema=out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("rank")
+    return serve_topk(
+        vectors.select(id_col, vec_col), score, qids, k, query_id_col, id_col
     )
 
 
@@ -298,8 +354,6 @@ def knn_batch_auto(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    round_digits: int = 6,
-    max_queries: int | None = None,
     approx_vector_count: int | None = None,
 ) -> DataFrame:
     """Batch exact k-NN with the serving default picked by batch
@@ -325,9 +379,7 @@ def knn_batch_auto(
     tiny-|Q|/huge-N workload EXACTLY should instead route to the IVF
     path (ann_ivf_partitioned / engine.search) whose partition-pruned
     plan is the real small-batch answer at scale."""
-    qrows = collect_serving_batch(
-        queries, query_id_col, query_vec_col, max_queries
-    )
+    qrows = collect_serving_batch(queries, query_id_col, query_vec_col)
     n_big = (
         approx_vector_count is not None
         and approx_vector_count >= KNN_BATCH_ARROW_MIN_VECTORS
@@ -346,7 +398,6 @@ def knn_batch_auto(
             vec_col=vec_col,
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
-            round_digits=round_digits,
         )
     return knn_batch_arrow(
         vectors,
@@ -357,6 +408,4 @@ def knn_batch_auto(
         vec_col=vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        round_digits=round_digits,
-        max_queries=max_queries,
     )

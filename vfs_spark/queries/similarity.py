@@ -13,16 +13,17 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from vfs_spark import dispatch
 from vfs_spark.functions.distance import euclidean
 from vfs_spark.operators import ann as ann_ops
 from vfs_spark.operators import dedup as dedup_ops
 from vfs_spark.operators import index_store
 from vfs_spark.operators import multimodal
+from vfs_spark.operators.knn import DIST_DIGITS, rank_per_query
 from vfs_spark.queries.core import _query_vec
 from vfs_spark.queries.registry import query
-from vfs_spark.sources.parquet import load_table
+from vfs_spark.sources.parquet import load_table, read_parquet
 
 
 def _query_batch(
@@ -68,16 +69,8 @@ def q_knn_batch_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
     queries_df = _query_batch(spark, sf_dir)
     joined = emb.crossJoin(F.broadcast(queries_df))
-    dist = F.round(euclidean("embedding", "query_vec"), 6).alias("dist")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc_nulls_last(), F.col("vec_id").asc()
-    )
-    return (
-        joined.select("query_id", "vec_id", dist)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .drop("rnk")
-    )
+    dist = F.round(euclidean("embedding", "query_vec"), DIST_DIGITS).alias("dist")
+    return rank_per_query(joined.select("query_id", "vec_id", dist), 3)
 
 
 @query("approx_knn")  # rows-only: gated on recall vs exact (tests/test_ann.py)
@@ -142,8 +135,8 @@ def q_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, emb, sf_dir, n_clusters=16, recall_target=0.9
     )
     km, store = index_store.ivf_store(spark, emb, sf_dir, n_clusters=16)
-    return ann_ops.ivf_search_partitioned(
-        spark, km, store, _query_vec(spark, sf_dir), k=5, nprobe=nprobe
+    return ann_ops.ivf_search(
+        km, read_parquet(spark, store), _query_vec(spark, sf_dir), k=5, nprobe=nprobe
     )
 
 
@@ -636,13 +629,32 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.resize_blocks(media, src=(32, 32), dst=(8, 8))
 
 
-# PQ index cache: fit-once/query-many, same policy as VFSEngine's
-# _lsh/_ivf/_pq caches (SURVEY Q3 — refitting per search call is the
-# reference's anti-pattern). Keyed by (application id, sf_dir) so a
-# fresh SparkSession never reuses another session's cached plan. The
-# encoded tables are local checkpoints, not CacheManager entries, so
-# a session-wide clearCache does not make the next search re-encode.
+# PQ and IVFPQ serving tables: fit-once/query-many, same policy as
+# VFSEngine's _lsh/_ivf/_pq caches (SURVEY Q3 — refitting per search
+# call is the reference's anti-pattern). Keyed by (application id,
+# sf_dir) so a fresh SparkSession never reuses another session's
+# table. The encoded tables are local checkpoints, not CacheManager
+# entries, so a session-wide clearCache does not make the next search
+# re-encode. Each entry remembers the models it was encoded with.
 _PQ_INDEX_CACHE: dict[tuple[str, str], tuple] = {}
+_IVFPQ_INDEX_CACHE: dict[tuple[str, str], tuple] = {}
+
+
+def _encoded(cache: dict, spark: SparkSession, sf_dir: str, models: tuple, plan):
+    """The checkpointed serving table of ``sf_dir`` while ``models`` are
+    the very objects it was encoded with. index_store memoizes one
+    model per fingerprint, so a rewritten ``embeddings`` table hands
+    back new models: then ``plan`` is checkpointed in its place and
+    the replaced checkpoint is released."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    hit = cache.get(key)
+    if hit is not None and all(a is b for a, b in zip(hit[0], models)):
+        return hit[1]
+    table = plan.localCheckpoint(eager=True)
+    if hit is not None:
+        dispatch.release(hit[1])
+    cache[key] = (models, table)
+    return table
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
@@ -651,15 +663,9 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     the Catalyst form at 2M vectors — byte-identical output asserted
     in tests/test_ann.py); at 100 TB the codes table would be a
     persisted parquet column written once at ingest."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_INDEX_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-        books, enc = index_store.load_or_fit(spark, emb, sf_dir, "pq")
-        _PQ_INDEX_CACHE[key] = (books, enc.localCheckpoint(eager=True))
-    return _PQ_INDEX_CACHE[key]
-
-
-_IVFPQ_INDEX_CACHE: dict[tuple[str, str], tuple] = {}
+    emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
+    books, enc = index_store.load_or_fit(spark, emb, sf_dir, "pq")
+    return books, _encoded(_PQ_INDEX_CACHE, spark, sf_dir, (books,), enc)
 
 
 def _ivfpq_index(spark: SparkSession, sf_dir: str):
@@ -671,31 +677,22 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     stage multiplies in its own ~0.95+ conditional recall, so the
     end-to-end product stays ≥0.9 — gated in RECALL_r09 and
     tests/test_ann.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVFPQ_INDEX_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
-        # finer codebooks than the flat-PQ slugs (k=64 vs 16): IVFPQ's
-        # end-to-end recall is routing × shortlist-stage recall, so the
-        # ADC stage must waste less of the routing budget — measured
-        # 0.95 end-to-end at (nprobe auto→13, shortlist 200) vs 0.875
-        # with k=16 codebooks at the same routing point
-        # enc stays unpinned: its only consumer is the assigned_enc
-        # join below, which is itself checkpointed — a second copy of
-        # the codes table would sit in executor memory for the whole
-        # application (code-review r9 finding)
-        books, enc = index_store.load_or_fit(
-            spark, emb, sf_dir, "pq", m=16, k=64
-        )
-        km, assigned, nprobe = index_store.ivf_nprobe(
-            spark, emb, sf_dir, n_clusters=16, recall_target=0.95
-        )
-        assigned_enc = (
-            assigned.select("vec_id", "cluster_id")
-            .join(enc, "vec_id")
-            .localCheckpoint(eager=True)
-        )
-        _IVFPQ_INDEX_CACHE[key] = (km, books, assigned_enc, nprobe)
-    return _IVFPQ_INDEX_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
+    # finer codebooks than the flat-PQ slugs (k=64 vs 16): IVFPQ's
+    # end-to-end recall is routing × shortlist-stage recall, so the
+    # ADC stage must waste less of the routing budget — measured
+    # 0.95 end-to-end at (nprobe auto→13, shortlist 200) vs 0.875
+    # with k=16 codebooks at the same routing point
+    books, enc = index_store.load_or_fit(spark, emb, sf_dir, "pq", m=16, k=64)
+    km, assigned, nprobe = index_store.ivf_nprobe(
+        spark, emb, sf_dir, n_clusters=16, recall_target=0.95
+    )
+    # enc stays unpinned: its only consumer is this join, which is
+    # itself checkpointed — a second copy of the codes table would sit
+    # in executor memory for the whole application
+    plan = assigned.select("vec_id", "cluster_id").join(enc, "vec_id")
+    assigned_enc = _encoded(_IVFPQ_INDEX_CACHE, spark, sf_dir, (km, books), plan)
+    return km, books, assigned_enc, nprobe
 
 
 @query("ann_ivfpq")  # rows-only: recall-gated in tests/test_ann.py
@@ -738,11 +735,12 @@ def q_ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_pq_batch")  # rows-only: recall-gated in tests/test_ann.py
 def q_ann_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch PQ serving: 5 query vectors ADC-scored against the cached
-    code table in ONE scan (all m×k lookup tables broadcast together),
-    100-row shortlist per query, exact rerank on the hydrated pairs
-    only. The many-queries form of ann_pq — at 100 TB a serving batch
-    amortizes the code scan across the whole query set, the same move
-    knn_batch/ivf_search_batch make for their families."""
+    code table in ONE scan (all m×k lookup tables shipped to the Arrow
+    kernel together), 100-row shortlist per query, exact rerank on the
+    hydrated pairs only. The many-queries form of ann_pq — at 100 TB
+    a serving batch amortizes the code scan across the whole query
+    set, the same move knn_batch/ivf_search_batch make for their
+    families."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
     books, enc = _pq_index(spark, sf_dir)
     queries_df = _query_batch(spark, sf_dir, as_double=True)
@@ -760,7 +758,8 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recall@10 = 0.975 measured). The compression step the reference's
     flat int8 quantization (vector.rs:94-125) points toward — at
     100 TB the code scan reads 1/16th the bytes, and the codebook fit
-    is a bounded-sample constant cost. Fit + Arrow encode are cached
+    is a bounded-sample constant cost. The Arrow encode is cached for
+    as long as the index store hands back the same codebooks
     (fit-once/query-many); encode_pq is the Catalyst twin of the
     encode kernel, kept for the oracle-style byte-identity check."""
     emb = load_table(spark, sf_dir, "embeddings", fan_out=True)

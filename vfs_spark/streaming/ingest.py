@@ -195,7 +195,8 @@ def stream_append_ivf(
     """Streaming index maintenance: each micro-batch of vectors is
     cluster-assigned with the (pre-fitted) KMeans coarse quantizer and
     appended into the Hive-partitioned IVF store — so the ANN index
-    stays queryable (ivf_search_partitioned) while ingest runs.
+    stays queryable (ivf_search over read_parquet of the store)
+    while ingest runs.
     Re-fitting the quantizer is a periodic BATCH job (centroid drift
     is slow); the stream only assigns. Checkpointing makes the
     append exactly-once — the streaming twin of the reference's
