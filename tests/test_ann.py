@@ -274,6 +274,38 @@ def test_pq_batch_matches_single_and_recall(emb, pq):
     assert sum(recalls) / len(recalls) >= 0.7  # same gate as single-query
 
 
+def test_batch_rerank_accepts_collected_queries(spark, emb, pq):
+    """pq_search_rerank_batch and ivfpq_search_batch collect the query
+    batch once and rerank from those rows, so a pre-collected list of
+    (id, vec) pairs is served row for row like the query DataFrame, and
+    an empty list returns the empty output schema."""
+    books, enc = pq
+    km, assigned = ann_ops.build_ivf_index(emb, n_clusters=8)
+    assigned_enc = assigned.select("vec_id", "cluster_id").join(enc, "vec_id")
+    queries_df = emb.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("query_vec"),
+    )
+    qrows = [(r["query_id"], r["query_vec"]) for r in queries_df.collect()]
+    searches = {
+        "pq": lambda q: ann_ops.pq_search_rerank_batch(
+            enc, emb, books, q, k=10, shortlist=100
+        ),
+        "ivfpq": lambda q: ann_ops.ivfpq_search_batch(
+            km, assigned_enc, emb, books, q, k=10, nprobe=4, shortlist=100
+        ),
+    }
+    for name, search in searches.items():
+        want = sorted(tuple(r) for r in search(queries_df).collect())
+        assert len(want) == 40, name
+        assert sorted(tuple(r) for r in search(qrows).collect()) == want, name
+        empty = search([])
+        assert [f.name for f in empty.schema.fields] == [
+            "query_id", "vec_id", "dist"
+        ], name
+        assert empty.count() == 0, name
+
+
 def test_pq_batch_empty_queries_schema(spark, emb, pq):
     books, enc = pq
     empty_q = spark.createDataFrame([], "query_id long, query_vec array<double>")

@@ -1304,11 +1304,9 @@ def test_prefix_candidate_stats_upper_bounds_actual(spark, sf_dir):
     sh = docs.select(
         "doc_id", "lang", word_shingles("text").alias("shingles")
     )
-    sj = dedup_ops.prefix_candidate_stats(
-        sh, 0.3, mode="jaccard", exact=True
-    )
+    sj = dedup_ops.prefix_candidate_stats(sh, 0.3, mode="jaccard")
     actual_j = dedup_ops.jaccard_pairs_prefix(sh, threshold=0.3).count()
-    # tier 1 (router) >= tier 2 (exact prefix volume) >= actual
+    # all postings >= prefix postings (p = 1: exact) >= actual
     assert (
         sj["est_candidates_upper"]
         >= sj["est_candidates_prefix"]
@@ -1317,9 +1315,7 @@ def test_prefix_candidate_stats_upper_bounds_actual(spark, sf_dir):
     assert sj["n_docs"] == docs.count()
     assert 0 < sj["prefix_postings"] <= sj["postings"]
 
-    sc = dedup_ops.prefix_candidate_stats(
-        sh, 0.6, mode="containment", exact=True
-    )
+    sc = dedup_ops.prefix_candidate_stats(sh, 0.6, mode="containment")
     actual_c = dedup_ops.containment_pairs_prefix(
         sh, threshold=0.6
     ).count()
@@ -1351,12 +1347,12 @@ def test_prefix_candidate_stats_flags_degenerate_corpus(spark):
 
 
 def test_prefix_candidate_stats_sampled_router(spark):
-    """The sampled tier-1 router must still separate the two regimes:
+    """The sampled all-postings estimate must still separate the two regimes:
     a saturated corpus reads orders-of-magnitude above a disjoint one
     after the 1/p² rescale, and the unbiasedness direction is right
     (sampled estimate within a reasonable factor of the full sum on
     the saturated corpus, where every key is heavy so variance is
-    low). Also pins the API guards."""
+    low). Also pins the API guard."""
     import pytest as _pytest
 
     n = 200
@@ -1387,10 +1383,6 @@ def test_prefix_candidate_stats_sampled_router(spark):
         dsamp["est_candidates_upper"], 1.0
     )
     with _pytest.raises(ValueError):
-        dedup_ops.prefix_candidate_stats(
-            same, 0.6, exact=True, sample_fraction=0.5
-        )
-    with _pytest.raises(ValueError):
         dedup_ops.prefix_candidate_stats(same, 0.6, sample_fraction=0.0)
 
 
@@ -1418,19 +1410,23 @@ def _router_corpus(spark, degenerate: bool):
     )
 
 
-def test_route_prefix_join_separates_planted_regimes(spark):
+def test_route_prefix_join_separates_planted_regimes(spark, monkeypatch):
     """r13 VERDICT task #1 'Done' gate: a degenerate (closed-vocab)
     corpus routes to the banded twin, an open-vocab corpus stays on
-    the exact prefix join — decided by the tier-1.5 prefix-candidate
-    estimate, with the absolute floor overridden to fixture scale
+    the exact prefix join — decided by the prefix-candidate
+    estimate, with the absolute floor patched to fixture scale
     (the default 10⁷ floor exists precisely so real fixtures never
     route banded)."""
     deg = _router_corpus(spark, degenerate=True).select(
         "doc_id", "lang", word_shingles("text").alias("shingles")
     )
-    r = dedup_ops.route_prefix_join(
-        deg, 0.3, mode="jaccard", min_total=100.0
-    )
+    # and with DEFAULT constants even the degenerate toy corpus stays
+    # exact: 60 docs cannot cross the absolute floor (documented:
+    # small corpora are always cheapest run exactly)
+    rd = dedup_ops.route_prefix_join(deg, 0.3, mode="jaccard")
+    assert rd["strategy"] == "exact"
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 100.0)
+    r = dedup_ops.route_prefix_join(deg, 0.3, mode="jaccard")
     assert r["strategy"] == "banded"
     assert r["est_prefix"] > 100.0
     assert (
@@ -1441,30 +1437,24 @@ def test_route_prefix_join_separates_planted_regimes(spark):
     open_ = _router_corpus(spark, degenerate=False).select(
         "doc_id", "lang", word_shingles("text").alias("shingles")
     )
-    ro = dedup_ops.route_prefix_join(
-        open_, 0.3, mode="jaccard", min_total=100.0
-    )
+    ro = dedup_ops.route_prefix_join(open_, 0.3, mode="jaccard")
     assert ro["strategy"] == "exact"
-    # and with DEFAULT constants even the degenerate toy corpus stays
-    # exact: 60 docs cannot cross the absolute floor (documented:
-    # small corpora are always cheapest run exactly)
-    rd = dedup_ops.route_prefix_join(deg, 0.3, mode="jaccard")
-    assert rd["strategy"] == "exact"
 
 
-def test_jaccard_pairs_auto_fallback_warns_and_matches_planted(spark):
+def test_jaccard_pairs_auto_fallback_warns_and_matches_planted(
+    spark, monkeypatch
+):
     """The banded fallback must (a) fire with a RuntimeWarning, (b)
     emit the exact path's schema, and (c) find every planted
     exact-duplicate pair (J=1.0 collides under every MinHash band,
     so recall on identical copies is deterministic)."""
     import warnings as _w
 
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 100.0)
     docs = _router_corpus(spark, degenerate=True)
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        pairs = dedup_ops.jaccard_pairs_auto(
-            docs, 0.3, min_total=100.0
-        )
+        pairs = dedup_ops.jaccard_pairs_auto(docs, 0.3)
         got = {
             (r["doc_a"], r["doc_b"])
             for r in pairs.where(F.col("jaccard") >= 0.3).collect()
@@ -1479,25 +1469,28 @@ def test_jaccard_pairs_auto_fallback_warns_and_matches_planted(spark):
     assert got == {(a, b) for a in range(60) for b in range(60) if a < b}
 
 
-def test_jaccard_pairs_auto_exact_route_is_oracle_identical(spark):
+def test_jaccard_pairs_auto_exact_route_is_oracle_identical(
+    spark, monkeypatch
+):
     """On the open corpus the auto path must route exact and emit
     exactly the brute-force pair set (no warning)."""
     import warnings as _w
 
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 100.0)
     docs = _router_corpus(spark, degenerate=False)
     truth = exact_jaccard_pairs(docs, 0.3)
     with _w.catch_warnings():
         _w.simplefilter("error", RuntimeWarning)
         got = {
             (r["doc_a"], r["doc_b"])
-            for r in dedup_ops.jaccard_pairs_auto(docs, 0.3, min_total=100.0)
+            for r in dedup_ops.jaccard_pairs_auto(docs, 0.3)
             .where(F.col("jaccard") >= 0.3)
             .collect()
         }
     assert truth and got == truth
 
 
-def test_containment_pairs_auto_both_routes(spark):
+def test_containment_pairs_auto_both_routes(spark, monkeypatch):
     """Containment twin of the auto tests: exact route matches the
     brute-force containment pair set on the open corpus; banded
     route on the degenerate corpus warns, emits the exact schema
@@ -1510,6 +1503,7 @@ def test_containment_pairs_auto_both_routes(spark):
     seed-robust)."""
     import warnings as _w
 
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 100.0)
     open_docs = _router_corpus(spark, degenerate=False)
     sh = open_docs.select(
         "doc_id", "lang", word_shingles("text").alias("shingles")
@@ -1527,9 +1521,7 @@ def test_containment_pairs_auto_both_routes(spark):
         _w.simplefilter("error", RuntimeWarning)
         got = {
             (r["doc_a"], r["doc_b"])
-            for r in dedup_ops.containment_pairs_auto(
-                open_docs, 0.6, min_total=100.0
-            )
+            for r in dedup_ops.containment_pairs_auto(open_docs, 0.6)
             .where(
                 (F.col("min_size") > 0)
                 & (5 * F.col("inter_size") >= 3 * F.col("min_size"))
@@ -1541,7 +1533,7 @@ def test_containment_pairs_auto_both_routes(spark):
     deg = _router_corpus(spark, degenerate=True)
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        fb = dedup_ops.containment_pairs_auto(deg, 0.6, min_total=100.0)
+        fb = dedup_ops.containment_pairs_auto(deg, 0.6)
         pairs = {
             (r["doc_a"], r["doc_b"])
             for r in fb.where(
@@ -1559,10 +1551,10 @@ def test_containment_pairs_auto_both_routes(spark):
 
 
 def test_prefix_candidate_stats_two_sample_estimator(spark):
-    """r14: the sampled tier-1.5 must rank prefix membership by df
+    """r14: the sampled estimator must rank prefix membership by df
     from the independent B sample, not the in-sample df — the r14
-    router_probe measured the one-sample form ~20x under the exact
-    tier-2 volume and corpus-indistinguishable (saturated vs Heaps
+    router_probe measured the one-sample form ~20x under the p = 1
+    volume and corpus-indistinguishable (saturated vs Heaps
     est literally identical), because a collision key shared by two
     sampled docs reads in-sample df>=2 while the docs' other keys
     read df=1, so the lowest-df-first prefix filter excludes exactly
@@ -1583,9 +1575,9 @@ def test_prefix_candidate_stats_two_sample_estimator(spark):
     sh = spark.createDataFrame(
         rows, "doc_id long, lang string, shingles array<string>"
     )
-    exact = dedup_ops.prefix_candidate_stats(
-        sh, 0.6, mode="jaccard", exact=True
-    )["est_candidates_prefix"]
+    exact = dedup_ops.prefix_candidate_stats(sh, 0.6, mode="jaccard")[
+        "est_candidates_prefix"
+    ]
     assert exact > 0
     sampled = dedup_ops.prefix_candidate_stats(
         sh, 0.6, mode="jaccard", sample_fraction=0.3
@@ -1596,13 +1588,74 @@ def test_prefix_candidate_stats_two_sample_estimator(spark):
     # the exact tier within sampling noise (E raw pairs ~ p^2 * true)
     assert exact / 3 <= est <= exact * 3, (est, exact)
     # containment mode: same ranking, Sum pref*(df_hat - 1) weighting
-    exact_c = dedup_ops.prefix_candidate_stats(
-        sh, 0.6, mode="containment", exact=True
-    )["est_candidates_prefix"]
+    exact_c = dedup_ops.prefix_candidate_stats(sh, 0.6, mode="containment")[
+        "est_candidates_prefix"
+    ]
     est_c = dedup_ops.prefix_candidate_stats(
         sh, 0.6, mode="containment", sample_fraction=0.3
     )["est_candidates_prefix"]
     assert exact_c / 3 <= est_c <= exact_c * 3, (est_c, exact_c)
+
+
+@pytest.mark.parametrize("mode", ["jaccard", "containment"])
+def test_prefix_candidate_stats_p1_matches_numpy_oracle(spark, mode):
+    """At p = 1 the estimator is the prefix join's exact candidate
+    volume. NumPy recomputes it from Spark's own xxhash64 element keys:
+    per-(block, key) df, each doc's (df, key) rank, the prefix of
+    length n − ⌊t·n⌋ + 1, then Σ C(pref_df, 2) (jaccard) or
+    Σ pref_df·(df − 1) (containment). The corpus holds a NULL set, an
+    empty set and repeated elements; the first two emit no postings."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    rows = [(0, "en", None), (1, "de", [])]
+    for i in range(2, 400):
+        words = rng.zipf(1.4, int(rng.integers(1, 14))) % 250
+        rows.append((i, ["en", "de", "fr"][i % 3], [f"w{w}" for w in words]))
+    sh = spark.createDataFrame(
+        rows, "doc_id long, lang string, shingles array<string>"
+    )
+    threshold = 0.3 if mode == "jaccard" else 0.6
+    got = dedup_ops.prefix_candidate_stats(sh, threshold, mode=mode)
+
+    keyed = sh.select(
+        "doc_id",
+        "lang",
+        F.transform(F.array_distinct("shingles"), lambda g: F.xxhash64(g))
+        .alias("keys"),
+    ).collect()
+    keyed = [r for r in keyed if r["keys"]]
+    doc = np.concatenate([np.full(len(r["keys"]), r["doc_id"]) for r in keyed])
+    size = np.concatenate([np.full(len(r["keys"]), len(r["keys"])) for r in keyed])
+    key = np.concatenate([np.asarray(r["keys"], dtype=np.int64) for r in keyed])
+    blk = np.concatenate(
+        [np.full(len(r["keys"]), "enfrde".index(r["lang"])) for r in keyed]
+    )
+    _, group, df = np.unique(
+        np.stack([blk, key], axis=1), axis=0, return_inverse=True, return_counts=True
+    )
+    group = group.ravel()
+    order = np.lexsort((key, df[group], doc))  # per doc, by (df, key)
+    first = np.searchsorted(doc[order], doc[order], side="left")
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order)) - first + 1
+    t = max(threshold - 0.01, 0.0)
+    in_prefix = rank <= size - np.floor(t * size).astype(np.int64) + 1
+    pref_df = np.bincount(group[in_prefix], minlength=len(df))
+    if mode == "jaccard":
+        want_prefix = int((pref_df * (pref_df - 1) // 2).sum())
+        want_upper = int((df * (df - 1) // 2).sum())
+    else:
+        want_prefix = int((pref_df * (df - 1)).sum())
+        want_upper = int((df * (df - 1)).sum())
+
+    assert got["n_docs"] == got["n_docs_sampled"] == len(keyed) == 398
+    assert got["postings"] == len(key)
+    assert got["prefix_postings"] == int(in_prefix.sum())
+    assert got["distinct_keys_sampled"] == len(df)
+    assert got["est_candidates_upper"] == want_upper
+    assert want_prefix > 0
+    assert got["est_candidates_prefix"] == want_prefix
 
 
 def test_router_caps_pinned_to_measured_brackets():
@@ -1629,7 +1682,7 @@ def test_router_caps_pinned_to_measured_brackets():
     assert dedup_ops.PREFIX_ROUTER_MIN_TOTAL == 10_000_000.0
 
 
-def test_route_prefix_join_short_circuits_small_corpora(spark):
+def test_route_prefix_join_short_circuits_small_corpora(spark, monkeypatch):
     """When C(n,2) <= min_total no probe outcome can route banded, so
     the router must skip the probe (fixtures pay zero pre-flight
     cost) and still return the full decision shape."""
@@ -1639,10 +1692,9 @@ def test_route_prefix_join_short_circuits_small_corpora(spark):
     r = dedup_ops.route_prefix_join(docs, 0.3, mode="jaccard")
     assert r["strategy"] == "exact"
     assert r["stats"].get("skipped") == "C(n,2) <= min_total"
-    # with the floor overridden below C(60,2), the probe must RUN
-    r2 = dedup_ops.route_prefix_join(
-        docs, 0.3, mode="jaccard", min_total=100.0
-    )
+    # with the floor patched below C(60,2), the probe must RUN
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 100.0)
+    r2 = dedup_ops.route_prefix_join(docs, 0.3, mode="jaccard")
     assert "skipped" not in r2["stats"]
 
 
@@ -1673,7 +1725,15 @@ def _skew_corpus(spark):
     return open_docs.unionByName(spam)
 
 
-def test_route_prefix_join_skew_hot_block(spark):
+def _force_router_sample(monkeypatch, p):
+    """Make route_prefix_join probe at exactly ``p`` whatever the
+    corpus size."""
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_SMALL_CORPUS_DOCS", 0)
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_TARGET_SAMPLED_DOCS", 0)
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_SAMPLE_FRACTION", p)
+
+
+def test_route_prefix_join_skew_hot_block(spark, monkeypatch):
     """r14 VERDICT task #5 'Done' gate: a saturated subdomain inside
     a Heaps'-law corpus must route banded even though the corpus
     MEAN stays under the per-mode cap. Exact tier (n <= 200k uses
@@ -1682,9 +1742,8 @@ def test_route_prefix_join_skew_hot_block(spark):
     so no flake) must both flag the spam block."""
     sh = _skew_corpus(spark)
     cap = dedup_ops.PREFIX_ROUTER_MAX_PREFIX_PER_DOC["jaccard"]
-    r = dedup_ops.route_prefix_join(
-        sh, 0.3, mode="jaccard", min_total=1000.0
-    )
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 1000.0)
+    r = dedup_ops.route_prefix_join(sh, 0.3, mode="jaccard")
     # the pre-skew mean rule would have said "exact":
     assert r["est_prefix_per_doc"] < cap
     assert r["strategy"] == "banded"
@@ -1694,9 +1753,9 @@ def test_route_prefix_join_skew_hot_block(spark):
     assert hb["n_docs"] == 300
     # sampled tier: the per-block decomposition of the two-sample
     # estimator reaches the same decision
-    r2 = dedup_ops.route_prefix_join(
-        sh, 0.3, mode="jaccard", min_total=1000.0, sample_fraction=0.5
-    )
+    _force_router_sample(monkeypatch, 0.5)
+    r2 = dedup_ops.route_prefix_join(sh, 0.3, mode="jaccard")
+    assert r2["stats"]["sampled"] == 0.5
     assert r2["est_prefix_per_doc"] < cap
     assert r2["strategy"] == "banded"
     hb2 = r2["hot_block"]
@@ -1754,7 +1813,9 @@ def _host_skew_corpus(spark):
     return open_docs.unionByName(spam)
 
 
-def test_route_prefix_join_host_axis_detects_per_host_spam(spark):
+def test_route_prefix_join_host_axis_detects_per_host_spam(
+    spark, monkeypatch
+):
     """r15 VERDICT #4 'Done' gate: template spam on ONE HOST inside a
     same-lang Heaps'-law corpus. The lang axis (single 'en' block ==
     the corpus mean) reads clean and routes exact — the host axis
@@ -1763,15 +1824,13 @@ def test_route_prefix_join_host_axis_detects_per_host_spam(spark):
     between the two probes."""
     sh = _host_skew_corpus(spark)
     cap = dedup_ops.PREFIX_ROUTER_MAX_PREFIX_PER_DOC["jaccard"]
-    r_lang = dedup_ops.route_prefix_join(
-        sh, 0.3, mode="jaccard", min_total=1000.0
-    )
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 1000.0)
+    r_lang = dedup_ops.route_prefix_join(sh, 0.3, mode="jaccard")
     assert r_lang["est_prefix_per_doc"] < cap
     assert r_lang["strategy"] == "exact"
     assert r_lang["hot_block"] is None
     r_host = dedup_ops.route_prefix_join(
-        sh, 0.3, mode="jaccard", min_total=1000.0,
-        route_block_col="host",
+        sh, 0.3, mode="jaccard", route_block_col="host"
     )
     # same join, same global estimate (exact tier: both are the true
     # pre-positional-filter volume of the lang-blocked join)
@@ -1783,10 +1842,11 @@ def test_route_prefix_join_host_axis_detects_per_host_spam(spark):
     assert hb["est_prefix_per_doc"] > cap
     assert r_host["stats"]["route_block_col"] == "host"
     # sampled tier reaches the same decision on the host axis
+    _force_router_sample(monkeypatch, 0.5)
     r_s = dedup_ops.route_prefix_join(
-        sh, 0.3, mode="jaccard", min_total=1000.0,
-        sample_fraction=0.5, route_block_col="host",
+        sh, 0.3, mode="jaccard", route_block_col="host"
     )
+    assert r_s["stats"]["sampled"] == 0.5
     assert r_s["strategy"] == "banded"
     assert r_s["hot_block"]["block"] == "spam-farm.example.com"
 
@@ -1804,11 +1864,9 @@ def test_host_axis_block_decomposition_invariants(spark):
         )
     )
     for mode in ("jaccard", "containment"):
-        plain = dedup_ops.prefix_candidate_stats(
-            sh, 0.3, mode=mode, exact=True
-        )
+        plain = dedup_ops.prefix_candidate_stats(sh, 0.3, mode=mode)
         routed = dedup_ops.prefix_candidate_stats(
-            sh, 0.3, mode=mode, exact=True, route_block_col="host"
+            sh, 0.3, mode=mode, route_block_col="host"
         )
         assert (
             routed["est_candidates_prefix"]
@@ -1816,8 +1874,8 @@ def test_host_axis_block_decomposition_invariants(spark):
         )
         assert routed["prefix_postings"] == plain["prefix_postings"]
         assert (
-            routed["distinct_prefix_keys"]
-            == plain["distinct_prefix_keys"]
+            routed["distinct_prefix_keys_sampled"]
+            == plain["distinct_prefix_keys_sampled"]
         )
         block_sum = sum(
             b["est_candidates_prefix"] for b in routed["blocks"]
@@ -1830,7 +1888,7 @@ def test_host_axis_block_decomposition_invariants(spark):
             assert block_sum <= routed["est_candidates_prefix"] + 1e-9
 
 
-def test_sampled_top_blocks_rank_eligible_first(spark):
+def test_sampled_top_blocks_rank_eligible_first(spark, monkeypatch):
     """r15 ADVICE (medium): >20 under-sampled blocks whose 1/p²-
     rescaled per-doc values are pure coincidence noise must NOT crowd
     an adequately-sampled hot block out of the bounded top-blocks
@@ -1838,7 +1896,8 @@ def test_sampled_top_blocks_rank_eligible_first(spark):
     pure-per-doc ordering it silently fell back to the corpus-mean
     rule in exactly the host-skew case the rule exists for."""
     p = 0.1
-    # ids the deterministic id-hash sampler (seed=7) keeps at p=0.1
+    # ids the deterministic id-hash sampler (salt 7) keeps at p=0.1
+    assert dedup_ops.PREFIX_STATS_SEED == 7
     sampled_ids = [
         r["id"]
         for r in spark.range(2_000_000, 2_200_000)
@@ -1895,10 +1954,12 @@ def test_sampled_top_blocks_rank_eligible_first(spark):
     )
     sh = bulk.unionByName(hot).unionByName(noise)
     cap = dedup_ops.PREFIX_ROUTER_MAX_PREFIX_PER_DOC["jaccard"]
+    monkeypatch.setattr(dedup_ops, "PREFIX_ROUTER_MIN_TOTAL", 500.0)
+    _force_router_sample(monkeypatch, p)
     r = dedup_ops.route_prefix_join(
-        sh, 0.3, mode="jaccard", min_total=500.0,
-        sample_fraction=p, route_block_col="host",
+        sh, 0.3, mode="jaccard", route_block_col="host"
     )
+    assert r["stats"]["sampled"] == p
     assert r["est_prefix_per_doc"] < cap  # mean rule alone says exact
     blocks = r["stats"]["blocks"]
     noisy_reported = [

@@ -164,6 +164,20 @@ def test_jaccard_prefix_join_no_cartesian(spark, sf_dir):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
+@pytest.mark.parametrize("slug", ["ann_pq_batch", "ann_ivfpq_batch"])
+def test_batch_rerank_scans_embeddings_once(spark, sf_dir, slug):
+    """The batch rerank takes its query vectors from the collected
+    serving batch: the embeddings table is scanned once (the rerank's
+    hydration), with no second scan under the query broadcast."""
+    import re
+
+    from vfs_spark.queries.registry import QUERIES
+
+    plan = ex.formatted_plan(QUERIES[slug](spark, sf_dir))
+    scans = re.findall(r"Location: InMemoryFileIndex[^\n]*embeddings", plan)
+    assert len(scans) == 1, plan
+
+
 def test_sql_exists_decorrelates_to_semi_join(spark, sf_dir):
     from vfs_spark.queries.registry import QUERIES
 

@@ -1305,6 +1305,36 @@ def test_cluster_manifest_key_tracks_data_changes(spark, tmp_path):
     assert k1[:2] == k2[:2]  # same app + path — the fingerprint moved
 
 
+def test_cluster_manifest_key_sees_nested_files(spark, tmp_path):
+    """A partitioned documents table keeps its files under nested
+    partition directories. The key lists them like the schema memo
+    does, so rewriting one nested file moves it (a top-level listing
+    sees only directories and keys every such table the same)."""
+    import glob
+    import os
+    import time as _time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vfs_spark.queries.text import _manifest_key
+
+    path = os.path.join(str(tmp_path), "documents.parquet")
+    pq.write_to_dataset(
+        pa.table(
+            {"doc_id": [1, 2], "text": ["a b c", "d e f"], "lang": ["en", "de"]}
+        ),
+        path,
+        partition_cols=["lang"],
+    )
+    k1 = _manifest_key(spark, str(tmp_path))
+    assert k1[2]  # the nested files are listed
+    _time.sleep(0.05)  # mtime_ns resolution guard
+    (nested,) = glob.glob(os.path.join(path, "lang=en", "*.parquet"))
+    pq.write_table(pa.table({"doc_id": [1, 3], "text": ["x y z", "u v w"]}), nested)
+    assert _manifest_key(spark, str(tmp_path)) != k1
+
+
 def test_cluster_manifest_cache_evicts_superseded_fingerprints(
     spark, tmp_path
 ):

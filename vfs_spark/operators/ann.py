@@ -732,19 +732,20 @@ def _rerank(
 def _rerank_batch(
     full_df: DataFrame,
     pairs: DataFrame,
-    queries_df: DataFrame,
+    qrows: list,
     k: int,
     id_col: str,
     vec_col: str,
     query_id_col: str,
-    query_vec_col: str,
 ) -> DataFrame:
     """The batch rerank stage: only the shortlisted (query, candidate)
     ``pairs`` hydrate float vectors (broadcast of |Q|·shortlist id
     pairs — the big table never shuffles) and are re-scored exactly
-    against their own query."""
-    qv = queries_df.select(
-        query_id_col, F.col(query_vec_col).cast("array<double>").alias("_qv")
+    against their own query, taken from the collected serving batch
+    ``qrows`` rather than a second read of the query table."""
+    qids, Q = query_matrix(qrows)
+    qv = full_df.sparkSession.createDataFrame(
+        list(zip(qids.tolist(), Q.tolist())), f"{query_id_col} long, _qv array<double>"
     )
     exact = (
         full_df.select(id_col, vec_col)
@@ -830,7 +831,7 @@ def pq_search_rerank_batch(
     encoded_df: DataFrame,
     full_df: DataFrame,
     codebooks,
-    queries_df: DataFrame,
+    queries_df: DataFrame | list,
     k: int = 10,
     shortlist: int = 100,
     id_col: str = "vec_id",
@@ -841,19 +842,19 @@ def pq_search_rerank_batch(
     """Batch two-stage serving: the ADC kernel shortlists `shortlist`
     candidates per query from codes alone, then only those (query,
     candidate) pairs are reranked exactly. The batch twin of
-    pq_search_rerank with the same output per query."""
+    pq_search_rerank with the same output per query. The queries are
+    collected once (or passed pre-collected, see collect_serving_batch)
+    and feed both stages."""
+    qrows = collect_serving_batch(queries_df, query_id_col, query_vec_col)
+    if not qrows:
+        return encoded_df.sparkSession.createDataFrame(
+            [], serving_schema(query_id_col, id_col)
+        )
     cand = pq_search_batch_arrow(
-        encoded_df,
-        codebooks,
-        queries_df,
-        k=shortlist,
-        id_col=id_col,
+        encoded_df, codebooks, qrows, k=shortlist, id_col=id_col,
         query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
     )
-    return _rerank_batch(
-        full_df, cand, queries_df, k, id_col, vec_col, query_id_col, query_vec_col
-    )
+    return _rerank_batch(full_df, cand, qrows, k, id_col, vec_col, query_id_col)
 
 
 def ivfpq_search(
@@ -891,7 +892,7 @@ def ivfpq_search_batch(
     assigned_encoded_df: DataFrame,
     full_df: DataFrame,
     codebooks,
-    queries_df: DataFrame,
+    queries_df: DataFrame | list,
     k: int = 10,
     nprobe: int = 4,
     shortlist: int = 100,
@@ -913,7 +914,9 @@ def ivfpq_search_batch(
     per-query candidate semantics match the single-query form while
     the scan cost is shared by the whole batch. Only per-batch
     shortlists (≤ shortlist·|Q| rows per partition) leave the kernel;
-    float vectors hydrate for the |Q|·shortlist rerank pairs alone."""
+    float vectors hydrate for the |Q|·shortlist rerank pairs alone.
+    ``queries_df`` may be a pre-collected list (see
+    collect_serving_batch)."""
     import numpy as np
 
     qrows = collect_serving_batch(queries_df, query_id_col, query_vec_col)
@@ -941,9 +944,7 @@ def ivfpq_search_batch(
         query_id_col,
         id_col,
     )
-    return _rerank_batch(
-        full_df, short, queries_df, k, id_col, vec_col, query_id_col, query_vec_col
-    )
+    return _rerank_batch(full_df, short, qrows, k, id_col, vec_col, query_id_col)
 
 
 def pq_codes(X, codebooks):

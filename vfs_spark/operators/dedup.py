@@ -589,6 +589,49 @@ def _prefix_join(
         ).localCheckpoint(eager=True)
 
 
+def _hashed_postings(
+    sh: DataFrame, id_col: str, block_col: str, set_col: str, *extra
+) -> DataFrame:
+    """One row per (doc, element): ``id_col``, the join block ``_blk``,
+    any ``extra`` columns, the set size ``_n`` and the element's 8-byte
+    key ``_g``. The element is hashed in the array domain BEFORE
+    exploding: a generator can't nest inside xxhash64(...), and
+    transform keeps the hashing in the same scan-stage projection."""
+    return sh.select(
+        F.col(id_col),
+        F.col(block_col).alias("_blk"),
+        *extra,
+        F.size(set_col).alias("_n"),
+        F.explode(
+            F.transform(F.col(set_col), lambda g: F.xxhash64(g))
+        ).alias("_g"),
+    )
+
+
+def _key_df(postings: DataFrame) -> DataFrame:
+    """Per-(block, key) document frequency ``_df`` of hashed postings."""
+    return postings.groupBy("_blk", "_g").agg(F.count("*").alias("_df"))
+
+
+def _ranked_postings(
+    postings: DataFrame, key_df: DataFrame, id_col: str, how: str = "inner"
+) -> DataFrame:
+    """Postings joined to their key frequencies ``_df`` and ranked
+    ``_rn`` within each doc by (frequency, key) — the global order every
+    prefix is cut from."""
+    w = Window.partitionBy(id_col).orderBy("_df", "_g")
+    return postings.join(key_df, ["_blk", "_g"], how).withColumn(
+        "_rn", F.row_number().over(w)
+    )
+
+
+def _prefix_len(t: float):
+    """The prefix length n − ⌊t·n⌋ + 1 of a set of size ``_n``: a pair
+    meeting the (relaxed) threshold t shares an element within it (in
+    both prefixes for jaccard, in the smaller set's for containment)."""
+    return F.col("_n") - F.floor(F.lit(t) * F.col("_n")).cast("int") + F.lit(1)
+
+
 def jaccard_pairs_prefix(
     sh: DataFrame,
     threshold: float,
@@ -655,28 +698,10 @@ def _jaccard_prefix_plan(
     # relaxed pruning bound: admits raw-jaccard values that round up
     # to the caller's threshold at 6 decimals (and a safety margin)
     t = max(threshold - 0.01, 0.0)
-    ex = sh.select(
-        F.col(id_col),
-        F.col(block_col).alias("_blk"),
-        F.size(set_col).alias("_n"),
-        # hash in the array domain BEFORE exploding: a generator can't
-        # nest inside xxhash64(...), and transform keeps the hashing
-        # in the same scan-stage projection
-        F.explode(
-            F.transform(F.col(set_col), lambda g: F.xxhash64(g))
-        ).alias("_g"),
-    )
-    dfreq = ex.groupBy("_blk", "_g").agg(F.count("*").alias("_df"))
-    w = Window.partitionBy(id_col).orderBy("_df", "_g")
-    plen = (
-        F.col("_n")
-        - F.floor(F.lit(t) * F.col("_n")).cast("int")
-        + F.lit(1)
-    )
+    ex = _hashed_postings(sh, id_col, block_col, set_col)
     pref = (
-        ex.join(dfreq, ["_blk", "_g"])
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= plen)
+        _ranked_postings(ex, _key_df(ex), id_col)
+        .where(F.col("_rn") <= _prefix_len(t))
         .select(
             "_blk", "_g", F.col(id_col).alias("_id"), "_n", "_rn"
         )
@@ -811,30 +836,14 @@ def _containment_prefix_plan(
     """The distributed containment prefix join over distinct-element
     sets, as a lazy plan (see containment_pairs_prefix)."""
     t = max(threshold - 0.01, 0.0)
-    ex = sh.select(
-        F.col(id_col),
-        F.col(block_col).alias("_blk"),
-        F.size(set_col).alias("_n"),
-        F.explode(
-            F.transform(F.col(set_col), lambda g: F.xxhash64(g))
-        ).alias("_g"),
-    )
-    dfreq = ex.groupBy("_blk", "_g").agg(F.count("*").alias("_df"))
-    w = Window.partitionBy(id_col).orderBy("_df", "_g")
+    ex = _hashed_postings(sh, id_col, block_col, set_col)
     # FULL postings with each element's rank in the doc's global
     # frequency order — the larger role probes all of them, and the
     # rank feeds the positional filter on both sides
-    full = (
-        ex.join(dfreq, ["_blk", "_g"])
-        .withColumn("_rn", F.row_number().over(w))
-        .select("_blk", "_g", F.col(id_col).alias("_id"), "_n", "_rn")
+    full = _ranked_postings(ex, _key_df(ex), id_col).select(
+        "_blk", "_g", F.col(id_col).alias("_id"), "_n", "_rn"
     )
-    plen = (
-        F.col("_n")
-        - F.floor(F.lit(t) * F.col("_n")).cast("int")
-        + F.lit(1)
-    )
-    pref = full.where(F.col("_rn") <= plen)
+    pref = full.where(F.col("_rn") <= _prefix_len(t))
     s, l = pref.alias("s"), full.alias("l")  # noqa: E741 — l = larger role
     # overlap target α = ceil(t·m), m = the smaller set's size; the
     # −1e-9 guards the ceil against float round-up tightening α by 1
@@ -894,10 +903,7 @@ def prefix_candidate_stats(
     id_col: str = "doc_id",
     block_col: str = "lang",
     set_col: str = "shingles",
-    exact: bool = False,
     sample_fraction: float | None = None,
-    seed: int = 7,
-    df_sample_factor: float = 10.0,
     route_block_col: str | None = None,
 ):
     """Pre-flight for the exact prefix joins: ESTIMATE the candidate
@@ -909,412 +915,219 @@ def prefix_candidate_stats(
     corpora keep it near-linear. This probe turns that caveat into a
     DECISION INPUT: route to the exact prefix join when the estimate
     is sane, to the banded/anchored probabilistic twin when the
-    corpus is degenerate — the warn-and-fallback discipline of
-    embedding_banded_pairs' no-contrast BRP guard, decided BEFORE
-    the expensive stage instead of inside it.
+    corpus is degenerate — decided BEFORE the expensive stage instead
+    of inside it.
 
-    Two tiers, because the router must be CHEAPER than what it
-    routes (measured at 5M docs, SCALE.md r13):
-    - default (exact=False): one explode + one groupBy — NO per-doc
-      rank window, no second corpus pass. Bounds candidates by ALL
-      postings: Σ_g C(df_g, 2) (jaccard) / Σ_g df_g·(df_g − 1)
-      (containment). A strict upper bound on the prefix join's
-      candidates (prefix postings ⊆ postings). Measured at 5M docs:
-      3,956 cpu-s vs the full join's 5,912 (0.67×) — the routing
-      tier. The bound is LOOSE (1.095B at 5M vs the prefix volume's
-      12.5M: common elements dominate Σ C(df,2) but rarely enter
-      prefixes), so it errs toward routing to the banded twin —
-      whose recall-gated output is the acceptable fallback, making
-      the loose direction the safe direction.
-    - exact=True: additionally runs the join's own prefix pipeline
-      (dfreq join → per-doc rank → prefix postings) and reports
-      Σ_g C(pref_df_g, 2) / Σ_g pref_df_g·(df_g − 1) — the exact
-      pre-positional-filter volume (validated: 12,527,370 at 5M docs
-      vs the r12 probe's 12.5M; the positional filter then prunes
-      11-22× below it). Measured 12,550 cpu-s at 5M — MORE than the
-      join itself; this is the calibration tier for ladder analysis,
-      never the router.
+    One estimator over a doc sample A drawn at rate p =
+    ``sample_fraction`` (None means 1: every doc):
+    - ``est_candidates_upper``: one explode + one groupBy over A's
+      postings, Σ_g C(df_g, 2) (jaccard) / Σ_g df_g·(df_g − 1)
+      (containment), rescaled by 1/p² (each unordered doc pair
+      survives sampling with probability p², so the rescaled sum is
+      unbiased by linearity over pairs). At p = 1 it bounds the prefix
+      join's candidates from above (prefix postings ⊆ postings), but
+      loosely: common elements dominate Σ C(df,2) and rarely enter
+      prefixes, so it reads ~the same per doc on saturated and
+      Heaps'-law corpora (224 vs 252 at 5M docs, r14) and cannot route.
+    - ``est_candidates_prefix``, the ROUTING statistic: the join's own
+      pre-positional-filter volume Σ_g C(pref_df_g, 2) (jaccard) /
+      Σ_g pref_df_g·(df_g − 1) (containment). Pair counting runs on A,
+      but prefix MEMBERSHIP ranks by df̂ = cnt_B/q from an INDEPENDENT
+      larger sample B (rate q = min(1, PREFIX_STATS_DF_SAMPLE_FACTOR·p),
+      another hash salt), so a true-df-100 key reads df̂≈100 whether or
+      not its colliding docs landed in A, and the rank filter keeps or
+      excludes it for the same reason the full join would. Ranking by
+      A's own in-sample df is biased LOW: the r14 router_probe measured
+      it ~20× under the full volume at 5M docs and identical on
+      saturated and Heaps'-law corpora, because a key shared by two
+      sampled docs reads in-sample df ≥ 2 while their other keys read 1,
+      so the lowest-df-first prefix excludes exactly the keys that
+      generate candidates. Jaccard rescales 1/p² (pairs in A),
+      containment 1/p (A's prefix postings; df̂ is already in corpus
+      units).
 
-    ``sample_fraction``: sub-sample DOCS at rate p before tier 1 and
-    rescale the pair-sum by 1/p² (each unordered doc pair survives
-    sampling with probability p², and Σ C(df,2) counts doc pairs per
-    key — so the rescaled sum is an unbiased estimator of the full
-    Σ C(df,2), by linearity over pairs). Measured at 5M docs on the
-    saturated corpus: p=0.01 → 73 cpu-s (54× below the full tier-1,
-    81× below the join) estimating 1.121B vs the true 1.095B (+2.3%);
-    p=0.05 → 163 cpu-s at −0.3%. This is the shape a 100 TB
-    pre-flight wants. An ESTIMATE, not a bound: variance concentrates
-    in the heaviest keys, which is exactly what the router exists to
-    detect, so p ≥ 0.01 distinguishes the two regimes reliably
-    (test-pinned at 12× separation margin on a 200-doc corpus; at
-    production scale millions of sampled docs make the relative error
-    tiny). Incompatible with exact=True (the prefix tier's per-doc
-    ranks are not sample-invariant, so the EXACT calibration tier is
-    full-corpus only).
+    At p = 1, B is the whole corpus (q = 1): df̂ = df and every figure
+    is exact. That is the calibration tier (12,527,370 at 5M docs, the
+    r12 probe's 12.5M; the positional filter then prunes 11-22× below
+    it), and it costs MORE than the join at that size (12,550 cpu-s),
+    so large corpora are probed at p < 1: at 5M saturated docs p = 0.01
+    took 73 cpu-s (81× below the join) with est_candidates_upper within
+    +2.3%, p = 0.05 163 cpu-s at −0.3%. Below p = 1 the figures are
+    ESTIMATES, not bounds: variance concentrates in the heaviest keys,
+    which is what the router exists to detect.
 
-    Sampled mode additionally reports ``est_candidates_prefix``
-    (r14): the ROUTING statistic — the r14 probe showed tier-1's
-    Σ C(df,2)/doc is ~IDENTICAL on saturated and Heaps'-law corpora
-    at equal n (224 vs 252 at 5M: the Zipf head dominates the sum on
-    both, and head keys never enter prefixes), so tier 1 alone
-    cannot route. It is a TWO-SAMPLE estimator, because the obvious
-    one-sample form (run the prefix pipeline on the doc sample, rank
-    by in-sample df, rescale 1/p²) is structurally biased LOW — the
-    r14 router_probe measured it ~20× under the exact tier-2 volume
-    at 5M docs AND corpus-indistinguishable (est_prefix literally
-    identical on saturated vs Heaps'-law at both rungs, reading only
-    the planted-dup floor). Mechanism: a collision-causing key shared
-    by two sampled docs has in-sample df ≥ 2 while the sampled docs'
-    other keys mostly read df=1, so the lowest-df-first prefix filter
-    preferentially EXCLUDES exactly the keys that generate
-    candidates. The fix decouples the two roles of df:
-    - pair COUNTING runs on the small doc sample A (rate p): per-key
-      Σ C(cnt_A,2)/p² (jaccard) — unbiased over doc pairs;
-    - prefix MEMBERSHIP ranks by df estimated from an INDEPENDENT
-      larger doc sample B (rate q = min(1, df_sample_factor·p),
-      different hash salt): df̂ = cnt_B/q, so a true-df-100 key reads
-      df̂≈100 whether or not its colliding docs landed in A, and the
-      rank filter keeps/excludes it for the same reason the full
-      join would. Keys absent from B rank as df̂=1 (rare tail —
-      bottom of the order, in the prefix, where the full join would
-      put them; their containment-mode weight (df̂−1)=0 undercounts
-      only the ~0-mass df≤2 tail).
-    Containment mode estimates Σ pref_df·(df−1) as
-    Σ cnt_A,pref·(df̂_B − 1)/p (A rescales 1/p; df̂ is already in
-    full-corpus units). Cost: one extra pass over the q-sample
-    postings (explode + groupBy, no window) + the p-sample window —
-    at df_sample_factor=10 the probe stays ~an order of magnitude
-    under the full tier-1 scan.
+    Samples are deterministic id-hash FILTERS (salt PREFIX_STATS_SEED
+    for A, +1 for B), not DataFrame.sample: a filter on the id column
+    alone is pushed below the caller's shingle projection, so the
+    expensive word_shingles / array_distinct run only for sampled rows
+    (DataFrame.sample sits ABOVE the projection; p = 0.01 cost 3,013
+    cpu-s ≈ the full pass that way), and the same (id, salt) always
+    lands on the same side, so re-probes are comparable. A is pinned
+    DISK_ONLY, so its four reads (postings, doc count, prefix ranking,
+    per-block doc counts) scan the input once.
 
-    Returns a dict: n_docs, postings, distinct_keys,
-    est_candidates_upper (tier 1), and with exact=True also
-    prefix_postings, distinct_prefix_keys, est_candidates_prefix.
-    Wherever est_candidates_prefix is computed (sampled tier 1.5 and
-    exact tier 2) the dict also carries ``blocks``: the top
-    PREFIX_STATS_MAX_BLOCKS blocks by per-doc prefix burden, each
+    Returns one dict. Magnitudes are in FULL-CORPUS units (counts 1/p,
+    the estimates as above), so a caller comparing fields never mixes
+    scales: n_docs, postings, prefix_postings, est_candidates_upper,
+    est_candidates_prefix. The raw counts in A ride along as
+    n_docs_sampled, postings_sampled, distinct_keys_sampled and
+    distinct_prefix_keys_sampled; distinct counts do not rescale
+    linearly (heavy keys survive sampling, rare keys vanish), so they
+    have no full-unit field. Also ``sampled`` (the argument),
+    ``df_sample_fraction`` (q), ``route_block_col`` and ``blocks``: the
+    top PREFIX_STATS_MAX_BLOCKS blocks by per-doc prefix burden, each
     with n_docs / n_docs_sampled / est_candidates_prefix /
-    est_prefix_per_doc in full-corpus units — an EXACT per-block
-    partition of the global estimate (every per-key term already
-    carries the block), feeding the router's skew rule.
+    est_prefix_per_doc in full-corpus units — an exact per-block
+    partition of the global estimate (every per-key term carries its
+    block), feeding the router's skew rule. Adequately-sampled blocks
+    (n_docs_sampled ≥ PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS) rank
+    FIRST: an under-sampled block's per-doc value is 1/p-inflated
+    noise that would otherwise crowd a genuinely hot block out of the
+    bounded report (r15 ADVICE).
 
     ``route_block_col`` (r15 VERDICT #4) decouples the SKEW axis from
     the JOIN's blocking: production web-corpus skew is per-HOST
     (template spam on one domain) while the join blocks per-lang, so
     the per-``lang`` detail dilutes the hot host into the megablock.
     When set, ``blocks`` decomposes along this column instead, while
-    the GLOBAL estimate still describes the ``block_col``-blocked
-    join (the per-key terms additionally carry the routing block and
-    are re-summed per key for the global figure — byte-identical to
-    the undecomposed estimate). Attribution semantics per mode:
-    containment terms are per-posting, so the routing split is an
-    exact partition; jaccard terms are per doc-PAIR, so a routing
-    block is credited its WITHIN-block pairs — a lower bound that is
-    tight for the template-spam failure mode (spam docs collide with
-    each other) and conservative only about cross-host mass, which
-    the unchanged global rule still catches. Default (None) keeps
-    blocks == join blocks, numerically identical to before. The
-    reported top blocks rank adequately-sampled blocks
-    (n_docs_sampled ≥ PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS) FIRST:
-    under-sampled blocks carry 1/p-inflated per-doc noise that would
-    otherwise crowd a genuinely hot, adequately-probed block out of
-    the top-PREFIX_STATS_MAX_BLOCKS report (r15 ADVICE), exactly in
-    the many-tiny-blocks host-routing case.
-    Inputs are pinned DISK_ONLY for the exact tier (two passes over
-    the exploded postings — same discipline as the joins)."""
+    the global estimate still describes the ``block_col``-blocked join
+    (per-key terms carry the routing block and are re-summed per key
+    for the global figure — identical to the undecomposed estimate).
+    Containment terms are per-posting, so the routing split is an
+    exact partition; jaccard terms are per doc-PAIR, so a routing block
+    is credited its WITHIN-block pairs — a lower bound that is tight
+    for template spam (spam docs collide with each other) and
+    conservative only about cross-host mass, which the global rule
+    still catches."""
     if mode not in ("jaccard", "containment"):
         raise ValueError(f"unknown mode {mode!r}")
-    if sample_fraction is not None:
-        if exact:
-            raise ValueError(
-                "sample_fraction applies to the tier-1 router only"
-            )
-        if not 0.0 < sample_fraction <= 1.0:
-            raise ValueError("sample_fraction must be in (0, 1]")
+    if sample_fraction is not None and not 0.0 < sample_fraction <= 1.0:
+        raise ValueError("sample_fraction must be in (0, 1]")
     t = max(threshold - 0.01, 0.0)
-    sh_base = sh  # unfiltered plan — the df-ranking B sample draws
-    # from the FULL corpus independently of the pair-counting sample
-    if sample_fraction is not None and sample_fraction < 1.0:
-        # deterministic id-hash Bernoulli sample as a FILTER, not
-        # DataFrame.sample: a filter on the id column alone is
-        # reordered below the caller's shingle projection by
-        # PushDownPredicate, so the expensive word_shingles /
-        # array_distinct expressions run only for sampled rows —
-        # DataFrame.sample sits ABOVE the projection and computes
-        # shingles for every row first (measured: p=0.01 cost 3,013
-        # cpu-s ≈ the full pass, before this form). Hash sampling is
-        # also replay-stable: the same (id, seed) always lands in
-        # the same half, so re-probes are comparable.
-        cut = int(sample_fraction * 1_000_000)
-        sh = sh.where(
-            F.abs(F.xxhash64(F.col(id_col), F.lit(seed))) % 1_000_000
-            < cut
-        )
+    p = sample_fraction or 1.0
+    q = min(1.0, PREFIX_STATS_DF_SAMPLE_FACTOR * p)
     rblk = route_block_col if route_block_col != block_col else None
-    sh = sh.select(
-        id_col,
-        block_col,
-        *([rblk] if rblk else []),
-        F.array_distinct(set_col).alias(set_col),
-    ).where(F.size(set_col) > 0)
-    with pinned(*([sh] if exact else []), level=StorageLevel.DISK_ONLY):
-        ex = sh.select(
-            F.col(id_col),
-            F.col(block_col).alias("_blk"),
+
+    def sets(rate, salt, *extra):
+        # the distinct non-empty sets of an id-hash sample at ``rate``
+        s = sh
+        if rate < 1.0:
+            s = s.where(
+                F.abs(F.xxhash64(F.col(id_col), F.lit(salt))) % 1_000_000
+                < int(rate * 1_000_000)
+            )
+        return s.select(
+            id_col, block_col, *extra, F.array_distinct(set_col).alias(set_col)
+        ).where(F.size(set_col) > 0)
+
+    def pair_sum(cnt, df):
+        # jaccard: doc pairs sharing a key, Σ C(cnt, 2); containment:
+        # each posting times the key's other docs, Σ cnt·(df − 1)
+        c = F.col(cnt)
+        return F.sum(c * (c - 1) / 2 if mode == "jaccard" else c * (F.col(df) - 1))
+
+    a = sets(p, PREFIX_STATS_SEED, *([rblk] if rblk else []))
+    with pinned(a, level=StorageLevel.DISK_ONLY):
+        ex = _hashed_postings(
+            a, id_col, block_col, set_col,
             F.col(rblk or block_col).alias("_rblk"),
-            F.size(set_col).alias("_n"),
-            F.explode(
-                F.transform(F.col(set_col), lambda g: F.xxhash64(g))
-            ).alias("_g"),
         )
-        dfreq = ex.groupBy("_blk", "_g").agg(F.count("*").alias("_df"))
-        if mode == "jaccard":
-            est_all = F.sum(F.col("_df") * (F.col("_df") - 1) / 2)
-        else:
-            est_all = F.sum(F.col("_df") * (F.col("_df") - 1))
-        row = dfreq.agg(
-            F.sum("_df").alias("postings"),
-            F.count("*").alias("distinct_keys"),
-            est_all.cast("double").alias("est_upper"),
-        ).first()
-        # All returned magnitudes are in FULL-CORPUS units (r13 ADVICE
-        # #2): in sampled mode n_docs/postings are rescaled by 1/p and
-        # est_candidates_upper by 1/p², so a caller comparing fields
-        # (est vs n_docs², est per doc) never mixes scales. The raw
-        # sampled counts ride along under *_sampled names. distinct_keys
-        # does NOT rescale linearly (heavy keys survive sampling, rare
-        # keys vanish), so sampled mode reports only
-        # distinct_keys_sampled — omitting the full-unit field beats
-        # shipping a silently-wrong one.
-        n_docs_raw = sh.count()
-        if sample_fraction is not None and sample_fraction < 1.0:
-            p = sample_fraction
-            out = {
-                "n_docs": int(round(n_docs_raw / p)),
-                "postings": int(round((row["postings"] or 0) / p)),
-                "n_docs_sampled": n_docs_raw,
-                "postings_sampled": row["postings"],
-                "distinct_keys_sampled": row["distinct_keys"],
-                "est_candidates_upper": float(row["est_upper"] or 0.0)
-                / (p * p),
-                "sampled": sample_fraction,
-            }
-            # tier 1.5: the TWO-SAMPLE prefix-aware estimate (the ROUTING
-            # statistic — see docstring): pair counting on the p-sample A
-            # (= `ex`), prefix membership ranked by df̂ from the
-            # independent q-sample B (different hash salt). Ranking by
-            # A's own in-sample df is the measured-20×-low bias the r14
-            # router_probe exposed.
-            q = min(1.0, df_sample_factor * p)
-            sh_b = sh_base
-            if q < 1.0:
-                cutq = int(q * 1_000_000)
-                sh_b = sh_b.where(
-                    F.abs(F.xxhash64(F.col(id_col), F.lit(seed + 1)))
-                    % 1_000_000
-                    < cutq
-                )
-            ex_b = (
-                sh_b.select(
-                    block_col, F.array_distinct(set_col).alias(set_col)
-                )
-                .where(F.size(set_col) > 0)
-                .select(
-                    F.col(block_col).alias("_blk"),
-                    F.explode(
-                        F.transform(F.col(set_col), lambda g: F.xxhash64(g))
-                    ).alias("_g"),
-                )
+        row = (
+            _key_df(ex)
+            .agg(
+                F.sum("_df").alias("postings"),
+                F.count("*").alias("distinct_keys"),
+                pair_sum("_df", "_df").cast("double").alias("est_upper"),
             )
-            dfreq_b = ex_b.groupBy("_blk", "_g").agg(
-                (F.count("*") / F.lit(q)).alias("_dfh")
-            )
-            w = Window.partitionBy(id_col).orderBy("_dfh", "_g")
-            plen = (
-                F.col("_n")
-                - F.floor(F.lit(t) * F.col("_n")).cast("int")
-                + F.lit(1)
-            )
-            # absent-from-B keys carry df̂=0: for RANKING that parks them
-            # at the bottom of the order (where the full pipeline parks
-            # the df=1 tail; ties break on _g either way), and for the
-            # containment WEIGHT it keeps E[df̂−1 | one A posting] = D−1
-            # exact — coalescing to df̂=1 instead gave every PRESENT
-            # singleton key (cnt_B=1 → df̂=1/q) a spurious (1/q − 1)
-            # weight, an additive ~(1−q)/q·E[present] ≈ 0.9-per-posting
-            # bias that the r14 probe measured swamping the containment
-            # signal (per_doc ~11.8 IDENTICAL on saturated and Heaps'-law
-            # corpora at every rung — pure rare-tail artifact, zero
-            # routing information). Negative per-key terms are kept (the
-            # unbiasedness needs them); only the aggregate is floored.
-            # Per-key terms grouped at (join block, key, ROUTING block)
-            # granularity: re-summing over _rblk recovers the exact
-            # per-(blk, g) counts for the GLOBAL estimate (byte-identical
-            # to the undecomposed form), while grouping by _rblk yields
-            # the skew detail along the routing axis (r14 VERDICT #5 /
-            # r15 VERDICT #4 — see docstring for the per-mode attribution
-            # semantics). pref_key is pinned for the two consumers; it is
-            # bounded by the p-sample's prefix postings (~50k target docs),
-            # not the corpus.
-            pref_key = (
-                ex.join(dfreq_b, ["_blk", "_g"], "left")
-                .withColumn("_dfh", F.coalesce("_dfh", F.lit(0.0)))
-                .withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= plen)
-                .groupBy("_blk", "_g", "_rblk")
-                .agg(F.count("*").alias("_p"), F.first("_dfh").alias("_dfh"))
-            )
-            if mode == "jaccard":
-                pest = F.sum(F.col("_p") * (F.col("_p") - 1) / 2) / F.lit(
-                    p * p
-                )
-            else:
-                pest = F.sum(
-                    F.col("_p") * (F.col("_dfh") - 1)
-                ) / F.lit(p)
-            with pinned(pref_key, level=StorageLevel.MEMORY_AND_DISK):
-                tot = (
-                    pref_key.groupBy("_blk", "_g")
-                    .agg(F.sum("_p").alias("_p"), F.first("_dfh").alias("_dfh"))
-                    .agg(pest.cast("double").alias("e"))
-                    .first()
-                )
-                blk_est = (
-                    pref_key.groupBy("_rblk")
-                    .agg(pest.cast("double").alias("_e"))
-                    .join(
-                        sh.groupBy(rblk or block_col)
-                        .agg(F.count("*").alias("_nb"))
-                        .withColumnRenamed(rblk or block_col, "_rblk"),
-                        "_rblk",
-                    )
-                )
-                # full-corpus units: _e is already rescaled (1/p² pairs or
-                # 1/p postings); block size rescales 1/p → per-doc = _e·p/_nb.
-                # Adequately-sampled blocks rank FIRST (r15 ADVICE): an
-                # under-sampled block's rescaled per-doc value is 1/p-inflated
-                # noise and must not crowd an eligible hot block out of the
-                # bounded report the router scans.
-                top = (
-                    blk_est.select(
-                        "_rblk",
-                        "_e",
-                        "_nb",
-                        (F.col("_e") * F.lit(p) / F.col("_nb")).alias("_pd"),
-                    )
-                    .orderBy(
-                        F.desc(
-                            F.col("_nb")
-                            >= F.lit(PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS)
-                        ),
-                        F.desc("_pd"),
-                    )
-                    .limit(PREFIX_STATS_MAX_BLOCKS)
-                    .collect()
-                )
-            out["est_candidates_prefix"] = max(float(tot["e"] or 0.0), 0.0)
-            out["df_sample_fraction"] = q
-            out["route_block_col"] = rblk or block_col
-            out["blocks"] = [
-                {
-                    "block": r["_rblk"],
-                    "n_docs": int(round(r["_nb"] / p)),
-                    "n_docs_sampled": int(r["_nb"]),
-                    "est_candidates_prefix": max(float(r["_e"] or 0.0), 0.0),
-                    "est_prefix_per_doc": max(float(r["_pd"] or 0.0), 0.0),
-                }
-                for r in top
-            ]
-            return out
-        else:
-            out = {
-                "n_docs": n_docs_raw,
-                "postings": row["postings"],
-                "distinct_keys": row["distinct_keys"],
-                "est_candidates_upper": float(row["est_upper"] or 0.0),
-                "sampled": sample_fraction,
-            }
-        if not exact:
-            return out
-        w = Window.partitionBy(id_col).orderBy("_df", "_g")
-        plen = (
-            F.col("_n")
-            - F.floor(F.lit(t) * F.col("_n")).cast("int")
-            + F.lit(1)
+            .first()
         )
-        # exact tier gets the same per-block decomposition as the sampled
-        # tier (skew-awareness), at the same (join block, key, routing
-        # block) granularity: global fields come from the per-key re-sum
-        # (byte-identical to the undecomposed estimate), skew detail from
-        # the _rblk grouping. pref_key (one row per prefix key × routing
-        # block) is pinned for the two consumers — DISK_ONLY, the
-        # exact-tier discipline (this is the calibration tier, never the
-        # router).
+        n_docs = a.count()
+        b = ex if p >= 1.0 else _hashed_postings(
+            sets(q, PREFIX_STATS_SEED + 1), id_col, block_col, set_col
+        )
+        # Keys absent from B (a left-join miss) rank first, where the
+        # full join ranks the df=1 tail, ties broken on _g either way;
+        # their containment weight uses df̂=0, which keeps E[df̂−1 | one
+        # A posting] = D−1 exact — df̂=1 gave every PRESENT singleton
+        # key (cnt_B=1 → df̂=1/q) a spurious (1/q − 1) weight that the
+        # r14 probe measured swamping the containment signal. Negative
+        # per-key terms are kept (unbiasedness needs them); only the
+        # totals are floored. One row per (join block, key, routing
+        # block): re-summing over _rblk gives the per-key terms of the
+        # global estimate, grouping by _rblk the skew detail. It is
+        # pinned for its two consumers and bounded by A's prefix
+        # postings.
         pref_key = (
-            ex.join(dfreq.select("_blk", "_g", "_df"), ["_blk", "_g"])
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= plen)
+            _ranked_postings(ex, _key_df(b), id_col, "left")
+            .where(F.col("_rn") <= _prefix_len(t))
             .groupBy("_blk", "_g", "_rblk")
-            .agg(F.count("*").alias("_p"), F.first("_df").alias("_df"))
+            .agg(
+                F.count("*").alias("_p"),
+                (F.coalesce(F.first("_df"), F.lit(0)) / F.lit(q)).alias("_dfh"),
+            )
         )
-        if mode == "jaccard":
-            est = F.sum(F.col("_p") * (F.col("_p") - 1) / 2)
-        else:
-            est = F.sum(F.col("_p") * (F.col("_df") - 1))
-        with pinned(pref_key, level=StorageLevel.DISK_ONLY):
-            prow = (
+        pest = pair_sum("_p", "_dfh") / F.lit(p * p if mode == "jaccard" else p)
+        with pinned(pref_key, level=StorageLevel.MEMORY_AND_DISK):
+            tot = (
                 pref_key.groupBy("_blk", "_g")
-                .agg(F.sum("_p").alias("_p"), F.first("_df").alias("_df"))
+                .agg(F.sum("_p").alias("_p"), F.first("_dfh").alias("_dfh"))
                 .agg(
                     F.sum("_p").alias("prefix_postings"),
                     F.count("*").alias("distinct_prefix_keys"),
-                    est.cast("double").alias("est_prefix"),
+                    pest.cast("double").alias("e"),
                 )
                 .first()
             )
-            blk = (
+            # per-doc burden in full-corpus units: _e is rescaled, the
+            # block's sampled doc count _nb rescales 1/p
+            top = (
                 pref_key.groupBy("_rblk")
-                .agg(est.cast("double").alias("_e"))
+                .agg(pest.cast("double").alias("_e"))
                 .join(
-                    sh.groupBy(rblk or block_col)
+                    a.groupBy(rblk or block_col)
                     .agg(F.count("*").alias("_nb"))
                     .withColumnRenamed(rblk or block_col, "_rblk"),
                     "_rblk",
                 )
-            )
-            top = (
-                blk.select(
-                    "_rblk", "_e", "_nb",
-                    (F.col("_e") / F.col("_nb")).alias("_pd"),
+                .select(
+                    "_rblk",
+                    "_e",
+                    "_nb",
+                    (F.col("_e") * F.lit(p) / F.col("_nb")).alias("_pd"),
                 )
                 .orderBy(
                     F.desc(
-                        F.col("_nb")
-                        >= F.lit(PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS)
+                        F.col("_nb") >= F.lit(PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS)
                     ),
                     F.desc("_pd"),
                 )
                 .limit(PREFIX_STATS_MAX_BLOCKS)
                 .collect()
             )
-        out.update(
+    return {
+        "n_docs": int(round(n_docs / p)),
+        "postings": int(round((row["postings"] or 0) / p)),
+        "prefix_postings": int(round((tot["prefix_postings"] or 0) / p)),
+        "n_docs_sampled": n_docs,
+        "postings_sampled": row["postings"],
+        "distinct_keys_sampled": row["distinct_keys"],
+        "distinct_prefix_keys_sampled": tot["distinct_prefix_keys"],
+        "est_candidates_upper": float(row["est_upper"] or 0.0) / (p * p),
+        "est_candidates_prefix": max(float(tot["e"] or 0.0), 0.0),
+        "sampled": sample_fraction,
+        "df_sample_fraction": q,
+        "route_block_col": rblk or block_col,
+        "blocks": [
             {
-                "prefix_postings": prow["prefix_postings"],
-                "distinct_prefix_keys": prow["distinct_prefix_keys"],
-                "est_candidates_prefix": float(prow["est_prefix"] or 0.0),
-                "route_block_col": rblk or block_col,
-                "blocks": [
-                    {
-                        "block": r["_rblk"],
-                        "n_docs": int(r["_nb"]),
-                        "n_docs_sampled": int(r["_nb"]),
-                        "est_candidates_prefix": float(r["_e"] or 0.0),
-                        "est_prefix_per_doc": float(r["_pd"] or 0.0),
-                    }
-                    for r in top
-                ],
+                "block": r["_rblk"],
+                "n_docs": int(round(r["_nb"] / p)),
+                "n_docs_sampled": int(r["_nb"]),
+                "est_candidates_prefix": max(float(r["_e"] or 0.0), 0.0),
+                "est_prefix_per_doc": max(float(r["_pd"] or 0.0), 0.0),
             }
-        )
-        return out
+            for r in top
+        ],
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -1324,9 +1137,9 @@ def prefix_candidate_stats(
 # 49 GB scratch spill at 20M docs on the closed-vocab corpus) — gets
 # a measured pre-flight DECISION instead of a docstring caveat.
 #
-# Routing statistic: est_candidates_prefix (tier 1.5 of
-# prefix_candidate_stats) — the pre-positional-filter volume of the
-# join itself. Tier-1's Σ C(df,2) cannot route: the r14 probe
+# Routing statistic: est_candidates_prefix of prefix_candidate_stats
+# — the pre-positional-filter volume of the join itself. The
+# all-postings Σ C(df,2) (est_candidates_upper) cannot route: the r14 probe
 # measured it ~IDENTICAL per doc on saturated vs Heaps'-law corpora
 # at equal n (224 vs 252 at 5M docs) because the Zipf head dominates
 # the sum on both and head keys never enter prefixes.
@@ -1356,6 +1169,10 @@ def prefix_candidate_stats(
 # (RECALL_r*.json), so a false "degenerate" routes to an acceptable
 # probabilistic path; a false "fine" merely pays spill the ladder
 # already survived one doubling past the cap's survived anchor.
+#
+# The caps, the floor and the sampling rule are code constants like
+# dispatch.DRIVER_MAX: a test that needs another value monkeypatches
+# the module attribute.
 
 PREFIX_ROUTER_SAMPLE_FRACTION = 0.01
 PREFIX_ROUTER_TARGET_SAMPLED_DOCS = 50_000
@@ -1386,6 +1203,11 @@ PREFIX_ROUTER_MAX_PREFIX_PER_DOC = {
 # blocking) stays collect-bounded.
 PREFIX_STATS_MAX_BLOCKS = 20
 PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS = 100
+# prefix_candidate_stats' samples: A's id-hash salt (B uses salt + 1)
+# and B's rate as a multiple of A's. At 10× the df-ranking pass stays
+# ~an order of magnitude under a full postings scan.
+PREFIX_STATS_SEED = 7
+PREFIX_STATS_DF_SAMPLE_FACTOR = 10.0
 
 
 def route_prefix_join(
@@ -1395,19 +1217,15 @@ def route_prefix_join(
     id_col: str = "doc_id",
     block_col: str = "lang",
     set_col: str = "shingles",
-    max_prefix_per_doc: float | None = None,
-    min_total: float | None = None,
-    sample_fraction: float | None = None,
-    df_sample_factor: float = 10.0,
     route_block_col: str | None = None,
 ) -> dict:
     """Pre-flight routing decision for an exact prefix self-join.
 
-    Probes the corpus with prefix_candidate_stats — EXACT tier on
-    small corpora (≤ PREFIX_ROUTER_SMALL_CORPUS_DOCS, where the full
-    prefix pipeline costs seconds), sampled tier 1.5 above it (p
-    chosen so ~PREFIX_ROUTER_TARGET_SAMPLED_DOCS docs are probed,
-    floored at PREFIX_ROUTER_SAMPLE_FRACTION — the 73-cpu-s shape
+    Probes the corpus with prefix_candidate_stats — at p = 1 (exact)
+    on small corpora (≤ PREFIX_ROUTER_SMALL_CORPUS_DOCS, where the full
+    prefix pipeline costs seconds), sampled above it (p chosen so
+    ~PREFIX_ROUTER_TARGET_SAMPLED_DOCS docs are probed, floored at
+    PREFIX_ROUTER_SAMPLE_FRACTION — the 73-cpu-s shape
     measured at 5M docs in r13) — and applies the calibrated
     decision rule documented above, PLUS the per-block hot-spot rule
     (route banded when any single block with ≥
@@ -1428,12 +1246,8 @@ def route_prefix_join(
     prefix_candidate_stats for the per-mode attribution)."""
     if mode not in PREFIX_ROUTER_MAX_PREFIX_PER_DOC:
         raise ValueError(f"unknown mode {mode!r}")
-    cap = (
-        PREFIX_ROUTER_MAX_PREFIX_PER_DOC[mode]
-        if max_prefix_per_doc is None
-        else max_prefix_per_doc
-    )
-    floor = PREFIX_ROUTER_MIN_TOTAL if min_total is None else min_total
+    cap = PREFIX_ROUTER_MAX_PREFIX_PER_DOC[mode]
+    floor = PREFIX_ROUTER_MIN_TOTAL
     n = sh.where(F.size(set_col) > 0).count()
     # short-circuit: even the ALL-PAIRS volume C(n,2) cannot cross the
     # absolute floor, so no probe result could ever route banded —
@@ -1449,19 +1263,10 @@ def route_prefix_join(
             "min_total": floor,
             "stats": {"skipped": "C(n,2) <= min_total"},
         }
-    if sample_fraction is None:
-        if n <= PREFIX_ROUTER_SMALL_CORPUS_DOCS:
-            sample_fraction = None  # exact tier
-        else:
-            sample_fraction = min(
-                1.0,
-                max(
-                    PREFIX_ROUTER_SAMPLE_FRACTION,
-                    PREFIX_ROUTER_TARGET_SAMPLED_DOCS / n,
-                ),
-            )
-    elif sample_fraction >= 1.0:
-        sample_fraction = None
+    p = None if n <= PREFIX_ROUTER_SMALL_CORPUS_DOCS else min(
+        1.0,
+        max(PREFIX_ROUTER_SAMPLE_FRACTION, PREFIX_ROUTER_TARGET_SAMPLED_DOCS / n),
+    )
     stats = prefix_candidate_stats(
         sh,
         threshold,
@@ -1469,15 +1274,13 @@ def route_prefix_join(
         id_col=id_col,
         block_col=block_col,
         set_col=set_col,
-        exact=sample_fraction is None,
-        sample_fraction=sample_fraction,
-        df_sample_factor=df_sample_factor,
+        sample_fraction=p,
         route_block_col=route_block_col,
     )
     est_prefix = float(stats["est_candidates_prefix"])
     per_doc = est_prefix / max(n, 1)
     hot_block = None
-    for b in stats.get("blocks") or []:
+    for b in stats["blocks"]:
         if b["n_docs_sampled"] < PREFIX_ROUTER_MIN_BLOCK_SAMPLED_DOCS:
             continue
         if (
@@ -1507,30 +1310,14 @@ def _pairs_auto(
     block_col: str,
     text_col: str,
     route: dict | None,
-    max_prefix_per_doc: float | None,
-    min_total: float | None,
-    route_block_col: str | None,
 ) -> DataFrame:
     """The shared body of jaccard_pairs_auto / containment_pairs_auto:
     shingle, route (unless ``route`` is given), then run the exact
     prefix join or warn and run the mode's recall-gated fallback."""
-    probe_cols = [route_block_col] if (
-        route is None and route_block_col and route_block_col != block_col
-    ) else []
-    sh = docs.select(
-        id_col, block_col, *probe_cols,
-        word_shingles(text_col).alias("shingles"),
-    )
+    sh = docs.select(id_col, block_col, word_shingles(text_col).alias("shingles"))
     if route is None:
         route = route_prefix_join(
-            sh,
-            threshold,
-            mode=mode,
-            id_col=id_col,
-            block_col=block_col,
-            max_prefix_per_doc=max_prefix_per_doc,
-            min_total=min_total,
-            route_block_col=route_block_col,
+            sh, threshold, mode=mode, id_col=id_col, block_col=block_col
         )
     if route["strategy"] == "exact":
         exact = (
@@ -1588,9 +1375,6 @@ def jaccard_pairs_auto(
     block_col: str = "lang",
     text_col: str = "text",
     route: dict | None = None,
-    max_prefix_per_doc: float | None = None,
-    min_total: float | None = None,
-    route_block_col: str | None = None,
 ) -> DataFrame:
     """Jaccard near-dup pairs with AUTO strategy (r13 VERDICT task
     #1): run route_prefix_join's measured pre-flight, then the exact
@@ -1606,14 +1390,10 @@ def jaccard_pairs_auto(
     predicate), the banded path at ``threshold``, so a caller's
     ``jaccard >= t`` filter is correct on either. ``route`` lets a
     caller pass a precomputed / cached decision (the query layer
-    probes once per corpus and shares it across the jaccard-family
-    slugs). ``route_block_col``: skew axis forwarded to
-    route_prefix_join (r15 VERDICT #4 — pass the canonical host
-    column to catch per-host template spam); the JOIN still blocks on
-    ``block_col``, so the output pair set is unchanged."""
+    probes once per corpus, on the host skew axis, and shares it
+    across the jaccard-family slugs)."""
     return _pairs_auto(
-        "jaccard", docs, threshold, id_col, block_col, text_col, route,
-        max_prefix_per_doc, min_total, route_block_col,
+        "jaccard", docs, threshold, id_col, block_col, text_col, route
     )
 
 
@@ -1624,9 +1404,6 @@ def containment_pairs_auto(
     block_col: str = "lang",
     text_col: str = "text",
     route: dict | None = None,
-    max_prefix_per_doc: float | None = None,
-    min_total: float | None = None,
-    route_block_col: str | None = None,
 ) -> DataFrame:
     """Containment near-dup pairs with AUTO strategy — the
     jaccard_pairs_auto discipline for the asymmetric join: exact
@@ -1638,12 +1415,9 @@ def containment_pairs_auto(
     relaxed ``threshold`` − 0.01, the anchored path at ``threshold``
     — a caller's integer predicate is correct on either. NOTE the
     anchored path is UNBLOCKED (no block_col) — the documented
-    semantics of the probabilistic twin. ``route_block_col``: skew
-    axis forwarded to route_prefix_join (r15 VERDICT #4), join
-    blocking unchanged."""
+    semantics of the probabilistic twin."""
     return _pairs_auto(
-        "containment", docs, threshold, id_col, block_col, text_col,
-        route, max_prefix_per_doc, min_total, route_block_col,
+        "containment", docs, threshold, id_col, block_col, text_col, route
     )
 
 

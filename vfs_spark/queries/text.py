@@ -26,7 +26,7 @@ from vfs_spark.functions.text import (
     word_shingles,
 )
 from vfs_spark.queries.registry import query
-from vfs_spark.sources.parquet import load_table
+from vfs_spark.sources.parquet import file_signature, load_table, table_path
 
 _TOKS = "string_split(lower(trim(text)), ' ')"
 _STOP = "('the', 'a', 'of', 'and', 'to')"
@@ -718,24 +718,11 @@ _CLUSTER_MANIFEST_CACHE: dict = {}
 
 
 def _manifest_key(spark: SparkSession, sf_dir: str):
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(path):
-            fp = tuple(
-                sorted(
-                    (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                    for e in os.scandir(path)
-                    if e.is_file()
-                )
-            )
-        else:
-            st = os.stat(path)
-            fp = ((path, st.st_size, st.st_mtime_ns),)
-    except OSError:
-        fp = None  # unreadable locally (remote FS) — path-only key
-    return (spark.sparkContext.applicationId, sf_dir, fp)
+    # the schema memo's signature: every file under the table, nested
+    # partition directories included; None (path-only key) off a
+    # locally visible filesystem
+    sig = file_signature(table_path(sf_dir, "documents"), None)
+    return (spark.sparkContext.applicationId, sf_dir, sig)
 
 
 # Session-scoped pre-flight route decisions for the exact-prefix

@@ -79,7 +79,7 @@ _schema_memo: OrderedDict = OrderedDict()
 _schema_memo_lock = threading.Lock()
 
 
-def _file_signature(path: str, glob: str | None) -> tuple | None:
+def file_signature(path: str, glob: str | None) -> tuple | None:
     """Sorted ``(name, size, mtime_ns)`` of every file under ``path``
     (only names matching ``glob`` when given), or None when the path is
     not on a locally visible filesystem or changes while it is listed.
@@ -119,7 +119,7 @@ def parquet_schema(
             # a glob naming one file: infer from that file, which shares
             # the memo entry of a direct read of the same table
             path, glob = named, None
-    sig = _file_signature(path, glob)
+    sig = file_signature(path, glob)
     reader = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
     if sig is None:
         return reader.parquet(path).schema
